@@ -36,6 +36,7 @@ import os
 import shutil
 import time
 import uuid
+from typing import NamedTuple
 
 import pyarrow.parquet as pq
 
@@ -513,28 +514,44 @@ def _footer_min_max(md, col: str):
 BLOOM_BITS = 1024
 BLOOM_K = 4
 
-# merge_into: the bounded source probe (key + bloom positions, ONE job,
-# LIMIT early-exits the scan). At or under the dial the MERGE resolves
-# key range, bloom masks and the touched-file set driver-side (three
-# Spark jobs saved — the fixed overhead that dominated churn-scale
-# micro-batch MERGEs); above it the generic distributed path runs and
-# bloom pruning is skipped (masks saturate at >~1k keys anyway, and
-# collecting every distinct key was unbounded driver memory).
-# 20k, not the initial 100k (round 14): every small-path perk is dead
-# weight well below 100k keys — bloom masks saturate >~1k, the isin
-# rewrite caps at MERGE_ISIN_MAX_KEYS=10k, and pyarrow discovery's
-# per-value set probes are serial driver work — so a 75k-row source
-# paid a 75k-row driver collect (with bloom-position arrays) for zero
-# pruning power; measured 1.6 s off lakehouse_snapshot_cut's bump
-# MERGE at sf0.1 by routing it to the distributed path instead.
-MERGE_SOURCE_PROBE_MAX_ROWS = 20_000
+# ONE row dial for every driver-side commit path:
+# - the bounded source probe of merge_into/apply_changes (key + bloom
+#   positions, ONE job, LIMIT early-exits the scan): at or under the
+#   dial the commit resolves key range, bloom masks and the touched-file
+#   set driver-side (three Spark jobs saved — the fixed overhead that
+#   dominated churn-scale micro-batch MERGEs); above it the generic
+#   distributed path runs and bloom pruning is skipped. 20k, not the
+#   initial 100k (round 14): every small-path perk is dead weight well
+#   below 100k keys — bloom masks saturate >~1k, the isin rewrite caps
+#   at MERGE_ISIN_MAX_KEYS=10k, and pyarrow discovery's per-value set
+#   probes are serial driver work — measured 1.6 s off
+#   lakehouse_snapshot_cut's bump MERGE at sf0.1 by routing a 75k-row
+#   source to the distributed path instead;
+# - the pyarrow staging writer (_plan_commit): the per-commit fixed cost
+#   of a metadata-scale write is ~one Spark job of pure scheduling,
+#   multiplied across every micro-batch of the streaming gates, so
+#   driver-resident rows under the dial are written with pyarrow;
+# - _stage_files' driver-side key bloom, TOTAL rows of a staged commit
+#   (round 14 fix): the Python XXH64 twin costs ~15 µs/key serial driver
+#   work, and a data-scale CREATE whose shuffle produced many sub-250k
+#   files paid O(total rows) of it (BENCH r14: lakehouse_zorder_prune
+#   2.7 → 6.9 s, snapshot_cut 7.7 → 14.9 s) — above the dial the one
+#   distributed _stage_blooms pass is strictly cheaper.
+STAGE_DRIVER_MAX_ROWS = 20_000
 
-# merge_into: per-key bloom masks are only worth computing while the
+# Key types whose driver-side handling is value-exact: Python str()
+# renders the bloom's cast-to-string exactly (ints: identical digits;
+# strings: identity), and pyarrow-decoded values compare equal to
+# Spark-collected ones. Every driver path (bloom masks, probes, exact
+# touched-file discovery, key lookups, the pyarrow writer) gates on it.
+_DRIVER_KEY_TYPES = frozenset({"integer", "long", "string"})
+
+# _discover_touched: per-key bloom masks are only worth computing while the
 # union mask stays unsaturated — with BLOOM_BITS=1024 and BLOOM_K=4,
 # ~500 keys already set >85% of the bits and pruning power is ~zero
 # well before 2k. Above this dial the bloom-prune stage is skipped
 # entirely (stats pruning + exact discovery still run), which also
-# bounds the driver-side Python hashing of the round-15 full-row probe.
+# bounds the driver-side Python hashing of the probed keys.
 BLOOM_PROBE_MAX_KEYS = 2_048
 
 # merge_into: when the exact row bound (logged touched-file rows +
@@ -548,33 +565,31 @@ MERGE_COALESCE_MAX_ROWS = 2_000_000
 # Python XXH64 twin of _bloom_positions) instead of a second Spark job
 # re-reading files just written. A 100 TB-scale write has files above
 # the dial and keeps the distributed pass. This per-file dial also
-# bounds the pyarrow reads in read_keys_local/_driver_exact_touched
+# bounds the pyarrow reads in read_keys_local/_discover_touched
 # (C-speed column decode + set probes — cheap per row).
 BLOOM_DRIVER_MAX_ROWS = 250_000
-
-# _stage_files driver-bloom path, TOTAL-rows dial (round 14 fix): the
-# Python XXH64 twin costs ~15 µs/key single-threaded on the DRIVER, so
-# the local path must be reserved for churn-scale commits (streaming
-# label/verdict MERGEs, CDC micro-batches — at most thousands of rows).
-# The initial round-14 cut gated only per-file size, so a data-scale
-# CREATE whose shuffle happened to produce many sub-250k files paid
-# O(total rows) of serial driver hashing — measured +2–7 s on every
-# sf0.1 lakehouse gate (BENCH r14 before: lakehouse_zorder_prune 2.7 →
-# 6.9 s, snapshot_cut 7.7 → 14.9 s). Above this TOTAL the one
-# distributed _stage_blooms pass (32-way, JVM xxhash64 codegen) is
-# strictly cheaper.
-BLOOM_DRIVER_MAX_STAGE_ROWS = 20_000
 
 # merge_into small path: up to this many probed source keys the
 # touched-row anti-join is expressed as an isin() filter inside the
 # rewrite job (no separate broadcast-build); above it, the join.
 MERGE_ISIN_MAX_KEYS = 10_000
 
-# merge_into small path: exact touched-file discovery runs driver-side
+# _discover_touched small path: exact touched-file discovery runs driver-side
 # (pyarrow key-column reads, no Spark job) when the candidate set is at
 # most this many files, each under BLOOM_DRIVER_MAX_ROWS rows; above
 # either bound the distributed semi-join discovery decides.
 MERGE_DRIVER_DISCOVERY_MAX_FILES = 64
+
+
+def _driver_readable(files: list[dict]) -> bool:
+    """True iff the driver may read ``files`` with pyarrow: at most
+    MERGE_DRIVER_DISCOVERY_MAX_FILES of them, each with a logged row
+    count of at most BLOOM_DRIVER_MAX_ROWS. ``rows`` is optional in
+    legacy log entries — missing means unknown size, which must mean
+    the distributed fallback, never a KeyError."""
+    return len(files) <= MERGE_DRIVER_DISCOVERY_MAX_FILES and all(
+        "rows" in a and a["rows"] <= BLOOM_DRIVER_MAX_ROWS for a in files
+    )
 
 
 def _sql_literal(v) -> str:
@@ -627,6 +642,14 @@ def _bloom_positions(col):
     )
 
 
+def _positions_mask(positions) -> int:
+    """Fold collected ``_bloom_positions`` into a bitmask."""
+    mask = 0
+    for p in positions:
+        mask |= 1 << int(p)
+    return mask
+
+
 # --- pure-Python XXH64, bit-exact vs Spark's xxhash64 expression -----------
 # Spark evaluates xxhash64(col, lit(i)) by chaining: hash = XXH64(col bytes,
 # seed=42), then hash = XXH64.hashInt(i, seed=hash) (the literal is an
@@ -664,13 +687,6 @@ def _xxh64_int(i: int, seed: int) -> int:
     h = (seed + _P5 + 4) & _M64
     h ^= ((i & 0xFFFFFFFF) * _P1) & _M64
     h = (_rotl(h, 23) * _P2 + _P3) & _M64
-    return _fmix(h)
-
-
-def _xxh64_long(l: int, seed: int) -> int:
-    h = (seed + _P5 + 8) & _M64
-    h ^= (_rotl((l * _P2) & _M64, 31) * _P1) & _M64
-    h = (_rotl(h, 27) * _P1 + _P4) & _M64
     return _fmix(h)
 
 
@@ -717,18 +733,19 @@ def _xxh64_bytes(data: bytes, seed: int) -> int:
 
 
 def _bloom_mask_py(values) -> int:
-    """Bloom bitmask over string-cast key values — the driver-side twin
-    of ``_bloom_positions`` + the mask fold. ``values``: iterable of
-    already-string-cast keys (or None, matching Spark's null handling:
-    a null column is skipped by xxhash64, so only the seed literal is
-    hashed)."""
+    """Bloom bitmask over key values — the driver-side twin of
+    ``_bloom_positions(col.cast("string"))`` + the mask fold. ``values``:
+    iterable of _DRIVER_KEY_TYPES values, whose Python ``str()`` is
+    exactly Spark's cast to string (ints: identical digits; strings:
+    identity), or None, matching Spark's null handling: a null column
+    is skipped by xxhash64, so only the seed literal is hashed."""
     mask = 0
     for v in values:
         for i in range(BLOOM_K):
             if v is None:
                 h = _xxh64_int(i, 42)
             else:
-                h = _xxh64_int(i, _xxh64_bytes(v.encode("utf-8"), 42))
+                h = _xxh64_int(i, _xxh64_bytes(str(v).encode("utf-8"), 42))
             # Spark pmod on a SIGNED 64-bit hash
             signed = h - (1 << 64) if h >= (1 << 63) else h
             mask |= 1 << (signed % BLOOM_BITS)
@@ -754,13 +771,7 @@ def _stage_blooms(df: DataFrame, staging: str, key: str) -> dict[str, int]:
         .agg(F.collect_set("p").alias("ps"))
         .collect()
     )
-    out: dict[str, int] = {}
-    for r in pos:
-        mask = 0
-        for p in r["ps"]:
-            mask |= 1 << int(p)
-        out[os.path.basename(r["f"])] = mask
-    return out
+    return {os.path.basename(r["f"]): _positions_mask(r["ps"]) for r in pos}
 
 
 def _effective_stats_cols(
@@ -815,10 +826,9 @@ def _stage_files(
         # Driver-side bloom for small staged files (round 14): the
         # bit-exact Python XXH64 twin of _bloom_positions reads the key
         # column locally via pyarrow — no second Spark job over files a
-        # churn-scale MERGE just wrote. Only for key types whose
-        # cast-to-string Spark semantics are trivially replicable
-        # (int/long: str(); string: identity); anything else, or any
-        # file above the dial, takes the existing distributed pass.
+        # churn-scale MERGE just wrote. Only for _DRIVER_KEY_TYPES;
+        # anything else, or any file above the dial, takes the existing
+        # distributed pass.
         ktype = df.schema[key].dataType.typeName() if key in df.columns else None
         staged = [
             f for f in sorted(os.listdir(staging)) if f.endswith(".parquet")
@@ -826,33 +836,26 @@ def _stage_files(
         # decide the path from footer metadata FIRST (cheap driver
         # reads) so no file is ever read twice: the driver path only
         # runs when EVERY staged file is under the per-file dial AND
-        # the commit is churn-scale in total — the pure-Python hashing
-        # is serial driver work, ~15 µs/key, so a data-scale CREATE
-        # must take the one distributed pass instead (round-14 fix;
-        # see BLOOM_DRIVER_MAX_STAGE_ROWS)
+        # the commit is churn-scale in total (STAGE_DRIVER_MAX_ROWS).
         # ktype short-circuit FIRST, and stop reading footers as soon as
         # the running total proves the driver path ineligible — a large
         # multi-file commit must not pay one driver footer open per
         # staged file for a path it can never take (ADVICE r14)
-        all_small = ktype in ("integer", "long", "string")
+        all_small = ktype in _DRIVER_KEY_TYPES
         if all_small:
             total = 0
             for f in staged:
                 n = pq.ParquetFile(os.path.join(staging, f)).metadata.num_rows
                 total += n
-                if n > BLOOM_DRIVER_MAX_ROWS or total > BLOOM_DRIVER_MAX_STAGE_ROWS:
+                if n > BLOOM_DRIVER_MAX_ROWS or total > STAGE_DRIVER_MAX_ROWS:
                     all_small = False
                     break
         if all_small:
             for f in staged:
-                col = (
+                blooms[f] = _bloom_mask_py(
                     pq.read_table(os.path.join(staging, f), columns=[key])
                     .column(0)
                     .to_pylist()
-                )
-                blooms[f] = _bloom_mask_py(
-                    v if (v is None or ktype == "string") else str(v)
-                    for v in col
                 )
         else:
             blooms = _stage_blooms(df, staging, key)
@@ -907,9 +910,9 @@ def _stage_files(
 # driver-resident (a createDataFrame LocalRelation, or a churn-scale
 # MERGE whose bounded probe holds the full source), the staged file is
 # written directly with pyarrow and its stats/bloom computed by the
-# bit-exact Python twins — ZERO Spark jobs. The dial below bounds the
-# driver work; everything above it takes the distributed writer.
-STAGE_DRIVER_MAX_ROWS = 20_000
+# bit-exact Python twins — ZERO Spark jobs. STAGE_DRIVER_MAX_ROWS bounds
+# the driver work; everything above it takes the distributed writer, and
+# _plan_commit is the one place that makes the choice.
 
 # Spark types whose pyarrow write is value-exact under Spark's parquet
 # reader (ints/floats/bool/string/date, and arrays thereof). Timestamps
@@ -945,13 +948,31 @@ def _pa_type(dt):
     return getattr(pa, _PA_SCALARS[tn])()
 
 
-def _stage_local_ok(schema, key: str | None, stats_cols: list[str]) -> bool:
-    """True iff the driver-side staging writer can replicate the
-    distributed one exactly for this schema: every column's type has a
-    value-exact pyarrow twin, the key (if any) is a type whose
-    cast-to-string bloom is replicable (int/long/string — the same gate
-    as every other driver path), and every stats column totally orders
-    in Python the way footer stats do."""
+def _plan_commit(
+    table: str, schema, key: str | None, stats_cols: list[str] | None, n_rows: int
+) -> bool:
+    """The writer choice of every commit whose rows can be in the
+    driver's hand (``local_rows``, ``source_rows``, merge_into's
+    full-row probe): True stages them with the pyarrow writer
+    (:func:`_stage_rows_local`, zero Spark jobs), False with the
+    distributed :func:`_stage_files`. The driver writer stores the
+    caller's values as they are, so it must replicate the distributed
+    one exactly, which holds iff
+
+    - ``n_rows`` is at most STAGE_DRIVER_MAX_ROWS;
+    - every column's type has a value-exact pyarrow twin;
+    - the key (if any) is a _DRIVER_KEY_TYPES column;
+    - every effective stats column totally orders in Python the way
+      footer stats do;
+    - ``schema`` — the caller's schema BEFORE _evolve_schema — needs no
+      cast into the current table's and lacks none of its columns: a
+      widening cast (a float source into a double column) changes the
+      stored value on the distributed path, so the caller's un-cast
+      rows would store a different one, and a merge rewrite must carry
+      every table column of the touched rows. (A REPLACE that changes
+      the table's schema therefore takes the distributed writer.)"""
+    if n_rows > STAGE_DRIVER_MAX_ROWS:
+        return False
     types = {f.name: f.dataType for f in schema.fields}
     try:
         for dt in types.values():
@@ -959,14 +980,14 @@ def _stage_local_ok(schema, key: str | None, stats_cols: list[str]) -> bool:
     except KeyError:
         return False
     if key is not None and (
-        key not in types
-        or types[key].typeName() not in ("integer", "long", "string")
+        key not in types or types[key].typeName() not in _DRIVER_KEY_TYPES
     ):
         return False
-    for c in stats_cols:
+    for c in _effective_stats_cols(table, list(types), stats_cols):
         if c in types and types[c].typeName() not in _PA_STAT_TYPES:
             return False
-    return True
+    cur = current_schema(table) if versions(table) else None
+    return cur is None or all(types.get(f.name) == f.dataType for f in cur.fields)
 
 
 def _stage_rows_local(
@@ -983,8 +1004,7 @@ def _stage_rows_local(
     parquet files written with pyarrow under data/, min/max stats
     computed exactly from the values (sound by construction — the stats
     describe precisely the rows written), the key bloom via the
-    test-pinned Python XXH64 twin. Caller gates on
-    :func:`_stage_local_ok` and the row dial.
+    test-pinned Python XXH64 twin. Callers gate on :func:`_plan_commit`.
 
     ``partition_by`` writes ONE FILE PER VALUE — exactly the layout
     _apply_partitioning's repartitionByRange(#distinct) produces, so
@@ -1001,7 +1021,6 @@ def _stage_rows_local(
         vs = versions(table)
         mapping = _state_at(table, vs[-1])["mapping"] if vs else {}
     names = [f.name for f in schema.fields]
-    ktype = {f.name: f.dataType.typeName() for f in schema.fields}.get(key)
     data_dir = os.path.join(table, _DATA_DIR)
     os.makedirs(data_dir, exist_ok=True)
     pa_schema = pa.schema(
@@ -1044,10 +1063,7 @@ def _stage_rows_local(
             if mm is not None:
                 stats["min_key"] = _json_stat(mm[0], side="lo")
                 stats["max_key"] = _json_stat(mm[1], side="hi")
-            mask = _bloom_mask_py(
-                v if (v is None or ktype == "string") else str(v)
-                for v in cols[key]
-            )
+            mask = _bloom_mask_py(cols[key])
             stats["bloom"] = format(mask, f"0{BLOOM_BITS // 4}x")
         col_stats = {}
         for c in stats_cols:
@@ -1132,53 +1148,39 @@ def files_maybe_containing(
         sch = current_schema(table, version)  # None on pre-tracking logs
         if sch is not None:
             ktype = next((f.dataType for f in sch.fields if f.name == key), None)
-    # Driver-side probe (round 14): for int/long/string keys whose probe
-    # values already carry the key's Python type, Python str() renders
-    # EXACTLY what Spark's cast chain would (ints: identical digits;
-    # strings: identity — the bool/float divergences the round-8 ADVICE
-    # flagged cannot arise), so the bit-exact Python XXH64 twin computes
-    # the masks with zero Spark jobs. Any type mismatch falls through to
-    # the Spark-rendered probe below.
-    if ktype is not None and ktype.typeName() in ("integer", "long", "string"):
-        want_str = ktype.typeName() == "string"
-        if all(
-            (isinstance(v, str) if want_str else
-             (isinstance(v, int) and not isinstance(v, bool)))
+    # Driver-side probe (round 14): for _DRIVER_KEY_TYPES keys whose
+    # probe values already carry the key's Python type, the bit-exact
+    # Python XXH64 twin computes the masks with zero Spark jobs (the
+    # bool/float renderings the round-8 ADVICE flagged cannot arise).
+    # Any type mismatch falls through to the Spark-rendered probe below.
+    want_str = ktype is not None and ktype.typeName() == "string"
+    if (
+        ktype is not None
+        and ktype.typeName() in _DRIVER_KEY_TYPES
+        and all(
+            isinstance(v, str) if want_str
+            else isinstance(v, int) and not isinstance(v, bool)
             for v in values
-        ):
-            masks = [
-                _bloom_mask_py([v if want_str else str(v)]) for v in values
-            ]
-            out = []
-            for a in live_files(table, version):
-                if "bloom" not in a:
-                    out.append(a)
-                    continue
-                fmask = int(a["bloom"], 16)
-                if any((m & fmask) == m for m in masks):
-                    out.append(a)
-            return out
-    probe_src = spark.createDataFrame([(str(v),) for v in values], "k string")
-    if ktype is not None:
-        # try_cast, not cast: under ANSI mode (this repo's default) a
-        # plain cast of an uncastable probe THROWS instead of yielding
-        # the NULL the conservative keep-all fallback below checks for
-        probe_src = probe_src.select(
-            F.col("k").try_cast(ktype).cast("string").alias("k")
         )
-    # else: keyless or pre-schema-tracking tables wrote no typed blooms
-    # worth matching — the raw str(v) rendering matches the legacy writer
-    probe = probe_src.select(
-        F.col("k"), _bloom_positions(F.col("k")).alias("ps")
-    ).collect()
-    if any(r["k"] is None for r in probe):
-        return list(live_files(table, version))
-    masks = []
-    for r in probe:
-        m = 0
-        for p in r["ps"]:
-            m |= 1 << int(p)
-        masks.append(m)
+    ):
+        masks = [_bloom_mask_py([v]) for v in values]
+    else:
+        probe_src = spark.createDataFrame([(str(v),) for v in values], "k string")
+        if ktype is not None:
+            # try_cast, not cast: under ANSI mode (this repo's default) a
+            # plain cast of an uncastable probe THROWS instead of yielding
+            # the NULL the conservative keep-all fallback below checks for
+            probe_src = probe_src.select(
+                F.col("k").try_cast(ktype).cast("string").alias("k")
+            )
+        # else: keyless or pre-schema-tracking tables wrote no typed blooms
+        # worth matching — the raw str(v) rendering matches the legacy writer
+        probe = probe_src.select(
+            F.col("k"), _bloom_positions(F.col("k")).alias("ps")
+        ).collect()
+        if any(r["k"] is None for r in probe):
+            return list(live_files(table, version))
+        masks = [_positions_mask(r["ps"]) for r in probe]
     out = []
     for a in live_files(table, version):
         if "bloom" not in a:
@@ -1760,14 +1762,9 @@ def create_or_replace(
     prior = versions(table)
     removed = [a["file"] for a in live_files(table)] if prior else []
     stats_cols = [partition_by] if partition_by else None
-    use_local = (
-        local_rows is not None
-        and len(local_rows) <= STAGE_DRIVER_MAX_ROWS
-        and _stage_local_ok(
-            df.schema, key, _effective_stats_cols(table, df.columns, stats_cols)
-        )
-    )
-    if use_local:
+    if local_rows is not None and _plan_commit(
+        table, df.schema, key, stats_cols, len(local_rows)
+    ):
         adds = _stage_rows_local(
             table,
             local_rows,
@@ -1836,6 +1833,13 @@ def append(
         # write files with no min/max key stats and no bloom, turning
         # them into permanent MERGE candidates (round-7 review)
         key = _table_key_opt(table)
+    stats_cols = [partition_by] if partition_by else None
+    # driver-resident fast path (see create_or_replace): zero-job
+    # staging for the sketch-stream state commits, planned from the
+    # caller's schema before evolution casts it
+    use_local = local_rows is not None and _plan_commit(
+        table, df.schema, key, stats_cols, len(local_rows)
+    )
     df, schema = _evolve_schema(table, df, merge_schema)
     if pending_tombstones(table):
         raise ValueError(
@@ -1844,20 +1848,6 @@ def append(
             "a re-inserted one)"
         )
     _enforce_constraints(df, current_constraints(table), "APPEND")
-    stats_cols = [partition_by] if partition_by else None
-    # driver-resident fast path (see create_or_replace): zero-job
-    # staging for the sketch-stream state commits. Schema evolution
-    # invalidates the caller's rows (widening casts), so only an
-    # unevolved append takes it.
-    use_local = (
-        local_rows is not None
-        and len(local_rows) <= STAGE_DRIVER_MAX_ROWS
-        and [(f.name, f.dataType) for f in df.schema.fields]
-        == [(f.name, f.dataType) for f in schema.fields]
-        and _stage_local_ok(
-            df.schema, key, _effective_stats_cols(table, df.columns, stats_cols)
-        )
-    )
     if use_local:
         adds = _stage_rows_local(
             table,
@@ -2135,10 +2125,10 @@ def read_keys_local(
     if current_mapping(table):
         return None
     # key-type gate (round-14 review): pyarrow-decoded values must
-    # compare EQUAL to Spark-collected ones, which is only trivially
-    # true for int/long/string — a timestamp key (pyarrow UTC datetimes
-    # vs Spark session-local naive) would silently match nothing and
-    # report every key as absent instead of falling back
+    # compare EQUAL to Spark-collected ones (_DRIVER_KEY_TYPES) — a
+    # timestamp key (pyarrow UTC datetimes vs Spark session-local naive)
+    # would silently match nothing and report every key as absent
+    # instead of falling back
     kcol = _table_key(table)
     sch = current_schema(table)
     ktype = (
@@ -2146,14 +2136,10 @@ def read_keys_local(
         if sch is not None
         else None
     )
-    if ktype not in ("integer", "long", "string"):
+    if ktype not in _DRIVER_KEY_TYPES:
         return None
     files = files_maybe_containing(spark, table, list(keys))
-    if len(files) > MERGE_DRIVER_DISCOVERY_MAX_FILES:
-        return None
-    # rows is optional in legacy log entries — missing means unknown
-    # size, which must mean fallback, never KeyError
-    if any("rows" not in a or a["rows"] > BLOOM_DRIVER_MAX_ROWS for a in files):
+    if not _driver_readable(files):
         return None
     if kcol not in columns:
         columns = [kcol] + list(columns)
@@ -2186,9 +2172,7 @@ def distinct_values_local(table: str, col: str) -> set | None:
     if current_mapping(table):
         return None
     files = live_files(table)
-    if len(files) > MERGE_DRIVER_DISCOVERY_MAX_FILES:
-        return None
-    if any("rows" not in a or a["rows"] > BLOOM_DRIVER_MAX_ROWS for a in files):
+    if not _driver_readable(files):
         return None
     out: set = set()
     for a in files:
@@ -2407,39 +2391,178 @@ def read_pruned(
     )
 
 
-def _driver_exact_touched(
-    table: str, candidates: list[dict], keyset: set, key: str, ktype: str
-) -> list[dict] | None:
-    """EXACT touched-file discovery driver-side: read each candidate's
-    key column via pyarrow and intersect with the probed key set — no
-    Spark job, and a disjoint-key source stays a pure append. Returns
-    None when the distributed semi-join must decide instead: too many /
-    too large / row-countless candidate files, or a key type whose
-    pyarrow decoding isn't trivially equal to Spark's collect
-    (int/long/string only). Key columns are rename-protected
-    (identity-mapped), so the physical column name IS the logical one."""
-    if ktype not in ("integer", "long", "string"):
-        return None
-    if len(candidates) > MERGE_DRIVER_DISCOVERY_MAX_FILES:
-        return None
-    if any(
-        "rows" not in a or a["rows"] > BLOOM_DRIVER_MAX_ROWS
-        for a in candidates
-    ):
-        return None
-    touched = []
-    for a in candidates:
-        try:
-            col = (
-                pq.read_table(_abs(table, a["file"]), columns=[key])
-                .column(0)
-                .to_pylist()
+class _Discovery(NamedTuple):
+    """What :func:`_discover_touched` learned about a key-set commit."""
+
+    touched: list  # live files holding at least one source key (exact)
+    untouched: list  # live files the commit carries over by reference
+    pruned: int  # live files skipped by key stats or bloom
+    pruned_by_bloom: int
+    keys: set | None  # the source's non-NULL keys, when the probe held them all
+    rows: list | None  # the source's full rows, when asked for and small
+    bound: int | None  # exact row bound of the rewrite: touched + source rows
+
+
+def _discover_touched(
+    spark: SparkSession,
+    table: str,
+    source: DataFrame,
+    key: str,
+    rows: list | None = None,
+    full_rows: bool = False,
+) -> _Discovery:
+    """Key-set touched-file discovery — the file mechanics merge_into and
+    apply_changes share (the Delta MERGE shape):
+
+    0. ONE bounded probe job: collect up to STAGE_DRIVER_MAX_ROWS+1
+       source rows (LIMIT over the bare scan early-exits at scale, and
+       driver memory is bounded by the dial). ``rows`` already in the
+       caller's hand (positional, in source.schema order) skip even that
+       job; ``full_rows`` collects whole rows — the input of merge_into's
+       driver write — instead of the key projection. A small source
+       (streaming label / registry maintenance, CDC micro-batches) then
+       resolves its key range, bloom masks and touched-file set
+       driver-side, without the three Spark jobs the generic path needs
+       (round-14 fix: the fixed per-batch job overhead dominated
+       churn-scale commits).
+    1. Prune live files by the log's min/max key stats against the
+       source's key range — from the probe when small (Python min/max
+       matches SQL ordering for every orderable key type, pinned by
+       test), else one tiny aggregate over the source.
+    2. Bloom-prune the survivors: drop files whose bloom rejects every
+       source key — the layer that works where min/max can't (hash
+       layouts, full-range files). Sound: a bloom never rejects a
+       present key. Small sources of at most BLOOM_PROBE_MAX_KEYS keys
+       only: above that the 1024-bit masks saturate and prune nothing.
+    3. Find the files ACTUALLY containing source keys — EXACTLY, on both
+       paths: pyarrow key-column reads against the probed key set when
+       the driver may read the candidates (no Spark job; a disjoint-key
+       micro-batch stays a pure append), else a semi-join of the
+       candidates (tagged with input_file_name) against the source keys,
+       collecting the distinct file names (O(files), not O(rows))."""
+    n = STAGE_DRIVER_MAX_ROWS
+    driver_key = source.schema[key].dataType.typeName() in _DRIVER_KEY_TYPES
+    if driver_key and rows is not None and len(rows) <= n:
+        probe, ki = list(rows), source.columns.index(key)
+    elif driver_key and full_rows:
+        probe, ki = source.limit(n + 1).collect(), source.columns.index(key)
+    elif driver_key:
+        probe, ki = source.select(F.col(key)).limit(n + 1).collect(), 0
+    else:
+        # the key's string cast is not replicable driver-side: Spark
+        # computes the bloom positions inside the same probe job
+        probe, ki = source.select(
+            F.col(key), _bloom_positions(F.col(key).cast("string"))
+        ).limit(n + 1).collect(), 0
+    small = len(probe) <= n
+    keys = None
+    masks: list = []
+    if small:
+        keys = {r[ki] for r in probe if r[ki] is not None}
+        if len(keys) <= BLOOM_PROBE_MAX_KEYS:
+            masks = (
+                [_bloom_mask_py([k]) for k in keys]
+                if driver_key
+                else list(
+                    {r[0]: _positions_mask(r[1]) for r in probe if r[0] is not None}
+                    .values()
+                )
             )
-        except Exception:
-            return None
-        if any(v in keyset for v in col):
-            touched.append(a)
-    return touched
+        lo, hi = (min(keys), max(keys)) if keys else (None, None)
+    else:
+        lo, hi = source.agg(F.min(F.col(key)), F.max(F.col(key))).collect()[0]
+
+    live = live_files(table)
+    # stats in the log are JSON-sanitized; convert the probe bounds the
+    # same way so date/timestamp keys compare as ISO strings and decimal
+    # keys as floats — widening the probe range outward keeps pruning
+    # sound against the (also-widened) stored bounds. An empty source
+    # (or all-NULL keys, e.g. an empty streaming micro-batch) matches no
+    # file.
+    if lo is None or hi is None:
+        candidates = []
+    else:
+        lo, hi = _json_stat(lo, side="lo"), _json_stat(hi, side="hi")
+        candidates = [
+            a
+            for a in live
+            if "min_key" not in a
+            or not _stats_disjoint(a["min_key"], a["max_key"], lo, hi)
+        ]
+    n_stats_kept = len(candidates)
+    if candidates and masks and all("bloom" in a for a in candidates):
+        union = 0
+        for m in masks:
+            union |= m
+        candidates = [
+            a
+            for a in candidates
+            if (fm := int(a["bloom"], 16)) & union
+            and any((m & fm) == m for m in masks)
+        ]
+
+    touched = [] if not candidates else None
+    if candidates and small and driver_key and _driver_readable(candidates):
+        # key columns are rename-protected (identity-mapped), so the
+        # physical column name IS the logical one
+        touched = []
+        for a in candidates:
+            try:
+                col = pq.read_table(_abs(table, a["file"]), columns=[key])
+            except Exception:
+                touched = None
+                break
+            if any(v in keys for v in col.column(0).to_pylist()):
+                touched.append(a)
+    if touched is None:
+        # log-schema read: a mixed pre-/post-evolution candidate set must
+        # not take an arbitrary footer as its schema
+        src_keys = source.select(F.col(key).alias("__mk")).distinct()
+        hit = {
+            os.path.basename(r["__f"])
+            for r in _read_files(
+                spark, table, candidates, None, with_tombstones=False
+            )
+            .select(F.col(key), F.input_file_name().alias("__f"))
+            .join(F.broadcast(src_keys), F.col(key) == F.col("__mk"), "left_semi")
+            .select("__f")
+            .distinct()
+            .collect()
+        }
+        # basename match: a shallow clone's actions reference absolute
+        # source paths while input_file_name yields bare names (names
+        # are uuid-unique, so basename equality is exact)
+        touched = [a for a in candidates if os.path.basename(a["file"]) in hit]
+    names = {a["file"] for a in touched}
+    return _Discovery(
+        touched=touched,
+        untouched=[a for a in live if a["file"] not in names],
+        pruned=len(live) - len(candidates),
+        pruned_by_bloom=n_stats_kept - len(candidates),
+        keys=keys,
+        rows=probe if small and driver_key and full_rows else None,
+        bound=(
+            sum(a["rows"] for a in touched) + len(probe)
+            if small and all("rows" in a for a in touched)
+            else None
+        ),
+    )
+
+
+def _stage_rewrite(merged: DataFrame, table: str, key: str, bound: int | None):
+    """Stage a MERGE / APPLY CHANGES rewrite. Metadata-scale rewrites
+    collapse to one task/file: the row bound (logged touched-file rows +
+    probed source rows) is exact from stats already in hand, and N
+    near-empty shuffle partitions would otherwise become N write tasks +
+    N files + N bloom/footer reads per churn batch, decaying the table
+    layout commit after commit. repartition, NOT coalesce: coalesce(1)
+    would pull the source pipeline's whole final stage into one task
+    (measured 2.5× slower on the maintenance verdict MERGE); the
+    explicit exchange keeps upstream parallelism and single-tasks only
+    the tiny write."""
+    if bound is not None and bound <= MERGE_COALESCE_MAX_ROWS:
+        merged = merged.repartition(1)
+    return _stage_files(merged, table, key)
 
 
 def merge_into(
@@ -2459,244 +2582,49 @@ def merge_into(
     columns join the table schema, carried-over rows in rewritten
     files null-fill them, untouched files null-fill on read via the
     log schema. Without it a differing source schema raises
-    SchemaMismatch (same posture as ``append``).
+    SchemaMismatch (same posture as ``append``). ``source_rows``: the
+    source's own rows when the caller already holds them driver-side
+    (positional, in source.schema order) — they replace the probe job.
 
-    Execution (the Delta MERGE shape):
-    0. ONE bounded probe job: collect up to MERGE_SOURCE_PROBE_MAX_ROWS+1
-       source rows (key + bloom probe positions; LIMIT over the bare
-       scan early-exits at scale). A small source — streaming label /
-       registry maintenance, CDC micro-batches — then resolves its key
-       range, bloom masks, AND the touched-file set driver-side without
-       the three separate Spark jobs the generic path needs (round-14
-       fix: the fixed per-batch job overhead dominated churn-scale
-       MERGEs, see BENCH_SUMMARY maintenance_split r13).
-    1. Prune candidate files by the log's min/max key stats against the
-       source's key range — from the probe when small, else one tiny
-       aggregate over the source.
-    2. Bloom-prune the survivors (small sources only: with BLOOM_BITS =
-       1024 a >100k-key probe saturates every mask anyway, and the
-       pre-round-14 unbounded distinct-keys collect was a driver OOM
-       at 100 TB scale).
-    3. Find files ACTUALLY containing matched keys — EXACTLY, on both
-       paths. Small source over few small files: pyarrow key-column
-       reads driver-side against the probed key set (no Spark job; a
-       disjoint-key micro-batch stays a pure append). Generic path:
-       semi-join the pruned target subset (tagged with
-       input_file_name) against source keys; collect the distinct
-       file names (small: O(files), not O(rows)).
-    4. Rewrite only the touched files: their rows anti-join the source
-       keys (an isin() filter when the probed key set is in hand),
-       union the full source, write as new files (repartition(1) when
-       the row bound says the rewrite is metadata-scale). Untouched
-       files carry over by reference — no full-table rewrite.
+    Execution: :func:`_discover_touched` finds exactly the files holding
+    source keys; only those are rewritten — their rows anti-join the
+    source keys (an isin() filter when the probed key set is in hand),
+    union the full source, and stage as new files. Untouched files
+    carry over by reference — no full-table rewrite.
     """
     if not versions(table):
-        return create_or_replace(spark, table, source, key)
+        return create_or_replace(spark, table, source, key, local_rows=source_rows)
     if pending_tombstones(table):
         raise ValueError(
             "table has pending deferred deletes; run materialize_tombstones "
             "before MERGE"
         )
+    # plan from the caller's schema before evolution casts it: only a
+    # source the driver writer could stage needs its full rows probed;
+    # any other probes a key projection
+    src_schema = source.schema
+    full_rows = _plan_commit(
+        table, src_schema, key, None,
+        len(source_rows) if source_rows is not None else 0,
+    )
     source, evolved_schema = _evolve_schema(table, source, merge_schema)
     _enforce_constraints(source, current_constraints(table), "MERGE")
 
-    live = live_files(table)
+    d = _discover_touched(spark, table, source, key, source_rows, full_rows)
+    touched = d.touched
 
-    # (0) bounded probe, LIMIT dial+1. The limit sits on the bare scan
-    # (no distinct), so it early-exits once the budget is hit — at
-    # 100 TB the probe cost is bounded regardless of source size;
-    # driver memory is bounded by the dial in all cases (the
-    # pre-round-14 bloom probe collected EVERY distinct source key).
-    # Round 15: for the key types every other driver path supports
-    # (int/long/string), the probe collects the FULL source rows — the
-    # same one job — and the per-key bloom masks come from the
-    # test-pinned Python XXH64 twin, so a churn-scale MERGE whose
-    # touched files also resolve driver-side can write its rewrite with
-    # _stage_rows_local and ZERO further Spark jobs. Other key types
-    # keep the Spark-expression probe (their string cast is not
-    # trivially replicable driver-side).
-    ktype = source.schema[key].dataType.typeName() if key in source.columns else None
-    probe_rows = None  # full source rows, when the key is driver-maskable
-    src_key_masks: dict = {}
-    src_keyset: set = set()
-    if ktype in ("integer", "long", "string"):
-        # rows already in the caller's hand (``source_rows``, positional
-        # in source.schema order) skip even the probe job
-        ki = source.columns.index(key)
-        probe_rows = (
-            list(source_rows)
-            if source_rows is not None
-            and len(source_rows) <= MERGE_SOURCE_PROBE_MAX_ROWS
-            else source.limit(MERGE_SOURCE_PROBE_MAX_ROWS + 1).collect()
-        )
-        n_probe = len(probe_rows)
-        small_source = n_probe <= MERGE_SOURCE_PROBE_MAX_ROWS
-        if small_source:
-            src_keyset = {r[ki] for r in probe_rows if r[ki] is not None}
-            # masks only below the saturation dial: with BLOOM_BITS=1024
-            # and BLOOM_K=4, a >~2k-key union mask has essentially every
-            # bit set and prunes nothing — above it, skip the serial
-            # driver hashing outright (the pre-round-15 Spark-side probe
-            # computed positions for up to 20k keys that could never
-            # prune)
-            if len(src_keyset) <= BLOOM_PROBE_MAX_KEYS:
-                for v in src_keyset:
-                    src_key_masks[v] = _bloom_mask_py(
-                        [v if ktype == "string" else str(v)]
-                    )
-    else:
-        probe = (
-            source.select(
-                F.col(key).alias("__k"),
-                _bloom_positions(F.col(key).cast("string")).alias("__ps"),
-            )
-            .limit(MERGE_SOURCE_PROBE_MAX_ROWS + 1)
-            .collect()
-        )
-        n_probe = len(probe)
-        small_source = n_probe <= MERGE_SOURCE_PROBE_MAX_ROWS
-        if small_source:
-            for r in probe:
-                if r["__k"] is not None and r["__k"] not in src_key_masks:
-                    m = 0
-                    for p in r["__ps"]:
-                        m |= 1 << int(p)
-                    src_key_masks[r["__k"]] = m
-            src_keyset = set(src_key_masks)
-
-    # (1) stats pruning: a file can only contain matches if its key range
-    # intersects the source's key range. Small source: bounds come from
-    # the probe (Python min/max matches SQL ordering for all orderable
-    # key types — ints, floats, strings by code point == UTF-8 bytes,
-    # dates, timestamps, decimals — pinned by test). Else: one tiny
-    # map-side-combinable aggregate.
-    if small_source:
-        ks = list(src_keyset)
-        rng = {"lo": min(ks) if ks else None, "hi": max(ks) if ks else None}
-    else:
-        rng = source.agg(
-            F.min(F.col(key)).alias("lo"), F.max(F.col(key)).alias("hi")
-        ).collect()[0]
-    # stats in the log are JSON-sanitized; convert the probe bounds the
-    # same way so date/timestamp keys compare as ISO strings and decimal
-    # keys as floats — widening the probe range outward keeps pruning
-    # sound against the (also-widened) stored bounds
-    lo = _json_stat(rng["lo"], side="lo") if rng["lo"] is not None else None
-    hi = _json_stat(rng["hi"], side="hi") if rng["hi"] is not None else None
-    if lo is None or hi is None:
-        # empty source (or all-NULL keys): no file can match — the
-        # comparisons below would raise TypeError against None
-        # (round-7 review; empty micro-batches reach here via
-        # streaming foreachBatch)
-        candidates = []
-    else:
-        candidates = [
-            a
-            for a in live
-            if "min_key" not in a
-            or not _stats_disjoint(a["min_key"], a["max_key"], lo, hi)
-        ]
-    untouched_by_stats = [a for a in live if a not in candidates]
-
-    # (2) bloom pruning: drop candidate files whose bloom rejects every
-    # source key — the layer that works where min/max can't (hash
-    # layouts, full-range files). Masks come from the bounded probe; a
-    # quick union-mask reject handles most files in O(1) before the
-    # per-key test. Sound: a bloom never rejects a present key, so
-    # skipped files contain no matches and carry over by reference
-    # exactly like range-pruned ones. Above the dial the masks would be
-    # saturated (1024 bits) and pruning power ~zero, so the stage only
-    # runs for small sources.
-    pruned_by_bloom = 0
+    # FULLY driver-side rewrite (round 15): when the probe holds the
+    # complete source rows, the driver may read the touched files and
+    # the plan admits the row bound, the merged rows (touched-file rows
+    # whose key misses the source keyset, plus the source rows) are
+    # assembled in Python and staged with _stage_rows_local: ZERO
+    # further Spark jobs after the one bounded probe.
     if (
-        candidates
-        and small_source
-        and src_key_masks  # empty above BLOOM_PROBE_MAX_KEYS (no pruning power)
-        and all("bloom" in a for a in candidates)
+        d.rows is not None
+        and d.bound is not None
+        and _driver_readable(touched)
+        and _plan_commit(table, src_schema, key, None, d.bound)
     ):
-        masks = list(src_key_masks.values())
-        union_mask = 0
-        for m in masks:
-            union_mask |= m
-        kept_candidates = []
-        for a in candidates:
-            fmask = int(a["bloom"], 16)
-            if (fmask & union_mask) and any((m & fmask) == m for m in masks):
-                kept_candidates.append(a)
-        pruned_by_bloom = len(candidates) - len(kept_candidates)
-        untouched_by_stats += [a for a in candidates if a not in kept_candidates]
-        candidates = kept_candidates
-
-    touched: list[dict] = []
-    driver_touched = (
-        _driver_exact_touched(
-            table,
-            candidates,
-            src_keyset,
-            key,
-            source.schema[key].dataType.typeName(),
-        )
-        if candidates and small_source
-        else None
-    )
-    # the touched set is EXACTLY known driver-side either when the
-    # pyarrow discovery succeeded or when pruning left no candidates at
-    # all (a disjoint-key micro-batch — the common novel-batch case)
-    touched_exact_driver = driver_touched is not None or not candidates
-    if driver_touched is not None:
-        # (3, small source) exact driver-side discovery succeeded — no
-        # Spark job, disjoint-key micro-batches stay pure appends
-        touched = driver_touched
-    elif candidates:
-        # (3, generic) exact touched-file discovery, fully distributed
-        # (log-schema read: a mixed pre-/post-evolution candidate set
-        # must not take an arbitrary footer as its schema)
-        src_keys = source.select(F.col(key).alias("__mk")).distinct()
-        hit_files = {
-            os.path.basename(r["__f"])
-            for r in _read_files(
-                spark, table, candidates, None, with_tombstones=False
-            )
-            .select(F.col(key), F.input_file_name().alias("__f"))
-            .join(F.broadcast(src_keys), F.col(key) == F.col("__mk"), "left_semi")
-            .select("__f")
-            .distinct()
-            .collect()
-        }
-        # basename match: a shallow clone's actions reference absolute
-        # source paths while input_file_name yields bare names (names
-        # are uuid-unique, so basename equality is exact)
-        touched = [
-            a for a in candidates if os.path.basename(a["file"]) in hit_files
-        ]
-
-    untouched = untouched_by_stats + [a for a in candidates if a not in touched]
-
-    # (4a, round 15) FULLY driver-side rewrite: when the probe holds the
-    # complete source rows, the touched set is exactly known
-    # driver-side, the row bound is metadata-scale, the schema has no
-    # in-flight evolution, and every type has a value-exact pyarrow
-    # twin — the merged rows (touched-file rows whose key misses the
-    # source keyset, plus the source rows) are assembled in Python and
-    # staged with _stage_rows_local: ZERO further Spark jobs after the
-    # one bounded probe. The touched files were already read once by
-    # _driver_exact_touched (key column); re-reading them fully here is
-    # bounded by the same dials.
-    driver_write = (
-        small_source
-        and probe_rows is not None
-        and touched_exact_driver
-        and all("rows" in a for a in touched)
-        and sum(a["rows"] for a in touched) + n_probe <= STAGE_DRIVER_MAX_ROWS
-        and [(f.name, f.dataType) for f in source.schema.fields]
-        == [(f.name, f.dataType) for f in evolved_schema.fields]
-        and _stage_local_ok(
-            source.schema,
-            key,
-            _effective_stats_cols(table, source.columns, None),
-        )
-    )
-    if driver_write:
         mapping = current_mapping(table)
         names = [f.name for f in source.schema.fields]
         merged_rows: list = []
@@ -2716,25 +2644,25 @@ def merge_into(
             for i in range(n):
                 # NULL target keys survive, matching the NOT-IN +
                 # isNull() filter of the distributed rewrite
-                if kvals[i] is None or kvals[i] not in src_keyset:
+                if kvals[i] is None or kvals[i] not in d.keys:
                     merged_rows.append(tuple(cv[i] for cv in colvals))
-        merged_rows.extend(probe_rows)
+        merged_rows.extend(d.rows)
         adds = _stage_rows_local(
             table, merged_rows, source.schema, key, mapping=mapping
         )
     else:
-        # (4b) rewrite touched rows + insert source (log-schema read — a
+        # rewrite touched rows + insert source (log-schema read — a
         # footer read of a pre-evolution touched file would rewrite it
         # without the evolved columns, permanently losing that data)
         if touched:
             kept = _read_files(spark, table, touched, None, with_tombstones=False)
-            if small_source and len(src_keyset) <= MERGE_ISIN_MAX_KEYS:
+            if d.keys is not None and len(d.keys) <= MERGE_ISIN_MAX_KEYS:
                 # keys are in hand: an isin() filter folds the anti-join
                 # into the rewrite job's scan (no broadcast-build job).
                 # NULL target keys must survive the NOT-IN (SQL
                 # three-valued logic would drop them).
                 kept = kept.where(
-                    ~F.col(key).isin(list(src_keyset)) | F.col(key).isNull()
+                    ~F.col(key).isin(list(d.keys)) | F.col(key).isNull()
                 )
             else:
                 kept = kept.join(source.select(key).distinct(), key, "left_anti")
@@ -2745,21 +2673,7 @@ def merge_into(
             merged = kept.unionByName(source, allowMissingColumns=merge_schema)
         else:
             merged = source
-        # Metadata-scale rewrites collapse to one task/file: the row
-        # bound (logged touched-file rows + probed source rows) is exact
-        # from stats already in hand, and N near-empty shuffle
-        # partitions would otherwise become N write tasks + N files +
-        # N bloom/footer reads per churn batch, decaying the table
-        # layout merge after merge. repartition, NOT coalesce:
-        # coalesce(1) would pull the source pipeline's whole final stage
-        # into one task (measured 2.5× slower on the maintenance verdict
-        # MERGE); the explicit exchange keeps upstream parallelism and
-        # single-tasks only the tiny write.
-        if small_source and all("rows" in a for a in touched):
-            bound = sum(a["rows"] for a in touched) + n_probe
-            if bound <= MERGE_COALESCE_MAX_ROWS:
-                merged = merged.repartition(1)
-        adds = _stage_files(merged, table, key)
+        adds = _stage_rewrite(merged, table, key, d.bound)
 
     v = versions(table)[-1] + 1
     _commit_exclusive(
@@ -2773,10 +2687,10 @@ def merge_into(
             "add": adds,
             "remove": [a["file"] for a in touched],
             "stats": {
-                "files_pruned_by_stats": len(untouched_by_stats),
-                "files_pruned_by_bloom": pruned_by_bloom,
+                "files_pruned_by_stats": d.pruned,
+                "files_pruned_by_bloom": d.pruned_by_bloom,
                 "files_touched": len(touched),
-                "files_untouched": len(untouched),
+                "files_untouched": len(d.untouched),
             },
         },
     )
@@ -2827,9 +2741,10 @@ def apply_changes(
     ``purge_cdc_tombstones`` once the feed guarantees no more
     stragglers (the retention knob every CDC sink has).
 
-    File mechanics are MERGE's (stats + bloom pruned candidates, exact
-    touched-file discovery, rewrite ∝ touched files, untouched files
-    carry by reference); a batch that changes nothing commits nothing.
+    File mechanics are MERGE's (:func:`_discover_touched`: stats + bloom
+    pruned candidates, exact touched-file discovery; rewrite ∝ touched
+    files, untouched files carry by reference); a batch that changes
+    nothing commits nothing.
     Returns the table version (new or unchanged).
     """
     if not versions(table):
@@ -2864,68 +2779,12 @@ def apply_changes(
         "APPLY CHANGES",
     )
 
-    live = live_files(table)
-    # bounded probe first (round 14, same shape as merge_into): a
-    # churn-scale changelog resolves its key range AND the exact
-    # touched-file set driver-side — the per-batch fixed job overhead
-    # is what dominates CDC micro-batches; LIMIT early-exits the scan
-    # at scale, and latest's lazy checkpoint makes the probe's
+    # the touched-file mechanics are MERGE's (round 14: a churn-scale
+    # changelog resolves its key range AND the exact touched-file set
+    # driver-side); latest's lazy checkpoint makes the probe's
     # materialization reusable by every later consumer
-    probe = (
-        latest.select(F.col(key).alias("__k"))
-        .limit(MERGE_SOURCE_PROBE_MAX_ROWS + 1)
-        .collect()
-    )
-    small_source = len(probe) <= MERGE_SOURCE_PROBE_MAX_ROWS
-    if small_source:
-        ks = [r["__k"] for r in probe if r["__k"] is not None]
-        rng = {"lo": min(ks) if ks else None, "hi": max(ks) if ks else None}
-    else:
-        rng = latest.agg(
-            F.min(F.col(key)).alias("lo"), F.max(F.col(key)).alias("hi")
-        ).collect()[0]
-    lo = _json_stat(rng["lo"], side="lo") if rng["lo"] is not None else None
-    hi = _json_stat(rng["hi"], side="hi") if rng["hi"] is not None else None
-    if lo is None or hi is None:
-        candidates = []  # empty changelog (or all-NULL keys)
-    else:
-        candidates = [
-            a
-            for a in live
-            if "min_key" not in a
-            or not _stats_disjoint(a["min_key"], a["max_key"], lo, hi)
-        ]
-    touched: list[dict] = []
-    driver_touched = (
-        _driver_exact_touched(
-            table,
-            candidates,
-            {r["__k"] for r in probe if r["__k"] is not None},
-            key,
-            latest.schema[key].dataType.typeName(),
-        )
-        if candidates and small_source
-        else None
-    )
-    if driver_touched is not None:
-        touched = driver_touched
-    elif candidates:
-        src_keys = latest.select(F.col(key).alias("__mk")).distinct()
-        hit_files = {
-            os.path.basename(r["__f"])
-            for r in _read_files(
-                spark, table, candidates, None, with_tombstones=False
-            )
-            .select(F.col(key), F.input_file_name().alias("__f"))
-            .join(F.broadcast(src_keys), F.col(key) == F.col("__mk"), "left_semi")
-            .select("__f")
-            .distinct()
-            .collect()
-        }
-        touched = [
-            a for a in candidates if os.path.basename(a["file"]) in hit_files
-        ]
-    untouched = [a for a in live if a not in touched]
+    d = _discover_touched(spark, table, latest, key)
+    touched = d.touched
 
     src_cols = latest.columns
     pref = latest.select([F.col(c).alias("__s_" + c) for c in src_cols])
@@ -2996,12 +2855,7 @@ def apply_changes(
     # must not commit an empty rewrite
     if n_changes == 0:
         return versions(table)[-1]
-    # metadata-scale rewrites collapse to one task/file (merge_into's
-    # round-14 rule; repartition, not coalesce — see there)
-    if small_source and all("rows" in a for a in touched):
-        if sum(a["rows"] for a in touched) + len(probe) <= MERGE_COALESCE_MAX_ROWS:
-            merged = merged.repartition(1)
-    adds = _stage_files(merged, table, key)
+    adds = _stage_rewrite(merged, table, key, d.bound)
     v = versions(table)[-1] + 1
     _commit_exclusive(
         table,
@@ -3014,7 +2868,7 @@ def apply_changes(
             "remove": [a["file"] for a in touched],
             "stats": {
                 "files_touched": len(touched),
-                "files_untouched": len(untouched),
+                "files_untouched": len(d.untouched),
                 "keys_deleted": int(n_deleted_keys),
             },
         },

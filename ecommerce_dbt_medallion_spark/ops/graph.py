@@ -336,12 +336,7 @@ def _maintain_driver_side(
                 for s in affected
             ):
                 admitted.append(a)
-        if len(admitted) > lakehouse.MERGE_DRIVER_DISCOVERY_MAX_FILES:
-            return None
-        if any(
-            "rows" not in a or a["rows"] > lakehouse.BLOOM_DRIVER_MAX_ROWS
-            for a in admitted
-        ):
+        if not lakehouse._driver_readable(admitted):
             return None
         import pyarrow.parquet as _pq
 

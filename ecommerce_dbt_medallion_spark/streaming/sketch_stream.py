@@ -77,8 +77,8 @@ def stage_microbatch_files_by(src_dir: str, df, n: int) -> None:
     import shutil as _sh
     import time as _time
 
-    import pyarrow as _pa
     import pyarrow.parquet as _pq
+    from pyspark.sql.pandas.types import to_arrow_schema
 
     staging = os.path.join(src_dir, "_stage_all")
     data_schema = df.drop("__b").schema
@@ -107,15 +107,7 @@ def stage_microbatch_files_by(src_dir: str, df, n: int) -> None:
         else:
             # empty batch: stage a 0-row file with the data schema so
             # the stream still sees (and numbers) this batch
-            from ecommerce_dbt_medallion_spark.lakehouse import _pa_type
-
-            _pq.write_table(
-                _pa.table(
-                    {f.name: _pa.array([], type=_pa_type(f.dataType))
-                     for f in data_schema.fields}
-                ),
-                dst,
-            )
+            _pq.write_table(to_arrow_schema(data_schema).empty_table(), dst)
         os.utime(dst, (base + k * 10, base + k * 10))
     _sh.rmtree(staging, ignore_errors=True)
 

@@ -82,8 +82,9 @@ def test_local_staging_create_matches_distributed(spark, tmp_path, monkeypatch):
         "arr array<bigint>, cluster long"
     )
     results = {}
-    for dial, tag in ((20_000, "local"), (-1, "distributed")):
-        monkeypatch.setattr(lh, "STAGE_DRIVER_MAX_ROWS", dial)
+    for tag in ("local", "distributed"):
+        if tag == "distributed":
+            monkeypatch.setattr(lh, "_plan_commit", lambda *a: False)
         path = str(tmp_path / f"c-{tag}")
         df = spark.createDataFrame(rows, schema)
         lh.create_or_replace(
@@ -123,8 +124,9 @@ def test_local_staging_append_matches_distributed(spark, tmp_path, monkeypatch):
     """Round 15: the LocalRelation append fast path — same values, same
     inherited key stats, as the distributed staging writer."""
     results = {}
-    for dial, tag in ((20_000, "local"), (-1, "distributed")):
-        monkeypatch.setattr(lh, "STAGE_DRIVER_MAX_ROWS", dial)
+    for tag in ("local", "distributed"):
+        if tag == "distributed":
+            monkeypatch.setattr(lh, "_plan_commit", lambda *a: False)
         path = str(tmp_path / f"a-{tag}")
         base = spark.range(50).select(F.col("id"), (F.col("id") * 10).alias("val"))
         lh.create_or_replace(spark, path, base, key="id")
@@ -156,8 +158,9 @@ def test_merge_driver_write_matches_distributed(spark, tmp_path, monkeypatch):
     including NULL target keys surviving, duplicate-key source rows,
     unicode string values, and identical pruning stats."""
     results = {}
-    for dial, tag in ((20_000, "driver"), (-1, "distributed")):
-        monkeypatch.setattr(lh, "STAGE_DRIVER_MAX_ROWS", dial)
+    for tag in ("driver", "distributed"):
+        if tag == "distributed":
+            monkeypatch.setattr(lh, "_plan_commit", lambda *a: False)
         path = str(tmp_path / f"m-{tag}")
         base = spark.range(100).select(
             F.col("id"), F.concat(F.lit("v·"), F.col("id")).alias("val")
@@ -201,7 +204,7 @@ def test_merge_generic_path_matches_fast_path(spark, tmp_path, monkeypatch):
     the same merge."""
     results = {}
     for dial, tag in ((100_000, "fast"), (0, "generic")):
-        monkeypatch.setattr(lh, "MERGE_SOURCE_PROBE_MAX_ROWS", dial)
+        monkeypatch.setattr(lh, "STAGE_DRIVER_MAX_ROWS", dial)
         path = str(tmp_path / f"tbl-{tag}")
         base = (
             spark.range(100)
@@ -305,6 +308,156 @@ def test_merge_driver_discovery_matches_distributed(spark, tmp_path, monkeypatch
         rows = {r["id"]: r["val"] for r in lh.read(spark, path).collect()}
         assert rows[10] == -1 and rows[90] == -1 and rows[50] == 500
         assert rows[500] == -9 and len(rows) == 101
+
+
+def test_widening_source_stores_same_value_on_both_writers(spark, tmp_path):
+    """A float source into a double column: the distributed writer casts
+    float32 0.1 to 0.10000000149011612. The writer is planned from the
+    caller's schema before evolution, so rows handed in through
+    ``local_rows`` / ``source_rows`` store that same value instead of
+    the caller's un-cast 0.1."""
+    import struct
+
+    widened = struct.unpack("f", struct.pack("f", 0.1))[0]
+    rows = [(1, 0.1), (2, 0.5)]
+    got = {}
+    for tag in ("rows", "no_rows"):
+        paths = [str(tmp_path / f"{op}-{tag}") for op in ("append", "merge")]
+        for path in paths:
+            lh.create_or_replace(
+                spark, path,
+                spark.createDataFrame([(0, 0.0)], "id long, x double"), key="id",
+            )
+        src = spark.createDataFrame(rows, "id long, x float")
+        in_hand = rows if tag == "rows" else None
+        lh.append(spark, paths[0], src, local_rows=in_hand)
+        lh.merge_into(spark, paths[1], src, "id", source_rows=in_hand)
+        got[tag] = [
+            {r["id"]: r["x"] for r in lh.read(spark, p).collect()} for p in paths
+        ]
+    assert got["rows"] == got["no_rows"]
+    assert got["rows"][0][1] == got["rows"][1][1] == widened != 0.1
+
+
+def test_plan_commit_refuses_timestamp_and_decimal_schemas(
+    spark, tmp_path, monkeypatch
+):
+    """Timestamp and decimal columns have no value-exact pyarrow twin, so
+    such a schema never takes the driver writer, whatever its key — and
+    merge_into, planning before its probe, collects only the key
+    projection for it instead of full rows."""
+    fresh = str(tmp_path / "fresh")
+    for ddl in ("id int, ts timestamp", "id int, amt decimal(10,2)"):
+        schema = spark.createDataFrame([], ddl).schema
+        assert not lh._plan_commit(fresh, schema, "id", None, 1), ddl
+    plain = spark.createDataFrame([], "id int, v string").schema
+    assert lh._plan_commit(fresh, plain, "id", None, 1)
+
+    asked = []
+    real = lh._discover_touched
+
+    def spy(*a, **kw):
+        d = real(*a, **kw)
+        asked.append((a[5], d.rows))
+        return d
+
+    monkeypatch.setattr(lh, "_discover_touched", spy)
+    import datetime
+
+    ts = datetime.datetime(2026, 1, 1, 12, 0)
+    for ddl, row in (
+        ("id int, ts timestamp", (1, ts)),
+        ("id int, v string", (1, "x")),
+    ):
+        path = str(tmp_path / ddl.split()[-1])
+        lh.create_or_replace(spark, path, spark.createDataFrame([row], ddl), key="id")
+        lh.merge_into(spark, path, spark.createDataFrame([row], ddl), "id")
+    (ts_full, ts_rows), (plain_full, plain_rows) = asked
+    assert ts_full is False and ts_rows is None
+    assert plain_full is True and plain_rows is not None
+
+
+def test_driver_commits_run_zero_spark_jobs(spark, tmp_path):
+    """The benchmark never takes the driver write path (its merges touch
+    too many rows), so this pins its whole point: create_or_replace and
+    append with ``local_rows`` and a small merge_into with
+    ``source_rows`` run ZERO Spark jobs. Jobs are counted through a job
+    group on the status tracker; the same merge without rows in hand is
+    the control that shows the counter sees jobs at all."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def n_jobs(fn):
+        group = f"zero-job-pin-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    path = str(tmp_path / "z")
+    ddl = "id long, val string"
+    base = [(i, f"v{i}") for i in range(100)]
+    more = [(i, f"v{i}") for i in range(100, 150)]
+    upd = [(5, "u5"), (120, "u120"), (500, "new")]
+    upd2 = [(6, "u6"), (501, "new2")]
+    assert n_jobs(lambda: lh.create_or_replace(
+        spark, path, spark.createDataFrame(base, ddl), key="id", local_rows=base
+    )) == 0
+    assert n_jobs(lambda: lh.append(
+        spark, path, spark.createDataFrame(more, ddl), local_rows=more
+    )) == 0
+    assert n_jobs(lambda: lh.merge_into(
+        spark, path, spark.createDataFrame(upd, ddl), "id", source_rows=upd
+    )) == 0
+    assert n_jobs(lambda: lh.merge_into(
+        spark, path, spark.createDataFrame(upd2, ddl), "id"
+    )) >= 1
+    got = {r["id"]: r["val"] for r in lh.read(spark, path).collect()}
+    assert len(got) == 152
+    assert (got[5], got[6], got[120], got[500], got[501]) == (
+        "u5", "u6", "u120", "new", "new2"
+    )
+
+
+def test_stage_microbatch_empty_batch_with_timestamp(spark, tmp_path):
+    """A batch value with no rows still stages a 0-row file carrying the
+    data schema — including types outside the pyarrow staging writer's
+    scalar map (timestamp, decimal, struct)."""
+    import datetime
+    import os
+
+    from ecommerce_dbt_medallion_spark.streaming.sketch_stream import (
+        stage_microbatch_files_by,
+    )
+
+    ts = datetime.datetime(2026, 1, 1, 12, 0)
+    df = spark.createDataFrame(
+        [(0, 1, ts), (0, 2, ts), (2, 3, ts)],
+        "__b int, id long, ts timestamp",
+    ).withColumn(
+        "s",
+        F.struct(
+            F.col("id").alias("x"), F.lit(1.5).cast("decimal(4,2)").alias("d")
+        ),
+    )
+    src = str(tmp_path / "src")
+    os.makedirs(src)
+    stage_microbatch_files_by(src, df, 3)
+    assert sorted(os.listdir(src)) == ["b0.parquet", "b1.parquet", "b2.parquet"]
+    schema = df.drop("__b").schema
+    counts = [
+        spark.read.schema(schema).parquet(os.path.join(src, f"b{k}.parquet")).count()
+        for k in range(3)
+    ]
+    assert counts == [2, 0, 1]
+    empty = spark.read.parquet(os.path.join(src, "b1.parquet"))
+    assert [(f.name, f.dataType) for f in empty.schema.fields] == [
+        (f.name, f.dataType) for f in schema.fields
+    ]
 
 
 def test_merge_fast_path_python_minmax_matches_sql(spark):
