@@ -468,18 +468,36 @@ def history(table: str) -> list[dict]:
 # ------------------------------------------------------------ data files
 
 
-def _footer_min_max(md, col: str):
+def _footer_min_max(path: str, md, col: str):
     """(min, max) of ``col`` across a parquet file's row groups, from the
-    footer statistics pyarrow reads for free; None if unavailable."""
+    footer statistics pyarrow reads for free; None if unavailable.
+
+    Float NaN follows Spark's order, where NaN sorts above every number:
+    a file holding NaN has max NaN (min NaN when it holds no number).
+    parquet-mr (Spark's writer) already records NaN that way; parquet-cpp
+    (the driver writer) leaves NaN out of its stats, so its float columns
+    are checked for NaN directly. Both writers then log the same range
+    for the same rows, and a NaN bound prunes nothing on its side."""
     import decimal
+    import math
+
+    import pyarrow.compute as pc
 
     idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
     if col not in idx or md.num_rows == 0:
         return None
     colschema = md.schema.column(idx[col])
+    is_float = colschema.physical_type in ("FLOAT", "DOUBLE")
     mins, maxs = [], []
     for rg in range(md.num_row_groups):
         s = md.row_group(rg).column(idx[col]).statistics
+        if is_float and s is not None and not s.has_min_max and s.num_values:
+            # parquet-cpp records no range for an all-NaN chunk (a NaN
+            # bound never prunes, so reading any range-less float chunk
+            # this way stays sound)
+            mins.append(math.nan)
+            maxs.append(math.nan)
+            continue
         if s is None or not s.has_min_max:
             # ANY stats-less row group makes the file's range unknowable:
             # bounds from the remaining groups would be too narrow and
@@ -502,6 +520,15 @@ def _footer_min_max(md, col: str):
                 maxs.append(decimal.Decimal(s.max_raw).scaleb(-colschema.scale).quantize(q))
             else:
                 return None
+    if (
+        is_float
+        and (md.created_by or "").startswith("parquet-cpp")
+        and pc.any(pc.is_nan(pq.read_table(path, columns=[col]).column(0))).as_py()
+    ):
+        maxs.append(math.nan)
+    if any(m != m for m in mins + maxs):
+        nums = [m for m in mins if m == m]
+        return (min(nums) if nums else math.nan, math.nan)
     return (min(mins), max(maxs)) if mins else None
 
 
@@ -531,12 +558,13 @@ BLOOM_K = 4
 #   of a metadata-scale write is ~one Spark job of pure scheduling,
 #   multiplied across every micro-batch of the streaming gates, so
 #   driver-resident rows under the dial are written with pyarrow;
-# - _stage_files' driver-side key bloom, TOTAL rows of a staged commit
-#   (round 14 fix): the Python XXH64 twin costs ~15 µs/key serial driver
-#   work, and a data-scale CREATE whose shuffle produced many sub-250k
-#   files paid O(total rows) of it (BENCH r14: lakehouse_zorder_prune
-#   2.7 → 6.9 s, snapshot_cut 7.7 → 14.9 s) — above the dial the one
-#   distributed _stage_blooms pass is strictly cheaper.
+# - _publish_staged's driver-side key bloom, TOTAL rows of a staged
+#   commit (round 14 fix): the Python XXH64 twin costs ~15 µs/key serial
+#   driver work, and a data-scale CREATE whose shuffle produced many
+#   small files paid O(total rows) of it (BENCH r14:
+#   lakehouse_zorder_prune 2.7 → 6.9 s, snapshot_cut 7.7 → 14.9 s) —
+#   above the dial the one distributed _stage_blooms pass is strictly
+#   cheaper.
 STAGE_DRIVER_MAX_ROWS = 20_000
 
 # Key types whose driver-side handling is value-exact: Python str()
@@ -560,13 +588,9 @@ BLOOM_PROBE_MAX_KEYS = 2_048
 # into N near-empty files per batch.
 MERGE_COALESCE_MAX_ROWS = 2_000_000
 
-# _stage_files: staged files at or under this many rows get their key
-# bloom computed driver-side (local pyarrow column read + the bit-exact
-# Python XXH64 twin of _bloom_positions) instead of a second Spark job
-# re-reading files just written. A 100 TB-scale write has files above
-# the dial and keeps the distributed pass. This per-file dial also
-# bounds the pyarrow reads in read_keys_local/_discover_touched
-# (C-speed column decode + set probes — cheap per row).
+# _driver_readable: the largest logged file the driver reads with
+# pyarrow (read_keys_local, _discover_touched, the driver-side MERGE
+# rewrite) — C-speed column decode + set probes, cheap per row.
 BLOOM_DRIVER_MAX_ROWS = 250_000
 
 # merge_into small path: up to this many probed source keys the
@@ -633,7 +657,7 @@ def _json_stat(v, side: str | None = None):
         if side == "hi":
             return math.nextafter(f, math.inf)
         return f
-    return v if isinstance(v, (int, float, str)) else str(v)
+    return v if v is None or isinstance(v, (int, float, str)) else str(v)
 
 
 def _bloom_positions(col):
@@ -752,16 +776,15 @@ def _bloom_mask_py(values) -> int:
     return mask
 
 
-def _stage_blooms(df: DataFrame, staging: str, key: str) -> dict[str, int]:
+def _stage_blooms(schema, staging: str, key: str) -> dict[str, int]:
     """staging-file basename → bloom bitmask of its key values (one
     distributed pass over the just-written files; per-file output is at
     most BLOOM_BITS distinct positions — metadata-scale collect)."""
-    spark = df.sparkSession
     pos = (
-        # explicit schema: the staged files were just written from df,
+        # explicit schema: the staged files were just written with it,
         # so inference would only re-list the directory and re-read
         # footers for a schema already in hand
-        spark.read.schema(df.schema).parquet(staging)
+        SparkSession.active().read.schema(schema).parquet(staging)
         .select(
             F.input_file_name().alias("f"),
             F.explode(_bloom_positions(F.col(key).cast("string"))).alias("p"),
@@ -774,21 +797,78 @@ def _stage_blooms(df: DataFrame, staging: str, key: str) -> dict[str, int]:
     return {os.path.basename(r["f"]): _positions_mask(r["ps"]) for r in pos}
 
 
-def _effective_stats_cols(
-    table: str, columns, stats_cols: list[str] | None
-) -> list[str]:
-    """The stats columns a staged file must carry: the caller's list
-    plus the table's DECLARED partition column (most recent CREATE) and
-    the most recent OPTIMIZE's zorder columns — every rewrite path must
-    keep those columns' stats on the files it writes or pruning would
-    decay with table churn (round-7 fix). ONE definition shared by the
-    distributed and driver-side staging writers so they cannot diverge."""
+def _publish_staged(
+    table: str, staging: str, schema, key: str | None, stats_cols: list[str] | None
+) -> list[dict]:
+    """Move the parquet files of a staging directory under data/ and
+    return their add-actions — the ONE producer of per-file stats, shared
+    by both writers: ``rows``, ``min_key``/``max_key`` and each stats
+    column's ``col_stats`` from the parquet footers (:func:`_footer_min_max`,
+    stored via :func:`_json_stat`), plus the key ``bloom``. ``schema`` is
+    the staged files' Spark schema.
+
+    The stats columns are ``stats_cols`` plus the table's DECLARED
+    partition column (most recent CREATE) and the most recent OPTIMIZE's
+    zorder columns: every rewrite path — MERGE touched files, DELETE,
+    OPTIMIZE — must keep those columns' stats on the files it writes, or
+    each rewrite would silently turn skippable files into always-read
+    ones and pruning would decay with table churn (round-7 fix; min/max
+    stats stay sound on any layout).
+
+    The bloom of a churn-scale commit — a _DRIVER_KEY_TYPES key and at
+    most STAGE_DRIVER_MAX_ROWS staged rows in total — comes from the
+    bit-exact Python XXH64 twin over a local key-column read, with no
+    Spark job; any other commit takes the one distributed
+    :func:`_stage_blooms` pass."""
+    names = schema.fieldNames()
     stats_cols = list(stats_cols or [])
     part_col = _table_partition_by(table)
     for c in ([part_col] if part_col is not None else []) + _table_zorder_by(table):
-        if c in columns and c not in stats_cols:
+        if c in names and c not in stats_cols:
             stats_cols.append(c)
-    return stats_cols
+    staged = sorted(f for f in os.listdir(staging) if f.endswith(".parquet"))
+    paths = [os.path.join(staging, f) for f in staged]
+    mds = [pq.ParquetFile(p).metadata for p in paths]
+    blooms: dict[str, int] = {}
+    if key in names:
+        if (
+            schema[key].dataType.typeName() in _DRIVER_KEY_TYPES
+            and sum(md.num_rows for md in mds) <= STAGE_DRIVER_MAX_ROWS
+        ):
+            blooms = {
+                f: _bloom_mask_py(pq.read_table(p, columns=[key]).column(0).to_pylist())
+                for f, p in zip(staged, paths)
+            }
+        else:
+            blooms = _stage_blooms(schema, staging, key)
+    data_dir = os.path.join(table, _DATA_DIR)
+    os.makedirs(data_dir, exist_ok=True)
+    adds: list[dict] = []
+    for f, src, md in zip(staged, paths, mds):
+        name = f"part-{uuid.uuid4().hex}.parquet"
+        stats: dict = {"file": name, "rows": md.num_rows}
+        # log entries are JSON: date/timestamp stats become ISO strings
+        # and decimals ulp-widened floats (_json_stat); readers convert
+        # their probe bounds the same way, so comparisons stay
+        # order-preserving (round-7 review)
+        if key in names:
+            mm = _footer_min_max(src, md, key)
+            if mm is not None:
+                stats["min_key"] = _json_stat(mm[0], side="lo")
+                stats["max_key"] = _json_stat(mm[1], side="hi")
+            if f in blooms:
+                stats["bloom"] = format(blooms[f], f"0{BLOOM_BITS // 4}x")
+        col_stats = {}
+        for c in stats_cols:
+            mm = _footer_min_max(src, md, c)
+            if mm is not None:
+                col_stats[c] = [_json_stat(mm[0], side="lo"), _json_stat(mm[1], side="hi")]
+        if col_stats:
+            stats["col_stats"] = col_stats
+        os.rename(src, os.path.join(data_dir, name))
+        adds.append(stats)
+    shutil.rmtree(staging, ignore_errors=True)
+    return adds
 
 
 def _stage_files(
@@ -799,17 +879,7 @@ def _stage_files(
     mapping: dict[str, str] | None = None,
 ) -> list[dict]:
     """Write df's partitions as immutable parquet files under data/ and
-    return their add-actions (with per-file min/max stats on ``key`` and
-    each of ``stats_cols`` from the parquet footers, plus a key bloom).
-
-    The table's DECLARED partition column (most recent CREATE) and the
-    most recent OPTIMIZE's zorder columns are always added to
-    ``stats_cols``: every rewrite path — MERGE touched files, DELETE,
-    OPTIMIZE — must keep those columns' stats on the files it writes,
-    or each rewrite would silently turn skippable files into
-    always-read ones and pruning would decay with table churn
-    (round-7 fix; min/max stats stay sound on any layout)."""
-    stats_cols = _effective_stats_cols(table, df.columns, stats_cols)
+    return their add-actions (:func:`_publish_staged`)."""
     # write boundary of the column mapping: files always carry PHYSICAL
     # names (key/partition/zorder/stats columns are rename-protected,
     # so every name this function addresses is identity-mapped). None =
@@ -821,84 +891,7 @@ def _stage_files(
     df = _map_to_physical(df, mapping)
     staging = os.path.join(table, f"_staging-{uuid.uuid4().hex}")
     df.write.mode("overwrite").parquet(staging)
-    blooms: dict[str, int] = {}
-    if key is not None:
-        # Driver-side bloom for small staged files (round 14): the
-        # bit-exact Python XXH64 twin of _bloom_positions reads the key
-        # column locally via pyarrow — no second Spark job over files a
-        # churn-scale MERGE just wrote. Only for _DRIVER_KEY_TYPES;
-        # anything else, or any file above the dial, takes the existing
-        # distributed pass.
-        ktype = df.schema[key].dataType.typeName() if key in df.columns else None
-        staged = [
-            f for f in sorted(os.listdir(staging)) if f.endswith(".parquet")
-        ]
-        # decide the path from footer metadata FIRST (cheap driver
-        # reads) so no file is ever read twice: the driver path only
-        # runs when EVERY staged file is under the per-file dial AND
-        # the commit is churn-scale in total (STAGE_DRIVER_MAX_ROWS).
-        # ktype short-circuit FIRST, and stop reading footers as soon as
-        # the running total proves the driver path ineligible — a large
-        # multi-file commit must not pay one driver footer open per
-        # staged file for a path it can never take (ADVICE r14)
-        all_small = ktype in _DRIVER_KEY_TYPES
-        if all_small:
-            total = 0
-            for f in staged:
-                n = pq.ParquetFile(os.path.join(staging, f)).metadata.num_rows
-                total += n
-                if n > BLOOM_DRIVER_MAX_ROWS or total > STAGE_DRIVER_MAX_ROWS:
-                    all_small = False
-                    break
-        if all_small:
-            for f in staged:
-                blooms[f] = _bloom_mask_py(
-                    pq.read_table(os.path.join(staging, f), columns=[key])
-                    .column(0)
-                    .to_pylist()
-                )
-        else:
-            blooms = _stage_blooms(df, staging, key)
-    data_dir = os.path.join(table, _DATA_DIR)
-    os.makedirs(data_dir, exist_ok=True)
-    adds: list[dict] = []
-    for f in sorted(os.listdir(staging)):
-        if not f.endswith(".parquet"):
-            continue
-        name = f"part-{uuid.uuid4().hex}.parquet"
-        src = os.path.join(staging, f)
-        md = pq.ParquetFile(src).metadata
-        stats: dict = {"file": name, "rows": md.num_rows}
-        if key is not None:
-            mm = _footer_min_max(md, key)
-            if mm is not None:
-                # same ISO-stringify rule as col_stats below: a
-                # date/timestamp/decimal KEY must not crash the JSON
-                # commit (round-7 review); consumers convert their
-                # probe bounds with _json_stat so comparisons stay
-                # order-preserving (ISO strings for dates, ulp-widened
-                # floats for decimals)
-                stats["min_key"] = _json_stat(mm[0], side="lo")
-                stats["max_key"] = _json_stat(mm[1], side="hi")
-            if f in blooms:
-                stats["bloom"] = format(blooms[f], f"0{BLOOM_BITS // 4}x")
-        col_stats = {}
-        for c in stats_cols or []:
-            mm = _footer_min_max(md, c)
-            if mm is not None:
-                # log entries are JSON: date/timestamp/binary stats are
-                # stored as ISO strings (lexicographic == chronological,
-                # so range pruning compares correctly against ISO bounds)
-                col_stats[c] = [
-                    _json_stat(mm[0], side="lo"),
-                    _json_stat(mm[1], side="hi"),
-                ]
-        if col_stats:
-            stats["col_stats"] = col_stats
-        os.rename(src, os.path.join(data_dir, name))
-        adds.append(stats)
-    shutil.rmtree(staging, ignore_errors=True)
-    return adds
+    return _publish_staged(table, staging, df.schema, key, stats_cols)
 
 
 # ------------------------------------------- driver-side staging write
@@ -909,10 +902,10 @@ def _stage_files(
 # of the streaming gates. When a commit's rows are ALREADY
 # driver-resident (a createDataFrame LocalRelation, or a churn-scale
 # MERGE whose bounded probe holds the full source), the staged file is
-# written directly with pyarrow and its stats/bloom computed by the
-# bit-exact Python twins — ZERO Spark jobs. STAGE_DRIVER_MAX_ROWS bounds
-# the driver work; everything above it takes the distributed writer, and
-# _plan_commit is the one place that makes the choice.
+# written directly with pyarrow and published like any other — ZERO
+# Spark jobs. STAGE_DRIVER_MAX_ROWS bounds the driver work; everything
+# above it takes the distributed writer, and _plan_commit is the one
+# place that makes the choice.
 
 # Spark types whose pyarrow write is value-exact under Spark's parquet
 # reader (ints/floats/bool/string/date, and arrays thereof). Timestamps
@@ -932,11 +925,6 @@ _PA_SCALARS = {
     "date": "date32",
 }
 
-# key/partition/zorder/stats columns additionally need Python min/max
-# and _json_stat semantics to match the footer-stat path exactly;
-# floats are excluded (NaN makes Python min/max unordered).
-_PA_STAT_TYPES = {"byte", "short", "integer", "long", "string", "date", "boolean"}
-
 
 def _pa_type(dt):
     """pyarrow DataType for a Spark DataType, or raises KeyError."""
@@ -949,7 +937,7 @@ def _pa_type(dt):
 
 
 def _plan_commit(
-    table: str, schema, key: str | None, stats_cols: list[str] | None, n_rows: int
+    table: str, schema, key: str | None, partition_by: str | None, n_rows: int
 ) -> bool:
     """The writer choice of every commit whose rows can be in the
     driver's hand (``local_rows``, ``source_rows``, merge_into's
@@ -962,15 +950,19 @@ def _plan_commit(
     - ``n_rows`` is at most STAGE_DRIVER_MAX_ROWS;
     - every column's type has a value-exact pyarrow twin;
     - the key (if any) is a _DRIVER_KEY_TYPES column;
-    - every effective stats column totally orders in Python the way
-      footer stats do;
+    - ``partition_by`` (if any) is not a float/double column: the
+      driver writer groups rows by Python value, which splits NaN
+      across files;
     - ``schema`` — the caller's schema BEFORE _evolve_schema — needs no
       cast into the current table's and lacks none of its columns: a
       widening cast (a float source into a double column) changes the
       stored value on the distributed path, so the caller's un-cast
       rows would store a different one, and a merge rewrite must carry
       every table column of the touched rows. (A REPLACE that changes
-      the table's schema therefore takes the distributed writer.)"""
+      the table's schema therefore takes the distributed writer.)
+
+    Both writers publish through :func:`_publish_staged`, so stats need
+    no rule here."""
     if n_rows > STAGE_DRIVER_MAX_ROWS:
         return False
     types = {f.name: f.dataType for f in schema.fields}
@@ -983,9 +975,8 @@ def _plan_commit(
         key not in types or types[key].typeName() not in _DRIVER_KEY_TYPES
     ):
         return False
-    for c in _effective_stats_cols(table, list(types), stats_cols):
-        if c in types and types[c].typeName() not in _PA_STAT_TYPES:
-            return False
+    if partition_by in types and types[partition_by].typeName() in ("float", "double"):
+        return False
     cur = current_schema(table) if versions(table) else None
     return cur is None or all(types.get(f.name) == f.dataType for f in cur.fields)
 
@@ -1000,11 +991,9 @@ def _stage_rows_local(
     partition_by: str | None = None,
 ) -> list[dict]:
     """Driver-side twin of :func:`_stage_files` for rows already in
-    hand (POSITIONAL tuples/Rows in schema field order): immutable
-    parquet files written with pyarrow under data/, min/max stats
-    computed exactly from the values (sound by construction — the stats
-    describe precisely the rows written), the key bloom via the
-    test-pinned Python XXH64 twin. Callers gate on :func:`_plan_commit`.
+    hand (POSITIONAL tuples/Rows in schema field order): a pyarrow write
+    into a staging directory, published by :func:`_publish_staged` like
+    the distributed writer's. Callers gate on :func:`_plan_commit`.
 
     ``partition_by`` writes ONE FILE PER VALUE — exactly the layout
     _apply_partitioning's repartitionByRange(#distinct) produces, so
@@ -1014,21 +1003,14 @@ def _stage_rows_local(
     metadata-scale analogue of the MERGE repartition(1) rule)."""
     import pyarrow as pa
 
-    stats_cols = _effective_stats_cols(
-        table, [f.name for f in schema.fields], stats_cols
-    )
     if mapping is None:
         vs = versions(table)
         mapping = _state_at(table, vs[-1])["mapping"] if vs else {}
     names = [f.name for f in schema.fields]
-    data_dir = os.path.join(table, _DATA_DIR)
-    os.makedirs(data_dir, exist_ok=True)
-    pa_schema = pa.schema(
-        [pa.field(mapping.get(f.name, f.name), _pa_type(f.dataType))
-         for f in schema.fields]
-    )
     pa_types = [_pa_type(f.dataType) for f in schema.fields]
-
+    pa_schema = pa.schema(
+        [pa.field(mapping.get(n, n), t) for n, t in zip(names, pa_types)]
+    )
     if partition_by is not None and partition_by in names:
         pi = names.index(partition_by)
         groups: dict = {}
@@ -1040,45 +1022,20 @@ def _stage_rows_local(
         ] or [[]]  # empty source still stages one schema-carrying file
     else:
         buckets = [list(rows)]
-
-    def _mm(vals):
-        nn = [v for v in vals if v is not None]
-        return (min(nn), max(nn)) if nn else None
-
-    adds: list[dict] = []
-    for bucket in buckets:
-        cols = {n: [r[i] for r in bucket] for i, n in enumerate(names)}
-        name = f"part-{uuid.uuid4().hex}.parquet"
+    staging = os.path.join(table, f"_staging-{uuid.uuid4().hex}")
+    os.makedirs(staging)
+    for i, bucket in enumerate(buckets):
         pq.write_table(
             pa.Table.from_arrays(
-                [pa.array(cols[n], type=t) for n, t in zip(names, pa_types)],
+                [pa.array([r[j] for r in bucket], type=t) for j, t in enumerate(pa_types)],
                 schema=pa_schema,
             ),
-            os.path.join(data_dir, name),
+            os.path.join(staging, f"part-{i:05d}.parquet"),
             compression="snappy",
         )
-        stats: dict = {"file": name, "rows": len(bucket)}
-        if key is not None and key in cols:
-            mm = _mm(cols[key])
-            if mm is not None:
-                stats["min_key"] = _json_stat(mm[0], side="lo")
-                stats["max_key"] = _json_stat(mm[1], side="hi")
-            mask = _bloom_mask_py(cols[key])
-            stats["bloom"] = format(mask, f"0{BLOOM_BITS // 4}x")
-        col_stats = {}
-        for c in stats_cols:
-            if c not in cols:
-                continue
-            mm = _mm(cols[c])
-            if mm is not None:
-                col_stats[c] = [
-                    _json_stat(mm[0], side="lo"),
-                    _json_stat(mm[1], side="hi"),
-                ]
-        if col_stats:
-            stats["col_stats"] = col_stats
-        adds.append(stats)
-    return adds
+    # key and stats columns are rename-protected: the logical schema
+    # names them as the files do
+    return _publish_staged(table, staging, schema, key, stats_cols)
 
 
 def _stats_disjoint(stat_lo, stat_hi, lo, hi) -> bool:
@@ -1121,27 +1078,66 @@ def _stats_disjoint(stat_lo, stat_hi, lo, hi) -> bool:
         return False
 
 
+def _file_range(a: dict, col: str | None, key: str | None):
+    """The logged [min, max] of ``col`` in add-action ``a``: the key
+    stats when ``col`` is the table key, else the column's ``col_stats``;
+    None when the file has none. A non-key column never borrows the key's
+    range (the round-7 review killed such a fallback: comparing the KEY
+    range against an arbitrary column's bounds silently pruned files that
+    held matching rows)."""
+    if col == key and "min_key" in a:
+        return a["min_key"], a["max_key"]
+    return a.get("col_stats", {}).get(col)
+
+
+def _may_hold(files: list[dict], key: str | None, col: str, probes) -> list[dict]:
+    """THE reader of per-file stats: the files of ``files`` that may hold
+    a value of ``col`` inside one of ``probes``, each a ``(lo, hi)``
+    range or, for points of the table key ``key``, ``(v, v, mask)`` with
+    the point's bloom mask. A probe admits a file unless the file's
+    logged range (:func:`_file_range`) provably misses it or the file's
+    bloom rejects its mask. Sound: a file without stats or without a
+    bloom is kept, and bounds are converted with :func:`_json_stat`
+    exactly as the writer stored them (a None bound prunes nothing)."""
+    ps = [
+        (_json_stat(p[0], side="lo"), _json_stat(p[1], side="hi"), p[2] if len(p) > 2 else None)
+        for p in probes
+    ]
+    out = []
+    for a in files:
+        rng = _file_range(a, col, key)
+        bloom = int(a["bloom"], 16) if "bloom" in a else None
+        if any(
+            (m is None or bloom is None or (bloom & m) == m)
+            and (rng is None or not _stats_disjoint(rng[0], rng[1], lo, hi))
+            for lo, hi, m in ps
+        ):
+            out.append(a)
+    return out
+
+
 def files_maybe_containing(
     spark: SparkSession, table: str, values: list, version: int | None = None
 ) -> list[dict]:
     """Point-lookup file skipping: the live files whose key stats AND
-    bloom admit at least one of ``values``. Sound (never drops a file
-    that holds a probed key — test-pinned); a file without a bloom entry
-    is always a candidate. The probe positions are computed by the SAME
-    seeded-xxhash64 expression the writer used, via one tiny Spark job —
-    and the probe STRINGS are rendered by Spark's own cast from the
-    key's native type, never Python ``str()``: the renderings diverge
-    for bool (``True`` vs ``true``) and large floats (``1e+20`` vs
-    ``1.0E20``), which would produce bloom false negatives and silently
-    skip files that do contain the probed keys (round-8 ADVICE).
+    bloom admit at least one of ``values`` (:func:`_may_hold`). Sound
+    (never drops a file that holds a probed key — test-pinned). The
+    probe positions are computed by the SAME seeded-xxhash64 expression
+    the writer used, via one tiny Spark job — and the probe STRINGS are
+    rendered by Spark's own cast from the key's native type, never
+    Python ``str()``: the renderings diverge for bool (``True`` vs
+    ``true``) and large floats (``1e+20`` vs ``1.0E20``), which would
+    produce bloom false negatives and silently skip files that do
+    contain the probed keys (round-8 ADVICE).
 
     Probes travel as ``str(v)`` and round-trip str → key type → string
     IN SPARK, so a type-coercible value (an int tombstone against a
     double key — JSON has no float/int distinction) coerces instead of
-    failing strict createDataFrame verification; a value that does not
-    cast at all disables pruning for this call (every live file kept —
-    conservative; Spark hash functions do NOT null out on NULL input,
-    so a hashed NULL would otherwise masquerade as a real key)."""
+    failing strict createDataFrame verification, and its key-typed
+    value is what the key stats are compared with; a value that does
+    not cast at all disables pruning for this call (every live file
+    kept — conservative; Spark hash functions do NOT null out on NULL
+    input, so a hashed NULL would otherwise masquerade as a real key)."""
     key = _table_key_opt(table, version)
     ktype = None
     if key is not None:
@@ -1163,33 +1159,27 @@ def files_maybe_containing(
             for v in values
         )
     ):
-        masks = [_bloom_mask_py([v]) for v in values]
+        probes = [(v, v, _bloom_mask_py([v])) for v in values]
     else:
         probe_src = spark.createDataFrame([(str(v),) for v in values], "k string")
         if ktype is not None:
             # try_cast, not cast: under ANSI mode (this repo's default) a
             # plain cast of an uncastable probe THROWS instead of yielding
             # the NULL the conservative keep-all fallback below checks for
-            probe_src = probe_src.select(
-                F.col("k").try_cast(ktype).cast("string").alias("k")
-            )
-        # else: keyless or pre-schema-tracking tables wrote no typed blooms
-        # worth matching — the raw str(v) rendering matches the legacy writer
+            typed = F.col("k").try_cast(ktype)
+            probe_src = probe_src.select(typed.alias("v"), typed.cast("string").alias("k"))
+        else:
+            # keyless or pre-schema-tracking tables wrote no typed blooms
+            # worth matching — the raw str(v) rendering matches the legacy
+            # writer, and no typed value bounds the stats
+            probe_src = probe_src.select(F.lit(None).alias("v"), "k")
         probe = probe_src.select(
-            F.col("k"), _bloom_positions(F.col("k")).alias("ps")
+            "v", "k", _bloom_positions(F.col("k")).alias("ps")
         ).collect()
         if any(r["k"] is None for r in probe):
             return list(live_files(table, version))
-        masks = [_positions_mask(r["ps"]) for r in probe]
-    out = []
-    for a in live_files(table, version):
-        if "bloom" not in a:
-            out.append(a)
-            continue
-        fmask = int(a["bloom"], 16)
-        if any((m & fmask) == m for m in masks):
-            out.append(a)
-    return out
+        probes = [(r["v"], r["v"], _positions_mask(r["ps"])) for r in probe]
+    return _may_hold(live_files(table, version), key, key, probes)
 
 
 def _abs(table: str, name: str) -> str:
@@ -1719,8 +1709,7 @@ def _apply_partitioning(df: DataFrame, partition_by: str | None) -> DataFrame:
     sort within files so footer min/max stats stay tight. This is the
     log-tracked analogue of hive-style ``PARTITIONED BY`` — the
     per-file col_stats in the commit entry are the partition index, and
-    ``read_pruned``/``files_overlapping`` are the planner that consumes
-    it. At 100 TB, partition pruning on the ingestion-date column is
+    ``pruned_files`` is the planner that consumes it. At 100 TB, partition pruning on the ingestion-date column is
     the single highest-leverage skipping mechanism a lakehouse has.
 
     The partition count is EXPLICIT (one distinct-count job — metadata-
@@ -1763,7 +1752,7 @@ def create_or_replace(
     removed = [a["file"] for a in live_files(table)] if prior else []
     stats_cols = [partition_by] if partition_by else None
     if local_rows is not None and _plan_commit(
-        table, df.schema, key, stats_cols, len(local_rows)
+        table, df.schema, key, partition_by, len(local_rows)
     ):
         adds = _stage_rows_local(
             table,
@@ -1838,7 +1827,7 @@ def append(
     # staging for the sketch-stream state commits, planned from the
     # caller's schema before evolution casts it
     use_local = local_rows is not None and _plan_commit(
-        table, df.schema, key, stats_cols, len(local_rows)
+        table, df.schema, key, partition_by, len(local_rows)
     )
     df, schema = _evolve_schema(table, df, merge_schema)
     if pending_tombstones(table):
@@ -2218,20 +2207,15 @@ def read_pruned_multi(
 def pruned_files(table: str, bounds: dict, version: int | None = None) -> list[dict]:
     """The live files a conjunctive multi-column range scan must read:
     keep a file iff its logged min/max intersects EVERY ``col: (lo,
-    hi)`` bound (a file missing stats for a bounded column is kept —
-    skipping stays sound). The n-D sibling of ``files_overlapping``,
-    shared by ``read_pruned_multi`` and skip-proof consumers so the
-    guard and the actual read can never drift."""
-    files = []
-    for a in live_files(table, version):
-        keep = True
-        for col, (lo, hi) in bounds.items():
-            cs = a.get("col_stats", {}).get(col)
-            if cs is not None and _stats_disjoint(cs[0], cs[1], lo, hi):
-                keep = False
-                break
-        if keep:
-            files.append(a)
+    hi)`` bound (:func:`_may_hold` — the key column prunes by the key
+    stats; a file missing stats for a bounded column is kept, so
+    skipping stays sound). Shared by ``read_pruned_multi`` and
+    skip-proof consumers so the guard and the actual read can never
+    drift."""
+    files = live_files(table, version)
+    key = _table_key_opt(table, version)
+    for col, (lo, hi) in bounds.items():
+        files = _may_hold(files, key, col, [(lo, hi)])
     return files
 
 
@@ -2373,22 +2357,8 @@ def read_pruned(
     table this is partition pruning: the planner-side file-list cut
     that no Catalyst filter pushdown can achieve once all files are
     handed to the reader. Returns an empty DataFrame with the table
-    schema when every file prunes away.
-
-    Selection is inlined rather than via ``files_overlapping``: that
-    helper's no-stats fallback substitutes the KEY column's min/max,
-    which is sound only when ``col`` IS the table key — here ``col`` is
-    arbitrary, so a file with no stats for it must simply be read."""
-    files = []
-    for a in live_files(table, version):
-        cs = a.get("col_stats", {}).get(col)
-        if cs is None or not _stats_disjoint(cs[0], cs[1], lo, hi):
-            files.append(a)
-    if not files:
-        return read(spark, table, version).where(F.lit(False))
-    return _read_files(spark, table, files, version).where(
-        (F.col(col) >= F.lit(lo)) & (F.col(col) <= F.lit(hi))
-    )
+    schema when every file prunes away."""
+    return read_pruned_multi(spark, table, {col: (lo, hi)}, version)
 
 
 class _Discovery(NamedTuple):
@@ -2429,11 +2399,13 @@ def _discover_touched(
        source's key range — from the probe when small (Python min/max
        matches SQL ordering for every orderable key type, pinned by
        test), else one tiny aggregate over the source.
-    2. Bloom-prune the survivors: drop files whose bloom rejects every
-       source key — the layer that works where min/max can't (hash
-       layouts, full-range files). Sound: a bloom never rejects a
-       present key. Small sources of at most BLOOM_PROBE_MAX_KEYS keys
-       only: above that the 1024-bit masks saturate and prune nothing.
+    2. Point-prune the survivors: drop files whose key stats or bloom
+       reject every source key — the bloom is the layer that works where
+       min/max can't (hash layouts, full-range files). Sound: a bloom
+       never rejects a present key, and a file without one is pruned by
+       its stats alone. Small sources of at most BLOOM_PROBE_MAX_KEYS
+       keys only: above that the 1024-bit masks saturate and prune
+       nothing.
     3. Find the files ACTUALLY containing source keys — EXACTLY, on both
        paths: pyarrow key-column reads against the probed key set when
        the driver may read the candidates (no Spark job; a disjoint-key
@@ -2456,50 +2428,29 @@ def _discover_touched(
         ).limit(n + 1).collect(), 0
     small = len(probe) <= n
     keys = None
-    masks: list = []
+    points: list = []
     if small:
         keys = {r[ki] for r in probe if r[ki] is not None}
         if len(keys) <= BLOOM_PROBE_MAX_KEYS:
-            masks = (
-                [_bloom_mask_py([k]) for k in keys]
+            points = (
+                [(k, k, _bloom_mask_py([k])) for k in keys]
                 if driver_key
-                else list(
-                    {r[0]: _positions_mask(r[1]) for r in probe if r[0] is not None}
-                    .values()
-                )
+                else [
+                    (k, k, _positions_mask(ps))
+                    for k, ps in {r[0]: r[1] for r in probe if r[0] is not None}.items()
+                ]
             )
         lo, hi = (min(keys), max(keys)) if keys else (None, None)
     else:
         lo, hi = source.agg(F.min(F.col(key)), F.max(F.col(key))).collect()[0]
 
     live = live_files(table)
-    # stats in the log are JSON-sanitized; convert the probe bounds the
-    # same way so date/timestamp keys compare as ISO strings and decimal
-    # keys as floats — widening the probe range outward keeps pruning
-    # sound against the (also-widened) stored bounds. An empty source
-    # (or all-NULL keys, e.g. an empty streaming micro-batch) matches no
-    # file.
-    if lo is None or hi is None:
-        candidates = []
-    else:
-        lo, hi = _json_stat(lo, side="lo"), _json_stat(hi, side="hi")
-        candidates = [
-            a
-            for a in live
-            if "min_key" not in a
-            or not _stats_disjoint(a["min_key"], a["max_key"], lo, hi)
-        ]
+    # An empty source (or all-NULL keys, e.g. an empty streaming
+    # micro-batch) matches no file.
+    candidates = [] if lo is None or hi is None else _may_hold(live, key, key, [(lo, hi)])
     n_stats_kept = len(candidates)
-    if candidates and masks and all("bloom" in a for a in candidates):
-        union = 0
-        for m in masks:
-            union |= m
-        candidates = [
-            a
-            for a in candidates
-            if (fm := int(a["bloom"], 16)) & union
-            and any((m & fm) == m for m in masks)
-        ]
+    if candidates and points:
+        candidates = _may_hold(candidates, key, key, points)
 
     touched = [] if not candidates else None
     if candidates and small and driver_key and _driver_readable(candidates):
@@ -3305,17 +3256,9 @@ def _zorder_column(df: DataFrame, cols: list[str]) -> DataFrame:
 def files_overlapping(table: str, col: str, lo, hi, version: int | None = None) -> list[dict]:
     """Live files whose ``col`` min/max range intersects [lo, hi] — the
     data-skipping primitive a scan planner uses against the log's
-    per-file stats. Files without stats for ``col`` are conservatively
-    kept — NEVER substituted with another column's range (the round-7
-    review killed a key-stats fallback here: comparing the KEY range
-    against an arbitrary column's bounds silently pruned files that
-    held matching rows)."""
-    out = []
-    for a in live_files(table, version):
-        cs = a.get("col_stats", {}).get(col)
-        if cs is None or not _stats_disjoint(cs[0], cs[1], lo, hi):
-            out.append(a)
-    return out
+    per-file stats (:func:`pruned_files` with one bound). Files without
+    stats for ``col`` are conservatively kept."""
+    return pruned_files(table, {col: (lo, hi)}, version)
 
 
 def optimize(
@@ -3455,14 +3398,11 @@ def clustering_depth(
         col = key_col
     intervals, statless = [], []
     for a in live_files(table, version):
-        if col is not None and col == key_col and "min_key" in a:
-            lo, hi = a["min_key"], a["max_key"]
-        elif col is not None and "col_stats" in a and col in a["col_stats"]:
-            lo, hi = a["col_stats"][col]
-        else:
+        rng = _file_range(a, col, key_col) if col is not None else None
+        if rng is None:
             statless.append(a)
-            continue
-        intervals.append((lo, hi, a))
+        else:
+            intervals.append((rng[0], rng[1], a))
     try:
         intervals.sort(key=lambda t: (t[0], t[1]))
     except TypeError:

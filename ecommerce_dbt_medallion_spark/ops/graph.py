@@ -328,14 +328,10 @@ def _maintain_driver_side(
         # stored rows of MERGED components relabel too: admit files by
         # their cluster_id stats (conservative keep when absent), read
         # them locally, fold by min like the distributed groupBy
-        admitted = []
-        for a in lakehouse.live_files(labels_table):
-            cs = a.get("col_stats", {}).get("cluster_id")
-            if cs is None or any(
-                not lakehouse._stats_disjoint(cs[0], cs[1], s, s)
-                for s in affected
-            ):
-                admitted.append(a)
+        admitted = lakehouse._may_hold(
+            lakehouse.live_files(labels_table), id_col, "cluster_id",
+            [(s, s) for s in affected],
+        )
         if not lakehouse._driver_readable(admitted):
             return None
         import pyarrow.parquet as _pq
@@ -501,17 +497,12 @@ def maintain_cluster_labels(
         if aff_rows:
             # ONE live_files sweep (one log replay), testing every
             # file's cluster_id stats against the whole affected set —
-            # per-sup files_overlapping calls would re-replay the log
+            # per-sup pruned_files calls would re-replay the log
             # O(merged components) times on the driver
-            sups = [r["sup"] for r in aff_rows]
-            admitted = []
-            for a in lakehouse.live_files(labels_table):
-                cs = a.get("col_stats", {}).get("cluster_id")
-                if cs is None or any(
-                    not lakehouse._stats_disjoint(cs[0], cs[1], s, s)
-                    for s in sups
-                ):
-                    admitted.append(a)
+            admitted = lakehouse._may_hold(
+                lakehouse.live_files(labels_table), id_col, "cluster_id",
+                [(r["sup"], r["sup"]) for r in aff_rows],
+            )
             stored_affected = lakehouse._read_files(
                 spark, labels_table, admitted, None
             )

@@ -451,13 +451,6 @@ def _doc_gram_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _doc_gram_arrays_raw(spark, sf_dir).localCheckpoint(eager=False)
 
 
-def _gram_df(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """doc_id → exploded distinct token-3-grams."""
-    return _doc_gram_arrays(spark, sf_dir).select(
-        "doc_id", F.explode("gs").alias("gram")
-    )
-
-
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """#18: exact token-3-gram Jaccard over candidate pairs.
 

@@ -95,9 +95,19 @@ def test_local_staging_create_matches_distributed(spark, tmp_path, monkeypatch):
             key=lambda t: (t[0] is None, t[0]),
         )
         adds = lh.live_files(path)
-        results[tag] = (got, adds)
-    l_rows, l_adds = results["local"]
-    d_rows, d_adds = results["distributed"]
+        # a double zorder column holding NaN: the driver writer takes it,
+        # and both writers must log the same stats for the appended files
+        nan = float("nan")
+        more = [
+            (300, "x", nan, True, datetime.date(2026, 2, 1), [1], 1),
+            (301, "y", 7.5, False, datetime.date(2026, 2, 2), [2], 1),
+            (302, "z", nan, None, None, None, 4),
+        ]
+        results[tag] = (got, adds, _zorder_then_append_nan(spark, path, more, schema))
+    l_rows, l_adds, l_nan = results["local"]
+    d_rows, d_adds, d_nan = results["distributed"]
+    assert l_nan[0] and not d_nan[0]
+    assert l_nan[1:] == d_nan[1:] == (7.5, "NaN", 300, 302, l_nan[5])
     assert l_rows == d_rows
     # one file per partition value (the _apply_partitioning layout):
     # 5 cluster values + the NULL group
@@ -120,18 +130,51 @@ def test_local_staging_create_matches_distributed(spark, tmp_path, monkeypatch):
     assert sum(a["rows"] for a in l_adds) == sum(a["rows"] for a in d_adds) == 201
 
 
+def _zorder_then_append_nan(spark, path, rows, schema):
+    """OPTIMIZE ZORDER BY (id, d), then append ``rows`` — whose double
+    ``d`` holds NaN — through ``local_rows``. Returns whether the driver
+    writer was planned, then the appended files' global ``d`` range (NaN
+    max if any file logs one), key range and bloom union."""
+    import math
+
+    lh.optimize(spark, path, key="id", zorder_by=["id", "d"])
+    df = spark.createDataFrame(rows, schema)
+    planned = lh._plan_commit(
+        path, df.schema, "id", lh._table_partition_by(path), len(rows)
+    )
+    v = lh.append(spark, path, df, local_rows=rows)
+    add = lh._read_entry(path, v)["add"]
+    ds = [a["col_stats"]["d"] for a in add if "d" in a.get("col_stats", {})]
+    his = [hi for _, hi in ds]
+    bloom = 0
+    for a in add:
+        bloom |= int(a.get("bloom", "0"), 16)
+    keyed = [a for a in add if "min_key" in a]
+    return (
+        planned,
+        min(lo for lo, _ in ds if not math.isnan(lo)),
+        "NaN" if any(math.isnan(hi) for hi in his) else max(his),
+        min(a["min_key"] for a in keyed),
+        max(a["max_key"] for a in keyed),
+        bloom,
+    )
+
+
 def test_local_staging_append_matches_distributed(spark, tmp_path, monkeypatch):
     """Round 15: the LocalRelation append fast path — same values, same
     inherited key stats, as the distributed staging writer."""
     results = {}
+    nan_stats = {}
     for tag in ("local", "distributed"):
         if tag == "distributed":
             monkeypatch.setattr(lh, "_plan_commit", lambda *a: False)
         path = str(tmp_path / f"a-{tag}")
-        base = spark.range(50).select(F.col("id"), (F.col("id") * 10).alias("val"))
+        base = spark.range(50).select(
+            F.col("id"), (F.col("id") * 10).alias("val"), (F.col("id") / 4).alias("d")
+        )
         lh.create_or_replace(spark, path, base, key="id")
-        extra_rows = [(100, -1), (101, None), (None, 7)]
-        extra = spark.createDataFrame(extra_rows, "id long, val long")
+        extra_rows = [(100, -1, 0.5), (101, None, None), (None, 7, -2.0)]
+        extra = spark.createDataFrame(extra_rows, "id long, val long, d double")
         v = lh.append(spark, path, extra, local_rows=extra_rows)
         add = lh._read_entry(path, v)["add"]
         rows = sorted(
@@ -147,8 +190,17 @@ def test_local_staging_append_matches_distributed(spark, tmp_path, monkeypatch):
             min(a["min_key"] for a in keyed),
             max(a["max_key"] for a in keyed),
         )
+        # a double zorder column holding NaN, in one file on the driver
+        # writer and in as many as Spark splits the rows on the other
+        nan_rows = [(200, 1, float("nan")), (201, 2, 3.25), (202, None, float("nan"))]
+        nan_stats[tag] = _zorder_then_append_nan(
+            spark, path, nan_rows, "id long, val long, d double"
+        )
     assert results["local"] == results["distributed"]
     assert results["local"][1:] == (100, 101)
+    assert nan_stats["local"][0] and not nan_stats["distributed"][0]
+    assert nan_stats["local"][1:] == nan_stats["distributed"][1:]
+    assert nan_stats["local"][1:5] == (3.25, "NaN", 200, 202)
 
 
 def test_merge_driver_write_matches_distributed(spark, tmp_path, monkeypatch):
@@ -274,7 +326,7 @@ def test_stage_blooms_driver_path_matches_spark_job(spark, tmp_path, monkeypatch
     lh.create_or_replace(spark, path, df, key="k")
     driver_bloom = {a["file"]: a["bloom"] for a in lh.live_files(path)}
     # force the Spark-job path by zeroing the driver dial
-    monkeypatch.setattr(lh, "BLOOM_DRIVER_MAX_ROWS", 0)
+    monkeypatch.setattr(lh, "STAGE_DRIVER_MAX_ROWS", 0)
     path2 = str(tmp_path / "ab2")
     lh.create_or_replace(spark, path2, df, key="k")
     job_bloom = {a["file"]: a["bloom"] for a in lh.live_files(path2)}
@@ -1864,6 +1916,34 @@ def test_bloom_probe_rendering_matches_writer(spark, tmp_path):
     lh.delete_keys_deferred(spark, path, [1e20])
     lh.materialize_tombstones(spark, path)
     assert not lh.live_files(path), "tombstoned row silently retained"
+
+
+def test_key_range_reads_prune_by_key_stats(spark, tmp_path, monkeypatch):
+    """A range read on the KEY column prunes by the key stats: on a
+    key-only table split into 8 files by key range, ``read_pruned`` and
+    ``pruned_files`` keep only the files whose min_key/max_key overlap
+    [lo, hi], and the rows stay exact. (The files log no col_stats, so a
+    reader that looked only there kept all 8.)"""
+    path = str(tmp_path / "keyranges")
+    lh.create_or_replace(spark, path, spark.range(800).repartitionByRange(8, "id"), key="id")
+    live = lh.live_files(path)
+    assert len(live) == 8 and not any("col_stats" in a for a in live)
+    lo, hi = 150, 260
+    want = {a["file"] for a in live if a["min_key"] <= hi and a["max_key"] >= lo}
+    assert 0 < len(want) < 8
+    assert {a["file"] for a in lh.pruned_files(path, {"id": (lo, hi)})} == want
+
+    read = []
+    real = lh._read_files
+
+    def spy(spark_, table, files, *a, **kw):
+        read.append({f["file"] for f in files})
+        return real(spark_, table, files, *a, **kw)
+
+    monkeypatch.setattr(lh, "_read_files", spy)
+    got = sorted(r["id"] for r in lh.read_pruned(spark, path, "id", lo, hi).collect())
+    assert read == [want]
+    assert got == list(range(lo, hi + 1))
 
 
 def test_files_overlapping_keeps_stats_less_files(spark, tmp_path):
