@@ -17,6 +17,16 @@ bronze=view, silver=table, gold=table).
 - **snapshot** (dbt's SCD2 check-strategy snapshot): tracks row-version
   history with dbt-style ``valid_from``/``valid_to``/``scd_id``.
 
+``run`` schedules the six silver/gold tables as a DAG, the way ``dbt run
+--threads`` does: each model is built, written and (when a dependent
+reads it) re-read on a worker thread as soon as its upstream tables are
+materialized, so ``gold_order_metrics`` overlaps ``silver_payments`` and
+the three gold tables overlap each other. The pool is as wide as the DAG
+(3 threads). Workers are wrapped with ``pyspark.inheritable_thread_target``,
+so every model's jobs carry the caller's job group and local properties.
+When a model fails, its dependents are skipped, the models in flight
+finish, and the first error is raised.
+
 The runner also executes the DQ engine per layer (the ``dbt test`` step)
 and returns a manifest.
 """
@@ -25,7 +35,11 @@ from __future__ import annotations
 
 import json
 import os
+from concurrent.futures import FIRST_COMPLETED, Future, ThreadPoolExecutor, wait
+from dataclasses import dataclass
+from typing import Callable
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -42,53 +56,113 @@ def _write(df: DataFrame, path: str, partition_by: list[str] | None = None) -> N
     w.parquet(path)
 
 
+@dataclass(frozen=True)
+class _Model:
+    """One node of ``run``'s DAG: ``build(spark, sf_dir, upstream)`` makes
+    the model's frame from its upstream models' materialized tables
+    (``upstream`` maps name → re-read frame); it is written to
+    ``<warehouse>/<layer>/<name>``."""
+
+    name: str
+    layer: str
+    upstream: tuple[str, ...]
+    build: Callable[[SparkSession, str, dict[str, DataFrame]], DataFrame]
+    partition_by: tuple[str, ...] = ()
+
+
+# Declared in manifest order.
+# Bronze views are built inside their silver model (nothing is written).
+_MODELS: tuple[_Model, ...] = (
+    _Model(
+        "silver_customers", "silver", (),
+        lambda spark, sf, up: ms.silver_customers_df(mb.bronze_customers(spark, sf)),
+    ),
+    # Partition the orders fact by month: date-ranged gold rebuilds and
+    # incremental loads then scan only the touched partitions (pruning).
+    _Model(
+        "silver_orders", "silver", ("silver_customers",),
+        lambda spark, sf, up: ms.silver_orders_df(
+            mb.bronze_orders(spark, sf), up["silver_customers"]
+        ),
+        ("order_year_month",),
+    ),
+    _Model(
+        "silver_payments", "silver", ("silver_orders",),
+        lambda spark, sf, up: ms.silver_payments_df(
+            mb.bronze_payments(spark, sf), up["silver_orders"]
+        ),
+    ),
+    _Model(
+        "gold_customer_summary", "gold",
+        ("silver_customers", "silver_orders", "silver_payments"),
+        lambda spark, sf, up: mg.gold_customer_summary_df(
+            up["silver_customers"], up["silver_orders"], up["silver_payments"]
+        ),
+    ),
+    _Model(
+        "gold_order_metrics", "gold", ("silver_orders",),
+        lambda spark, sf, up: mg.gold_order_metrics_df(up["silver_orders"]),
+    ),
+    _Model(
+        "gold_revenue_analysis", "gold", ("silver_orders", "silver_payments"),
+        lambda spark, sf, up: mg.gold_revenue_analysis_df(
+            up["silver_orders"], up["silver_payments"]
+        ),
+    ),
+)
+# The DAG's width: gold_order_metrics, gold_customer_summary and
+# gold_revenue_analysis can all be in flight at once.
+_THREADS = 3
+
+
+def _materialize(
+    spark: SparkSession, sf_dir: str, warehouse: str, m: _Model,
+    upstream: dict[str, DataFrame],
+) -> DataFrame | None:
+    """Build, write and (when a dependent reads it) re-read one model."""
+    path = os.path.join(warehouse, m.layer, m.name)
+    df = m.build(spark, sf_dir, upstream)
+    _write(df, path, list(m.partition_by) or None)
+    if any(m.name in d.upstream for d in _MODELS):
+        # the written schema is known: reading with it skips the footer
+        # job that schema inference would run before each dependent starts
+        return spark.read.schema(df.schema).parquet(path)
+    return None
+
+
 def run(spark: SparkSession, sf_dir: str, warehouse: str) -> dict[str, str]:
     """Full ``dbt run``: bronze views → silver tables → gold tables.
 
     Returns model → materialized path ('' for views).
     """
-    manifest: dict[str, str] = {}
+    tables: dict[str, DataFrame | None] = {}
+    pending = list(_MODELS)
+    running: dict[Future, _Model] = {}
+    error: Exception | None = None
+    with ThreadPoolExecutor(_THREADS, thread_name_prefix="runner-model") as pool:
+        while True:
+            for m in [m for m in pending if all(u in tables for u in m.upstream)]:
+                pending.remove(m)
+                # wrapped here, on the caller's thread, so each model gets
+                # its own copy of the caller's local properties (job group)
+                work = inheritable_thread_target(spark)(_materialize)
+                up = {u: tables[u] for u in m.upstream}
+                running[pool.submit(work, spark, sf_dir, warehouse, m, up)] = m
+            if not running:
+                break  # what is still pending depends on a failed model
+            done, _ = wait(running, return_when=FIRST_COMPLETED)
+            for fut in done:
+                m = running.pop(fut)
+                try:
+                    tables[m.name] = fut.result()
+                except Exception as exc:  # re-raised once in-flight models end
+                    error = error or exc
+    if error is not None:
+        raise error
 
-    # bronze: views (lazy) — recorded for lineage, nothing written
-    b_customers = mb.bronze_customers(spark, sf_dir)
-    b_orders = mb.bronze_orders(spark, sf_dir)
-    b_payments = mb.bronze_payments(spark, sf_dir)
-    for name in ("bronze_customers", "bronze_orders", "bronze_payments"):
-        manifest[name] = ""
-
-    # silver: tables, computed from bronze, then re-read from parquet so
-    # gold consumes the materialized layer (single computation per layer)
-    silver_dir = os.path.join(warehouse, "silver")
-    sc = ms.silver_customers_df(b_customers)
-    _write(sc, os.path.join(silver_dir, "silver_customers"))
-    sc_m = spark.read.parquet(os.path.join(silver_dir, "silver_customers"))
-
-    # Partition the orders fact by month: date-ranged gold rebuilds and
-    # incremental loads then scan only the touched partitions (pruning).
-    so = ms.silver_orders_df(b_orders, sc_m)
-    _write(so, os.path.join(silver_dir, "silver_orders"), ["order_year_month"])
-    so_m = spark.read.parquet(os.path.join(silver_dir, "silver_orders"))
-
-    sp = ms.silver_payments_df(b_payments, so_m)
-    _write(sp, os.path.join(silver_dir, "silver_payments"))
-    sp_m = spark.read.parquet(os.path.join(silver_dir, "silver_payments"))
-
-    for name in ("silver_customers", "silver_orders", "silver_payments"):
-        manifest[name] = os.path.join(silver_dir, name)
-
-    # gold: tables from materialized silver
-    gold_dir = os.path.join(warehouse, "gold")
-    _write(
-        mg.gold_customer_summary_df(sc_m, so_m, sp_m),
-        os.path.join(gold_dir, "gold_customer_summary"),
-    )
-    _write(mg.gold_order_metrics_df(so_m), os.path.join(gold_dir, "gold_order_metrics"))
-    _write(
-        mg.gold_revenue_analysis_df(so_m, sp_m),
-        os.path.join(gold_dir, "gold_revenue_analysis"),
-    )
-    for name in ("gold_customer_summary", "gold_order_metrics", "gold_revenue_analysis"):
-        manifest[name] = os.path.join(gold_dir, name)
+    manifest = dict.fromkeys(("bronze_customers", "bronze_orders", "bronze_payments"), "")
+    for m in _MODELS:
+        manifest[m.name] = os.path.join(warehouse, m.layer, m.name)
     return manifest
 
 

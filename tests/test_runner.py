@@ -2,6 +2,10 @@
 
 from __future__ import annotations
 
+import os
+import threading
+import uuid
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -11,25 +15,90 @@ from ecommerce_dbt_medallion_spark.sources import mapping
 from tests.conftest import SF_SMOKE, assert_frames_match
 
 
+_TABLES = [
+    ("silver", "silver_customers"),
+    ("silver", "silver_orders"),
+    ("silver", "silver_payments"),
+    ("gold", "gold_customer_summary"),
+    ("gold", "gold_order_metrics"),
+    ("gold", "gold_revenue_analysis"),
+]
+
+
 def test_run_materializes_layers(spark, tmp_path):
     wh = str(tmp_path / "warehouse")
     manifest = runner.run(spark, SF_SMOKE, wh)
     assert manifest["bronze_customers"] == ""  # views: nothing written
-    for name in (
-        "silver_customers",
-        "silver_orders",
-        "silver_payments",
-        "gold_customer_summary",
-        "gold_order_metrics",
-        "gold_revenue_analysis",
-    ):
-        assert manifest[name], name
-        assert spark.read.parquet(manifest[name]).count() > 0, name
+    # layered materialization must equal each model's single-plan query
+    for layer, name in _TABLES:
+        assert manifest[name] == str(tmp_path / "warehouse" / layer / name), name
+        direct = getattr(gold if layer == "gold" else silver, name)(spark, SF_SMOKE)
+        materialized = spark.read.parquet(manifest[name]).toPandas()
+        assert len(materialized) > 0, name
+        assert_frames_match(materialized, direct.toPandas(), f"{name}_materialized")
 
-    # layered materialization must equal the single-plan query exactly
-    direct = gold.gold_customer_summary(spark, SF_SMOKE).toPandas()
-    materialized = spark.read.parquet(manifest["gold_customer_summary"]).toPandas()
-    assert_frames_match(materialized, direct, "gold_customer_summary_materialized")
+
+@pytest.mark.parametrize(
+    "failing, module, skipped",
+    [
+        ("gold_order_metrics", gold, set()),
+        ("silver_payments", silver, {"gold_customer_summary", "gold_revenue_analysis"}),
+    ],
+)
+def test_run_failure_skips_dependents_and_joins_workers(
+    spark, tmp_path, monkeypatch, failing, module, skipped
+):
+    """A failing model re-raises its own error from ``run`` once every
+    model in flight has finished: no model thread outlives the call, the
+    failed model's dependents are never written, and the models that do
+    not depend on it still are (dbt's skip semantics)."""
+
+    class Boom(RuntimeError):
+        pass
+
+    def boom(*args, **kwargs):
+        raise Boom(failing)
+
+    monkeypatch.setattr(module, f"{failing}_df", boom)
+    wh = tmp_path / "warehouse"
+    baseline = threading.active_count()
+    with pytest.raises(Boom, match=failing):
+        runner.run(spark, SF_SMOKE, str(wh))
+    assert threading.active_count() == baseline
+    assert not [t for t in threading.enumerate() if t.name.startswith("runner-model")]
+    written = {name for layer, name in _TABLES if os.path.exists(wh / layer / name)}
+    assert written == {name for _, name in _TABLES} - skipped - {failing}
+
+
+def test_run_jobs_inherit_callers_job_group(spark, tmp_path):
+    """Every Spark job the build submits runs in the caller's job group,
+    so the model workers inherit the caller's local properties. The
+    build's jobs are the job ids between two probe jobs."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def probe_job_id() -> int:
+        group = f"probe-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            sc.parallelize([0], 1).count()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        (job_id,) = tracker.getJobIdsForGroup(group)
+        return job_id
+
+    group = f"runner-build-{uuid.uuid4().hex}"
+    first = probe_job_id()
+    sc.setJobGroup(group, group)
+    try:
+        runner.run(spark, SF_SMOKE, str(tmp_path / "warehouse"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    last = probe_job_id()
+    build_jobs = set(range(first + 1, last))
+    assert build_jobs
+    assert set(tracker.getJobIdsForGroup(group)) == build_jobs
 
 
 def test_incremental_merge_converges_to_full(spark, tmp_path):
