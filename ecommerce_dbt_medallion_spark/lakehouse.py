@@ -22,11 +22,16 @@ Stores", VLDB 2020):
   files carry over by reference — at 100 TB this is the whole point of
   the format: an incremental batch rewrites a few files, not the table.
 
-Single-writer assumption: real Delta arbitrates concurrent commits via
-optimistic concurrency on the log (putIfAbsent); this engine runs one
-materialization driver, so version numbers are assigned locally. The
-commit is still atomic for readers: data files land first, the JSON log
-entry is renamed into place last.
+Commit protocol (Delta's optimistic concurrency): every operation folds
+the log ONCE at its start into a :class:`_Snapshot` at version N
+(:func:`_snapshot`), reads only from that fold, and commits its entry
+at N+1 with a put-if-absent link (:func:`_commit`). Data files land
+first; the entry is published last, so readers see all of a commit or
+none of it. When another writer got N+1 first, an add-only entry
+(append, staged append) rebases past the winner if every intervening
+commit is benign (:func:`_commit_rebase`); any other operation aborts
+with the typed :class:`ConcurrentWriteConflict` (:func:`_commit_exclusive`)
+and must be re-run against the new HEAD.
 """
 
 from __future__ import annotations
@@ -62,6 +67,15 @@ def versions(table: str) -> list[int]:
     return sorted(
         int(f[1:-5]) for f in os.listdir(d) if f.startswith("v") and f.endswith(".json")
     )
+
+
+def _table_versions(table: str) -> list[int]:
+    """:func:`versions` of an existing table; the one place that rejects
+    a path holding no table."""
+    vs = versions(table)
+    if not vs:
+        raise FileNotFoundError(f"not a deltalite table: {table}")
+    return vs
 
 
 def _read_entry(table: str, v: int) -> dict:
@@ -108,9 +122,8 @@ def _empty_state() -> dict:
 
 def _fold_entry(state: dict, e: dict) -> dict:
     """Apply ONE log entry to a folded state — the single definition of
-    replay semantics (live_files / pending_tombstones / current_schema /
-    current_constraints / _table_key / _table_partition_by /
-    _table_zorder_by / _unresolved_staged are all views of this fold)."""
+    replay semantics (every field of a :class:`_Snapshot` is this
+    fold's output)."""
     # table-level metadata folds on EVERY entry, including staged ones
     if e.get("key") is not None:
         state["key"] = e["key"]
@@ -228,21 +241,63 @@ def _latest_checkpoint(table: str, version: int):
     return None
 
 
-def _state_at(table: str, version: int) -> dict:
-    """The folded table state as of ``version`` (inclusive), seeded
-    from the newest usable checkpoint. Caller validates the version."""
-    ck = _latest_checkpoint(table, version)
-    if ck is not None:
-        start_v, state = ck
-    else:
-        start_v, state = -1, _empty_state()
-    for v in versions(table):
-        if v <= start_v:
-            continue
-        if v > version:
-            break
-        state = _fold_entry(state, _read_entry(table, v))
-    return state
+class _Snapshot(NamedTuple):
+    """The table as ONE operation sees it: the log folded up to
+    ``version`` (-1 for a table not yet created, so a first commit is
+    v0). Operations read every view from here and commit at
+    ``version + 1``; the fields are :func:`_empty_state`'s."""
+
+    table: str
+    version: int
+    live: dict
+    staged: dict
+    tombstones: list
+    constraints: dict
+    schema_json: str | None
+    key: str | None  # latest declared key (a scan-back over the log)
+    partition_by: str | None  # declared by the most recent CREATE
+    zorder_by: list  # columns of the most recent OPTIMIZE ZORDER
+    mapping: dict
+    retired: list
+
+    @property
+    def files(self) -> list[dict]:
+        return list(self.live.values())
+
+    @property
+    def schema(self):
+        """The logged StructType; None for tables created before
+        schema tracking (readers then fall back to footer inference)."""
+        return StructType.fromJson(json.loads(self.schema_json)) if self.schema_json else None
+
+    def require_key(self) -> str:
+        if self.key is None:
+            raise ValueError(f"table {self.table} has no declared key")
+        return self.key
+
+
+def _snapshot(table: str, version: int | None = None) -> _Snapshot:
+    """THE fold: the table state as of ``version`` (inclusive; default
+    HEAD), seeded from the newest usable checkpoint. The one place that
+    rejects an unknown version."""
+    vs = _table_versions(table)
+    if version is None:
+        version = vs[-1]
+    elif version not in vs:
+        raise ValueError(f"version {version} not in {vs}")
+    start_v, state = _latest_checkpoint(table, version) or (-1, _empty_state())
+    for v in vs:
+        if start_v < v <= version:
+            state = _fold_entry(state, _read_entry(table, v))
+    return _Snapshot(table, version, **state)
+
+
+def _head_or_new(table: str) -> _Snapshot:
+    """The HEAD snapshot, or the empty version -1 snapshot of a table
+    whose first commit is still to come (CREATE paths)."""
+    if not versions(table):
+        return _Snapshot(table, -1, **_empty_state())
+    return _snapshot(table)
 
 
 def _maybe_write_checkpoint(table: str, version: int) -> None:
@@ -252,20 +307,10 @@ def _maybe_write_checkpoint(table: str, version: int) -> None:
     if version <= 0 or version % CHECKPOINT_INTERVAL != 0:
         return
     try:
-        st = _state_at(table, version)
-        payload = {
-            "version": version,
-            "live": list(st["live"].values()),
-            "staged": {str(k): v for k, v in st["staged"].items()},
-            "tombstones": st["tombstones"],
-            "constraints": st["constraints"],
-            "schema_json": st["schema_json"],
-            "key": st["key"],
-            "partition_by": st["partition_by"],
-            "zorder_by": st["zorder_by"],
-            "mapping": st["mapping"],
-            "retired": st["retired"],
-        }
+        payload = _snapshot(table, version)._asdict()
+        del payload["table"]
+        payload["live"] = list(payload["live"].values())
+        payload["staged"] = {str(k): v for k, v in payload["staged"].items()}
         tmp = os.path.join(
             _log_path(table), f".ckpt-tmp-{uuid.uuid4().hex}.json"
         )
@@ -430,22 +475,7 @@ def _commit(table: str, entry: dict) -> None:
 def live_files(table: str, version: int | None = None) -> list[dict]:
     """The live add-actions (file name + stats) as of ``version``
     (inclusive; default latest) — checkpoint-seeded replay."""
-    vs = versions(table)
-    if not vs:
-        raise FileNotFoundError(f"not a deltalite table: {table}")
-    if version is None:
-        version = vs[-1]
-    if version not in vs:
-        raise ValueError(f"version {version} not in {vs}")
-    return list(_state_at(table, version)["live"].values())
-
-
-def _unresolved_staged(table: str) -> dict[int, list]:
-    """Staged commits not yet published or discarded."""
-    vs = versions(table)
-    if not vs:
-        return {}
-    return _state_at(table, vs[-1])["staged"]
+    return _snapshot(table, version).files
 
 
 def history(table: str) -> list[dict]:
@@ -798,7 +828,7 @@ def _stage_blooms(schema, staging: str, key: str) -> dict[str, int]:
 
 
 def _publish_staged(
-    table: str, staging: str, schema, key: str | None, stats_cols: list[str] | None
+    snap: _Snapshot, staging: str, schema, key: str | None, stats_cols: list[str] | None
 ) -> list[dict]:
     """Move the parquet files of a staging directory under data/ and
     return their add-actions — the ONE producer of per-file stats, shared
@@ -822,8 +852,8 @@ def _publish_staged(
     :func:`_stage_blooms` pass."""
     names = schema.fieldNames()
     stats_cols = list(stats_cols or [])
-    part_col = _table_partition_by(table)
-    for c in ([part_col] if part_col is not None else []) + _table_zorder_by(table):
+    part_col = snap.partition_by
+    for c in ([part_col] if part_col is not None else []) + snap.zorder_by:
         if c in names and c not in stats_cols:
             stats_cols.append(c)
     staged = sorted(f for f in os.listdir(staging) if f.endswith(".parquet"))
@@ -841,7 +871,7 @@ def _publish_staged(
             }
         else:
             blooms = _stage_blooms(schema, staging, key)
-    data_dir = os.path.join(table, _DATA_DIR)
+    data_dir = os.path.join(snap.table, _DATA_DIR)
     os.makedirs(data_dir, exist_ok=True)
     adds: list[dict] = []
     for f, src, md in zip(staged, paths, mds):
@@ -873,7 +903,7 @@ def _publish_staged(
 
 def _stage_files(
     df: DataFrame,
-    table: str,
+    snap: _Snapshot,
     key: str | None,
     stats_cols: list[str] | None = None,
     mapping: dict[str, str] | None = None,
@@ -883,15 +913,12 @@ def _stage_files(
     # write boundary of the column mapping: files always carry PHYSICAL
     # names (key/partition/zorder/stats columns are rename-protected,
     # so every name this function addresses is identity-mapped). None =
-    # current table state; CREATE paths pass {} (a replaced table's old
-    # mapping must not leak into the new table's files).
-    if mapping is None:
-        vs = versions(table)
-        mapping = _state_at(table, vs[-1])["mapping"] if vs else {}
-    df = _map_to_physical(df, mapping)
-    staging = os.path.join(table, f"_staging-{uuid.uuid4().hex}")
+    # the snapshot's mapping; CREATE paths pass {} (a replaced table's
+    # old mapping must not leak into the new table's files).
+    df = _map_to_physical(df, snap.mapping if mapping is None else mapping)
+    staging = os.path.join(snap.table, f"_staging-{uuid.uuid4().hex}")
     df.write.mode("overwrite").parquet(staging)
-    return _publish_staged(table, staging, df.schema, key, stats_cols)
+    return _publish_staged(snap, staging, df.schema, key, stats_cols)
 
 
 # ------------------------------------------- driver-side staging write
@@ -937,7 +964,7 @@ def _pa_type(dt):
 
 
 def _plan_commit(
-    table: str, schema, key: str | None, partition_by: str | None, n_rows: int
+    snap: _Snapshot, schema, key: str | None, partition_by: str | None, n_rows: int
 ) -> bool:
     """The writer choice of every commit whose rows can be in the
     driver's hand (``local_rows``, ``source_rows``, merge_into's
@@ -977,12 +1004,12 @@ def _plan_commit(
         return False
     if partition_by in types and types[partition_by].typeName() in ("float", "double"):
         return False
-    cur = current_schema(table) if versions(table) else None
+    cur = snap.schema
     return cur is None or all(types.get(f.name) == f.dataType for f in cur.fields)
 
 
 def _stage_rows_local(
-    table: str,
+    snap: _Snapshot,
     rows: list,
     schema,
     key: str | None,
@@ -1004,8 +1031,7 @@ def _stage_rows_local(
     import pyarrow as pa
 
     if mapping is None:
-        vs = versions(table)
-        mapping = _state_at(table, vs[-1])["mapping"] if vs else {}
+        mapping = snap.mapping
     names = [f.name for f in schema.fields]
     pa_types = [_pa_type(f.dataType) for f in schema.fields]
     pa_schema = pa.schema(
@@ -1022,7 +1048,7 @@ def _stage_rows_local(
         ] or [[]]  # empty source still stages one schema-carrying file
     else:
         buckets = [list(rows)]
-    staging = os.path.join(table, f"_staging-{uuid.uuid4().hex}")
+    staging = os.path.join(snap.table, f"_staging-{uuid.uuid4().hex}")
     os.makedirs(staging)
     for i, bucket in enumerate(buckets):
         pq.write_table(
@@ -1035,7 +1061,7 @@ def _stage_rows_local(
         )
     # key and stats columns are rename-protected: the logical schema
     # names them as the files do
-    return _publish_staged(table, staging, schema, key, stats_cols)
+    return _publish_staged(snap, staging, schema, key, stats_cols)
 
 
 def _stats_disjoint(stat_lo, stat_hi, lo, hi) -> bool:
@@ -1138,12 +1164,16 @@ def files_maybe_containing(
     not cast at all disables pruning for this call (every live file
     kept — conservative; Spark hash functions do NOT null out on NULL
     input, so a hashed NULL would otherwise masquerade as a real key)."""
-    key = _table_key_opt(table, version)
+    return _files_maybe_containing(spark, _snapshot(table, version), values)
+
+
+def _files_maybe_containing(spark: SparkSession, snap: _Snapshot, values: list) -> list[dict]:
+    """:func:`files_maybe_containing` on a snapshot."""
+    key = snap.key
     ktype = None
-    if key is not None:
-        sch = current_schema(table, version)  # None on pre-tracking logs
-        if sch is not None:
-            ktype = next((f.dataType for f in sch.fields if f.name == key), None)
+    sch = snap.schema  # None on pre-tracking logs
+    if key is not None and sch is not None:
+        ktype = next((f.dataType for f in sch.fields if f.name == key), None)
     # Driver-side probe (round 14): for _DRIVER_KEY_TYPES keys whose
     # probe values already carry the key's Python type, the bit-exact
     # Python XXH64 twin computes the masks with zero Spark jobs (the
@@ -1177,9 +1207,9 @@ def files_maybe_containing(
             "v", "k", _bloom_positions(F.col("k")).alias("ps")
         ).collect()
         if any(r["k"] is None for r in probe):
-            return list(live_files(table, version))
+            return snap.files
         probes = [(r["v"], r["v"], _positions_mask(r["ps"])) for r in probe]
-    return _may_hold(live_files(table, version), key, key, probes)
+    return _may_hold(snap.files, key, key, probes)
 
 
 def _abs(table: str, name: str) -> str:
@@ -1196,15 +1226,7 @@ def current_schema(table: str, version: int | None = None):
     and worse, footer union can't tell you WHICH schema a time-travel
     version had. Returns None for tables created before schema tracking
     (readers then fall back to footer inference)."""
-    from pyspark.sql.types import StructType
-
-    vs = versions(table)
-    if not vs:
-        raise FileNotFoundError(f"not a deltalite table: {table}")
-    if version is None:
-        version = vs[-1]
-    schema = _state_at(table, version)["schema_json"]
-    return StructType.fromJson(json.loads(schema)) if schema else None
+    return _snapshot(table, version).schema
 
 
 def current_mapping(table: str, version: int | None = None) -> dict[str, str]:
@@ -1214,12 +1236,7 @@ def current_mapping(table: str, version: int | None = None) -> dict[str, str]:
     immutable data files keep their creation-time (physical) column
     names forever; readers alias physical→logical and writers alias
     logical→physical at the two funnel boundaries."""
-    vs = versions(table)
-    if not vs:
-        raise FileNotFoundError(f"not a deltalite table: {table}")
-    if version is None:
-        version = vs[-1]
-    return dict(_state_at(table, version)["mapping"])
+    return _snapshot(table, version).mapping
 
 
 def _map_to_physical(df: DataFrame, mapping: dict[str, str]) -> DataFrame:
@@ -1273,12 +1290,7 @@ def current_constraints(table: str, version: int | None = None) -> dict[str, str
     """The table's CHECK constraints (name → boolean SQL expr) as of
     ``version`` — carried in log entries like the schema; the latest
     entry declaring ``constraints`` wins."""
-    vs = versions(table)
-    if not vs:
-        raise FileNotFoundError(f"not a deltalite table: {table}")
-    if version is None:
-        version = vs[-1]
-    return _state_at(table, version)["constraints"]
+    return _snapshot(table, version).constraints
 
 
 def _enforce_constraints(df: DataFrame, constraints: dict[str, str], ctx: str) -> None:
@@ -1314,12 +1326,7 @@ def pending_tombstones(table: str, version: int | None = None) -> list:
     """Key tombstones not yet materialized as of ``version``: replay
     accumulates DELETE DEFERRED commits and clears on any commit flagged
     ``tombstones_cleared`` (the materialization)."""
-    vs = versions(table)
-    if not vs:
-        raise FileNotFoundError(f"not a deltalite table: {table}")
-    if version is None:
-        version = vs[-1]
-    return _state_at(table, version)["tombstones"]
+    return _snapshot(table, version).tombstones
 
 
 def delete_keys_deferred(spark: SparkSession, table: str, keys: list) -> int:
@@ -1336,14 +1343,11 @@ def delete_keys_deferred(spark: SparkSession, table: str, keys: list) -> int:
     materialize first. Tombstone volume is capped at TOMBSTONE_MAX —
     beyond that the rewrite is cheaper than the read-side filter.
     """
-    prior = versions(table)
-    if not prior:
-        raise ValueError(f"table {table} does not exist")
-    key = _table_key_opt(table)
+    snap = _snapshot(table)
+    key = snap.key
     if key is None:
         raise ValueError("deferred deletes require a table key")
-    pend = pending_tombstones(table)
-    if len(pend) + len(keys) > TOMBSTONE_MAX:
+    if len(snap.tombstones) + len(keys) > TOMBSTONE_MAX:
         raise ValueError(
             f"tombstone count would exceed {TOMBSTONE_MAX}; materialize first"
         )
@@ -1353,7 +1357,7 @@ def delete_keys_deferred(spark: SparkSession, table: str, keys: list) -> int:
     # would THROW on it — one junk tombstone wedging every reader of
     # the table. try_cast (not cast): ANSI cast raises instead of
     # yielding the NULL this check looks for.
-    sch = current_schema(table)
+    sch = snap.schema
     ktype = None
     if sch is not None:
         ktype = next((f.dataType for f in sch.fields if f.name == key), None)
@@ -1367,7 +1371,7 @@ def delete_keys_deferred(spark: SparkSession, table: str, keys: list) -> int:
                 f"tombstone key(s) not castable to {key}'s type "
                 f"{ktype.simpleString()}: {[r['k'] for r in bad][:5]}"
             )
-    v = prior[-1] + 1
+    v = snap.version + 1
     _commit_exclusive(
         table,
         {
@@ -1387,24 +1391,25 @@ def materialize_tombstones(spark: SparkSession, table: str) -> int:
     """Apply pending tombstones to the data files (rewrite only files
     containing tombstoned keys — delete_where's file discovery) and
     clear the tombstone list in the same commit."""
-    pend = pending_tombstones(table)
+    snap = _snapshot(table)
+    pend = snap.tombstones
     if not pend:
-        return versions(table)[-1]
-    # Full log scan-back, never a last-entry peek with an "id" guess: a
-    # metadata-only commit (constraint, PUBLISH) landing after the
-    # DELETE DEFERRED would otherwise make this destructive rewrite
-    # delete by the wrong column. Tombstones pending implies
-    # delete_keys_deferred found a key, so _table_key cannot miss.
-    key = _table_key(table)
+        return snap.version
+    # The snapshot's key is the fold's scan-back over the whole log,
+    # never a last-entry peek with an "id" guess: a metadata-only commit
+    # (constraint, PUBLISH) landing after the DELETE DEFERRED would
+    # otherwise make this destructive rewrite delete by the wrong
+    # column. Tombstones pending implies delete_keys_deferred found a
+    # key, so it cannot miss.
     vals = ", ".join(_sql_literal(k) for k in pend)
-    return delete_where(
+    return _delete_where(
         spark,
-        table,
-        f"{key} in ({vals})",
-        _clear_tombstones=True,
+        snap,
+        f"{snap.require_key()} in ({vals})",
+        clear_tombstones=True,
         # bounds the discovery scan via blooms + key stats: O(candidate
         # files), not O(table) — the erasure-request batch shape
-        _candidate_keys=list(pend),
+        candidate_keys=list(pend),
     )
 
 
@@ -1412,13 +1417,14 @@ def add_constraint(spark: SparkSession, table: str, name: str, expr: str) -> int
     """ALTER TABLE ADD CONSTRAINT name CHECK (expr): existing data is
     validated FIRST (Delta semantics — a constraint you can add to dirty
     data is a lie), then a metadata-only commit records the new
-    constraint set."""
-    cons = current_constraints(table)
-    if name in cons:
+    constraint set. A commit landing between the validation and this
+    commit aborts it: the rows it added were never validated."""
+    snap = _snapshot(table)
+    if name in snap.constraints:
         raise ValueError(f"constraint {name!r} already exists")
-    _enforce_constraints(read(spark, table), {name: expr}, "existing data")
-    cons[name] = expr
-    v = versions(table)[-1] + 1
+    _enforce_constraints(_read_live(spark, snap), {name: expr}, "existing data")
+    cons = {**snap.constraints, name: expr}
+    v = snap.version + 1
     _commit_exclusive(
         table,
         {
@@ -1433,7 +1439,7 @@ def add_constraint(spark: SparkSession, table: str, name: str, expr: str) -> int
     return v
 
 
-def _protected_columns(table: str) -> dict[str, str]:
+def _protected_columns(snap: _Snapshot) -> dict[str, str]:
     """Columns the engine itself addresses BY NAME inside the log
     (footer stats keys, partition index, zorder spec, CHECK exprs, CDC
     tombstone flag) → reason. Renaming one would desynchronize logged
@@ -1442,13 +1448,11 @@ def _protected_columns(table: str) -> dict[str, str]:
     import re as _re
 
     out: dict[str, str] = {}
-    k = _table_key_opt(table)
-    if k is not None:
-        out[k] = "table key (footer stats + blooms are logged under it)"
-    p = _table_partition_by(table)
-    if p is not None:
-        out[p] = "partition column (the logged partition index)"
-    for z in _table_zorder_by(table):
+    if snap.key is not None:
+        out[snap.key] = "table key (footer stats + blooms are logged under it)"
+    if snap.partition_by is not None:
+        out[snap.partition_by] = "partition column (the logged partition index)"
+    for z in snap.zorder_by:
         out.setdefault(z, "zorder column (logged clustering spec)")
     # Tokenizing a CHECK expr with a bare-identifier regex would also
     # capture SQL keywords and the CONTENTS of string literals (e.g.
@@ -1456,11 +1460,11 @@ def _protected_columns(table: str) -> dict[str, str]:
     # blocking rename/drop of unrelated columns (round-8 review). Strip
     # quoted literals first, then keep only tokens that name an actual
     # logical column of the table.
-    sch = current_schema(table)
+    sch = snap.schema
     logical = (
         {f.name for f in sch.fields} if sch is not None else None
     )
-    for name, expr in current_constraints(table).items():
+    for name, expr in snap.constraints.items():
         # both literal syntaxes: single-quoted (ANSI) AND double-quoted
         # (Spark SQL's default when double-quoted identifiers are off —
         # round-9 review: 'seg = "north"' must not protect a column
@@ -1482,19 +1486,15 @@ def _protected_columns(table: str) -> dict[str, str]:
     return out
 
 
-def _check_new_logical_name(st: dict, new: str, own_physical: str | None = None) -> None:
+def _check_new_logical_name(snap: _Snapshot, new: str, own_physical: str | None = None) -> None:
     """A new logical name may not collide with a live logical column,
     any column's PHYSICAL name, or a retired physical name — data files
     are immutable, so a physical collision would silently splice old
     file data into the new column. ``own_physical`` exempts the renamed
     column's own physical slot (renaming BACK to it just collapses the
     mapping)."""
-    logical = (
-        {f["name"] for f in json.loads(st["schema_json"])["fields"]}
-        if st["schema_json"]
-        else set()
-    )
-    physical = {st["mapping"].get(n, n) for n in logical} | set(st["retired"])
+    logical = set(snap.schema.fieldNames()) if snap.schema_json else set()
+    physical = {snap.mapping.get(n, n) for n in logical} | set(snap.retired)
     physical.discard(own_physical)
     if new in logical:
         raise ValueError(f"column {new!r} already exists")
@@ -1515,31 +1515,28 @@ def rename_column(table: str, old: str, new: str) -> int:
     travel to a pre-rename version sees the old name (the fold is
     versioned). Engine-addressed columns (key / partition / zorder /
     constraint-referenced / CDC flag) are rejected with the reason."""
-    vs = versions(table)
-    if not vs:
-        raise FileNotFoundError(f"not a deltalite table: {table}")
-    st = _state_at(table, vs[-1])
-    if not st["schema_json"]:
+    snap = _snapshot(table)
+    if not snap.schema_json:
         raise ValueError(
             f"table {table} predates schema tracking; rename needs a "
             "logged schema"
         )
-    sch = json.loads(st["schema_json"])
+    sch = json.loads(snap.schema_json)
     names = [f["name"] for f in sch["fields"]]
     if old not in names:
         raise ValueError(f"no such column: {old!r} (have {names})")
-    prot = _protected_columns(table)
+    prot = _protected_columns(snap)
     if old in prot:
         raise ValueError(f"cannot rename {old!r}: {prot[old]}")
-    _check_new_logical_name(st, new, own_physical=st["mapping"].get(old, old))
-    mapping = dict(st["mapping"])
+    _check_new_logical_name(snap, new, own_physical=snap.mapping.get(old, old))
+    mapping = dict(snap.mapping)
     mapping[new] = mapping.pop(old, old)  # physical name is sticky
     if mapping[new] == new:
         del mapping[new]  # renamed back to its physical name
     for f in sch["fields"]:
         if f["name"] == old:
             f["name"] = new
-    v = vs[-1] + 1
+    v = snap.version + 1
     _commit_exclusive(
         table,
         {
@@ -1548,7 +1545,7 @@ def rename_column(table: str, old: str, new: str) -> int:
             "operation": f"RENAME COLUMN ({old} -> {new})",
             "schema_json": json.dumps(sch),
             "column_mapping": mapping,
-            "retired_physical": list(st["retired"]),
+            "retired_physical": list(snap.retired),
             "add": [],
             "remove": [],
         },
@@ -1563,31 +1560,28 @@ def drop_column(table: str, col: str) -> int:
     bytes, so re-adding the name would resurrect stale data — the
     collision guard makes that impossible). Protected columns reject as
     in rename_column."""
-    vs = versions(table)
-    if not vs:
-        raise FileNotFoundError(f"not a deltalite table: {table}")
-    st = _state_at(table, vs[-1])
-    if not st["schema_json"]:
+    snap = _snapshot(table)
+    if not snap.schema_json:
         raise ValueError(
             f"table {table} predates schema tracking; drop needs a "
             "logged schema"
         )
-    sch = json.loads(st["schema_json"])
+    sch = json.loads(snap.schema_json)
     names = [f["name"] for f in sch["fields"]]
     if col not in names:
         raise ValueError(f"no such column: {col!r} (have {names})")
     if len(names) == 1:
         raise ValueError("cannot drop the only column")
-    prot = _protected_columns(table)
+    prot = _protected_columns(snap)
     if col in prot:
         raise ValueError(f"cannot drop {col!r}: {prot[col]}")
-    mapping = dict(st["mapping"])
+    mapping = dict(snap.mapping)
     physical = mapping.pop(col, col)
-    retired = list(st["retired"])
+    retired = list(snap.retired)
     if physical not in retired:
         retired.append(physical)
     sch["fields"] = [f for f in sch["fields"] if f["name"] != col]
-    v = vs[-1] + 1
+    v = snap.version + 1
     _commit_exclusive(
         table,
         {
@@ -1606,11 +1600,11 @@ def drop_column(table: str, col: str) -> int:
 
 def drop_constraint(table: str, name: str) -> int:
     """ALTER TABLE DROP CONSTRAINT — metadata-only commit."""
-    cons = current_constraints(table)
-    if name not in cons:
+    snap = _snapshot(table)
+    if name not in snap.constraints:
         raise ValueError(f"no such constraint: {name!r}")
-    del cons[name]
-    v = versions(table)[-1] + 1
+    cons = {n: e for n, e in snap.constraints.items() if n != name}
+    v = snap.version + 1
     _commit_exclusive(
         table,
         {
@@ -1637,7 +1631,7 @@ _SAFE_WIDEN = {
 }
 
 
-def _evolve_schema(table: str, df: DataFrame, merge_schema: bool):
+def _evolve_schema(snap: _Snapshot, df: DataFrame, merge_schema: bool):
     """Validate df's schema against the table's logged schema. Returns
     ``(df_cast, schema_to_record)``: df with upcast-compatible columns
     cast to the table's (wider) types, and the possibly-widened table
@@ -1646,12 +1640,11 @@ def _evolve_schema(table: str, df: DataFrame, merge_schema: bool):
     under merge_schema (Delta's posture: widening is safe for every
     reader, narrowing silently breaks them).
     """
-    from pyspark.sql.types import StructType
+    from pyspark.sql.types import DecimalType
 
-    cur = current_schema(table)
+    cur = snap.schema
     if cur is None:
         return df, df.schema
-    from pyspark.sql.types import DecimalType
 
     cur_fields = {f.name: f.dataType for f in cur.fields}
     new_fields = {f.name: f.dataType for f in df.schema.fields}
@@ -1680,8 +1673,7 @@ def _evolve_schema(table: str, df: DataFrame, merge_schema: bool):
         # column-mapping collision guard: an evolved column may not
         # reuse a physical name still present in immutable data files
         # (old bytes would resurrect into the new column)
-        st = _state_at(table, versions(table)[-1])
-        reserved = set(st["mapping"].values()) | set(st["retired"])
+        reserved = set(snap.mapping.values()) | set(snap.retired)
         hit = [n for n in added if n in reserved]
         if hit:
             raise SchemaMismatch(
@@ -1748,14 +1740,13 @@ def create_or_replace(
     distinct-count job + a range-sample job + the write job
     (VERDICT r14 #1/#4). Above the dial, or for schemas without an
     exact pyarrow twin, the distributed writer runs as before."""
-    prior = versions(table)
-    removed = [a["file"] for a in live_files(table)] if prior else []
+    snap = _head_or_new(table)
     stats_cols = [partition_by] if partition_by else None
     if local_rows is not None and _plan_commit(
-        table, df.schema, key, partition_by, len(local_rows)
+        snap, df.schema, key, partition_by, len(local_rows)
     ):
         adds = _stage_rows_local(
-            table,
+            snap,
             local_rows,
             df.schema,
             key,
@@ -1766,18 +1757,18 @@ def create_or_replace(
     else:
         adds = _stage_files(
             _apply_partitioning(df, partition_by),
-            table,
+            snap,
             key,
             stats_cols=stats_cols,
             mapping={},  # a REPLACE starts a fresh identity mapping
         )
-    v = (prior[-1] + 1) if prior else 0
+    v = snap.version + 1
     _commit_exclusive(
         table,
         {
             "version": v,
             "timestamp": time.time(),
-            "operation": "CREATE OR REPLACE" if prior else "CREATE",
+            "operation": "CREATE OR REPLACE" if v else "CREATE",
             "key": key,
             "partition_by": partition_by,
             # REPLACE resets table metadata (Delta semantics): declared
@@ -1785,7 +1776,7 @@ def create_or_replace(
             "constraints": {},
             "schema_json": df.schema.json(),
             "add": adds,
-            "remove": removed,
+            "remove": list(snap.live),
         },
     )
     return v
@@ -1806,40 +1797,38 @@ def append(
     nullable columns; old files null-fill on read via the log schema).
     ``local_rows``: driver-resident rows of df for zero-job staging
     (see create_or_replace)."""
-    prior = versions(table)
-    if not prior:
+    snap = _head_or_new(table)
+    if snap.version < 0:
         return create_or_replace(
             spark, table, df, key, partition_by=partition_by,
             local_rows=local_rows,
         )
-    if partition_by is None:
-        # inherit the table's declared clustering: an append that forgot
-        # the partition column would otherwise write files spanning every
-        # partition value, quietly breaking pruning for all new data
-        partition_by = _table_partition_by(table)
-    if key is None:
-        # inherit the declared key the same way: a key-less append would
-        # write files with no min/max key stats and no bloom, turning
-        # them into permanent MERGE candidates (round-7 review)
-        key = _table_key_opt(table)
+    # inherit the table's declared clustering: an append that forgot
+    # the partition column would otherwise write files spanning every
+    # partition value, quietly breaking pruning for all new data
+    partition_by = partition_by or snap.partition_by
+    # inherit the declared key the same way: a key-less append would
+    # write files with no min/max key stats and no bloom, turning them
+    # into permanent MERGE candidates (round-7 review)
+    key = key or snap.key
     stats_cols = [partition_by] if partition_by else None
     # driver-resident fast path (see create_or_replace): zero-job
     # staging for the sketch-stream state commits, planned from the
     # caller's schema before evolution casts it
     use_local = local_rows is not None and _plan_commit(
-        table, df.schema, key, partition_by, len(local_rows)
+        snap, df.schema, key, partition_by, len(local_rows)
     )
-    df, schema = _evolve_schema(table, df, merge_schema)
-    if pending_tombstones(table):
+    df, schema = _evolve_schema(snap, df, merge_schema)
+    if snap.tombstones:
         raise ValueError(
             "table has pending deferred deletes; run materialize_tombstones "
             "first (a key tombstone cannot distinguish a pre-delete row from "
             "a re-inserted one)"
         )
-    _enforce_constraints(df, current_constraints(table), "APPEND")
+    _enforce_constraints(df, snap.constraints, "APPEND")
     if use_local:
         adds = _stage_rows_local(
-            table,
+            snap,
             local_rows,
             df.schema,
             key,
@@ -1849,17 +1838,16 @@ def append(
     else:
         adds = _stage_files(
             _apply_partitioning(df, partition_by),
-            table,
+            snap,
             key,
             stats_cols=stats_cols,
         )
-    v = prior[-1] + 1
     # add-only: a lost commit race against another add-only writer
     # rebases onto the new HEAD instead of failing (classified retry)
     return _commit_rebase(
         table,
         {
-            "version": v,
+            "version": snap.version + 1,
             "timestamp": time.time(),
             "operation": "APPEND",
             "key": key,
@@ -1887,16 +1875,9 @@ def snapshot_versions(tables, max_attempts: int = 25) -> dict:
     Pure metadata (two listdir sweeps per attempt); feed the pins to
     :func:`read` / :func:`read_snapshot` for time-travel reads."""
     tables = list(tables)
-
-    def head(t: str) -> int:
-        vs = versions(t)
-        if not vs:
-            raise FileNotFoundError(f"not a deltalite table: {t}")
-        return vs[-1]
-
     for _ in range(max_attempts):
-        first = {t: head(t) for t in tables}
-        second = {t: head(t) for t in tables}
+        first = {t: _table_versions(t)[-1] for t in tables}
+        second = {t: _table_versions(t)[-1] for t in tables}
         if first == second:
             return first
     raise RuntimeError(
@@ -1921,41 +1902,14 @@ def read(spark: SparkSession, table: str, version: int | None = None) -> DataFra
     an additive evolution; a time-travel read of a pre-evolution
     version sees the OLD schema) — footer inference is the fallback for
     pre-schema-tracking tables."""
-    vs = versions(table)
-    if not vs:
-        raise FileNotFoundError(f"not a deltalite table: {table}")
-    if version is None:
-        version = vs[-1]
-    if version not in vs:
-        raise ValueError(f"version {version} not in {vs}")
-    # ONE fold for every view this read needs — live set, schema,
-    # tombstones, key. The per-view helpers each replay independently
-    # (checkpoint parse + tail fold), which multiplies metadata I/O
-    # 4x per read on exactly the tables checkpoints exist for.
-    st = _state_at(table, version)
-    files = list(st["live"].values())
-    if not files:
-        raise ValueError(f"table {table} has no live files at version {version}")
-    reader = spark.read
-    logical = None
-    if st["schema_json"]:
-        logical = StructType.fromJson(json.loads(st["schema_json"]))
-        # files carry PHYSICAL names; the scan schema must match them,
-        # then the projection aliases back to the logical schema (and
-        # drops retired columns)
-        reader = reader.schema(_physical_schema(logical, st["mapping"]))
-    df = reader.parquet(*[_abs(table, a["file"]) for a in files])
-    df = _map_to_logical(df, logical, st["mapping"])
-    pend = st["tombstones"]
-    if pend:
-        # merge-on-read: un-materialized deletes filter at scan time.
-        # NULL-key rows pass: NOT(NULL IN (...)) is NULL under
-        # three-valued logic and where() would silently drop them
-        if st["key"] is None:
-            raise ValueError(f"table {table} has no declared key")
-        k = F.col(st["key"])
-        df = df.where(k.isNull() | ~k.isin(pend))
-    return df
+    return _read_live(spark, _snapshot(table, version))
+
+
+def _read_live(spark: SparkSession, snap: _Snapshot) -> DataFrame:
+    """:func:`read` of a snapshot: :func:`_read_files` over its live set."""
+    if not snap.live:
+        raise ValueError(f"table {snap.table} has no live files at version {snap.version}")
+    return _read_files(spark, snap, snap.files)
 
 
 def table_row_count(table: str, version: int | None = None) -> int:
@@ -1966,7 +1920,7 @@ def table_row_count(table: str, version: int | None = None) -> int:
     tombstones are not reflected (they hide rows at scan time);
     callers needing exactness under pending tombstones should
     materialize first — the returned count is the PHYSICAL row count."""
-    return sum(a["rows"] for a in live_files(table, version))
+    return sum(a["rows"] for a in _snapshot(table, version).live.values())
 
 
 # Write-audit-publish (WAP): stage → validate → publish/discard. The
@@ -1984,21 +1938,18 @@ def append_staged(
     enforce at stage time (they are table invariants, not audit
     opinions); schema must match exactly (no evolution through the
     staging path)."""
-    prior = versions(table)
-    if not prior:
-        raise ValueError(f"table {table} does not exist (create before staging)")
-    if pending_tombstones(table):
+    snap = _snapshot(table)
+    if snap.tombstones:
         raise ValueError("materialize deferred deletes before staging")
-    df, _schema = _evolve_schema(table, df, merge_schema=False)
-    _enforce_constraints(df, current_constraints(table), "APPEND STAGED")
-    adds = _stage_files(df, table, key)
-    v = prior[-1] + 1
+    df, _schema = _evolve_schema(snap, df, merge_schema=False)
+    _enforce_constraints(df, snap.constraints, "APPEND STAGED")
+    adds = _stage_files(df, snap, key)
     # staged adds are invisible until PUBLISH, so the same add-only
     # rebase applies
     return _commit_rebase(
         table,
         {
-            "version": v,
+            "version": snap.version + 1,
             "timestamp": time.time(),
             "operation": "APPEND STAGED",
             "staged": True,
@@ -2010,25 +1961,24 @@ def append_staged(
 
 
 def read_staged(spark: SparkSession, table: str, staged_version: int) -> DataFrame:
-    """The staged commit's OWN rows (what an audit validates)."""
-    adds = _unresolved_staged(table).get(staged_version)
+    """The staged commit's OWN rows (what an audit validates), raw: the
+    pending-tombstone filter is a read-time view of live data."""
+    snap = _snapshot(table)
+    adds = snap.staged.get(staged_version)
     if adds is None:
         raise ValueError(f"version {staged_version} is not an unresolved staged commit")
     if not adds:
         raise ValueError(f"staged commit {staged_version} has no files")
-    df = spark.read.parquet(*[_abs(table, a["file"]) for a in adds])
-    # staged files carry physical names; the auditor sees logical ones
-    for lg, ph in current_mapping(table).items():
-        df = df.withColumnRenamed(ph, lg)
-    return df
+    return _read_files(spark, snap, adds, with_tombstones=False)
 
 
 def _resolve_staged(table: str, staged_version: int, op: str, field: str) -> int:
-    if staged_version not in _unresolved_staged(table):
+    snap = _snapshot(table)
+    if staged_version not in snap.staged:
         raise ValueError(
             f"version {staged_version} is not an unresolved staged commit"
         )
-    v = versions(table)[-1] + 1
+    v = snap.version + 1
     _commit_exclusive(
         table,
         {
@@ -2086,14 +2036,14 @@ def read_keys(
     filtered to exactly those keys. ``keys`` must be metadata-scale
     (the probe mask check is O(files × keys) driver-side); callers with
     data-scale key sets should join against read() instead."""
-    files = files_maybe_containing(spark, table, list(keys), version)
+    snap = _snapshot(table, version)
+    files = _files_maybe_containing(spark, snap, list(keys))
     if not files:
-        schema = current_schema(table, version)
-        if schema is not None:
-            return spark.createDataFrame([], schema)
-        return read(spark, table, version).where(F.lit(False))
-    k = F.col(_table_key(table, version))
-    return _read_files(spark, table, files, version).where(k.isin(list(keys)))
+        if snap.schema is not None:
+            return spark.createDataFrame([], snap.schema)
+        return _read_live(spark, snap).where(F.lit(False))
+    k = F.col(snap.require_key())
+    return _read_files(spark, snap, files).where(k.isin(list(keys)))
 
 
 def read_keys_local(
@@ -2109,17 +2059,16 @@ def read_keys_local(
     or a pre-evolution file missing a requested column. Sound because
     files_maybe_containing never drops a key holder and the gates refuse
     every table state where a raw file read could differ from read()."""
-    if pending_tombstones(table):
-        return None
-    if current_mapping(table):
+    snap = _snapshot(table)
+    if snap.tombstones or snap.mapping:
         return None
     # key-type gate (round-14 review): pyarrow-decoded values must
     # compare EQUAL to Spark-collected ones (_DRIVER_KEY_TYPES) — a
     # timestamp key (pyarrow UTC datetimes vs Spark session-local naive)
     # would silently match nothing and report every key as absent
     # instead of falling back
-    kcol = _table_key(table)
-    sch = current_schema(table)
+    kcol = snap.require_key()
+    sch = snap.schema
     ktype = (
         next((f.dataType.typeName() for f in sch.fields if f.name == kcol), None)
         if sch is not None
@@ -2127,7 +2076,7 @@ def read_keys_local(
     )
     if ktype not in _DRIVER_KEY_TYPES:
         return None
-    files = files_maybe_containing(spark, table, list(keys))
+    files = _files_maybe_containing(spark, snap, list(keys))
     if not _driver_readable(files):
         return None
     if kcol not in columns:
@@ -2156,11 +2105,10 @@ def distinct_values_local(table: str, col: str) -> set | None:
     or a file missing the column (pre-evolution). Round 14: the
     streaming sketch ingests burned one read+anti-join Spark job per
     micro-batch just to test replay of an integer batch tag."""
-    if pending_tombstones(table):
+    snap = _snapshot(table)
+    if snap.tombstones or snap.mapping:
         return None
-    if current_mapping(table):
-        return None
-    files = live_files(table)
+    files = snap.files
     if not _driver_readable(files):
         return None
     out: set = set()
@@ -2195,10 +2143,11 @@ def read_pruned_multi(
     arbitrary footer) and the pending-tombstone anti-filter (a skipped
     rewrite must not resurrect logically deleted rows) — pruning only
     ever cuts the FILE list, never changes the visible rows/columns."""
-    files = pruned_files(table, bounds, version)
+    snap = _snapshot(table, version)
+    files = _pruned_files(snap, bounds)
     if not files:
-        return read(spark, table, version).where(F.lit(False))
-    df = _read_files(spark, table, files, version)
+        return _read_live(spark, snap).where(F.lit(False))
+    df = _read_files(spark, snap, files)
     for col, (lo, hi) in bounds.items():
         df = df.where((F.col(col) >= F.lit(lo)) & (F.col(col) <= F.lit(hi)))
     return df
@@ -2212,22 +2161,25 @@ def pruned_files(table: str, bounds: dict, version: int | None = None) -> list[d
     skipping stays sound). Shared by ``read_pruned_multi`` and
     skip-proof consumers so the guard and the actual read can never
     drift."""
-    files = live_files(table, version)
-    key = _table_key_opt(table, version)
+    return _pruned_files(_snapshot(table, version), bounds)
+
+
+def _pruned_files(snap: _Snapshot, bounds: dict) -> list[dict]:
+    """:func:`pruned_files` on a snapshot."""
+    files = snap.files
     for col, (lo, hi) in bounds.items():
-        files = _may_hold(files, key, col, [(lo, hi)])
+        files = _may_hold(files, snap.key, col, [(lo, hi)])
     return files
 
 
 def _read_files(
     spark: SparkSession,
-    table: str,
+    snap: _Snapshot,
     files: list[dict],
-    version: int | None,
     with_tombstones: bool = True,
 ) -> DataFrame:
-    """Read a file SUBSET under the full read() contract: log schema as
-    of ``version`` (so schema-evolved columns null-fill instead of
+    """Read a file SUBSET under the full read() contract: the snapshot's
+    log schema (so schema-evolved columns null-fill instead of
     silently vanishing when the subset happens to contain only
     pre-evolution files — or, worse, when a REWRITE path takes one
     file's footer as the schema and permanently drops the evolved
@@ -2237,28 +2189,21 @@ def _read_files(
     ``with_tombstones=False``: a physical rewrite must see the raw file
     contents — ``materialize_tombstones`` in particular relies on the
     tagged scan FINDING the tombstoned rows it is about to drop."""
-    # ONE fold for schema + mapping + tombstones + key (same
-    # fold-once rule read() follows)
-    vs = versions(table)
-    st = _state_at(table, vs[-1] if version is None else version)
-    schema = (
-        StructType.fromJson(json.loads(st["schema_json"]))
-        if st["schema_json"]
-        else None
-    )
+    schema = snap.schema
     reader = spark.read
     if schema is not None:
-        reader = reader.schema(_physical_schema(schema, st["mapping"]))
-    df = reader.parquet(*[_abs(table, a["file"]) for a in files])
-    df = _map_to_logical(df, schema, st["mapping"])
-    if with_tombstones:
-        pend = st["tombstones"]
-        if pend:
-            if st["key"] is None:
-                raise ValueError(f"table {table} has no declared key")
-            # same NULL-key pass-through as read() (three-valued logic)
-            k = F.col(st["key"])
-            df = df.where(k.isNull() | ~k.isin(pend))
+        # files carry PHYSICAL names; the scan schema must match them,
+        # then the projection aliases back to the logical schema (and
+        # drops retired columns)
+        reader = reader.schema(_physical_schema(schema, snap.mapping))
+    df = reader.parquet(*[_abs(snap.table, a["file"]) for a in files])
+    df = _map_to_logical(df, schema, snap.mapping)
+    if with_tombstones and snap.tombstones:
+        # merge-on-read: un-materialized deletes filter at scan time.
+        # NULL-key rows pass: NOT(NULL IN (...)) is NULL under
+        # three-valued logic and where() would silently drop them
+        k = F.col(snap.require_key())
+        df = df.where(k.isNull() | ~k.isin(snap.tombstones))
     return df
 
 
@@ -2266,11 +2211,8 @@ def version_at_timestamp(table: str, ts: float) -> int:
     """TIMESTAMP AS OF resolution: the latest version committed at or
     before ``ts`` (unix seconds) — Delta's timestamp time travel. Raises
     if the table's first commit is later than ``ts``."""
-    vs = versions(table)
-    if not vs:
-        raise FileNotFoundError(f"not a deltalite table: {table}")
     best = None
-    for v in vs:
+    for v in _table_versions(table):
         if _read_entry(table, v)["timestamp"] <= ts:
             best = v
         else:
@@ -2285,61 +2227,6 @@ def version_at_timestamp(table: str, ts: float) -> int:
 def read_as_of(spark: SparkSession, table: str, ts: float) -> DataFrame:
     """Snapshot read at a wall-clock instant (TIMESTAMP AS OF)."""
     return read(spark, table, version_at_timestamp(table, ts))
-
-
-def _table_key(table: str, version: int | None = None) -> str:
-    """The table's declared key column as of ``version`` (latest commit
-    that recorded one)."""
-    vs = versions(table)
-    if version is None:
-        version = vs[-1]
-    key = _state_at(table, version)["key"]
-    if key is None:
-        raise ValueError(f"table {table} has no declared key")
-    return key
-
-
-def _table_partition_by(table: str, version: int | None = None) -> str | None:
-    """The table's DECLARED partition column as of ``version``: the
-    ``partition_by`` recorded by the most recent CREATE / CREATE OR
-    REPLACE commit (appends record their per-write clustering, which
-    may legitimately be None — the declaration lives on the create).
-    None when the table was created unpartitioned or predates the
-    tracking."""
-    vs = versions(table)
-    if not vs:
-        return None
-    if version is None:
-        version = vs[-1]
-    return _state_at(table, version)["partition_by"]
-
-
-def _table_zorder_by(table: str, version: int | None = None) -> list:
-    """The zorder columns of the most recent OPTIMIZE ZORDER commit (as
-    of ``version``), or []. Rewrite paths carry these columns' stats
-    forward on the files they write: min/max stats stay SOUND on any
-    layout (ranges merely widen as clustering decays), and without the
-    carry-forward every MERGE/DELETE rewrite would turn a z-skippable
-    file into an always-read one."""
-    vs = versions(table)
-    if not vs:
-        return []
-    if version is None:
-        version = vs[-1]
-    return _state_at(table, version)["zorder_by"]
-
-
-def _table_key_opt(table: str, version: int | None = None) -> str | None:
-    """``_table_key`` without the raise: None when no commit up to
-    ``version`` ever declared a key. Metadata-only commits (PUBLISH,
-    DISCARD, ADD/DROP CONSTRAINT, DELETE DEFERRED materializations)
-    legitimately omit "key", so any consumer that looked only at the
-    LAST entry would intermittently see None — every key lookup must
-    scan back through the log (round-7 advisory fix)."""
-    try:
-        return _table_key(table, version)
-    except ValueError:
-        return None
 
 
 def read_pruned(
@@ -2375,7 +2262,7 @@ class _Discovery(NamedTuple):
 
 def _discover_touched(
     spark: SparkSession,
-    table: str,
+    snap: _Snapshot,
     source: DataFrame,
     key: str,
     rows: list | None = None,
@@ -2444,7 +2331,7 @@ def _discover_touched(
     else:
         lo, hi = source.agg(F.min(F.col(key)), F.max(F.col(key))).collect()[0]
 
-    live = live_files(table)
+    live = snap.files
     # An empty source (or all-NULL keys, e.g. an empty streaming
     # micro-batch) matches no file.
     candidates = [] if lo is None or hi is None else _may_hold(live, key, key, [(lo, hi)])
@@ -2459,7 +2346,7 @@ def _discover_touched(
         touched = []
         for a in candidates:
             try:
-                col = pq.read_table(_abs(table, a["file"]), columns=[key])
+                col = pq.read_table(_abs(snap.table, a["file"]), columns=[key])
             except Exception:
                 touched = None
                 break
@@ -2471,9 +2358,7 @@ def _discover_touched(
         src_keys = source.select(F.col(key).alias("__mk")).distinct()
         hit = {
             os.path.basename(r["__f"])
-            for r in _read_files(
-                spark, table, candidates, None, with_tombstones=False
-            )
+            for r in _read_files(spark, snap, candidates, with_tombstones=False)
             .select(F.col(key), F.input_file_name().alias("__f"))
             .join(F.broadcast(src_keys), F.col(key) == F.col("__mk"), "left_semi")
             .select("__f")
@@ -2500,7 +2385,7 @@ def _discover_touched(
     )
 
 
-def _stage_rewrite(merged: DataFrame, table: str, key: str, bound: int | None):
+def _stage_rewrite(merged: DataFrame, snap: _Snapshot, key: str, bound: int | None):
     """Stage a MERGE / APPLY CHANGES rewrite. Metadata-scale rewrites
     collapse to one task/file: the row bound (logged touched-file rows +
     probed source rows) is exact from stats already in hand, and N
@@ -2513,7 +2398,7 @@ def _stage_rewrite(merged: DataFrame, table: str, key: str, bound: int | None):
     the tiny write."""
     if bound is not None and bound <= MERGE_COALESCE_MAX_ROWS:
         merged = merged.repartition(1)
-    return _stage_files(merged, table, key)
+    return _stage_files(merged, snap, key)
 
 
 def merge_into(
@@ -2543,9 +2428,10 @@ def merge_into(
     union the full source, and stage as new files. Untouched files
     carry over by reference — no full-table rewrite.
     """
-    if not versions(table):
+    snap = _head_or_new(table)
+    if snap.version < 0:
         return create_or_replace(spark, table, source, key, local_rows=source_rows)
-    if pending_tombstones(table):
+    if snap.tombstones:
         raise ValueError(
             "table has pending deferred deletes; run materialize_tombstones "
             "before MERGE"
@@ -2555,13 +2441,13 @@ def merge_into(
     # any other probes a key projection
     src_schema = source.schema
     full_rows = _plan_commit(
-        table, src_schema, key, None,
+        snap, src_schema, key, None,
         len(source_rows) if source_rows is not None else 0,
     )
-    source, evolved_schema = _evolve_schema(table, source, merge_schema)
-    _enforce_constraints(source, current_constraints(table), "MERGE")
+    source, evolved_schema = _evolve_schema(snap, source, merge_schema)
+    _enforce_constraints(source, snap.constraints, "MERGE")
 
-    d = _discover_touched(spark, table, source, key, source_rows, full_rows)
+    d = _discover_touched(spark, snap, source, key, source_rows, full_rows)
     touched = d.touched
 
     # FULLY driver-side rewrite (round 15): when the probe holds the
@@ -2574,13 +2460,13 @@ def merge_into(
         d.rows is not None
         and d.bound is not None
         and _driver_readable(touched)
-        and _plan_commit(table, src_schema, key, None, d.bound)
+        and _plan_commit(snap, src_schema, key, None, d.bound)
     ):
-        mapping = current_mapping(table)
+        mapping = snap.mapping
         names = [f.name for f in source.schema.fields]
         merged_rows: list = []
         for a in touched:
-            t = pq.read_table(_abs(table, a["file"]))
+            t = pq.read_table(_abs(snap.table, a["file"]))
             present = set(t.column_names)
             n = t.num_rows
             colvals = [
@@ -2598,15 +2484,13 @@ def merge_into(
                 if kvals[i] is None or kvals[i] not in d.keys:
                     merged_rows.append(tuple(cv[i] for cv in colvals))
         merged_rows.extend(d.rows)
-        adds = _stage_rows_local(
-            table, merged_rows, source.schema, key, mapping=mapping
-        )
+        adds = _stage_rows_local(snap, merged_rows, source.schema, key)
     else:
         # rewrite touched rows + insert source (log-schema read — a
         # footer read of a pre-evolution touched file would rewrite it
         # without the evolved columns, permanently losing that data)
         if touched:
-            kept = _read_files(spark, table, touched, None, with_tombstones=False)
+            kept = _read_files(spark, snap, touched, with_tombstones=False)
             if d.keys is not None and len(d.keys) <= MERGE_ISIN_MAX_KEYS:
                 # keys are in hand: an isin() filter folds the anti-join
                 # into the rewrite job's scan (no broadcast-build job).
@@ -2624,9 +2508,9 @@ def merge_into(
             merged = kept.unionByName(source, allowMissingColumns=merge_schema)
         else:
             merged = source
-        adds = _stage_rewrite(merged, table, key, d.bound)
+        adds = _stage_rewrite(merged, snap, key, d.bound)
 
-    v = versions(table)[-1] + 1
+    v = snap.version + 1
     _commit_exclusive(
         table,
         {
@@ -2698,7 +2582,8 @@ def apply_changes(
     nothing commits nothing.
     Returns the table version (new or unchanged).
     """
-    if not versions(table):
+    snap = _head_or_new(table)
+    if snap.version < 0:
         # latest FIRST, then flag deletes: a delete-after-upsert within
         # the creating batch must not resurrect the earlier upsert, and
         # delete-of-unseen keys must still leave tombstones
@@ -2707,13 +2592,13 @@ def apply_changes(
             CDC_DELETED_COL, F.col(op_col) == F.lit(delete_value)
         ).drop(op_col)
         return create_or_replace(spark, table, first, key)
-    if pending_tombstones(table):
+    if snap.tombstones:
         raise ValueError(
             "table has pending deferred deletes; run materialize_tombstones "
             "before APPLY CHANGES"
         )
-    sch = current_schema(table)
-    if sch is not None and CDC_DELETED_COL not in [f.name for f in sch.fields]:
+    sch = snap.schema
+    if sch is not None and CDC_DELETED_COL not in sch.fieldNames():
         # a pre-existing non-CDC table has no tombstone column: winning
         # deletes would silently survive as live rows. apply_changes
         # owns its target from creation (the DLT contract).
@@ -2726,7 +2611,7 @@ def apply_changes(
     )
     _enforce_constraints(
         latest.where(F.col(op_col) != F.lit(delete_value)).drop(op_col),
-        current_constraints(table),
+        snap.constraints,
         "APPLY CHANGES",
     )
 
@@ -2734,7 +2619,7 @@ def apply_changes(
     # changelog resolves its key range AND the exact touched-file set
     # driver-side); latest's lazy checkpoint makes the probe's
     # materialization reusable by every later consumer
-    d = _discover_touched(spark, table, latest, key)
+    d = _discover_touched(spark, snap, latest, key)
     touched = d.touched
 
     src_cols = latest.columns
@@ -2750,7 +2635,7 @@ def apply_changes(
         # kept/updated split is now a per-row CASE carrying marker
         # columns, eagerly checkpointed; the counts become metadata-scale
         # actions over the checkpoint and the rewrite projects it.
-        stored = _read_files(spark, table, touched, None, with_tombstones=False)
+        stored = _read_files(spark, snap, touched, with_tombstones=False)
         tbl_cols = stored.columns
         j = stored.join(pref, F.col(key) == F.col("__s_" + key), "left")
         newer = F.col("__s_" + key).isNotNull() & (
@@ -2805,9 +2690,9 @@ def apply_changes(
     # a batch that changes nothing (pure replay / stale stragglers)
     # must not commit an empty rewrite
     if n_changes == 0:
-        return versions(table)[-1]
-    adds = _stage_rewrite(merged, table, key, d.bound)
-    v = versions(table)[-1] + 1
+        return snap.version
+    adds = _stage_rewrite(merged, snap, key, d.bound)
+    v = snap.version + 1
     _commit_exclusive(
         table,
         {
@@ -2915,25 +2800,25 @@ def verify_table(spark: SparkSession, table: str) -> dict:
                 report["errors"].append(
                     f"v{v}: remove of never-added file {r}"
                 )
-    report["staged_pending"] = sorted(_unresolved_staged(table))
+    snap = _snapshot(table, head)
+    report["staged_pending"] = sorted(snap.staged)
 
     # schema parses
     sch = None
     try:
-        sch = current_schema(table)
+        sch = snap.schema
     except Exception as exc:  # noqa: BLE001 — auditing, not crashing
         report["errors"].append(f"schema unreadable: {exc}")
     # footers carry PHYSICAL names; dropped columns' retired physical
     # names remain legitimately inside old immutable files
     sch_cols = None
     if sch is not None:
-        head_st = _state_at(table, head)
-        sch_cols = {
-            head_st["mapping"].get(f.name, f.name) for f in sch.fields
-        } | set(head_st["retired"])
+        sch_cols = {snap.mapping.get(f.name, f.name) for f in sch.fields} | set(
+            snap.retired
+        )
 
     # live files: existence + footer row count + stats sanity + columns
-    for a in live_files(table):
+    for a in snap.files:
         report["files_checked"] += 1
         path = _abs(table, a["file"])
         if not os.path.exists(path):
@@ -3016,12 +2901,13 @@ def purge_cdc_tombstones(spark: SparkSession, table: str) -> int:
     deletes can still arrive — purging earlier re-opens the
     resurrection window apply_changes' tombstones exist to close).
     Returns the new version (or the current one if nothing purged)."""
+    snap = _snapshot(table)
     has_tombstones = (
-        read(spark, table).where(F.col(CDC_DELETED_COL)).limit(1).count() > 0
+        _read_live(spark, snap).where(F.col(CDC_DELETED_COL)).limit(1).count() > 0
     )
     if not has_tombstones:
-        return versions(table)[-1]
-    return delete_where(spark, table, CDC_DELETED_COL)
+        return snap.version
+    return _delete_where(spark, snap, CDC_DELETED_COL)
 
 
 def _latest_changes(
@@ -3051,11 +2937,9 @@ def restore(table: str, to_version: int) -> int:
     removed. No data file is read, written, or moved, which is what
     makes restore O(log) instead of O(table) at any scale.
     """
-    vs = versions(table)
-    if to_version not in vs:
-        raise ValueError(f"version {to_version} not in {vs}")
-    target = {a["file"]: a for a in live_files(table, to_version)}
-    head = {a["file"]: a for a in live_files(table)}
+    snap = _snapshot(table)
+    target_snap = _snapshot(table, to_version)
+    target, head = target_snap.live, snap.live
     # a vacuumed-away snapshot must fail HERE with a clear message, not
     # later at scan time with a missing-file error on a "healthy" HEAD
     gone = [f for f in target if not os.path.exists(_abs(table, f))]
@@ -3064,7 +2948,7 @@ def restore(table: str, to_version: int) -> int:
             f"cannot restore {table} to v{to_version}: {len(gone)} data "
             f"file(s) were vacuumed past the retention horizon (e.g. {gone[0]})"
         )
-    v = vs[-1] + 1
+    v = snap.version + 1
     # Re-declare the ENTIRE table state of to_version, not just its
     # file set (round-7 review): schema (a post-target REPLACE would
     # otherwise make read() null-fill every restored column), CHECK
@@ -3076,25 +2960,23 @@ def restore(table: str, to_version: int) -> int:
     # guard then admits a new column whose name aliases old file data,
     # and every later write crashes on the phantom collision — round-8
     # review repro), and the physical layout spec (partition/zorder).
-    target_st = _state_at(table, to_version)
-    target_schema = current_schema(table, to_version)
     entry = {
         "version": v,
         "timestamp": time.time(),
         "operation": f"RESTORE AS OF {to_version}",
-        "key": _table_key_opt(table, to_version),
-        "constraints": current_constraints(table, to_version),
+        "key": target_snap.key,
+        "constraints": target_snap.constraints,
         "tombstones_cleared": True,
-        "tombstones": pending_tombstones(table, to_version),
-        "column_mapping": dict(target_st["mapping"]),
-        "retired_physical": list(target_st["retired"]),
-        "partition_by": target_st["partition_by"],
-        "zorder_by": list(target_st["zorder_by"]),
+        "tombstones": target_snap.tombstones,
+        "column_mapping": target_snap.mapping,
+        "retired_physical": target_snap.retired,
+        "partition_by": target_snap.partition_by,
+        "zorder_by": target_snap.zorder_by,
         "add": [a for f, a in target.items() if f not in head],
         "remove": [f for f in head if f not in target],
     }
-    if target_schema is not None:
-        entry["schema_json"] = target_schema.json()
+    if target_snap.schema_json:
+        entry["schema_json"] = target_snap.schema_json
     _commit_exclusive(table, entry)
     return v
 
@@ -3123,42 +3005,36 @@ def clone_table(source: str, dest: str, version: int | None = None) -> int:
     operator. ``export_snapshot`` relativizes referenced names on copy,
     so exporting a clone materializes it (deep copy).
     """
-    vs = versions(source)
-    if not vs:
-        raise FileNotFoundError(f"not a deltalite table: {source}")
+    snap = _snapshot(source, version)
     if versions(dest):
         raise ValueError(f"clone target already exists: {dest}")
-    v = vs[-1] if version is None else version
-    if v not in vs:
-        raise ValueError(f"version {v} not in {vs}")
-    st = _state_at(source, v)
     adds = []
-    for a in st["live"].values():
+    for a in snap.files:
         b = dict(a)
         b["file"] = os.path.abspath(_abs(source, a["file"]))
         adds.append(b)
     entry: dict = {
         "version": 0,
         "timestamp": time.time(),
-        "operation": f"CLONE {os.path.abspath(source)} AS OF {v}",
-        "key": st["key"],
-        "constraints": dict(st["constraints"]),
-        "tombstones": list(st["tombstones"]),
-        "partition_by": st["partition_by"],
+        "operation": f"CLONE {os.path.abspath(source)} AS OF {snap.version}",
+        "key": snap.key,
+        "constraints": snap.constraints,
+        "tombstones": snap.tombstones,
+        "partition_by": snap.partition_by,
         "add": adds,
         "remove": [],
     }
-    if st["schema_json"]:
-        entry["schema_json"] = st["schema_json"]
-    if st["zorder_by"]:
-        entry["zorder_by"] = list(st["zorder_by"])
-    if st["mapping"]:
+    if snap.schema_json:
+        entry["schema_json"] = snap.schema_json
+    if snap.zorder_by:
+        entry["zorder_by"] = snap.zorder_by
+    if snap.mapping:
         # referenced files carry the SOURCE's physical names: the clone
         # inherits the column mapping or its reads would null out every
         # renamed column
-        entry["column_mapping"] = dict(st["mapping"])
-    if st["retired"]:
-        entry["retired_physical"] = list(st["retired"])
+        entry["column_mapping"] = snap.mapping
+    if snap.retired:
+        entry["retired_physical"] = snap.retired
     try:
         _commit(dest, entry)
     except CommitConflict:
@@ -3185,7 +3061,7 @@ def vacuum_retain(table: str, retain_last: int) -> int:
         for a in live_files(table, v):
             keep.add(a["file"])
     # unresolved WAP-staged files are pre-publish data, not garbage
-    for adds in _unresolved_staged(table).values():
+    for adds in _snapshot(table).staged.values():
         for a in adds:
             keep.add(a["file"])
     data_dir = os.path.join(table, _DATA_DIR)
@@ -3209,7 +3085,7 @@ def vacuum(table: str) -> int:
     for v in versions(table):
         for a in live_files(table, v):
             keep.add(a["file"])
-    for adds in _unresolved_staged(table).values():
+    for adds in _snapshot(table).staged.values():
         for a in adds:
             keep.add(a["file"])  # pre-publish WAP data, not garbage
     data_dir = os.path.join(table, _DATA_DIR)
@@ -3293,34 +3169,30 @@ def optimize(
     """
     import math
 
-    prior = versions(table)
-    if not prior:
-        raise ValueError(f"table {table} does not exist")
-    if key is None:
-        # scan-back default: an optimize that omits the key must not
-        # strip min/max key stats + blooms from every compacted file
-        # (pruning-decay, round-7 review)
-        key = _table_key_opt(table)
+    snap = _snapshot(table)
     # compaction is the natural rewrite point for merge-on-read debt:
     # pending deferred-delete tombstones materialize first, so the
     # compacted files are clean and readers drop the scan-time filter
-    if pending_tombstones(table):
+    if snap.tombstones:
         materialize_tombstones(spark, table)
-        prior = versions(table)
+        snap = _snapshot(table)
+    # scan-back default: an optimize that omits the key must not strip
+    # min/max key stats + blooms from every compacted file
+    # (pruning-decay, round-7 review)
+    key = key or snap.key
     threshold = small_file_rows if small_file_rows is not None else target_rows // 2
-    live = live_files(table)
-    small = [a for a in live if a["rows"] < threshold]
+    small = [a for a in snap.files if a["rows"] < threshold]
     if len(small) <= 1:
-        return prior[-1]
+        return snap.version
 
     # log-schema read, NOT a footer read: compacting a schema-evolved
     # table from one file's footer would write the compacted files
     # without the evolved columns — silent, permanent data loss (the
     # round-7 review catch; regression-pinned in tests/test_lakehouse)
-    df = _read_files(spark, table, small, None, with_tombstones=False)
+    df = _read_files(spark, snap, small, with_tombstones=False)
     total = sum(a["rows"] for a in small)
     nfiles = max(1, math.ceil(total / target_rows))
-    part_col = _table_partition_by(table)
+    part_col = snap.partition_by
     if zorder_by and part_col is not None and part_col in df.columns:
         # Delta semantics: ZORDER clusters WITHIN partitions — a global
         # z-sort across partition values would widen every file's
@@ -3351,9 +3223,9 @@ def optimize(
         df = df.repartitionByRange(nfiles, F.col(key))
     else:
         df = df.coalesce(nfiles)
-    adds = _stage_files(df, table, key, stats_cols=zorder_by)
+    adds = _stage_files(df, snap, key, stats_cols=zorder_by)
 
-    v = prior[-1] + 1
+    v = snap.version + 1
     _commit_exclusive(
         table,
         {
@@ -3393,11 +3265,16 @@ def clustering_depth(
     conservative cluster with depth = its file count — they admit
     every probe, which IS worst-case depth.
     """
-    key_col = _table_key_opt(table, version)
+    return _clustering_depth(_snapshot(table, version), col)
+
+
+def _clustering_depth(snap: _Snapshot, col: str | None) -> dict:
+    """:func:`clustering_depth` on a snapshot."""
+    key_col = snap.key
     if col is None:
         col = key_col
     intervals, statless = [], []
-    for a in live_files(table, version):
+    for a in snap.files:
         rng = _file_range(a, col, key_col) if col is not None else None
         if rng is None:
             statless.append(a)
@@ -3487,24 +3364,21 @@ def optimize_incremental(
     """
     import math
 
-    prior = versions(table)
-    if not prior:
-        raise ValueError(f"table {table} does not exist")
-    if key is None:
-        key = _table_key_opt(table)
-    if pending_tombstones(table):
+    snap = _snapshot(table)
+    if snap.tombstones:
         materialize_tombstones(spark, table)
-        prior = versions(table)
-    rep = clustering_depth(table, key)
+        snap = _snapshot(table)
+    key = key or snap.key
+    rep = _clustering_depth(snap, key)
     bad = [c for c in rep["clusters"] if c["depth"] > max_depth]
     if not bad:
-        return prior[-1]
-    by_name = {a["file"]: a for a in live_files(table)}
+        return snap.version
+    by_name = snap.live
     adds: list[dict] = []
     removed: list[str] = []
     for c in bad:
         members = [by_name[f] for f in c["files"]]
-        df = _read_files(spark, table, members, None, with_tombstones=False)
+        df = _read_files(spark, snap, members, with_tombstones=False)
         nfiles = max(1, math.ceil(c["rows"] / target_rows))
         if key is not None:
             df = df.repartitionByRange(nfiles, F.col(key)).sortWithinPartitions(
@@ -3512,9 +3386,9 @@ def optimize_incremental(
             )
         else:
             df = df.coalesce(nfiles)
-        adds += _stage_files(df, table, key)
+        adds += _stage_files(df, snap, key)
         removed += c["files"]
-    v = prior[-1] + 1
+    v = snap.version + 1
     _commit_exclusive(
         table,
         {
@@ -3535,17 +3409,9 @@ def optimize_incremental(
     return v
 
 
-def delete_where(
-    spark: SparkSession,
-    table: str,
-    predicate: str,
-    _clear_tombstones: bool = False,
-    _candidate_keys: list | None = None,
-) -> int:
+def delete_where(spark: SparkSession, table: str, predicate: str) -> int:
     """DELETE FROM table WHERE predicate — the Delta DELETE shape (GDPR
-    erasure, retention enforcement). ``_clear_tombstones`` is set by
-    ``materialize_tombstones`` so the rewrite and the tombstone-list
-    clear land in ONE atomic commit.
+    erasure, retention enforcement).
 
     Touched-file discovery is exact and distributed: live files are read
     with input_file_name(), rows matching the predicate name the files
@@ -3554,26 +3420,32 @@ def delete_where(
     nothing survives). At 100 TB a targeted delete rewrites the handful
     of files holding the keys, never the table.
     """
-    vs = versions(table)
-    if not vs:
-        raise ValueError(f"table {table} does not exist")
-    live = live_files(table)
-    # key-list deletes (materialize_tombstones) bound the discovery
-    # scan with the log's blooms + key stats — O(candidate files), not
-    # O(table); sound because a bloom never rejects a present key.
-    # Arbitrary predicates still scan all live files.
-    scan = (
-        files_maybe_containing(spark, table, _candidate_keys)
-        if _candidate_keys
-        else live
-    )
+    return _delete_where(spark, _snapshot(table), predicate)
+
+
+def _delete_where(
+    spark: SparkSession,
+    snap: _Snapshot,
+    predicate: str,
+    clear_tombstones: bool = False,
+    candidate_keys: list | None = None,
+) -> int:
+    """:func:`delete_where` on a snapshot. ``materialize_tombstones``
+    sets ``clear_tombstones`` so the rewrite and the tombstone-list
+    clear land in ONE atomic commit, and passes the tombstoned keys as
+    ``candidate_keys``: key-list deletes bound the discovery scan with
+    the log's blooms + key stats — O(candidate files), not O(table);
+    sound because a bloom never rejects a present key. Arbitrary
+    predicates still scan all live files."""
+    live = snap.files
+    scan = _files_maybe_containing(spark, snap, candidate_keys) if candidate_keys else live
     # log-schema reads (footer schema would drop evolved columns from
     # the rewritten files); raw tombstone view — materialization must
     # SEE the rows it deletes
     if scan:
-        tagged = _read_files(
-            spark, table, scan, None, with_tombstones=False
-        ).withColumn("__f", F.input_file_name())
+        tagged = _read_files(spark, snap, scan, with_tombstones=False).withColumn(
+            "__f", F.input_file_name()
+        )
         hit_files = {
             os.path.basename(r["__f"])
             for r in tagged.where(predicate).select("__f").distinct().collect()
@@ -3582,22 +3454,23 @@ def delete_where(
         hit_files = set()
     # basename match (see merge_into: clone actions are absolute paths)
     touched = [a for a in live if os.path.basename(a["file"]) in hit_files]
-    # scan-back, not last-entry: a metadata-only commit before this
-    # delete must not strip min/max key stats + blooms from the
-    # rewritten files (they feed MERGE file pruning forever after)
-    key = _table_key_opt(table)
+    # the snapshot's scan-back key, not the last entry's: a metadata-only
+    # commit before this delete must not strip min/max key stats +
+    # blooms from the rewritten files (they feed MERGE file pruning
+    # forever after)
+    key = snap.key
 
     adds: list[dict] = []
     n_deleted = 0
     if touched:
-        tdf = _read_files(spark, table, touched, None, with_tombstones=False)
+        tdf = _read_files(spark, snap, touched, with_tombstones=False)
         kept = tdf.where(f"not ({predicate})")
         n_kept = kept.count()
         n_deleted = sum(a["rows"] for a in touched) - n_kept
         if n_kept:
-            adds = _stage_files(kept, table, key)
+            adds = _stage_files(kept, snap, key)
 
-    v = vs[-1] + 1
+    v = snap.version + 1
     entry = {
         "version": v,
         "timestamp": time.time(),
@@ -3612,10 +3485,10 @@ def delete_where(
             "rows_deleted": n_deleted,
         },
     }
-    if _clear_tombstones:
+    if clear_tombstones:
         entry["operation"] = "MATERIALIZE TOMBSTONES"
         entry["tombstones_cleared"] = True
-    _commit_exclusive(table, entry)
+    _commit_exclusive(snap.table, entry)
     return v
 
 
@@ -3647,21 +3520,19 @@ def export_snapshot(
     partitioned writer instead — one full pass, but the export becomes
     partition-prunable for downstream engines.
     """
-    files = live_files(table, version)
-    vs = versions(table)
-    v = version if version is not None else vs[-1]
+    snap = _snapshot(table, version)
     os.makedirs(dest, exist_ok=True)
 
     manifest: dict = {
         "table": os.path.basename(os.path.normpath(table)),
-        "version": v,
+        "version": snap.version,
         "exported_at": time.time(),
-        "key": _table_key_opt(table, v),
+        "key": snap.key,
         "partition_by": partition_by or [],
         "files": [],
     }
     if partition_by:
-        df = read(spark, table, version)
+        df = _read_live(spark, snap)
         df.write.mode("overwrite").partitionBy(*partition_by).parquet(dest)
         for root, _dirs, names in os.walk(dest):
             for f in sorted(names):
@@ -3675,13 +3546,13 @@ def export_snapshot(
         # resurrect logically deleted rows (e.g. an acknowledged GDPR
         # erasure) that the partition_by path — which goes through
         # read() — correctly filters (round-7 review)
-        if pending_tombstones(table, version):
+        if snap.tombstones:
             raise ValueError(
                 "snapshot has pending deferred deletes; run "
                 "materialize_tombstones before a byte-copy export (or "
                 "export with partition_by, which rewrites through read())"
             )
-        for a in files:
+        for a in snap.files:
             # basename-ify: a shallow clone's actions reference ABSOLUTE
             # source paths; joining them into dest would "copy" a file
             # onto itself. Exporting relativizes (materializes) instead.
@@ -3717,39 +3588,36 @@ def table_changes(
     full-outer join on key with a whole-row hash equality check. At
     100 TB the CDF cost scales with the churn, not the table.
     """
-    if key is None:
-        key = _table_key_opt(table)
+    old_snap, new_snap = _snapshot(table, from_version), _snapshot(table, to_version)
+    key = key or new_snap.key
     if key is None:
         raise ValueError("table_changes requires a key column")
-    old_live = {a["file"] for a in live_files(table, from_version)}
-    new_live = {a["file"] for a in live_files(table, to_version)}
-    old_only = sorted(old_live - new_live)
-    new_only = sorted(new_live - old_live)
+    old_only = sorted(set(old_snap.live) - set(new_snap.live))
+    new_only = sorted(set(new_snap.live) - set(old_snap.live))
 
-    schema = read(spark, table, from_version).schema
+    schema = _read_live(spark, old_snap).schema
     cols = [f.name for f in schema.fields]
 
-    def _side(files: list[str], at_version: int | None) -> DataFrame:
+    def _side(files: list[str], snap: _Snapshot) -> DataFrame:
         if not files:
             return spark.createDataFrame([], schema)
         # each side reads under ITS version's log schema (footer
         # inference breaks on schema-evolved tables: a pre-evolution
         # file lacks the evolved column and the select below would
         # raise; the log schema null-fills it — round-7 review)
-        s = current_schema(table, at_version)
-        m = current_mapping(table, at_version)
-        df = spark.read.schema(
-            _physical_schema(s if s is not None else schema, m)
-        ).parquet(*[_abs(table, f) for f in files])
-        return _map_to_logical(df, s if s is not None else schema, m)
+        s = snap.schema or schema
+        df = spark.read.schema(_physical_schema(s, snap.mapping)).parquet(
+            *[_abs(table, f) for f in files]
+        )
+        return _map_to_logical(df, s, snap.mapping)
 
     rowhash = F.md5(F.to_json(F.struct(*[F.col(c) for c in sorted(cols)])))
-    old = _side(old_only, from_version).select(
+    old = _side(old_only, old_snap).select(
         F.col(key).alias("__k"),
         rowhash.alias("__oh"),
         *[F.col(c).alias(f"__o_{c}") for c in cols],
     )
-    new = _side(new_only, to_version).select(
+    new = _side(new_only, new_snap).select(
         F.col(key).alias("__k"),
         rowhash.alias("__nh"),
         *[F.col(c).alias(f"__n_{c}") for c in cols],

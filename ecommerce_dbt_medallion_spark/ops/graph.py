@@ -495,17 +495,16 @@ def maintain_cluster_labels(
         affected = mini.where(F.col("sup") != F.col("new_label"))
         aff_rows = affected.collect()  # churn-scale: merged components
         if aff_rows:
-            # ONE live_files sweep (one log replay), testing every
-            # file's cluster_id stats against the whole affected set —
-            # per-sup pruned_files calls would re-replay the log
-            # O(merged components) times on the driver
+            # ONE snapshot (one log replay), testing every file's
+            # cluster_id stats against the whole affected set — per-sup
+            # pruned_files calls would re-replay the log O(merged
+            # components) times on the driver
+            snap = lakehouse._snapshot(labels_table)
             admitted = lakehouse._may_hold(
-                lakehouse.live_files(labels_table), id_col, "cluster_id",
+                snap.files, id_col, "cluster_id",
                 [(r["sup"], r["sup"]) for r in aff_rows],
             )
-            stored_affected = lakehouse._read_files(
-                spark, labels_table, admitted, None
-            )
+            stored_affected = lakehouse._read_files(spark, snap, admitted)
             amap = spark.createDataFrame(
                 [(r["sup"], r["new_label"]) for r in aff_rows],
                 f"cluster_id {dict(node_sup.dtypes)[id_col]}, "

@@ -10,10 +10,9 @@ bronze=view, silver=table, gold=table).
   batch, and silver tables are written partitioned/bucketed by their join
   keys so downstream marts shuffle less.
 - **incremental** (dbt's incremental materialization): merge-by-unique-key.
-  Default path: real MERGE INTO on a transaction-log table
+  A real MERGE INTO on a transaction-log table
   (``incremental_merge_delta`` → lakehouse.py) with stats-pruned file
-  skipping and time travel; ``incremental_merge`` keeps the plain-parquet
-  anti-join + full-rewrite fallback.
+  skipping and time travel.
 - **snapshot** (dbt's SCD2 check-strategy snapshot): tracks row-version
   history with dbt-style ``valid_from``/``valid_to``/``scd_id``.
 
@@ -176,9 +175,7 @@ def incremental_merge_delta(
     INTO on a transaction-log table (lakehouse.py): only the data files
     containing matched keys are rewritten (stats-pruned + semi-join
     discovery); untouched files carry over by reference, and every batch
-    is a new time-travelable version. This is the default incremental
-    path — the plain-parquet ``incremental_merge`` below remains as the
-    fallback for consumers that need a bare parquet directory.
+    is a new time-travelable version.
 
     (delta-spark / Iceberg jars are not installable in this environment;
     lakehouse.py implements the Delta commit-protocol core directly —
@@ -188,38 +185,6 @@ def incremental_merge_delta(
 
     lakehouse.merge_into(spark, table_path, new_rows, unique_key)
     return lakehouse.read(spark, table_path)
-
-
-def incremental_merge(
-    spark: SparkSession,
-    new_rows: DataFrame,
-    table_path: str,
-    unique_key: str,
-) -> DataFrame:
-    """Plain-parquet fallback for the incremental materialization:
-    anti-join + union + full rewrite. Correct but rewrites the whole
-    table per batch — use ``incremental_merge_delta`` (file-skipping
-    MERGE INTO, time travel) unless a bare parquet dir is required.
-    """
-    # first-run detection by PATH EXISTENCE, never by swallowing read
-    # errors: a transient/corrupt-file read failure must surface, not
-    # silently overwrite the table with only the new batch (round-7
-    # review — the bare except here was a data-loss path)
-    import os
-
-    if not os.path.exists(table_path):
-        new_rows.write.mode("overwrite").parquet(table_path)
-        return spark.read.parquet(table_path)
-    existing = spark.read.parquet(table_path)
-
-    kept = existing.join(
-        new_rows.select(unique_key).distinct(), unique_key, "left_anti"
-    )
-    merged = kept.unionByName(new_rows)
-    # Plain-parquet limitation: stage the rewrite, then swap via overwrite.
-    staged = merged.localCheckpoint(eager=True)
-    staged.write.mode("overwrite").parquet(table_path)
-    return spark.read.parquet(table_path)
 
 
 def snapshot(

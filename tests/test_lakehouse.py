@@ -139,9 +139,8 @@ def _zorder_then_append_nan(spark, path, rows, schema):
 
     lh.optimize(spark, path, key="id", zorder_by=["id", "d"])
     df = spark.createDataFrame(rows, schema)
-    planned = lh._plan_commit(
-        path, df.schema, "id", lh._table_partition_by(path), len(rows)
-    )
+    snap = lh._snapshot(path)
+    planned = lh._plan_commit(snap, df.schema, "id", snap.partition_by, len(rows))
     v = lh.append(spark, path, df, local_rows=rows)
     add = lh._read_entry(path, v)["add"]
     ds = [a["col_stats"]["d"] for a in add if "d" in a.get("col_stats", {})]
@@ -398,7 +397,7 @@ def test_plan_commit_refuses_timestamp_and_decimal_schemas(
     such a schema never takes the driver writer, whatever its key — and
     merge_into, planning before its probe, collects only the key
     projection for it instead of full rows."""
-    fresh = str(tmp_path / "fresh")
+    fresh = lh._head_or_new(str(tmp_path / "fresh"))
     for ddl in ("id int, ts timestamp", "id int, amt decimal(10,2)"):
         schema = spark.createDataFrame([], ddl).schema
         assert not lh._plan_commit(fresh, schema, "id", None, 1), ddl
@@ -1989,22 +1988,23 @@ def test_table_changes_on_evolved_table(spark, tmp_path):
 # ---------------------------------------------------------------------------
 
 
-def _interleave(monkeypatch, other_writer):
+def _interleave(monkeypatch, other_writer, hook="_stage_files"):
     """Arrange for ``other_writer()`` to commit BETWEEN a transaction's
-    staging step and its commit — the window where two real writers
-    race. Hooks _stage_files once; the outer transaction has already
-    read its snapshot version by then, so its commit collides."""
-    real = lh._stage_files
+    snapshot and its commit — the window where two real writers race.
+    Runs it once, right after the first call of the lakehouse function
+    ``hook`` returns; the outer transaction has read its snapshot by
+    then, so its commit collides."""
+    real = getattr(lh, hook)
     state = {"fired": False}
 
-    def hooked(df, table, key, stats_cols=None):
-        out = real(df, table, key, stats_cols)
+    def hooked(*args, **kwargs):
+        out = real(*args, **kwargs)
         if not state["fired"]:
             state["fired"] = True
             other_writer()
         return out
 
-    monkeypatch.setattr(lh, "_stage_files", hooked)
+    monkeypatch.setattr(lh, hook, hooked)
 
 
 def test_concurrent_disjoint_appends_both_land(spark, table, monkeypatch):
@@ -2038,6 +2038,115 @@ def test_concurrent_merge_vs_optimize_aborts_typed(spark, table, monkeypatch):
     # the loser can re-run against current state and succeed
     lh.optimize(spark, table, key="id", target_rows=1000)
     assert len(lh.live_files(table)) == 1
+
+
+def _cdc_batch(spark, rows):
+    return spark.createDataFrame(rows, "id long, val string, seq long, op string")
+
+
+@pytest.mark.parametrize("op", ["merge_into", "apply_changes"])
+def test_concurrent_append_during_merge_aborts_typed(spark, tmp_path, monkeypatch, op):
+    """An append of key 5 that lands after a MERGE (or APPLY CHANGES)
+    found its touched files, but before it commits: the merge never saw
+    the appended row, so committing would leave two rows for key 5. It
+    must abort typed; the winner's append stays readable, and re-running
+    the merge against the new HEAD leaves one row per key."""
+    path = str(tmp_path / op)
+    base = [(k, f"v{k}", 1, "U") for k in (0, 1, 2, 3, 4)]
+    if op == "merge_into":
+        lh.create_or_replace(
+            spark, path, spark.createDataFrame([r[:2] for r in base], "id long, val string"),
+            key="id",
+        )
+        concurrent = spark.createDataFrame([(5, "concurrent")], "id long, val string")
+
+        def run():
+            src = spark.createDataFrame([(5, "merged")], "id long, val string")
+            return lh.merge_into(spark, path, src, "id")
+    else:
+        lh.apply_changes(spark, path, _cdc_batch(spark, base), "id", ["seq"])
+        concurrent = spark.createDataFrame(
+            [(5, 1, "concurrent", False)], lh.read(spark, path).schema
+        )
+
+        def run():
+            src = _cdc_batch(spark, [(5, "merged", 2, "U")])
+            return lh.apply_changes(spark, path, src, "id", ["seq"])
+
+    _interleave(
+        monkeypatch,
+        lambda: lh.append(spark, path, concurrent, key="id"),
+        hook="_discover_touched",
+    )
+    with pytest.raises(lh.ConcurrentWriteConflict):
+        run()
+    got = sorted((r["id"], r["val"]) for r in lh.read(spark, path).collect())
+    assert got == [(k, f"v{k}") for k in range(5)] + [(5, "concurrent")]
+    run()
+    got = sorted((r["id"], r["val"]) for r in lh.read(spark, path).collect())
+    assert got == [(k, f"v{k}") for k in range(5)] + [(5, "merged")]
+
+
+def test_concurrent_violating_append_aborts_add_constraint(spark, table, monkeypatch):
+    """A violating append that lands between add_constraint's validation
+    and its commit was never validated: committing the constraint would
+    leave a violating row under it. add_constraint must abort typed, and
+    re-running it against the new HEAD rejects the constraint."""
+    bad = spark.createDataFrame([(500, -5)], "id long, val long")
+    _interleave(
+        monkeypatch,
+        lambda: lh.append(spark, table, bad, key="id"),
+        hook="_enforce_constraints",
+    )
+    with pytest.raises(lh.ConcurrentWriteConflict):
+        lh.add_constraint(spark, table, "val_nonneg", "val >= 0")
+    assert lh.current_constraints(table) == {}
+    assert lh.read(spark, table).where("val = -5").count() == 1
+    with pytest.raises(lh.ConstraintViolation):
+        lh.add_constraint(spark, table, "val_nonneg", "val >= 0")
+
+
+def test_each_operation_folds_the_log_once(spark, tmp_path, monkeypatch):
+    """Every operation folds the log into ONE snapshot at its start and
+    reads every view from it. Commits here stay below the checkpoint
+    interval, so _maybe_write_checkpoint adds no fold of its own."""
+    path, cdc = str(tmp_path / "t"), str(tmp_path / "cdc")
+    lh.create_or_replace(
+        spark, path,
+        spark.range(100).select("id", (F.col("id") * 10).alias("val")).repartitionByRange(4, "id"),
+        key="id",
+    )
+    lh.apply_changes(spark, cdc, _cdc_batch(spark, [(1, "a", 1, "U")]), "id", ["seq"])
+    real = lh._snapshot
+    calls = []
+
+    def counting(*args, **kwargs):
+        calls.append(args)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(lh, "_snapshot", counting)
+    ops = {
+        "append": lambda: lh.append(
+            spark, path, spark.createDataFrame([(200, 1)], "id long, val long")
+        ),
+        "merge_into": lambda: lh.merge_into(
+            spark, path, spark.createDataFrame([(5, -1), (300, 3)], "id long, val long"), "id"
+        ),
+        "apply_changes": lambda: lh.apply_changes(
+            spark, cdc, _cdc_batch(spark, [(1, "b", 2, "U"), (2, "c", 1, "U")]), "id", ["seq"]
+        ),
+        "delete_where": lambda: lh.delete_where(spark, path, "id < 3"),
+        "optimize": lambda: lh.optimize(spark, path, target_rows=1000),
+        "read_keys": lambda: lh.read_keys(spark, path, [5, 50]).collect(),
+        "read_pruned": lambda: lh.read_pruned(spark, path, "id", 10, 20).collect(),
+    }
+    folds = {}
+    for name, op in ops.items():
+        calls.clear()
+        op()
+        folds[name] = len(calls)
+    assert folds == dict.fromkeys(ops, 1)
+    assert max(lh.versions(path)) < lh.CHECKPOINT_INTERVAL
 
 
 def test_concurrent_append_aborts_on_state_change(spark, table, monkeypatch):
@@ -2344,25 +2453,23 @@ def test_ckpt_dir_migrates_legacy_checkpoint(tmp_path):
 
 
 def _snapshot_all_state(table):
-    """Every replay-derived view at every version (the checkpoint
-    equivalence oracle)."""
+    """Every replay-derived view at every version, each read through
+    that version's one snapshot (the checkpoint equivalence oracle)."""
     out = {}
     for v in lh.versions(table):
+        snap = lh._snapshot(table, v)
         out[v] = (
-            sorted(a["file"] for a in lh.live_files(table, v)),
-            sorted(lh.pending_tombstones(table, v)),
-            lh.current_constraints(table, v),
-            (lambda s: s.json() if s is not None else None)(
-                lh.current_schema(table, v)
-            ),
-            lh._table_key_opt(table, v),
-            lh._table_partition_by(table, v),
-            lh._table_zorder_by(table, v),
+            sorted(a["file"] for a in snap.files),
+            sorted(snap.tombstones),
+            snap.constraints,
+            (lambda s: s.json() if s is not None else None)(snap.schema),
+            snap.key,
+            snap.partition_by,
+            snap.zorder_by,
+            snap.mapping,
+            snap.retired,
+            {k: sorted(a["file"] for a in vs) for k, vs in snap.staged.items()},
         )
-    out["staged"] = {
-        k: sorted(a["file"] for a in vs)
-        for k, vs in lh._unresolved_staged(table).items()
-    }
     return out
 
 
@@ -3677,15 +3784,15 @@ def test_restore_refolds_key_on_keyless_target(spark, tmp_path):
     df = spark.createDataFrame([(1, "a"), (2, "b")], "id long, val string")
     lh.create_or_replace(spark, t, df)  # NO key declared
     v0 = lh.versions(t)[-1]
-    assert lh._table_key_opt(t) is None
+    assert lh._snapshot(t).key is None
     lh.append(
         spark, t,
         spark.createDataFrame([(3, "c")], "id long, val string"),
         key="id",
     )
-    assert lh._table_key_opt(t) == "id"
+    assert lh._snapshot(t).key == "id"
     lh.restore(t, v0)
-    assert lh._table_key_opt(t) is None, "RESTORE kept the newer key"
+    assert lh._snapshot(t).key is None, "RESTORE kept the newer key"
     with pytest.raises(ValueError, match="require a table key"):
         lh.delete_keys_deferred(spark, t, [1])
     # and the restored data is the v0 snapshot

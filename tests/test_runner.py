@@ -109,11 +109,11 @@ def test_incremental_merge_converges_to_full(spark, tmp_path):
     rest = full.where(F.col("payment_date") >= cutoff)
     assert first.count() > 0 and rest.count() > 0
 
-    runner.incremental_merge(spark, first, path, "payment_id")
-    merged = runner.incremental_merge(spark, rest, path, "payment_id")
+    runner.incremental_merge_delta(spark, first, path, "payment_id")
+    merged = runner.incremental_merge_delta(spark, rest, path, "payment_id")
     assert merged.count() == full.count()
     # re-merging the same increment is idempotent (merge, not append)
-    merged2 = runner.incremental_merge(spark, rest, path, "payment_id")
+    merged2 = runner.incremental_merge_delta(spark, rest, path, "payment_id")
     assert merged2.count() == full.count()
 
 
