@@ -160,29 +160,10 @@ PROBE_KEYS = [
     # round 13 queue, registered round 14 (found via queries() now)
     "pack_manifest_bfd",
     "doc_quality_calibration",
-    # round 14 QUEUE ops (implemented + oracled this round,
-    # unregistered — resolved via _resolve below until registration)
-    "curriculum_export_order",
-    "stream_hot_user_rollup",
 ]
 # env override for single-key fresh-session re-measurement (see caveat)
 if os.environ.get("SPARK_GRAFT_PROBE_KEYS"):
     PROBE_KEYS = os.environ["SPARK_GRAFT_PROBE_KEYS"].split(",")
-
-
-def _resolve(queries: dict, name: str):
-    """queries() first; falls back to the driver-window queue (ops
-    built before their rotation slot exists — SURVEY §2 queue
-    subsection)."""
-    if name in queries:
-        return queries[name]
-    from ecommerce_dbt_medallion_spark.ops import sampling
-    from ecommerce_dbt_medallion_spark.streaming import events_stream
-
-    return {
-        "curriculum_export_order": sampling.curriculum_export_order,
-        "stream_hot_user_rollup": events_stream.stream_hot_user_rollup,
-    }[name]
 
 
 def build_scale_dir(spark) -> None:
@@ -278,7 +259,7 @@ def main() -> None:
             try:
                 for _ in range(2):
                     t = time.perf_counter()
-                    df = _resolve(queries, name)(spark, sf_dir)
+                    df = queries[name](spark, sf_dir)
                     df.write.mode("overwrite").format("noop").save()
                     best = min(best, time.perf_counter() - t)
                 row[label] = round(best, 2)

@@ -326,10 +326,7 @@ def _money_to_double(fn: QueryFn, cols: list[str]) -> QueryFn:
 # Round-15 window plan: [any round-15 registrations] +
 # [bronze_customers, silver_customers] (priority: most-stale) + the
 # 50-key r11-latest block front-truncated to fill 50 slots; displaced
-# r11 keys roll to the front of r16's r12 block. Keys minted in
-# round 14 (curriculum_export_order, stream_hot_user_rollup) stay
-# pytest-certified-only in the round-14 queue subsection until a
-# window slot is justified.
+# r11 keys roll to the front of r16's r12 block.
 DRIVER_WINDOW_ROUND = 14
 DRIVER_WINDOW_SIZE = 50
 DRIVER_WINDOW = [

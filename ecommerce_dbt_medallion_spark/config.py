@@ -35,7 +35,6 @@ LSH_ROWS = 4  # MINHASH_PERMS // LSH_BANDS
 MINHASH_JACCARD_THRESHOLD = 0.8
 
 # SimHash: 64-bit, pigeonhole blocking into 4 segments => finds hamming <= 3.
-SIMHASH_BITS = 64
 SIMHASH_SEGMENTS = 4
 SIMHASH_MAX_HAMMING = 3
 

@@ -1142,9 +1142,7 @@ def _may_hold(files: list[dict], key: str | None, col: str, probes) -> list[dict
     return out
 
 
-def files_maybe_containing(
-    spark: SparkSession, table: str, values: list, version: int | None = None
-) -> list[dict]:
+def _files_maybe_containing(spark: SparkSession, snap: _Snapshot, values: list) -> list[dict]:
     """Point-lookup file skipping: the live files whose key stats AND
     bloom admit at least one of ``values`` (:func:`_may_hold`). Sound
     (never drops a file that holds a probed key — test-pinned). The
@@ -1164,11 +1162,6 @@ def files_maybe_containing(
     not cast at all disables pruning for this call (every live file
     kept — conservative; Spark hash functions do NOT null out on NULL
     input, so a hashed NULL would otherwise masquerade as a real key)."""
-    return _files_maybe_containing(spark, _snapshot(table, version), values)
-
-
-def _files_maybe_containing(spark: SparkSession, snap: _Snapshot, values: list) -> list[dict]:
-    """:func:`files_maybe_containing` on a snapshot."""
     key = snap.key
     ktype = None
     sch = snap.schema  # None on pre-tracking logs
@@ -2031,7 +2024,7 @@ def read_keys(
     spark: SparkSession, table: str, keys: list, version: int | None = None
 ) -> DataFrame:
     """POINT-LOOKUP read: only the live files whose key stats AND bloom
-    admit at least one of ``keys`` (files_maybe_containing — sound,
+    admit at least one of ``keys`` (_files_maybe_containing — sound,
     never drops a holder), read under the full read() contract and
     filtered to exactly those keys. ``keys`` must be metadata-scale
     (the probe mask check is O(files × keys) driver-side); callers with
@@ -2050,14 +2043,14 @@ def read_keys_local(
     spark: SparkSession, table: str, keys: list, columns: list[str]
 ) -> list[dict] | None:
     """Driver-side twin of :func:`read_keys` for churn-scale lookups:
-    prune files by key stats + bloom (files_maybe_containing), then read
+    prune files by key stats + bloom (_files_maybe_containing), then read
     the requested columns locally via pyarrow and filter to the key set
     — zero Spark jobs. Returns None whenever the full read() contract is
     actually needed, and the caller must fall back to the distributed
     read: pending tombstones (the anti-filter must apply), a
     non-identity column mapping, any pruned file above the driver dials,
     or a pre-evolution file missing a requested column. Sound because
-    files_maybe_containing never drops a key holder and the gates refuse
+    _files_maybe_containing never drops a key holder and the gates refuse
     every table state where a raw file read could differ from read()."""
     snap = _snapshot(table)
     if snap.tombstones or snap.mapping:
@@ -2205,28 +2198,6 @@ def _read_files(
         k = F.col(snap.require_key())
         df = df.where(k.isNull() | ~k.isin(snap.tombstones))
     return df
-
-
-def version_at_timestamp(table: str, ts: float) -> int:
-    """TIMESTAMP AS OF resolution: the latest version committed at or
-    before ``ts`` (unix seconds) — Delta's timestamp time travel. Raises
-    if the table's first commit is later than ``ts``."""
-    best = None
-    for v in _table_versions(table):
-        if _read_entry(table, v)["timestamp"] <= ts:
-            best = v
-        else:
-            break
-    if best is None:
-        raise ValueError(
-            f"no version of {table} exists at or before timestamp {ts}"
-        )
-    return best
-
-
-def read_as_of(spark: SparkSession, table: str, ts: float) -> DataFrame:
-    """Snapshot read at a wall-clock instant (TIMESTAMP AS OF)."""
-    return read(spark, table, version_at_timestamp(table, ts))
 
 
 def read_pruned(
@@ -2573,8 +2544,9 @@ def apply_changes(
     resurrect the key (the classic CDC hazard; Delta's CDC apply keeps
     the same hidden tombstones). Read live state through
     ``read_cdc_state``; reclaim old tombstones with
-    ``purge_cdc_tombstones`` once the feed guarantees no more
-    stragglers (the retention knob every CDC sink has).
+    ``delete_where(spark, table, CDC_DELETED_COL)`` once the feed
+    guarantees no more stragglers (the retention knob every CDC sink
+    has).
 
     File mechanics are MERGE's (:func:`_discover_touched`: stats + bloom
     pruned candidates, exact touched-file discovery; rewrite ∝ touched
@@ -2895,21 +2867,6 @@ def read_cdc_state(
     )
 
 
-def purge_cdc_tombstones(spark: SparkSession, table: str) -> int:
-    """Reclaim retained CDC delete tombstones (the retention knob:
-    safe once the feed guarantees no straggler older than the purged
-    deletes can still arrive — purging earlier re-opens the
-    resurrection window apply_changes' tombstones exist to close).
-    Returns the new version (or the current one if nothing purged)."""
-    snap = _snapshot(table)
-    has_tombstones = (
-        _read_live(spark, snap).where(F.col(CDC_DELETED_COL)).limit(1).count() > 0
-    )
-    if not has_tombstones:
-        return snap.version
-    return _delete_where(spark, snap, CDC_DELETED_COL)
-
-
 def _latest_changes(
     source: DataFrame, key: str, seq_cols: list, op_col: str
 ) -> DataFrame:
@@ -3002,8 +2959,7 @@ def clone_table(source: str, dest: str, version: int | None = None) -> int:
     files a clone still references breaks the clone's reads — vacuum
     only walks a table's own data dir, so the clone's own VACUUM can
     never delete source bytes, but the reverse discipline is on the
-    operator. ``export_snapshot`` relativizes referenced names on copy,
-    so exporting a clone materializes it (deep copy).
+    operator.
     """
     snap = _snapshot(source, version)
     if versions(dest):
@@ -3074,27 +3030,11 @@ def vacuum_retain(table: str, retain_last: int) -> int:
 
 
 def vacuum(table: str) -> int:
-    """Delete data files referenced by NO version's live set and no
-    longer reachable (here: files removed at or before the latest
-    version that we choose to retain nothing of — simple variant:
-    drop files not live at ANY retained version; retention = all
-    versions, so only files never live (failed stagings) go). Returns
-    number of files deleted. Kept deliberately conservative: time
-    travel across the full history keeps working."""
-    keep = set()
-    for v in versions(table):
-        for a in live_files(table, v):
-            keep.add(a["file"])
-    for adds in _snapshot(table).staged.values():
-        for a in adds:
-            keep.add(a["file"])  # pre-publish WAP data, not garbage
-    data_dir = os.path.join(table, _DATA_DIR)
-    n = 0
-    for f in os.listdir(data_dir):
-        if f.endswith(".parquet") and f not in keep:
-            os.remove(os.path.join(data_dir, f))
-            n += 1
-    return n
+    """Conservative VACUUM: :func:`vacuum_retain` over every version, so
+    only files live at NO version (failed stagings) go and time travel
+    across the full history keeps working. Returns the number of files
+    deleted."""
+    return vacuum_retain(table, len(versions(table)))
 
 
 _ZORDER_BITS = 16
@@ -3127,14 +3067,6 @@ def _zorder_column(df: DataFrame, cols: list[str]) -> DataFrame:
     return out.withColumn("__z", z).drop(
         *[f"__lo_{c}" for c in cols], *[f"__hi_{c}" for c in cols]
     )
-
-
-def files_overlapping(table: str, col: str, lo, hi, version: int | None = None) -> list[dict]:
-    """Live files whose ``col`` min/max range intersects [lo, hi] — the
-    data-skipping primitive a scan planner uses against the log's
-    per-file stats (:func:`pruned_files` with one bound). Files without
-    stats for ``col`` are conservatively kept."""
-    return pruned_files(table, {col: (lo, hi)}, version)
 
 
 def optimize(
@@ -3490,83 +3422,6 @@ def _delete_where(
         entry["tombstones_cleared"] = True
     _commit_exclusive(snap.table, entry)
     return v
-
-
-def export_snapshot(
-    spark: SparkSession,
-    table: str,
-    dest: str,
-    version: int | None = None,
-    partition_by: list[str] | None = None,
-) -> dict:
-    """Export a committed snapshot as PLAIN parquet any engine can read —
-    the interop escape hatch for the custom transaction log (a real user's
-    first question: "can I read this from another engine?").
-
-    Layout at ``dest``:
-      - ``*.parquet`` — the snapshot's data (no transaction log, no
-        sidecar requirements; ``spark.read.parquet(dest)`` / DuckDB
-        ``read_parquet('dest/*.parquet')`` / Hive-style partition dirs
-        when ``partition_by`` is given)
-      - ``_MANIFEST.json`` — table name, version, file list with row
-        counts, total rows, and the log stats carried over
-      - ``_SUCCESS`` — written LAST, so a partially-copied export is
-        detectable (readers of the manifest check it first)
-
-    Default path copies the immutable live files byte-for-byte (zero
-    decode/encode; on a real object store this is a server-side copy /
-    distcp, O(live files) metadata ops, no cluster time). With
-    ``partition_by`` the snapshot is rewritten through Spark's Hive-style
-    partitioned writer instead — one full pass, but the export becomes
-    partition-prunable for downstream engines.
-    """
-    snap = _snapshot(table, version)
-    os.makedirs(dest, exist_ok=True)
-
-    manifest: dict = {
-        "table": os.path.basename(os.path.normpath(table)),
-        "version": snap.version,
-        "exported_at": time.time(),
-        "key": snap.key,
-        "partition_by": partition_by or [],
-        "files": [],
-    }
-    if partition_by:
-        df = _read_live(spark, snap)
-        df.write.mode("overwrite").partitionBy(*partition_by).parquet(dest)
-        for root, _dirs, names in os.walk(dest):
-            for f in sorted(names):
-                if f.endswith(".parquet"):
-                    rel = os.path.relpath(os.path.join(root, f), dest)
-                    md = pq.ParquetFile(os.path.join(root, f)).metadata
-                    manifest["files"].append({"file": rel, "rows": md.num_rows})
-    else:
-        # the byte-copy fast path ships RAW files: it must refuse while
-        # merge-on-read tombstones are pending, or the export would
-        # resurrect logically deleted rows (e.g. an acknowledged GDPR
-        # erasure) that the partition_by path — which goes through
-        # read() — correctly filters (round-7 review)
-        if snap.tombstones:
-            raise ValueError(
-                "snapshot has pending deferred deletes; run "
-                "materialize_tombstones before a byte-copy export (or "
-                "export with partition_by, which rewrites through read())"
-            )
-        for a in snap.files:
-            # basename-ify: a shallow clone's actions reference ABSOLUTE
-            # source paths; joining them into dest would "copy" a file
-            # onto itself. Exporting relativizes (materializes) instead.
-            rel_name = os.path.basename(a["file"])
-            shutil.copy2(_abs(table, a["file"]), os.path.join(dest, rel_name))
-            ent = dict(a)
-            ent["file"] = rel_name
-            manifest["files"].append(ent)
-    manifest["total_rows"] = sum(f["rows"] for f in manifest["files"])
-    with open(os.path.join(dest, "_MANIFEST.json"), "w") as fh:
-        json.dump(manifest, fh, indent=1)
-    with open(os.path.join(dest, "_SUCCESS"), "w") as fh:
-        fh.write("")
-    return manifest
 
 
 def table_changes(

@@ -30,25 +30,15 @@ def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _date_bounded(ev: DataFrame, since, until) -> DataFrame:
-    """Apply [since, until) day bounds to an events frame. Over the
-    date-partitioned materialization (runner.materialize_events_
-    partitioned) the predicate lands on the ``event_date`` PARTITION
-    column and prunes directories at the scan; over the flat driver
-    parquet it falls back to a pushed filter on the SAME
-    session-TZ-independent UTC-day expression the materializer wrote
-    (event_utc_date — a to_date(ts) fallback would render the instant
-    in the reader session's timezone and select different rows than
-    the partition bound, round-9 review). Plan-pinned in
-    tests/test_plans.py."""
+    """Apply [since, until) day bounds to an events frame as a pushed
+    filter on the session-TZ-independent UTC day (event_utc_date — a
+    to_date(ts) bound would render the instant in the reader session's
+    timezone and select different rows in a non-UTC session)."""
     from ecommerce_dbt_medallion_spark.sources.registry import event_utc_date
 
     if since is None and until is None:
         return ev
-    d = (
-        F.col("event_date")
-        if "event_date" in ev.columns
-        else event_utc_date()
-    )
+    d = event_utc_date()
     if since is not None:
         ev = ev.where(d >= F.lit(since))
     if until is not None:
@@ -294,12 +284,11 @@ def hypertable_rollup(
     sums), which the oracle verifies value-for-value. ``since``/
     ``until`` bound the raw-event scan to [since, until) days (the
     continuous-aggregate REFRESH shape — recompute only the invalidated
-    window); over the partitioned materialization the bound prunes
-    directories (_date_bounded). The driver key passes neither.
+    window, _date_bounded). The driver key passes neither.
 
-    TZ note: the bound is defined on UTC days (event_utc_date, matching
-    the partition column); the hour buckets are instants so any UTC-day
-    window covers whole buckets, but the day/month CASCADE labels use
+    TZ note: the bound is defined on UTC days (event_utc_date); the
+    hour buckets are instants so any UTC-day window covers whole
+    buckets, but the day/month CASCADE labels use
     date_trunc in the session timezone — run bounded rollups in the
     repo's pinned UTC sessions (session.get_spark) for calendar-aligned
     labels.
@@ -1149,7 +1138,6 @@ group by 1, 2
 
 # ------------------------------------------------- path analysis
 
-PATH_STEPS = 3
 PATH_TOPK = 10
 
 

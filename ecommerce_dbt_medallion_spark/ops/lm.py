@@ -139,17 +139,12 @@ LMMIX_BUCKETS = 64
 LMMIX_DECILES = [0.1, 0.2, 0.3, 0.4, 0.5, 0.6, 0.7, 0.8, 0.9]
 
 
-def lm_decile_bounds(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Estimated global decile boundaries of ``doc_lm_score`` via the
+def _decile_bounds_from(scores: DataFrame) -> DataFrame:
+    """Estimated decile boundaries of ``scores.lm_score`` via the
     equi-width-histogram walk (ops/sketch.py ``histogram_quantiles``
     shape — NEVER ntile's global sort): for each p, target rank =
     ceil(p·n), first cumulative bucket reaching it, linear interpolation
-    inside. Split out so tests can pin the one-bucket-width error bound
-    against exact percentiles."""
-    return _decile_bounds_from(doc_lm_score(spark, sf_dir).localCheckpoint(eager=False))
-
-
-def _decile_bounds_from(scores: DataFrame) -> DataFrame:
+    inside."""
     from ecommerce_dbt_medallion_spark.ops.sketch import hist_quantile_estimates
 
     return hist_quantile_estimates(
@@ -167,7 +162,7 @@ def lm_score_source_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Composes two certified keys: ``doc_lm_score`` supplies the per-doc
     statistical quality signal; the decile boundaries come from the
-    histogram path (:func:`lm_decile_bounds`), never a global sort.
+    histogram path (:func:`_decile_bounds_from`), never a global sort.
     Decile assignment is a 9-value broadcast array filter (pure
     expression); the report grain is (source × decile) ≤ sources·10.
 

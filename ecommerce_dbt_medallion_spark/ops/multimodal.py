@@ -6,10 +6,9 @@ pattern for decode / feature-extract / resize at 100 TB: binary columns
 stay out of JVM row buffers until the Python worker, batches stream
 through Arrow, and the extraction parallelizes per input partition.
 
-The actual codec decode is STUBBED (``decode_media`` raises
-NotImplementedError — image/audio libraries are not available in this
-environment); ``multimodal_extract`` uses a deterministic byte-level
-feature extractor instead, so the plumbing (schema, batching, UDF
+No codec decode runs here (image/audio libraries are not available in
+this environment): ``multimodal_extract`` uses a deterministic
+byte-level feature extractor, so the plumbing (schema, batching, UDF
 signature, partitioning) is real and tested end-to-end.
 """
 
@@ -67,17 +66,6 @@ def multimodal_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def decode_media(blob: bytes, fmt: str):  # pragma: no cover - stub boundary
-    """Real codec decode (PIL / libvips / ffmpeg) plugs in here.
-
-    STUB: media codecs are not available in this environment.
-    """
-    raise NotImplementedError(
-        f"decode_media({fmt}): media codecs unavailable; "
-        "swap in PIL/libvips/ffmpeg in a full deployment"
-    )
-
-
 # The 8-dim "embedding" is emitted as scalar columns e0..e7 (not
 # array<double>): scalar columns sort/hash under the driver's pandas
 # canonicalizer, and each ej = byte_j / 255.0 is a single fp division
@@ -94,57 +82,26 @@ EXTRACT_SCHEMA = StructType(
 )
 
 
-def make_extract_batches(decoder=None):
-    """Build the Arrow-batched extraction fn, with a pluggable decoder.
-
-    ``decoder(blob: bytes, fmt: str) -> sequence of 8 floats`` is the
-    production hook (round-9, VERDICT r8 #8): a real deployment injects
-    a PIL/libvips/ffmpeg-backed callable here and its features fill the
-    e0..e7 embedding slots — the closure (and the decoder with it) is
-    serialized to the Python workers, so the decode runs inside the
-    Arrow batch loop, parallel per partition, exactly where the stub
-    documents it. ``decoder=None`` keeps the deterministic byte-math
-    features the DuckDB oracle reproduces (the gated key's path);
-    ``decoder=decode_media`` surfaces the NotImplementedError stub.
-    """
-
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            blobs = pdf["media_blob"]
-            out = {
-                "doc_id": pdf["doc_id"].astype("int64"),
-                "format": [m["format"] for m in pdf["media_meta"]],
-                "byte_len": [len(b) for b in blobs],
-                "magic_hex": [bytes(b[:4]).hex() for b in blobs],
-                "checksum": [sum(b) % 997 for b in blobs],
-            }
-            if decoder is None:
-                for j in range(8):
-                    out[f"e{j}"] = [bytes(b)[j] / 255.0 for b in blobs]
-            else:
-                feats = [
-                    decoder(bytes(b), m["format"])
-                    for b, m in zip(blobs, pdf["media_meta"])
-                ]
-                for j in range(8):
-                    out[f"e{j}"] = [float(f[j]) for f in feats]
-            yield pd.DataFrame(out)
-
-    return _extract
+def _extract_features(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """Arrow-batched byte-math features the DuckDB oracle reproduces."""
+    for pdf in batches:
+        blobs = pdf["media_blob"]
+        out = {
+            "doc_id": pdf["doc_id"].astype("int64"),
+            "format": [m["format"] for m in pdf["media_meta"]],
+            "byte_len": [len(b) for b in blobs],
+            "magic_hex": [bytes(b[:4]).hex() for b in blobs],
+            "checksum": [sum(b) % 997 for b in blobs],
+        }
+        for j in range(8):
+            out[f"e{j}"] = [bytes(b)[j] / 255.0 for b in blobs]
+        yield pd.DataFrame(out)
 
 
-# default (byte-math) extractor — the oracle-gated path
-_extract_batches = make_extract_batches()
-
-
-def multimodal_extract(
-    spark: SparkSession, sf_dir: str, decoder=None
-) -> DataFrame:
-    """#26: binary-column batch feature extraction via mapInPandas.
-    ``decoder`` (optional) plugs a real codec into the batch loop — see
-    make_extract_batches; the driver-gated key uses the default."""
+def multimodal_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """#26: binary-column batch feature extraction via mapInPandas."""
     return multimodal_docs(spark, sf_dir).mapInPandas(
-        make_extract_batches(decoder), EXTRACT_SCHEMA
+        _extract_features, EXTRACT_SCHEMA
     )
 
 
@@ -199,7 +156,7 @@ FRAME_SCHEMA = StructType(
 def _frame_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """Arrow-batched frame sampling — N input rows → ~N·frames/stride
     output rows (the fan-OUT batch shape of real video decode: a
-    deployment would call decode_media per frame here)."""
+    deployment would decode each frame here)."""
     for pdf in batches:
         rows: dict[str, list] = {
             "doc_id": [],
@@ -231,9 +188,9 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     real shape of distributed video preprocessing: blobs stream through
     Arrow batches, output cardinality is data-dependent, and the frame
     rows inherit the input partitioning (no shuffle until a consumer
-    aggregates). Codec decode itself stays behind the decode_media stub;
-    every emitted feature is deterministic byte math the DuckDB oracle
-    reproduces from the hex digests.
+    aggregates). No codec decode runs; every emitted feature is
+    deterministic byte math the DuckDB oracle reproduces from the hex
+    digests.
     """
     return multimodal_video_docs(spark, sf_dir).mapInPandas(
         _frame_batches, FRAME_SCHEMA
@@ -308,7 +265,7 @@ from b
 # media column — the image/audio dedup stage of a multimodal pipeline.
 # Features come off the SAME mapInPandas Arrow path as #26 (a real
 # deployment swaps the byte-math for perceptual hashes / decoded-pixel
-# features via the make_extract_batches decoder seam); dedup itself is
+# features); dedup itself is
 # banded: exact groups hash-aggregate on the full payload hex, near-dup
 # candidates meet only inside a 32-bit nibble-signature bucket, never
 # all-pairs. Near-dup pairs INCLUDE byte-identical ones (dist 0) — a

@@ -396,7 +396,6 @@ qualify sample_rank <= {RESERVOIR_K}
 # exactly Spark's range-partitioned sort shape with md5 as the range
 # key.
 SHUFFLE_SALT = "#shuffle:42"  # the reproducibility seed — the one dial
-N_SHARDS = 16
 
 
 def corpus_shuffle_shard(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -470,203 +469,3 @@ select p.doc_id, p.skey, p.shard_id, p.pos_in_shard,
 from p join offs o on p.shard_id = o.shard_id
 """
 
-
-# ------------------------------------- curriculum-ordered export
-
-# Round 14 (VERDICT r13 #5): the one trainer-facing stage the export
-# path lacked — an easy→hard curriculum order over the corpus, composed
-# entirely from certified pieces: doc_lm_score supplies the difficulty
-# signal, the lm_score_source_mix histogram estimator supplies decile
-# boundaries (never a global sort), and corpus_shuffle_shard's
-# order-preserving hex-prefix trick supplies the reproducible
-# within-decile shuffle.
-CURRICULUM_SALT = "#curriculum:42"  # the reproducibility seed
-
-
-def curriculum_export_order(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Curriculum-ordered export manifest: every LM-scoreable doc gets
-    (difficulty_decile, skey, pos_in_cell, curriculum_pos) such that
-    streaming docs in curriculum_pos order yields deciles easy→hard
-    (decile 1 = highest mean bigram probability) with a seeded,
-    reproducible shuffle INSIDE each decile.
-
-    Scale shape (100 TB): difficulty deciles come from the shared
-    equi-width-histogram estimator over ``doc_lm_score`` (a ≤64-bucket
-    agg + a 9-value broadcast array filter — never ntile's global
-    sort). The within-decile order is the corpus_shuffle_shard trick:
-    cell = (decile, first hex digit of the seeded md5 key), so cell
-    boundaries are ORDER-PRESERVING prefixes of the shuffled key space
-    and (decile asc, cell asc, skey asc) IS the curriculum order; each
-    of the 160 cells sorts independently (~n/160 rows per window
-    partition — no decile-sized hot partition), and curriculum_pos
-    adds a 160-row broadcast cumulative offset. Docs with no scoreable
-    bigram (under 2 tokens) are not LM-scoreable and are excluded,
-    exactly like ``doc_lm_score`` itself.
-
-    Determinism: lm_score is the certified ``doc_lm_score`` double
-    (bit-identical across engines); boundary arithmetic is the shared
-    estimator (lm_score_source_mix precedent); the shuffle key is
-    md5(doc_id || salt) — no rand() anywhere, so re-running with the
-    same salt reproduces the exact order a resumable training run
-    needs."""
-    from ecommerce_dbt_medallion_spark.ops.lm import (
-        LMMIX_BUCKETS,
-        LMMIX_DECILES,
-        doc_lm_score,
-    )
-    from ecommerce_dbt_medallion_spark.ops.sketch import hist_quantile_estimates
-
-    scores = doc_lm_score(spark, sf_dir).localCheckpoint(eager=False)
-    barr = F.broadcast(
-        hist_quantile_estimates(
-            scores.select(F.col("lm_score").alias("x")),
-            LMMIX_DECILES,
-            LMMIX_BUCKETS,
-        ).agg(F.sort_array(F.collect_list("est")).alias("barr"))
-    )
-    keyed = (
-        scores.crossJoin(barr)
-        .select(
-            "doc_id",
-            "lm_score",
-            (
-                F.lit(10)
-                - F.size(
-                    F.filter(F.col("barr"), lambda b: F.col("lm_score") > b)
-                )
-            )
-            .cast("long")
-            .alias("difficulty_decile"),
-            F.md5(
-                F.concat(F.col("doc_id").cast("string"), F.lit(CURRICULUM_SALT))
-            ).alias("skey"),
-        )
-        .withColumn(
-            "cell", F.conv(F.substring("skey", 1, 1), 16, 10).cast("long")
-        )
-        # consumed twice (pos window + offsets agg): without the
-        # checkpoint the offsets branch would re-run the corpus-scale
-        # LM scoring + decile-boundary estimator a second time
-        .localCheckpoint(eager=False)
-    )
-    w = Window.partitionBy("difficulty_decile", "cell").orderBy(
-        F.asc("skey"), F.asc("doc_id")
-    )
-    pos = keyed.withColumn("pos_in_cell", F.row_number().over(w).cast("long"))
-    # 160-row (decile, cell) count frame → cumulative offsets
-    # (metadata-scale single-partition window, the gold-daily exemption)
-    woff = Window.orderBy("difficulty_decile", "cell").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    offsets = (
-        keyed.groupBy("difficulty_decile", "cell")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .withColumn("off", F.coalesce(F.sum("n").over(woff), F.lit(0)))
-        .select("difficulty_decile", "cell", "off")
-    )
-    return pos.join(F.broadcast(offsets), ["difficulty_decile", "cell"]).select(
-        "doc_id",
-        "lm_score",
-        "difficulty_decile",
-        "cell",
-        "skey",
-        "pos_in_cell",
-        (F.col("pos_in_cell") + F.col("off")).cast("long").alias("curriculum_pos"),
-    )
-
-
-def oracle_curriculum_export_order() -> str:
-    from ecommerce_dbt_medallion_spark.ops.lm import (
-        LMMIX_BUCKETS,
-        LMMIX_DECILES,
-        _ORACLE_BIGRAM_BASE,
-    )
-
-    b = LMMIX_BUCKETS
-    ps = ", ".join(f"cast({p} as double)" for p in LMMIX_DECILES)
-    return (
-        _ORACLE_BIGRAM_BASE
-        + f""",
-lm as (
-    select bc.w1, bc.w2, cast(bc.n_pair as double) / pc.n_prefix as prob
-    from bc join pc using (w1)
-),
-joined as (
-    select b.doc_id, b.pos, lm.prob
-    from bi b join lm on lm.w1 = b.w1 and lm.w2 = b.w2
-),
-scored as materialized (
-    select doc_id, count(*) as n_bigrams,
-        list_aggregate(list(prob order by pos), 'sum') / count(*) as lm_score
-    from joined
-    group by doc_id
-),
-rng as (select min(lm_score) as lo, max(lm_score) as hi, count(*) as n
-        from scored),
-hist as (
-    select
-        cast(case when r.hi = r.lo then 0
-             else least({b} - 1,
-                        floor((sc.lm_score - r.lo) / (r.hi - r.lo) * {b}))
-        end as bigint) as bucket,
-        r.lo, r.hi, r.n, count(*) as cnt
-    from scored sc cross join rng r
-    group by 1, 2, 3, 4
-),
-cum as (
-    select *, sum(cnt) over (
-        order by bucket rows between unbounded preceding and current row
-    ) as cum
-    from hist
-),
-pl as (select unnest([{ps}]) as p),
-hits as (
-    select p, bucket, lo, hi, n, cnt, cum,
-        cast(ceil(p * n) as bigint) as target,
-        row_number() over (partition by p order by bucket) as rn
-    from cum cross join pl
-    where cum >= ceil(p * n)
-),
-bounds as (
-    select p,
-        lo + (bucket + (target - (cum - cnt)) / cnt) * ((hi - lo) / {b}) as est
-    from hits where rn = 1
-),
-barr as (select list(est order by est) as barr from bounds),
-keyed as materialized (
-    select sc.doc_id, sc.lm_score,
-        cast(10 - len(list_filter(ba.barr, x -> sc.lm_score > x)) as bigint)
-            as difficulty_decile,
-        md5(cast(sc.doc_id as varchar) || '{CURRICULUM_SALT}') as skey
-    from scored sc cross join barr ba
-),
-cells as (
-    select doc_id, lm_score, difficulty_decile, skey,
-        cast(strpos('0123456789abcdef', substr(skey, 1, 1)) - 1 as bigint)
-            as cell
-    from keyed
-),
-p as (
-    select doc_id, lm_score, difficulty_decile, cell, skey,
-        cast(row_number() over (
-            partition by difficulty_decile, cell
-            order by skey asc, doc_id asc
-        ) as bigint) as pos_in_cell
-    from cells
-),
-offs as (
-    select difficulty_decile, cell,
-        coalesce(sum(n) over (
-            order by difficulty_decile, cell
-            rows between unbounded preceding and 1 preceding
-        ), 0) as off
-    from (select difficulty_decile, cell, count(*) as n
-          from cells group by 1, 2)
-)
-select p.doc_id, p.lm_score, p.difficulty_decile, p.cell, p.skey,
-    p.pos_in_cell,
-    cast(p.pos_in_cell + o.off as bigint) as curriculum_pos
-from p join offs o
-    on p.difficulty_decile = o.difficulty_decile and p.cell = o.cell
-"""
-    )

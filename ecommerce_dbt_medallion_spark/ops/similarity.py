@@ -643,35 +643,6 @@ from ranked where rank <= {ANN_TOPK}
 KNN_K = 5
 KNN_LSH_PLANES = 8  # 256 buckets/table: candidate fan-in stays bounded
 KNN_LSH_TABLES = 8
-# Expected bucket occupancy (n / 2^planes) the index is tuned for:
-# candidate pairs per table grow ~n * occupancy, so holding occupancy
-# flat keeps the build linear in n.
-KNN_TARGET_OCCUPANCY = 8
-
-
-def knn_planes_for(n_vectors: int) -> int:
-    """The plane-count SCALE DIAL (round 7, closing SURVEY §6's manual
-    note): the smallest plane count keeping expected bucket occupancy
-    n / 2^planes at or under KNN_TARGET_OCCUPANCY, floored at the
-    oracle-pinned default — ceil(log2(10)) ≈ +3–4 planes per corpus
-    decade, exactly the hand rule the round-6 sf1 probe measured, now
-    computed instead of re-read from a docstring.
-
-    The GATED ``knn_graph`` key keeps the fixed default family (the
-    DuckDB oracle embeds those literal hyperplanes); production callers
-    at other corpus sizes pass ``lsh_planes=knn_planes_for(n)`` — the
-    exact rerank is parameter-independent, so correctness of returned
-    neighbors is unaffected by the dial, only candidate recall/cost.
-    Occupancy boundedness at two corpus sizes is pinned by
-    tests/test_ops.py::test_knn_planes_dial_bounds_occupancy.
-    """
-    import math
-
-    if n_vectors <= KNN_TARGET_OCCUPANCY:
-        return KNN_LSH_PLANES
-    return max(
-        KNN_LSH_PLANES, math.ceil(math.log2(n_vectors / KNN_TARGET_OCCUPANCY))
-    )
 
 
 def knn_graph(

@@ -27,17 +27,17 @@ Plan shape (all linear in corpus characters):
   only; AQE skew-splits boilerplate-grade hot hashes;
 - per-doc rollup + a broadcast-friendly left join against doc lengths.
 
-100 TB dial (round 8 — COMPUTED, the ``knn_planes_for`` treatment):
+100 TB dial (round 8 — COMPUTED):
 positional stride sampling is UNSOUND here — two copies of a span at
 different alignments sample disjoint window phases and share no hash —
 so the scale dial is CONTENT-DEFINED selection: winnowing (Schleimer
 et al.) over the window-hash stream. ``substring_winnow_for(total_
 windows)`` computes the winnow width ``w`` that keeps the expected
-selected-fingerprint volume (≈ 2/(w+1) density) inside a budget, and
-``substring_guaranteed_span(w)`` gives the DETERMINISTIC catch bound:
-any span duplicated across two documents with length >= SUB_L + w - 1
-contains a full w-run of identical window hashes in both copies, whose
-minimum is selected in both — alignment-independent, unlike stride.
+selected-fingerprint volume (≈ 2/(w+1) density) inside a budget, with
+a DETERMINISTIC catch bound: any span duplicated across two documents
+with length >= SUB_L + w - 1 contains a full w-run of identical window
+hashes in both copies, whose minimum is selected in both —
+alignment-independent, unlike stride.
 ``exact_substring_dedup_sampled`` is the production path;
 the exact stride-1 op below stays as the oracle-gated ground truth
 (and equals the sampled path at w = 1, test-pinned).
@@ -135,8 +135,10 @@ def substring_winnow_for(
     """The winnow-width SCALE DIAL: smallest w keeping the EXPECTED
     selected volume 2·total_windows/(w+1) at or under the budget
     (winnowing's expected density is 2/(w+1)), floored at 1 (= select
-    every window: exactly the gated stride-1 op). Guaranteed-catch span
-    length follows from w via :func:`substring_guaranteed_span` —
+    every window: exactly the gated stride-1 op). The guaranteed-catch
+    span length is SUB_L + w - 1 chars: such a span holds >= w
+    consecutive window hashes, identical in both copies, and winnowing
+    selects that run's minimum in each copy regardless of alignment —
     the dial trades minimum detectable span length against volume,
     NEVER recall of spans above the bound."""
     import math
@@ -145,15 +147,6 @@ def substring_winnow_for(
         return 1
     w = math.ceil(2 * total_windows / budget_selected) - 1
     return max(1, min(SUBSTRING_WINNOW_MAX, w))
-
-
-def substring_guaranteed_span(winnow_w: int) -> int:
-    """Minimum duplicated-span length (chars) the sampled path catches
-    DETERMINISTICALLY at winnow width w: a span of length
-    SUB_L + w - 1 contains >= w consecutive window hashes, identical in
-    both copies; winnowing selects that run's minimum in each copy
-    regardless of alignment (content-defined, so phase-independent)."""
-    return SUB_L + winnow_w - 1
 
 
 def _docs_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -228,7 +221,7 @@ def exact_substring_dedup_sampled(
     ``winnow_w=1`` every window is selected and ``dup_sel_fps`` equals
     the exact op's ``dup_hashes`` (test-pinned equivalence); larger w
     divides the exchanged volume by ~(w+1)/2 and raises the guaranteed
-    minimum catchable span to :func:`substring_guaranteed_span`."""
+    minimum catchable span to SUB_L + w - 1 chars."""
     docs = _docs_windows(spark, sf_dir)
     if winnow_w is None:
         total = docs.agg(F.sum("n_windows").alias("t")).collect()[0]["t"] or 0
@@ -241,65 +234,6 @@ def exact_substring_dedup_sampled(
                 lambda j: F.array_min(F.slice(F.col("__hs"), j + 1, winnow_w)),
             ),
         ).otherwise(F.array_distinct(F.col("__hs")))
-    )
-    return _selected_span_stats(docs, sel)
-
-
-# Above this winnow width the per-window O(w) min-scan dominates the md5
-# cost itself (array_min over a w-slice per window = n·w comparisons
-# map-side); the dial switches to mod-p selection: O(1) per window,
-# content-defined like winnowing (so still alignment-independent), with
-# a PROBABILISTIC catch bound instead of a deterministic one.
-SUBSTRING_WINNOW_COMPUTE_MAX = 64
-
-
-def substring_dial_for(
-    total_windows: int, budget_selected: int = SUBSTRING_SELECT_BUDGET
-) -> tuple[str, int]:
-    """The two-regime COMPUTE-AWARE dial: ('winnow', w) while the
-    deterministic path's map-side cost n·w stays reasonable
-    (w <= SUBSTRING_WINNOW_COMPUTE_MAX), else ('modp', p) — expected
-    density 1/p, O(n) compute, catch probability
-    :func:`substring_catch_probability` (≥ 1 - e^{-(span-L+1)/p})."""
-    w = substring_winnow_for(total_windows, budget_selected)
-    if w <= SUBSTRING_WINNOW_COMPUTE_MAX:
-        return ("winnow", w)
-    import math
-
-    p = max(2, math.ceil(total_windows / budget_selected))
-    return ("modp", p)
-
-
-def substring_catch_probability(p: int, span_chars: int) -> float:
-    """P(a span duplicated across two docs shares >= 1 selected window
-    hash) under mod-p selection: the span holds W = span-L+1 windows,
-    selection is content-defined (identical in both copies), each
-    selected with rate 1/p → 1 - (1-1/p)^W."""
-    w_in_span = max(0, span_chars - SUB_L + 1)
-    return 1.0 - (1.0 - 1.0 / p) ** w_in_span
-
-
-def exact_substring_dedup_modp(
-    spark: SparkSession, sf_dir: str, p: int | None = None
-) -> DataFrame:
-    """The large-w regime of #35c's scale path: mod-p content-defined
-    window selection — keep a window iff the integer value of its md5's
-    first 15 hex chars ≡ 0 (mod p). O(1) per window (no w-slice scan),
-    expected 1/p density, phase-independent because selection depends
-    only on the window's own content. Same downstream machinery and
-    output shape as the winnowed variant (:func:`_selected_span_stats`)."""
-    docs = _docs_windows(spark, sf_dir)
-    if p is None:
-        total = docs.agg(F.sum("n_windows").alias("t")).collect()[0]["t"] or 0
-        method, dial = substring_dial_for(int(total))
-        p = dial if method == "modp" else 1
-    sel = F.array_distinct(
-        F.filter(
-            F.col("__hs"),
-            lambda h: F.conv(F.substring(h, 1, 15), 16, 10).cast("bigint")
-            % F.lit(int(p))
-            == 0,
-        )
     )
     return _selected_span_stats(docs, sel)
 

@@ -461,20 +461,6 @@ where rk <= {limit_per_test}
     return omed.assemble_many(_deps_for_checks(), final)
 
 
-def store_failures(spark: SparkSession, sf_dir: str, warehouse: str,
-                   limit_per_test: int = STORE_FAILURES_LIMIT) -> str:
-    """Persist the failed-rows audit table (the ``dbt test
-    --store-failures`` step of a runner invocation). Written partitioned
-    by model so a per-model triage reads one partition."""
-    import os
-
-    path = os.path.join(warehouse, "dq_failures")
-    dq_failed_rows(spark, sf_dir, limit_per_test).write.mode(
-        "overwrite"
-    ).partitionBy("model_name").parquet(path)
-    return path
-
-
 # ------------------------------------------------------------ oracle side
 
 def _check_sql(chk: Check) -> str:

@@ -22,7 +22,8 @@ reads it) re-read on a worker thread as soon as its upstream tables are
 materialized, so ``gold_order_metrics`` overlaps ``silver_payments`` and
 the three gold tables overlap each other. The pool is as wide as the DAG
 (3 threads). Workers are wrapped with ``pyspark.inheritable_thread_target``,
-so every model's jobs carry the caller's job group and local properties.
+so every model's jobs carry the caller's job group and local properties;
+each model's jobs are described by the model's name.
 When a model fails, its dependents are skipped, the models in flight
 finish, and the first error is raised.
 
@@ -32,7 +33,6 @@ and returns a manifest.
 
 from __future__ import annotations
 
-import json
 import os
 from concurrent.futures import FIRST_COMPLETED, Future, ThreadPoolExecutor, wait
 from dataclasses import dataclass
@@ -119,6 +119,8 @@ def _materialize(
     upstream: dict[str, DataFrame],
 ) -> DataFrame | None:
     """Build, write and (when a dependent reads it) re-read one model."""
+    # runs on the model's worker thread: names this model's jobs in the UI
+    spark.sparkContext.setJobDescription(m.name)
     path = os.path.join(warehouse, m.layer, m.name)
     df = m.build(spark, sf_dir, upstream)
     _write(df, path, list(m.partition_by) or None)
@@ -267,84 +269,6 @@ def snapshot(
     staged = out.localCheckpoint(eager=True)
     staged.write.mode("overwrite").parquet(snapshot_path)
     return spark.read.parquet(snapshot_path)
-
-
-def materialize_events_partitioned(spark: SparkSession, sf_dir: str, dest_dir: str) -> str:
-    """Date-partitioned materialization of the events stream — pruning
-    parity with the orders fact (runner.run partitions silver_orders by
-    order_year_month; events is the second-biggest fact and had no
-    pruned read path, round-8 review). Writes
-    ``dest_dir/events_partitioned`` hive-partitioned by ``event_date``;
-    ``sources.registry.load_events_table`` prefers that layout when the
-    caller's dir carries it, so every date-bounded event mart gets
-    partition pruning with no mart change. Day grain: a 100 TB event
-    stream at ~30 days/month lands ~3% of the table per partition — the
-    incremental rebuild unit — while the partition count stays in the
-    thousands over years (no small-file explosion)."""
-    from ecommerce_dbt_medallion_spark.sources.registry import (
-        EVENTS_PARTITIONED_DIRNAME,
-        EVENTS_SOURCE_FINGERPRINT,
-        _read_events_static,
-        event_utc_date,
-        events_flat_fingerprint,
-        normalize_event_ts,
-    )
-
-    # Prefer the flat source, never through load_events_table — that
-    # loader prefers dest_dir/events_partitioned, so a refresh into the
-    # same dir would overwrite the path it is reading (round-9 review:
-    # AnalysisException on the second run in the natural sf_dir ==
-    # dest_dir deployment). A source dir that carries ONLY the
-    # partitioned layout is still a valid input when it is not also
-    # the output path.
-    out = os.path.join(dest_dir, EVENTS_PARTITIONED_DIRNAME)
-    flat = os.path.join(sf_dir, "events.parquet")
-    parted = os.path.join(sf_dir, EVENTS_PARTITIONED_DIRNAME)
-    # Fingerprint the flat source BEFORE reading it (round-10 review):
-    # stat-ing it after the (long) write would record a refresh that
-    # landed mid-materialization as fresh while the layout holds the
-    # OLD rows — fingerprint-first turns that race into a mismatch and
-    # the loader's safe flat fallback.
-    flat_fp = events_flat_fingerprint(flat) if os.path.exists(flat) else None
-    if os.path.exists(flat):
-        ev = normalize_event_ts(_read_events_static(spark, flat))
-    elif os.path.isdir(parted):
-        if os.path.abspath(parted) == os.path.abspath(out):
-            raise ValueError(
-                "cannot rebuild events_partitioned from itself: the only "
-                f"events source in {sf_dir} is the partitioned layout this "
-                "call would overwrite — point dest_dir elsewhere or restore "
-                "the flat events.parquet"
-            )
-        ev = normalize_event_ts(spark.read.parquet(parted)).drop("event_date")
-    else:
-        raise FileNotFoundError(f"no events source in {sf_dir}")
-    (
-        # event_utc_date, not to_date(ts): the partition column must be
-        # session-TZ-independent or a bound computed in a different
-        # reader session would prune partitions that contain in-bound
-        # rows (round-9 review)
-        ev.withColumn("event_date", event_utc_date())
-        .repartition("event_date")  # one writer task per day: no
-        # per-task fan-out into every partition dir (tiny-file storm)
-        .write.mode("overwrite")
-        .partitionBy("event_date")
-        .parquet(out)
-    )
-    # Freshness marker (round-9 review): record the flat source's
-    # pre-read fingerprint so load_events_table can detect a flat
-    # refresh that post-dates this layout and fall back instead of
-    # serving stale rows. Leading "_" keeps it out of Spark's file
-    # index. Written ATOMICALLY (tmp + rename — a crash-truncated
-    # marker must not exist) and AFTER the parquet write so a failed
-    # materialization never leaves a fresh-looking marker over a
-    # half-written layout.
-    marker_path = os.path.join(out, EVENTS_SOURCE_FINGERPRINT)
-    tmp = marker_path + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump({"flat_fingerprint": flat_fp}, fh)
-    os.replace(tmp, marker_path)
-    return out
 
 
 def materialize_bucketed_facts(

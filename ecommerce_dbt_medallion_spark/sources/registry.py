@@ -86,31 +86,11 @@ def _read_events_static(spark: SparkSession, path: str) -> DataFrame:
         raise
 
 
-# A warehouse-side date-partitioned materialization of events (written
-# by runner.materialize_events_partitioned). When present in sf_dir it
-# wins over the flat events.parquet: its hive layout gives every
-# event_date-filtered mart partition pruning — at 100 TB the difference
-# between scanning one day's directories and the whole stream (the same
-# posture runner.run takes for silver_orders/order_year_month).
-EVENTS_PARTITIONED_DIRNAME = "events_partitioned"
-
-# Freshness marker written by runner.materialize_events_partitioned
-# into the partitioned layout (leading "_" → invisible to Spark's file
-# index, like _SUCCESS). Records a fingerprint of the flat source the
-# layout was built from, so load_events_table can detect a flat
-# events.parquet refreshed AFTER the materialization and fall back to
-# it instead of silently serving stale rows (round-9 review).
-EVENTS_SOURCE_FINGERPRINT = "_source_fingerprint.json"
-
-
 def parquet_source_stats(path: str) -> list:
     """``[file_count, total_bytes, max_mtime_ns]`` of a parquet source
     (a single file or a Spark-written directory), skipping hidden
     metadata (``_``/``.`` prefixes). Cheap (os.stat only, no data
-    read); shared by the events freshness fingerprint and the
-    stream-static broadcast size gate (round-10 review: two copies of
-    this walk drifted apart is exactly the bug class one helper
-    prevents)."""
+    read); the stream-static broadcast size gate sums it."""
     if os.path.isfile(path):
         st = os.stat(path)
         return [1, st.st_size, st.st_mtime_ns]
@@ -126,46 +106,14 @@ def parquet_source_stats(path: str) -> list:
     return [n, b, m]
 
 
-def events_flat_fingerprint(path: str) -> list:
-    """Freshness fingerprint of the flat events source — changes
-    whenever the source is rewritten, exactly the signal the
-    partitioned-layout preference needs."""
-    return parquet_source_stats(path)
-
-
-def _partitioned_layout_fresh(parted: str, flat: str) -> bool:
-    """True when the partitioned layout's recorded source fingerprint
-    matches the flat source NOW. A layout without a marker (written
-    before the marker existed) is trusted — the materializer has
-    written the marker since, so every refresh going forward carries
-    one. An UNREADABLE marker (crash-truncated write) fails toward the
-    flat source (round-10 review): evidence of a marker that cannot be
-    trusted must not read as trust."""
-    import json
-
-    marker = os.path.join(parted, EVENTS_SOURCE_FINGERPRINT)
-    if not os.path.exists(marker):
-        return True
-    try:
-        with open(marker) as fh:
-            recorded = json.load(fh)
-    except (OSError, ValueError):
-        return False  # corrupt marker: prefer the flat source
-    fp = recorded.get("flat_fingerprint")
-    if fp is None:  # built from a partitioned-only source: no basis
-        return True
-    return list(fp) == events_flat_fingerprint(flat)
-
-
 def event_utc_date(col: str = "ts"):
     """The UTC calendar day of an event instant as pure integer math —
     SESSION-TZ-INDEPENDENT (to_date/cast-to-date render an instant in
-    the session timezone, so a partition column derived with them in
-    one session would disagree with a bound computed in another; this
+    the session timezone, so a day derived with them in one session
+    would disagree with one computed in another; this
     expression is identical everywhere, the same discipline as
-    normalize_event_ts). Used by BOTH the events materializer and the
-    flat-path day-bound fallback so the two read paths select the same
-    rows in any session."""
+    normalize_event_ts). The event marts' day bounds and daily grouping
+    both use it, so they select the same rows in any session."""
     return F.expr(
         f"date_from_unix_date(cast(floor(unix_micros({col}) / "
         f"{86_400_000_000}) as int))"
@@ -173,32 +121,8 @@ def event_utc_date(col: str = "ts"):
 
 
 def load_events_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """events with ``ts`` normalized to a true TIMESTAMP.
-
-    Prefers the date-partitioned materialization (see
-    EVENTS_PARTITIONED_DIRNAME) when the caller's dir carries one; the
-    driver's flat events.parquet path is byte-identical to before
-    (the partitioned branch ADDS an ``event_date`` partition column,
-    which the date-bounded marts filter on).
-
-    The preference is freshness-guarded (round-9 review): the
-    materializer records a fingerprint of the flat source it read, and
-    if the flat events.parquet has been refreshed SINCE (fingerprint
-    mismatch), this loader warns and reads the flat source — stale
-    partitioned rows must never silently win over fresh data."""
+    """events with ``ts`` normalized to a true TIMESTAMP."""
     path = os.path.join(sf_dir, "events.parquet")
-    parted = os.path.join(sf_dir, EVENTS_PARTITIONED_DIRNAME)
-    if os.path.isdir(parted):
-        if not os.path.exists(path) or _partitioned_layout_fresh(parted, path):
-            return normalize_event_ts(spark.read.parquet(parted))
-        import warnings
-
-        warnings.warn(
-            f"{parted} is stale (flat events.parquet was refreshed after "
-            "the materialization); reading the flat source — re-run "
-            "runner.materialize_events_partitioned to restore pruning",
-            stacklevel=2,
-        )
     return normalize_event_ts(_read_events_static(spark, path))
 
 
@@ -220,39 +144,3 @@ def load_event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sf_dir as the basePath
     stream = spark.readStream.schema(schema).parquet(path[:-len("parquet")] + "{parquet}")
     return normalize_event_ts(stream)
-
-
-def load_table_fmt(
-    spark: SparkSession,
-    path: str,
-    fmt: str = "parquet",
-    schema=None,
-) -> DataFrame:
-    """Format-agnostic table reader: parquet / orc / csv / json.
-
-    Text formats (csv, json) REQUIRE an explicit schema: schema inference
-    is a full extra scan of the source at 100 TB and makes column types
-    data-dependent. Columnar formats carry their schema and get predicate
-    pushdown + column pruning; text formats only prune columns — the
-    docstring contract is that bulk facts live in parquet/orc and
-    csv/json exist for ingestion edges (dbt seed parity).
-    """
-    fmt = fmt.lower()
-    reader = spark.read
-    if fmt in ("parquet", "orc"):
-        if schema is not None:
-            reader = reader.schema(schema)
-        return reader.format(fmt).load(path)
-    if schema is None:
-        raise ValueError(f"{fmt} sources require an explicit schema")
-    reader = reader.schema(schema)
-    if fmt == "csv":
-        # no hardcoded timestampFormat: the previous second-granularity
-        # pattern mismatched Spark's own CSV writer default (ISO with
-        # fractional seconds), silently NULLing every timestamp under
-        # PERMISSIVE parsing (round-7 review); the reader default
-        # handles ISO-8601 with optional fractions
-        return reader.csv(path, header=True)
-    if fmt == "json":
-        return reader.json(path)
-    raise ValueError(f"unsupported source format: {fmt}")

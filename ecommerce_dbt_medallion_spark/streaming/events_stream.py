@@ -231,131 +231,3 @@ select
 from expanded
 group by window_start, event_type
 """
-
-
-# --------------------------------------------- hot-key salted rollup
-
-# Round 14 (VERDICT r13 #6): the streaming sibling of the batch skew
-# key (models/analytics.skew_salted_revenue) — a stateful per-user
-# rollup where ONE user carries ~25% of all events, proving the
-# two-phase salted state shape under Structured Streaming. Every 4th
-# user collapses into bucket 0, mirroring the batch key's hot-bucket
-# construction on the same testdata.
-HOT_USER_MOD = 4
-HOT_SALT_BUCKETS = 16
-
-
-def _hot_phase1(stream: DataFrame):
-    """The SHARED phase-1 grouping for the hot-user rollup and its
-    diagnostic twin: watermark + hot-bucket collapse + per-event salt +
-    (window, user_bucket, salt) groupBy. One builder so the salt-scatter
-    test pins the exact state shape the production rollup runs —
-    round-14 review: two verbatim copies could silently drift."""
-    bucket = (
-        F.when(F.col("user_id") % HOT_USER_MOD == 0, F.lit(0))
-        .otherwise(F.col("user_id"))
-        .cast("long")
-    )
-    salt = F.pmod(F.xxhash64(F.col("event_id")), F.lit(HOT_SALT_BUCKETS))
-    return (
-        stream.withWatermark("ts", "2 hours")
-        .select(
-            F.col("ts"),
-            bucket.alias("user_bucket"),
-            salt.alias("salt"),
-            "event_id",
-            "value",
-        )
-        .groupBy(F.window("ts", "1 hour").alias("w"), "user_bucket", "salt")
-    )
-
-
-def stream_hot_user_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-phase salted streaming rollup under a planted hot user.
-
-    Phase 1 (STREAMING, stateful): group by (1-hour window,
-    user_bucket, salt) where salt = xxhash64(event_id) % 16 — the hot
-    user's state rows AND its shuffle traffic scatter across 16
-    reducer keys instead of funneling one hot partition; the watermark
-    bounds state exactly like the plain rollup. Phase 2 (after the
-    availableNow drain, BATCH): fold the ≤16 salt partials per
-    (window, user_bucket) — a 16×-smaller aggregation. Counts are
-    integers and the money column folds as exact decimal partials, so
-    salting is invisible in values (the oracle is the UNsalted batch
-    rollup).
-
-    At 100 TB this is the standing answer to a hot key feeding a
-    stateful streaming agg, where AQE cannot help (state partitioning
-    is fixed by the grouping key): pre-scatter the key, fold partials
-    downstream. The per-batch salt fan-out (≤16 rows per
-    (window, user)) is pinned by
-    tests/test_streaming.py::test_stream_hot_user_rollup_salt_scatter.
-
-    Determinism: salt from xxhash64(event_id) — per-event, never
-    rand(); decimal sums to the boundary; fold order irrelevant
-    (integer/decimal adds commute)."""
-    phase1 = _hot_phase1(load_event_stream(spark, sf_dir)).agg(
-        F.count("event_id").alias("n_events"),
-        F.sum(F.col("value").cast("decimal(18,2)")).alias("total_dec"),
-    )
-    sink = f"hot_rollup_{uuid.uuid4().hex[:8]}"
-    q = (
-        phase1.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    drained = spark.table(sink)
-    return (
-        drained.groupBy(
-            F.col("w.start").alias("window_start"), "user_bucket"
-        )
-        .agg(
-            F.sum("n_events").cast("long").alias("n_events"),
-            F.sum("total_dec").alias("total_dec"),
-        )
-        .select(
-            "window_start",
-            "user_bucket",
-            "n_events",
-            F.col("total_dec").cast("double").alias("total_value"),
-        )
-    )
-
-
-def salted_state_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Diagnostic twin for tests: the DRAINED phase-1 state grain
-    (window, user_bucket, salt) so the salt scatter is assertable —
-    the hot bucket must hold >1 salt row per window."""
-    phase1 = _hot_phase1(load_event_stream(spark, sf_dir)).agg(
-        F.count(F.lit(1)).alias("n")
-    )
-    sink = f"hot_fanout_{uuid.uuid4().hex[:8]}"
-    q = (
-        phase1.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink).select(
-        F.col("w.start").alias("window_start"), "user_bucket", "salt", "n"
-    )
-
-
-def oracle_stream_hot_user_rollup() -> str:
-    """The salted two-phase streaming rollup must equal this UNsalted
-    batch aggregation — salting must be invisible in values."""
-    return f"""
-select
-    date_trunc('hour', ts) as window_start,
-    case when user_id % {HOT_USER_MOD} = 0 then 0 else user_id end
-        as user_bucket,
-    count(event_id) as n_events,
-    cast(sum(cast(value as decimal(18,2))) as double) as total_value
-from events
-group by 1, 2
-"""

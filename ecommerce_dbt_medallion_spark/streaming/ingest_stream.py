@@ -1,13 +1,17 @@
-"""Streaming lakehouse ingestion: readStream → foreachBatch → MERGE INTO
-the transaction-log table (lakehouse.py) — the streaming-upsert pattern
-(Delta/Iceberg `foreachBatch` + MERGE) that turns an append-only event
-feed into a keyed, transactionally-versioned table.
+"""Streaming lakehouse ingestion: readStream → foreachBatch → lakehouse
+commits (lakehouse.py), each micro-batch one or more versioned commits.
 
-Each micro-batch runs one MERGE: file-skipping keeps the rewrite
-proportional to the batch's key range, not the table size, and every
-batch is a new committed version (time-travelable, restart-safe via the
-streaming checkpoint — a replayed batch re-merges idempotently because
-MERGE is keyed).
+- ``stream_ingest_dedup`` / ``stream_dedup_ingest``: streaming corpus
+  dedup — batch verdicts MERGEd into a verdict table, novel signatures
+  appended to the stored corpus.
+- ``stream_cluster_maintain``: the same pipeline maintaining a stored
+  cluster-labels table incrementally.
+- ``stream_cdc_apply``: a change feed folded into a state table with
+  ``lakehouse.apply_changes``.
+
+Every batch is a new committed version (time-travelable, restart-safe
+via the streaming checkpoint; a replayed batch is absorbed because
+every commit is keyed or batch-tagged).
 """
 
 from __future__ import annotations
@@ -28,152 +32,12 @@ def _ckpt_dir(table: str) -> str:
     versa) (round-8 ADVICE).
 
     A pre-round-8 checkpoint living INSIDE the table migrates once:
-    orphaning it would silently replay the whole source, and the
-    append-only ingestion path (stream_append_partitioned) would
-    duplicate every historical row — the MERGE paths merely re-merge
-    idempotently."""
+    orphaning it would silently replay the whole source."""
     new = table.rstrip("/\\") + "_ckpt"
     legacy = os.path.join(table, "_streaming_ckpt")
     if os.path.isdir(legacy) and not os.path.exists(new):
         os.rename(legacy, new)
     return new
-
-
-def stream_upsert_lakehouse(
-    spark: SparkSession,
-    source_dir: str,
-    table: str,
-    key: str,
-    schema,
-    max_files_per_trigger: int = 1,
-) -> int:
-    """Drain ``source_dir`` (parquet files) into lakehouse ``table`` as
-    keyed MERGEs, one micro-batch per ``max_files_per_trigger`` files.
-    Returns the final table version."""
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
-    )
-
-    def _merge_batch(batch_df, batch_id: int) -> None:
-        if not batch_df.isEmpty():
-            lakehouse.merge_into(spark, table, batch_df, key)
-
-    q = (
-        stream.writeStream.foreachBatch(_merge_batch)
-        .option("checkpointLocation", _ckpt_dir(table))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    vs = lakehouse.versions(table)
-    return vs[-1] if vs else -1
-
-
-def stream_append_partitioned(
-    spark: SparkSession,
-    source_dir: str,
-    table: str,
-    key: str,
-    schema,
-    partition_by: str,
-    max_files_per_trigger: int = 1,
-) -> int:
-    """Append-only streaming ingestion into a PARTITION-CLUSTERED
-    lakehouse table: each micro-batch is one add-only commit whose files
-    are range-clustered on ``partition_by`` with per-file stats in the
-    log — the event-log shape (no keyed MERGE needed; dedup belongs to
-    the source), where the payoff is that every downstream
-    ``read_pruned`` on the partition column skips whole files across
-    ALL ingested batches. Returns the final version."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
-    )
-
-    def _append_batch(batch_df, batch_id: int) -> None:
-        if not batch_df.isEmpty():
-            lakehouse.append(
-                spark, table, batch_df, key=key, partition_by=partition_by
-            )
-
-    q = (
-        stream.writeStream.foreachBatch(_append_batch)
-        .option("checkpointLocation", _ckpt_dir(table))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    vs = lakehouse.versions(table)
-    return vs[-1] if vs else -1
-
-
-def stream_upsert_with_ivm(
-    spark: SparkSession,
-    source_dir: str,
-    fact_table: str,
-    mart_table: str,
-    key: str,
-    group_key: str,
-    agg_fn,
-    schema,
-    max_files_per_trigger: int = 1,
-) -> tuple[int, int]:
-    """Streaming MERGE + CONTINUOUS mart maintenance: every micro-batch
-    (1) MERGEs into the keyed fact table and (2) brings the aggregate
-    mart up to date via ``runner.incremental_mart_refresh`` — only the
-    batch's dirty groups recompute, discovered from the CDF of exactly
-    the versions that batch committed. The streaming materialized-view
-    shape: the mart lags the facts by at most one micro-batch, and per-
-    batch cost scales with batch churn, never table size.
-
-    Returns (final fact version, final mart version).
-    """
-    from ecommerce_dbt_medallion_spark.runner import incremental_mart_refresh
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
-    )
-    state = {"last_v": None}
-
-    def _batch(batch_df, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        lakehouse.merge_into(spark, fact_table, batch_df, key)
-        if state["last_v"] is None:
-            # first batch: full mart build, synced to the fact version
-            lakehouse.create_or_replace(
-                spark,
-                mart_table,
-                agg_fn(lakehouse.read(spark, fact_table)),
-                key=group_key,
-            )
-            state["last_v"] = lakehouse.versions(fact_table)[-1]
-        else:
-            state["last_v"] = incremental_mart_refresh(
-                spark,
-                fact_table,
-                mart_table,
-                group_key,
-                agg_fn,
-                from_version=state["last_v"],
-            )
-
-    q = (
-        stream.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", _ckpt_dir(fact_table))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    fv = lakehouse.versions(fact_table)
-    mv = lakehouse.versions(mart_table)
-    return (fv[-1] if fv else -1, mv[-1] if mv else -1)
 
 
 def stream_ingest_dedup(
@@ -195,7 +59,7 @@ def stream_ingest_dedup(
     verdicts are MERGEd into a lakehouse verdict table, and only novel
     documents' signatures join the corpus — the production LLM-data
     ingestion shape (round-7 glue between ``ops.dedup.dedup_incremental``
-    and the foreachBatch upsert pattern above).
+    and a foreachBatch MERGE).
 
     Per micro-batch:
       1. ``doc_signatures`` computes fingerprint + 64-perm md5 MinHash

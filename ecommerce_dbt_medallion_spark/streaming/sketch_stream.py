@@ -6,11 +6,11 @@ This module closes the loop on the streaming claim: each micro-batch's
 sketch state (ops/sketch.quantile_sketch_state — integer cells, exact
 cross-engine) APPENDs into a versioned lakehouse state table tagged
 with its batch id, and quantile extraction merges across batch tags
-with the same groupBy-sum that ``merge_sketch_states`` applies to
-shards. Because the algebra is associative and commutative, the
-streamed result is BIT-IDENTICAL to the batch computation over the
-union of the batches — which is exactly what the gate oracle asserts
-(the gated key shares ``oracle_quantile_sketch_mergeable``).
+with ``merge_sketch_states``, the same merge that combines shards.
+Because the algebra is associative and commutative, the streamed
+result is BIT-IDENTICAL to the batch computation over the union of the
+batches — which is exactly what the gate oracle asserts (the gated key
+shares ``oracle_quantile_sketch_mergeable``).
 
 Scale shape: per batch, the exchange is bounded by the state's cell
 count (≤ ~1300 cells × groups after map-side combine), never the batch
@@ -34,40 +34,18 @@ from pyspark.sql import functions as F
 from ecommerce_dbt_medallion_spark import lakehouse
 from ecommerce_dbt_medallion_spark.ops.sketch import (
     _qsk_quantiles_from_state,
+    merge_sketch_states,
     quantile_sketch_state,
 )
 from ecommerce_dbt_medallion_spark.streaming.ingest_stream import _ckpt_dir
 
 
-def stage_microbatch_files(src_dir: str, slices) -> None:
-    """Write each slice as ONE deterministic micro-batch file
+def stage_microbatch_files_by(src_dir: str, df, n: int) -> None:
+    """Stage ``df`` as ``n`` deterministic micro-batch files
     ``src_dir/b{k}.parquet`` with strictly increasing mtimes —
     FileStreamSource orders by (mtime, name), so this pins batch order.
-    ONE definition of the staging protocol (the three streaming sketch
-    gates had verbatim copies; round-9 review)."""
-    import shutil as _sh
-    import time as _time
-
-    base = _time.time()
-    for k, sl in enumerate(slices):
-        staging = os.path.join(src_dir, f"_stage{k}")
-        sl.coalesce(1).write.mode("overwrite").parquet(staging)
-        (part,) = [
-            f
-            for f in os.listdir(staging)
-            if f.endswith(".parquet") and not f.startswith(".")
-        ]
-        dst = os.path.join(src_dir, f"b{k}.parquet")
-        os.replace(os.path.join(staging, part), dst)
-        _sh.rmtree(staging, ignore_errors=True)
-        os.utime(dst, (base + k * 10, base + k * 10))
-
-
-def stage_microbatch_files_by(src_dir: str, df, n: int) -> None:
-    """One-job variant of :func:`stage_microbatch_files` (round 15):
     ``df`` carries an int ``__b`` batch column in [0, n); ONE
-    partitioned write replaces the n sequential coalesce(1) jobs (each
-    of which re-scanned the base input). ``repartition(n, "__b")`` puts
+    partitioned write stages every batch. ``repartition(n, "__b")`` puts
     every batch value in exactly one task, so each ``__b=k`` directory
     holds exactly one file; partition columns are not written into the
     data files, so the staged files carry exactly the data columns, as
@@ -214,10 +192,8 @@ def stream_state_quantiles(spark: SparkSession, state_table: str) -> DataFrame:
     """Quantiles from the STORED streaming state: merge across batch
     tags (the shard-merge algebra) then extract — state-only compute,
     never the fact."""
-    merged = (
-        lakehouse.read(spark, state_table)
-        .groupBy("grp", "bucket")
-        .agg(F.sum("cnt").alias("cnt"))
+    merged = merge_sketch_states(
+        lakehouse.read(spark, state_table).select("grp", "bucket", "cnt")
     )
     return _qsk_quantiles_from_state(merged, "grp").orderBy("grp", "q")
 

@@ -130,42 +130,6 @@ def test_stream_rollup_equals_batch(spark, duck):
     assert_frames_match(spdf, odf, "stream_event_rollup")
 
 
-def test_stream_hot_user_rollup_salt_scatter(spark):
-    """Round 14 (VERDICT r13 #6): the hot-key streaming rollup's
-    phase-1 state must SCATTER the planted hot user across salt keys —
-    the shape that stops one reducer holding ~25% of the stream's
-    state. Pins: (a) the hot bucket really is hot (≥15% of events);
-    (b) its state rows span >1 salt overall and >1 salt within at
-    least one window (per-window fan-out is what bounds the hot
-    reducer); (c) non-hot buckets stay near-singleton per window, so
-    the salt column scatters the hot key without inflating everyone
-    else's state by 16x."""
-    fan = strm.salted_state_fanout(spark, SF_SMOKE).toPandas()
-    hot = fan[fan.user_bucket == 0]
-    assert hot.n.sum() / fan.n.sum() >= 0.15
-    assert hot.salt.nunique() > 1
-    per_window = hot.groupby("window_start")["salt"].nunique()
-    assert per_window.max() > 1
-    cold = fan[fan.user_bucket != 0]
-    assert cold.groupby(["window_start", "user_bucket"])["salt"].nunique().mean() < 4
-
-
-def test_stream_hot_user_rollup_fold_consistency(spark):
-    """The two-phase fold must reproduce the phase-1 partial totals
-    exactly: per (window, user_bucket), summed salt partials equal the
-    published totals (integer counts, exact decimal money)."""
-    import pandas as pd
-
-    out = strm.stream_hot_user_rollup(spark, SF_SMOKE).toPandas()
-    fan = strm.salted_state_fanout(spark, SF_SMOKE).toPandas()
-    folded = (
-        fan.groupby(["window_start", "user_bucket"])["n"].sum().reset_index()
-    )
-    m = out.merge(folded, on=["window_start", "user_bucket"], how="outer")
-    assert not m.isna().any().any()
-    assert (m["n_events"] == m["n"]).all()
-
-
 def test_stream_hopping_rollup_invariants(spark):
     """Round-7 pin for the key that landed in the round-6 snapshot
     commit without its own test: 1-hour windows sliding every 15 min.
@@ -264,50 +228,6 @@ def test_multimodal_extract_deterministic(spark):
         assert 0 <= r["checksum"] < 997
     again = opmm.multimodal_extract(spark, SF_SMOKE).orderBy("doc_id").limit(5).collect()
     assert rows == again
-
-
-def test_decode_media_is_marked_stub():
-    with pytest.raises(NotImplementedError):
-        opmm.decode_media(b"\x89PNG", "png")
-
-
-def test_multimodal_extract_accepts_injected_decoder(spark):
-    """The production decoder seam (round 9): a codec callable injected
-    into multimodal_extract must run INSIDE the distributed Arrow batch
-    loop (the closure ships to the Python workers) and its features
-    fill e0..e7; the metadata columns stay byte-math. A decoder that
-    raises (the decode_media stub) must propagate out of the job."""
-    from pyspark.errors import PythonException
-
-    def fake_codec(blob: bytes, fmt: str):
-        # deterministic "pixel stats": depends on blob AND format so the
-        # test catches argument mix-ups
-        base = (len(fmt) % 8) / 100.0
-        return [base + blob[j] / 512.0 for j in range(8)]
-
-    rows = (
-        opmm.multimodal_extract(spark, SF_SMOKE, decoder=fake_codec)
-        .orderBy("doc_id")
-        .limit(5)
-        .collect()
-    )
-    assert len(rows) == 5
-    plain = (
-        opmm.multimodal_extract(spark, SF_SMOKE)
-        .orderBy("doc_id")
-        .limit(5)
-        .collect()
-    )
-    for r, p_ in zip(rows, plain):
-        assert r["doc_id"] == p_["doc_id"]
-        assert r["checksum"] == p_["checksum"]  # metadata path unchanged
-        blob_byte0 = round(p_["e0"] * 255)  # default e0 = byte0/255
-        want_e0 = (len(r["format"]) % 8) / 100.0 + blob_byte0 / 512.0
-        assert abs(r["e0"] - want_e0) < 1e-12
-    with pytest.raises(PythonException, match="NotImplementedError"):
-        opmm.multimodal_extract(
-            spark, SF_SMOKE, decoder=opmm.decode_media
-        ).limit(1).collect()
 
 
 def test_stream_sessionize_matches_batch_closed_sessions(spark):
@@ -761,59 +681,6 @@ def test_hll_merge_union_accuracy(spark):
             assert abs_err < 0.24 * r["exact_union"], (r["t1"], r["t2"], abs_err)
 
 
-def test_knn_planes_dial_bounds_occupancy(spark):
-    """Round-7 scale dial (SURVEY §6): knn_planes_for(n) must keep the
-    LSH family's expected bucket occupancy bounded as the corpus grows
-    a decade, where the FIXED default family's occupancy grows ~10×.
-    Synthetic centered random vectors (the near-uniform-bucket case the
-    occupancy math assumes); one table of the real md5 hyperplane
-    family."""
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    from ecommerce_dbt_medallion_spark.ops.similarity import (
-        DIM,
-        KNN_LSH_PLANES,
-        KNN_TARGET_OCCUPANCY,
-        _hp_bucket_col,
-        knn_planes_for,
-    )
-
-    assert knn_planes_for(0) == KNN_LSH_PLANES
-    assert knn_planes_for(1_000) == KNN_LSH_PLANES  # floor: oracle family
-    assert knn_planes_for(16_000) > KNN_LSH_PLANES
-    # ~3-4 planes per decade
-    assert 3 <= knn_planes_for(160_000) - knn_planes_for(16_000) <= 4
-
-    def mean_occupancy(n: int, planes: int) -> float:
-        rng = np.random.default_rng(5)
-        rows = [
-            (i, [float(x) for x in rng.uniform(-1, 1, DIM)]) for i in range(n)
-        ]
-        df = spark.createDataFrame(rows, "vec_id long, vec array<double>")
-        occ = (
-            df.select(_hp_bucket_col("knn", 0, planes).alias("bucket"))
-            .groupBy("bucket")
-            .agg(F.count(F.lit(1)).alias("c"))
-            .agg(F.avg("c").alias("m"))
-            .collect()[0]["m"]
-        )
-        return float(occ)
-
-    occ_small = mean_occupancy(1_000, knn_planes_for(1_000))
-    occ_large_dialed = mean_occupancy(16_000, knn_planes_for(16_000))
-    occ_large_fixed = mean_occupancy(16_000, KNN_LSH_PLANES)
-
-    # dialed occupancy stays within a small factor of the target at both
-    # sizes; the fixed family blows up ~n/2^8
-    assert occ_small <= 4 * KNN_TARGET_OCCUPANCY, occ_small
-    assert occ_large_dialed <= 4 * KNN_TARGET_OCCUPANCY, occ_large_dialed
-    assert occ_large_fixed >= 3 * occ_large_dialed, (
-        occ_large_fixed,
-        occ_large_dialed,
-    )
-
-
 def test_ann_recall_high_on_clustered_corpus(spark, tmp_path):
     """Evidence for ann_recall_report's documented verdict: the ~0.10–
     0.16 recall@5 on the driver corpus is a property of NEAR-RANDOM
@@ -855,9 +722,7 @@ def test_substring_winnow_dial_math():
     must keep expected selected volume inside the budget, grow monotonically
     with corpus size, and floor at the gated stride-1 behavior."""
     from ecommerce_dbt_medallion_spark.ops.substring import (
-        SUB_L,
         SUBSTRING_WINNOW_MAX,
-        substring_guaranteed_span,
         substring_winnow_for,
     )
 
@@ -871,7 +736,6 @@ def test_substring_winnow_dial_math():
             2 * total / (w + 1) <= 500_000_000_000 or w == SUBSTRING_WINNOW_MAX
         ), (total, w)
     assert substring_winnow_for(10**14) >= 10 * substring_winnow_for(10**12)
-    assert substring_guaranteed_span(1) == SUB_L  # w=1: every window kept
 
 
 def test_substring_sampled_equals_exact_at_w1(spark):
@@ -896,7 +760,7 @@ def test_substring_sampled_equals_exact_at_w1(spark):
 
 def test_substring_sampled_guaranteed_span_and_occupancy(spark, tmp_path_factory):
     """The winnowing guarantee, planted: a span of exactly
-    substring_guaranteed_span(w) chars duplicated across two documents
+    SUB_L + w - 1 chars (the guaranteed span) duplicated across two documents
     at DIFFERENT alignments must be caught at winnow width w (positional
     stride sampling would miss it — that's why the dial is content-
     defined), and the selected-fingerprint volume must shrink ~(w+1)/2
@@ -904,8 +768,8 @@ def test_substring_sampled_guaranteed_span_and_occupancy(spark, tmp_path_factory
     import random
 
     from ecommerce_dbt_medallion_spark.ops.substring import (
+        SUB_L,
         exact_substring_dedup_sampled,
-        substring_guaranteed_span,
     )
 
     w = 8
@@ -915,7 +779,7 @@ def test_substring_sampled_guaranteed_span_and_occupancy(spark, tmp_path_factory
     def rand_text(n):
         return "".join(rng.choice(alpha) for _ in range(n))
 
-    span = rand_text(substring_guaranteed_span(w))
+    span = rand_text(SUB_L + w - 1)
     docs = [
         # different prefix lengths → different span alignments
         (0, rand_text(201) + span + rand_text(180)),
@@ -984,72 +848,6 @@ def test_quantile_sketch_known_answer(spark, tmp_path_factory):
     # lower bound 100 exactly
     assert got[("ALL", 0.5)]["est_cents"] == 100
     assert got[("ALL", 0.99)]["n"] == 200
-
-
-def test_substring_modp_regime(spark, tmp_path_factory):
-    """Round-8 review follow-up: above SUBSTRING_WINNOW_COMPUTE_MAX the
-    dial switches to mod-p selection (O(1)/window vs winnowing's
-    O(w)/window map-side scan). p=1 must equal the exact op's distinct
-    dup-hash counts; at p>1 a planted long span (catch probability
-    ~1-e^-W/p ≈ 1) is found at different alignments and density lands
-    near 1/p."""
-    import random
-
-    from ecommerce_dbt_medallion_spark.ops.substring import (
-        SUBSTRING_WINNOW_COMPUTE_MAX,
-        exact_substring_dedup,
-        exact_substring_dedup_modp,
-        substring_catch_probability,
-        substring_dial_for,
-    )
-
-    # dial regimes
-    assert substring_dial_for(10**9)[0] == "winnow"
-    method, p_big = substring_dial_for(10**14)
-    assert method == "modp" and p_big >= 2
-    # the winnow regime never exceeds the compute ceiling
-    assert substring_dial_for(
-        SUBSTRING_WINNOW_COMPUTE_MAX * 500_000_000_000
-    )[0] == "modp"
-    assert 0.99 < substring_catch_probability(4, 40 + 4 * 20) <= 1.0
-
-    # p=1 equivalence with the exact op (distinct-hash grain)
-    exact = {
-        r["doc_id"]: r["dup_hashes"]
-        for r in exact_substring_dedup(spark, SF_SMOKE).collect()
-    }
-    at1 = {
-        r["doc_id"]: r["dup_sel_fps"]
-        for r in exact_substring_dedup_modp(spark, SF_SMOKE, p=1).collect()
-    }
-    assert at1 == exact
-
-    # planted long span at different alignments, p=4
-    rng = random.Random(7)
-    alpha = "abcdefghijklmnopqrstuvwxyz0123456789 "
-
-    def rand_text(n):
-        return "".join(rng.choice(alpha) for _ in range(n))
-
-    span = rand_text(40 + 4 * 30)  # W=121 windows, P(miss) = 0.75^121 ~ 1e-15
-    docs = [
-        (0, rand_text(173) + span + rand_text(160)),
-        (1, rand_text(218) + span + rand_text(140)),
-    ] + [(i, rand_text(500)) for i in range(2, 8)]
-    d = tmp_path_factory.mktemp("modp_span")
-    spark.createDataFrame(docs, "doc_id long, text string").coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(str(d / "documents.parquet"))
-    rows = {
-        r["doc_id"]: r
-        for r in exact_substring_dedup_modp(spark, str(d), p=4).collect()
-    }
-    assert rows[0]["dup_sel_fps"] >= 1 and rows[1]["dup_sel_fps"] >= 1
-    for i in range(2, 8):
-        assert rows[i]["dup_sel_fps"] == 0
-    dense = sum(r["n_windows"] for r in rows.values())
-    sel = sum(r["sel_fps"] for r in rows.values())
-    assert 0.4 * dense / 4 <= sel <= 2.0 * dense / 4, (sel, dense)
 
 
 def test_weighted_reservoir_merge_equals_global(spark):

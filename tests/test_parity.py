@@ -42,74 +42,7 @@ def test_parity_driver_sf(spark, duck, key):
     assert_frames_match(spdf, odf, key)
 
 
-# --------------------------------------------------------------------------
-# DRIVER-WINDOW QUEUE: ops implemented + oracled in the CURRENT round but
-# NOT yet registered in api.queries() — the 202-key/50-slot rotation
-# carries a standing 2-key staleness debt per cycle (api.py's round-14
-# rotation note), so new keys wait here with the exact driver parity
-# discipline until a window slot is justified. QUEUED_SINCE_ROUND pins
-# the round the current queue was minted in; the registration-reminder
-# test flips once the window moves past it. The round-13 queue
-# (pack_manifest_bfd, doc_quality_calibration) was registered in round
-# 14 — test_prior_queue_registered pins that it stays registered.
-
-QUEUED_SINCE_ROUND = 14
-
-
-def _queued_keys():
-    from ecommerce_dbt_medallion_spark.ops import sampling
-    from ecommerce_dbt_medallion_spark.streaming import events_stream
-
-    return {
-        "curriculum_export_order": (
-            sampling.curriculum_export_order,
-            sampling.oracle_curriculum_export_order(),
-        ),
-        "stream_hot_user_rollup": (
-            events_stream.stream_hot_user_rollup,
-            events_stream.oracle_stream_hot_user_rollup(),
-        ),
-    }
-
-
-def test_queued_keys_not_yet_registered():
-    """The rotation-capacity invariant: the current queue must NOT be
-    in queries() while the window round is still QUEUED_SINCE_ROUND (a
-    registration would force them into the window as never-certified
-    keys, deepening the staleness debt). Flips to a registration
-    reminder once the window moves to a later round."""
-    queued = set(_queued_keys())
-    if api.DRIVER_WINDOW_ROUND <= QUEUED_SINCE_ROUND:
-        assert not queued & set(QUERIES), (
-            f"queued keys registered early: {queued & set(QUERIES)}"
-        )
-    else:
-        assert queued <= set(QUERIES), (
-            f"round-{QUEUED_SINCE_ROUND + 1}+ window but queue never "
-            f"registered: {queued - set(QUERIES)}"
-        )
-
-
 def test_prior_queue_registered():
     """The round-13 queue joined queries() in round 14 (VERDICT r13 #1)
     and must never silently drop out."""
     assert {"pack_manifest_bfd", "doc_quality_calibration"} <= set(QUERIES)
-
-
-@pytest.mark.parametrize("key", sorted(_queued_keys()))
-def test_queued_parity_smoke_sf(spark, duck, key):
-    fn, osql = _queued_keys()[key]
-    register_views(duck, SF_SMOKE)
-    assert_frames_match(
-        fn(spark, SF_SMOKE).toPandas(), duck.sql(osql).df(), key
-    )
-
-
-@pytest.mark.slow
-@pytest.mark.parametrize("key", sorted(_queued_keys()))
-def test_queued_parity_driver_sf(spark, duck, key):
-    fn, osql = _queued_keys()[key]
-    register_views(duck, SF_CORRECTNESS)
-    assert_frames_match(
-        fn(spark, SF_CORRECTNESS).toPandas(), duck.sql(osql).df(), key
-    )

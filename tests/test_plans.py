@@ -547,127 +547,32 @@ def test_part_supplier_diversity_anti_join_and_pair_collapse(spark):
     assert "CartesianProduct" not in plan
 
 
-def test_event_marts_prune_partitions_over_materialized_events(spark, tmp_path):
-    """Events partition-pruning parity with orders (round-9, VERDICT r8
-    #6): over runner.materialize_events_partitioned's hive layout, the
-    date-bounded event marts must carry their [since, until) bound as
-    PartitionFilters on the events scan — directory pruning, not a
-    post-scan filter — and return exactly the rows the flat-parquet
-    path returns for the same bound."""
-    import os
-    import shutil
-
+def test_event_marts_date_bound_is_session_tz_independent(spark):
+    """The date-bounded event marts bound on the UTC day
+    (event_utc_date), so a [since, until) run returns exactly the
+    unbounded run's rows for those days, and the same rows in a non-UTC
+    session (a reader-TZ to_date would disagree at day boundaries)."""
     from ecommerce_dbt_medallion_spark.models import events as ev
-    from ecommerce_dbt_medallion_spark.runner import materialize_events_partitioned
 
-    wh = str(tmp_path / "events_wh")
-    os.makedirs(wh)
-    materialize_events_partitioned(spark, SF_SMOKE, wh)
-    # the marts only read events, so the warehouse dir IS a valid sf_dir
     since, until = "2024-01-05", "2024-01-08"
-
-    for mart in (ev.event_daily_stats, ev.hypertable_rollup):
-        plan = _formatted(mart(spark, wh, since=since, until=until))
-        assert "PartitionFilters" in plan and "event_date" in plan.split(
-            "PartitionFilters", 1
-        )[1].split("]", 1)[0], (
-            f"{mart.__name__}: date bound did not reach PartitionFilters:\n"
-            + plan[:2000]
-        )
-        got = sorted(map(tuple, mart(spark, wh, since=since, until=until).collect()))
-        want = sorted(
-            map(tuple, mart(spark, SF_SMOKE, since=since, until=until).collect())
-        )
-        assert got == want, f"{mart.__name__}: partitioned != flat rows"
-
-    # unbounded calls stay full-scan-correct over both layouts
-    full_p = ev.event_daily_stats(spark, wh).count()
-    full_f = ev.event_daily_stats(spark, SF_SMOKE).count()
-    assert full_p == full_f
-
-    # refresh-in-place: the natural deployment keeps the flat source
-    # and the partitioned layout in the SAME dir — re-materializing
-    # must not self-read the path it overwrites (round-9 review)
-    shutil.copy(
-        os.path.join(SF_SMOKE, "events.parquet"),
-        os.path.join(wh, "events.parquet"),
+    bounded = sorted(
+        map(tuple, ev.event_daily_stats(spark, SF_SMOKE, since=since, until=until).collect())
     )
-    materialize_events_partitioned(spark, wh, wh)
-    materialize_events_partitioned(spark, wh, wh)  # the refresh
-    assert ev.event_daily_stats(spark, wh).count() == full_f
-
-    # session-TZ independence: the partitioned bound and the flat
-    # fallback must select the SAME rows in a non-UTC session (the
-    # partition column is a frozen UTC day; a reader-TZ to_date would
-    # disagree at day boundaries — round-9 review)
+    assert bounded
+    assert bounded == sorted(
+        tuple(r)
+        for r in ev.event_daily_stats(spark, SF_SMOKE).collect()
+        if since <= str(r["event_date"]) < until
+    )
     tz = spark.conf.get("spark.sql.session.timeZone")
     try:
         spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
         got = sorted(
-            map(
-                tuple,
-                ev.event_daily_stats(
-                    spark, wh, since=since, until=until
-                ).collect(),
-            )
+            map(tuple, ev.event_daily_stats(spark, SF_SMOKE, since=since, until=until).collect())
         )
-        want = sorted(
-            map(
-                tuple,
-                ev.event_daily_stats(
-                    spark, SF_SMOKE, since=since, until=until
-                ).collect(),
-            )
-        )
-        assert got == want, "partitioned != flat rows in a non-UTC session"
+        assert got == bounded, "bounded rows depend on the session timezone"
     finally:
         spark.conf.set("spark.sql.session.timeZone", tz)
-    shutil.rmtree(wh, ignore_errors=True)
-
-
-def test_events_partitioned_staleness_guard(spark, tmp_path):
-    """Round-9 review: load_events_table silently preferred an
-    events_partitioned layout over the flat events.parquet with no
-    freshness check — refresh the flat source without re-running the
-    materializer and every event mart reads stale rows. The
-    materializer now records the flat source's fingerprint; on
-    mismatch the loader must WARN and serve the flat source, and a
-    re-materialization must restore the pruned path."""
-    import os
-    import shutil
-
-    from ecommerce_dbt_medallion_spark.runner import materialize_events_partitioned
-    from ecommerce_dbt_medallion_spark.sources.registry import load_events_table
-
-    wh = str(tmp_path / "stale_wh")
-    os.makedirs(wh)
-    flat = os.path.join(wh, "events.parquet")
-    shutil.copy(os.path.join(SF_SMOKE, "events.parquet"), flat)
-    materialize_events_partitioned(spark, wh, wh)
-    fresh = load_events_table(spark, wh)
-    assert "event_date" in fresh.columns  # partitioned path preferred
-    n_full = fresh.count()
-
-    # refresh the flat source IN PLACE with a deterministic subset —
-    # a different fingerprint AND a different row count
-    sub = spark.read.parquet(flat).where("user_id % 2 = 0")
-    n_sub = sub.count()
-    assert 0 < n_sub < n_full
-    staged = sub.localCheckpoint(eager=True)  # sever the self-read
-    os.remove(flat)
-    staged.write.parquet(flat)
-
-    with pytest.warns(UserWarning, match="stale"):
-        got = load_events_table(spark, wh)
-    assert "event_date" not in got.columns, "stale partitioned layout won"
-    assert got.count() == n_sub
-
-    # re-materializing refreshes the fingerprint: preference restored
-    materialize_events_partitioned(spark, wh, wh)
-    got = load_events_table(spark, wh)
-    assert "event_date" in got.columns
-    assert got.count() == n_sub
-    shutil.rmtree(wh, ignore_errors=True)
 
 
 def test_round9_marts_plan_shapes(spark):

@@ -2,8 +2,10 @@
 
 from __future__ import annotations
 
+import json
 import os
 import threading
+import urllib.request
 import uuid
 
 import pytest
@@ -73,7 +75,9 @@ def test_run_failure_skips_dependents_and_joins_workers(
 def test_run_jobs_inherit_callers_job_group(spark, tmp_path):
     """Every Spark job the build submits runs in the caller's job group,
     so the model workers inherit the caller's local properties. The
-    build's jobs are the job ids between two probe jobs."""
+    build's jobs are the job ids between two probe jobs. Each job's
+    description, as the UI REST API reports it, names the model that
+    ran it, and every model ran at least one job."""
     sc = spark.sparkContext
     tracker = sc.statusTracker()
 
@@ -99,6 +103,12 @@ def test_run_jobs_inherit_callers_job_group(spark, tmp_path):
     build_jobs = set(range(first + 1, last))
     assert build_jobs
     assert set(tracker.getJobIdsForGroup(group)) == build_jobs
+
+    port = sc.uiWebUrl.rsplit(":", 1)[1]
+    url = f"http://localhost:{port}/api/v1/applications/{sc.applicationId}/jobs"
+    with urllib.request.urlopen(url, timeout=30) as resp:
+        described = {j["jobId"]: j.get("description") for j in json.load(resp)}
+    assert {described[j] for j in build_jobs} == {name for _, name in _TABLES}
 
 
 def test_incremental_merge_converges_to_full(spark, tmp_path):
@@ -208,28 +218,6 @@ def test_gold_customer_summary_bucketed_parity_and_plan(spark):
         assert "Exchange" not in executed, executed[:1200]
     finally:
         spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-
-
-def test_store_failures_writes_partitioned_audit(spark, tmp_path):
-    """dbt `test --store-failures` parity: the audit table lands in the
-    warehouse partitioned by model_name and reads back equal to the
-    in-memory dq_failed_rows result."""
-    from ecommerce_dbt_medallion_spark.quality import checks as dq
-
-    wh = str(tmp_path / "wh_dq")
-    path = dq.store_failures(spark, SF_SMOKE, wh)
-    assert path.endswith("dq_failures")
-
-    stored = spark.read.parquet(path)
-    live = dq.dq_failed_rows(spark, SF_SMOKE)
-    assert sorted(stored.columns) == sorted(live.columns)
-    assert stored.count() == live.count() > 0
-    # partitionBy(model_name) → hive-style subdirectories per model
-    import os
-
-    parts = [d for d in os.listdir(path) if d.startswith("model_name=")]
-    stored_models = {r[0] for r in stored.select("model_name").distinct().collect()}
-    assert len(parts) == len(stored_models) > 0
 
 
 def test_incremental_mart_refresh_matches_full_rebuild(spark, tmp_path):

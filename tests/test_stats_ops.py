@@ -705,15 +705,14 @@ def test_lm_decile_bounds_within_one_bucket_of_exact(spark):
     bucket the walk interpolates in)."""
     from ecommerce_dbt_medallion_spark.ops import lm as oplm
 
-    scores = sorted(
-        r.lm_score for r in oplm.doc_lm_score(spark, SF_SMOKE).collect()
-    )
+    scored = oplm.doc_lm_score(spark, SF_SMOKE).localCheckpoint(eager=True)
+    scores = sorted(r.lm_score for r in scored.collect())
     n = len(scores)
     lo, hi = scores[0], scores[-1]
     width = (hi - lo) / oplm.LMMIX_BUCKETS
     bounds = {
         round(r.decile_p, 3): r.est_bound
-        for r in oplm.lm_decile_bounds(spark, SF_SMOKE).collect()
+        for r in oplm._decile_bounds_from(scored).collect()
     }
     assert len(bounds) == len(oplm.LMMIX_DECILES)
     for p in oplm.LMMIX_DECILES:

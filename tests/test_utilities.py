@@ -1,52 +1,31 @@
-"""SQL surface, lineage, freshness, and skew-utility tests."""
+"""Lineage, freshness, and skew-utility tests."""
 
 from __future__ import annotations
 
-import pytest
-
 from pyspark.sql import functions as F
 
-from ecommerce_dbt_medallion_spark import sql_views
 from ecommerce_dbt_medallion_spark.models import silver
 from ecommerce_dbt_medallion_spark.ops.skew import salted_join
 from ecommerce_dbt_medallion_spark.quality.freshness import source_freshness
 from tests.conftest import SF_SMOKE
 
 
-def test_sql_surface(spark):
-    sql_views.register_views(spark, SF_SMOKE)
-    row = spark.sql(
-        """
-        select count(*) as n, sum(lifetime_value) as ltv
-        from gold_customer_summary
-        where customer_segment = 'High Value'
-        """
-    ).first()
-    assert row["n"] > 0 and row["ltv"] > 0
-    joined = spark.sql(
-        """
-        select s.order_status, count(*) as n
-        from silver_orders s join silver_customers c using (customer_key)
-        group by 1 order by 1
-        """
-    ).collect()
-    assert {r["order_status"] for r in joined} <= {
-        "completed", "pending", "cancelled", "unknown"
-    }
+def test_lineage_is_acyclic_and_complete():
+    """runner._MODELS is the one declaration of the model DAG: every
+    upstream is itself a declared model, and the graph has no cycle."""
+    from ecommerce_dbt_medallion_spark.runner import _MODELS
 
-
-def test_lineage_is_acyclic_and_complete(spark):
-    dag = sql_views.lineage()
-    # every dep that is a model must itself be declared
+    dag = {m.name: m.upstream for m in _MODELS}
+    assert len(dag) == len(_MODELS)
     for deps in dag.values():
         for d in deps:
-            assert d in dag or d in ("customer", "orders", "lineitem")
+            assert d in dag
     # topological order exists (no cycles)
     seen: set[str] = set()
 
     def visit(n: str, path: tuple[str, ...]) -> None:
         assert n not in path, f"cycle: {path + (n,)}"
-        if n in seen or n not in dag:
+        if n in seen:
             return
         seen.add(n)
         for d in dag[n]:
@@ -116,33 +95,6 @@ def test_salted_join_deterministic_salt_col(spark):
     out = salted_join(probe, build, "k", probe_salt_col=F.col("id"))
     assert out.count() == 10_000
     assert out.agg(F.sum(F.col("v") * F.col("w"))).first()[0] == 2 * sum(range(10_000))
-
-
-def test_load_table_fmt_roundtrip(spark, tmp_path):
-    """nation written as csv/json/orc reads back value-identical to the
-    parquet original under load_table_fmt with the explicit schema."""
-    from ecommerce_dbt_medallion_spark.sources.registry import load_table, load_table_fmt
-
-    ref = load_table(spark, SF_SMOKE, "nation")
-    expected = sorted(map(tuple, ref.collect()))
-    for fmt in ("csv", "json", "orc"):
-        p = str(tmp_path / f"nation_{fmt}")
-        w = ref.write.mode("overwrite")
-        if fmt == "csv":
-            w.option("header", True).csv(p)
-        elif fmt == "json":
-            w.json(p)
-        else:
-            w.orc(p)
-        back = load_table_fmt(spark, p, fmt, schema=ref.schema)
-        assert sorted(map(tuple, back.collect())) == expected, fmt
-
-
-def test_load_table_fmt_requires_schema_for_text(spark):
-    from ecommerce_dbt_medallion_spark.sources.registry import load_table_fmt
-
-    with pytest.raises(ValueError):
-        load_table_fmt(spark, "/tmp/x", "csv")
 
 
 def test_dq_timestamp_rendering_parity(spark, duck):
