@@ -6,10 +6,10 @@ pattern for decode / feature-extract / resize at 100 TB: binary columns
 stay out of JVM row buffers until the Python worker, batches stream
 through Arrow, and the extraction parallelizes per input partition.
 
-No codec decode runs here (image/audio libraries are not available in
-this environment): ``multimodal_extract`` uses a deterministic
-byte-level feature extractor, so the plumbing (schema, batching, UDF
-signature, partitioning) is real and tested end-to-end.
+No codec decode runs here: ``multimodal_extract`` uses a deterministic
+byte-level feature extractor the DuckDB oracle reproduces, so the
+plumbing (schema, batching, UDF signature, partitioning) is real and
+tested end-to-end.
 """
 
 from __future__ import annotations

@@ -164,15 +164,22 @@ def _docs_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-def _selected_span_stats(docs: DataFrame, sel) -> DataFrame:
-    """Shared downstream of BOTH scale dials (winnow and mod-p): build
-    the md5 window-hash array ``__hs``, apply the content-defined
-    selection ``sel`` (the ONLY thing the dials differ in), explode
-    WITHOUT the text column, one (doc_id, h) shuffle, tiny h-grain
-    reduce with the df>=2 prefilter, per-doc rollup.
+def exact_substring_dedup_sampled(
+    spark: SparkSession, sf_dir: str, winnow_w: int | None = None
+) -> DataFrame:
+    """The 100 TB path of #35c: duplicated-span stats over WINNOWED
+    window fingerprints instead of every stride-1 window.
 
-    ``sel`` is a Column over ``__hs`` producing the selected-hash array
-    (already distinct)."""
+    Per document: of its winnow-selected distinct window fingerprints,
+    how many also occur in at least one other document. At
+    ``winnow_w=1`` every window is selected and ``dup_sel_fps`` equals
+    the exact op's ``dup_hashes`` (test-pinned equivalence); larger w
+    divides the exchanged volume by ~(w+1)/2 and raises the guaranteed
+    minimum catchable span to SUB_L + w - 1 chars."""
+    docs = _docs_windows(spark, sf_dir)
+    if winnow_w is None:
+        total = docs.agg(F.sum("n_windows").alias("t")).collect()[0]["t"] or 0
+        winnow_w = substring_winnow_for(int(total))
     # materialize the hash array as a real column: HOF lambdas are not
     # CSE'd, so inlining it into the selection transform would rebuild
     # the whole md5 array per window (the doc_winnowing lesson)
@@ -182,6 +189,15 @@ def _selected_span_stats(docs: DataFrame, sel) -> DataFrame:
             F.sequence(F.lit(1), F.col("n_windows")),
             lambda i: F.md5(F.col("text").substr(i, F.lit(SUB_L))),
         ),
+    )
+    sel = F.array_distinct(
+        F.when(
+            F.size("__hs") >= winnow_w,
+            F.transform(
+                F.sequence(F.lit(0), F.size("__hs") - winnow_w),
+                lambda j: F.array_min(F.slice(F.col("__hs"), j + 1, winnow_w)),
+            ),
+        ).otherwise(F.array_distinct(F.col("__hs")))
     )
     per = d.select("doc_id", F.explode(sel).alias("h"))  # distinct by build
     hd = per.groupBy("h").agg(F.count(F.lit(1)).alias("df"))
@@ -208,34 +224,6 @@ def _selected_span_stats(docs: DataFrame, sel) -> DataFrame:
         )
         .orderBy("doc_id")
     )
-
-
-def exact_substring_dedup_sampled(
-    spark: SparkSession, sf_dir: str, winnow_w: int | None = None
-) -> DataFrame:
-    """The 100 TB path of #35c: duplicated-span stats over WINNOWED
-    window fingerprints instead of every stride-1 window.
-
-    Per document: of its winnow-selected distinct window fingerprints,
-    how many also occur in at least one other document. At
-    ``winnow_w=1`` every window is selected and ``dup_sel_fps`` equals
-    the exact op's ``dup_hashes`` (test-pinned equivalence); larger w
-    divides the exchanged volume by ~(w+1)/2 and raises the guaranteed
-    minimum catchable span to SUB_L + w - 1 chars."""
-    docs = _docs_windows(spark, sf_dir)
-    if winnow_w is None:
-        total = docs.agg(F.sum("n_windows").alias("t")).collect()[0]["t"] or 0
-        winnow_w = substring_winnow_for(int(total))
-    sel = F.array_distinct(
-        F.when(
-            F.size("__hs") >= winnow_w,
-            F.transform(
-                F.sequence(F.lit(0), F.size("__hs") - winnow_w),
-                lambda j: F.array_min(F.slice(F.col("__hs"), j + 1, winnow_w)),
-            ),
-        ).otherwise(F.array_distinct(F.col("__hs")))
-    )
-    return _selected_span_stats(docs, sel)
 
 
 # Fixed winnow width for the GATED sampled key: the computed dial at

@@ -1,6 +1,6 @@
 """Every top-level package definition is reached from the product.
 
-The product is the medallion DAG (``runner.run``) plus the driver contract
+The product is the medallion DAG (``runner.run``) plus the query catalogue
 (``__spark_entry__.py``: ``entry``/``queries``/``oracle_sql``), and what the
 benchmarks drive (``bench*.py``, ``perfbench/``). A static reachability scan
 starts from those roots and follows every name, attribute, import and
