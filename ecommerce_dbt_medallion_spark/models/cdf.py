@@ -17,33 +17,12 @@ entered/left the live set — both proportional to churn, not table size
 
 from __future__ import annotations
 
-import os
-import re
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ecommerce_dbt_medallion_spark import lakehouse
 from ecommerce_dbt_medallion_spark.models.silver import silver_orders
-
-# repo-anchored (works from any caller cwd), under gitignored
-# spark-warehouse/
-_GATE_ROOT = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    os.pardir,
-    "spark-warehouse",
-)
-
-
-def _gate_path(sf_dir: str, prefix: str) -> str:
-    """Fresh per-SF scratch table path under the gitignored warehouse
-    root — one definition for every gate builder (the seven inline
-    copies were a silent-drift risk, round-7 review)."""
-    tag = re.sub(r"[^A-Za-z0-9_]", "_", os.path.basename(os.path.normpath(sf_dir)))
-    path = os.path.normpath(os.path.join(_GATE_ROOT, f"{prefix}_{tag}"))
-    shutil.rmtree(path, ignore_errors=True)
-    return path
+from ecommerce_dbt_medallion_spark.streaming.drain import gate_scratch
 
 
 def _facts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -65,7 +44,7 @@ def lakehouse_cdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle encodes exactly this, making the classification itself the
     thing under test.
     """
-    table = _gate_path(sf_dir, "cdf_gate")
+    (table,) = gate_scratch(sf_dir, "cdf_gate")
 
     facts = _facts(spark, sf_dir)
     base = facts.where(F.col("order_id") % 3 != 0)
@@ -102,7 +81,7 @@ def scd2_snapshot_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ecommerce_dbt_medallion_spark.runner import snapshot
     from ecommerce_dbt_medallion_spark.sources.registry import load_table
 
-    path = _gate_path(sf_dir, "scd2_gate")
+    (path,) = gate_scratch(sf_dir, "scd2_gate")
 
     c = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").cast("long").alias("customer_id"),
@@ -198,8 +177,7 @@ def ivm_mart_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ecommerce_dbt_medallion_spark.runner import incremental_mart_refresh
 
-    fact = _gate_path(sf_dir, "ivm_fact")
-    mart = _gate_path(sf_dir, "ivm_mart")
+    fact, mart = gate_scratch(sf_dir, "ivm_fact", "ivm_mart")
 
     facts = silver_orders(spark, sf_dir).select(
         "order_id",
@@ -262,7 +240,7 @@ def wap_audited_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle states. A leak of unpublished/discarded data into reads, a
     half-applied publish, or audit-on-wrong-bytes all hash-mismatch.
     """
-    table = _gate_path(sf_dir, "wap_gate")
+    (table,) = gate_scratch(sf_dir, "wap_gate")
 
     facts = silver_orders(spark, sf_dir).select(
         "order_id",
@@ -311,7 +289,7 @@ def lakehouse_zorder_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import math
 
-    table = _gate_path(sf_dir, "zorder_gate")
+    (table,) = gate_scratch(sf_dir, "zorder_gate")
 
     facts = silver_orders(spark, sf_dir).select(
         "order_id",
@@ -370,7 +348,7 @@ def lakehouse_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     footer (the bug class the round-7 read_pruned fix closed) would
     drop or mistype the column and hash-mismatch.
     """
-    table = _gate_path(sf_dir, "evo_gate")
+    (table,) = gate_scratch(sf_dir, "evo_gate")
 
     facts = silver_orders(spark, sf_dir).select(
         "order_id",
@@ -418,7 +396,7 @@ def lakehouse_restore_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     restore that leaks v2's deletions (or misses v1's merge) hash-
     mismatches.
     """
-    table = _gate_path(sf_dir, "restore_gate")
+    (table,) = gate_scratch(sf_dir, "restore_gate")
 
     facts = _facts(spark, sf_dir)
     base = facts.where(F.col("order_id") % 4 != 0)
@@ -471,8 +449,7 @@ def lakehouse_clone_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import os as _os
 
-    src = _gate_path(sf_dir, "clone_src")
-    branch = _gate_path(sf_dir, "clone_branch")
+    src, branch = gate_scratch(sf_dir, "clone_src", "clone_branch")
 
     facts = _facts(spark, sf_dir)
     base = facts.where(F.col("order_id") % 4 != 0)
@@ -555,7 +532,7 @@ def lakehouse_rename_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet columns by logical name would null out the renamed column
     on every file and hash-mismatch the oracle.
     """
-    table = _gate_path(sf_dir, "rename_gate")
+    (table,) = gate_scratch(sf_dir, "rename_gate")
 
     facts = silver_orders(spark, sf_dir).select(
         "order_id",
@@ -620,7 +597,7 @@ def lakehouse_optimize_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(1)-result discipline as the substring dials); everything row-
     shaped stays distributed.
     """
-    table = _gate_path(sf_dir, "optimize_gate")
+    (table,) = gate_scratch(sf_dir, "optimize_gate")
 
     facts = _facts(spark, sf_dir)
     mid = facts.agg((F.max("order_id") / 2).cast("long")).first()[0]
@@ -695,8 +672,7 @@ def lakehouse_snapshot_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ecommerce_dbt_medallion_spark.models.analytics import _discounted_rev
     from ecommerce_dbt_medallion_spark.sources.registry import load_table
 
-    a_path = _gate_path(sf_dir, "cut_orders")
-    b_path = _gate_path(sf_dir, "cut_revenue")
+    a_path, b_path = gate_scratch(sf_dir, "cut_orders", "cut_revenue")
 
     facts = _facts(spark, sf_dir)
     lakehouse.create_or_replace(
@@ -804,7 +780,7 @@ def lakehouse_deferred_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     a tombstoned key (lakehouse.delete_where's candidate discovery) —
     churn-proportional, never O(table).
     """
-    table = _gate_path(sf_dir, "defer_del_gate")
+    (table,) = gate_scratch(sf_dir, "defer_del_gate")
 
     facts = _facts(spark, sf_dir)
     base = facts.where(F.col("order_id") % 4 != 0)
@@ -904,7 +880,7 @@ def lakehouse_vacuum_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     build the keep-set + file unlinks) — O(versions × files) names,
     never a data scan; the gated reads are ordinary pruned scans.
     """
-    table = _gate_path(sf_dir, "vacuum_gate")
+    (table,) = gate_scratch(sf_dir, "vacuum_gate")
 
     facts = _facts(spark, sf_dir)
     lakehouse.create_or_replace(spark, table, facts, key="order_id")

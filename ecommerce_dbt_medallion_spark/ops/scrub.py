@@ -378,10 +378,11 @@ def decontaminate_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     keys) but keeps re-runs idempotent.
     """
     from ecommerce_dbt_medallion_spark import lakehouse
-    from ecommerce_dbt_medallion_spark.models.cdf import _gate_path
+    from ecommerce_dbt_medallion_spark.streaming.drain import gate_scratch
 
-    idx_table = _gate_path(sf_dir, "decon_index")
-    verdict_table = _gate_path(sf_dir, "decon_verdicts")
+    idx_table, verdict_table = gate_scratch(
+        sf_dir, "decon_index", "decon_verdicts"
+    )
 
     grams = _word_grams(DECON_N)
     # conditional single-split fan-out (VERDICT r14 #3), same as the

@@ -43,16 +43,11 @@ the code table via file skipping. Nothing re-reads the corpus.
 
 from __future__ import annotations
 
-import os
-import re
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ecommerce_dbt_medallion_spark import lakehouse
 from ecommerce_dbt_medallion_spark.config import ANN_N_QUERIES
-from ecommerce_dbt_medallion_spark.models.cdf import _GATE_ROOT
 from ecommerce_dbt_medallion_spark.ops.cluster import (
     IVFPQ_TRAIN_MAX,
     PQ_M,
@@ -64,8 +59,9 @@ from ecommerce_dbt_medallion_spark.ops.cluster import (
     _quantize_embeddings,
 )
 from ecommerce_dbt_medallion_spark.sources.registry import load_table
-from ecommerce_dbt_medallion_spark.streaming.ingest_stream import _ckpt_dir
-from ecommerce_dbt_medallion_spark.streaming.sketch_stream import (
+from ecommerce_dbt_medallion_spark.streaming.drain import (
+    drain_batches,
+    gate_scratch,
     stage_microbatch_files_by,
 )
 
@@ -168,15 +164,8 @@ def stream_ann_index_ingest(
     the stored code table. Per batch: quantize → encode against the
     FROZEN stored codebooks → MERGE on vec_id. Returns the code
     table's final version."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
-    )
 
     def _batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         coarse, codebooks = _stored_codebooks(spark, coarse_table, pq_table)
         # a micro-batch arrives as ONE parquet split — repartition by id
         # so the encode's assign/join stages use the cores (the
@@ -192,15 +181,9 @@ def stream_ann_index_ingest(
         ).localCheckpoint(eager=True)  # MERGE scans its source repeatedly
         lakehouse.merge_into(spark, codes_table, bcodes, key="vec_id")
 
-    q = (
-        stream.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", _ckpt_dir(codes_table))
-        .trigger(availableNow=True)
-        .start()
+    return drain_batches(
+        spark, source_dir, schema, codes_table, _batch, max_files_per_trigger
     )
-    q.awaitTermination()
-    vs = lakehouse.versions(codes_table)
-    return vs[-1] if vs else -1
 
 
 def ann_index_search(
@@ -247,18 +230,9 @@ def ann_index_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     skipping. Shares oracle_ann_topk_ivfpq VERBATIM — frozen-codebook
     encoding is pointwise, so the maintained index equals the
     batch-built one (the stream_quantile_sketch contract)."""
-    tag = re.sub(r"[^A-Za-z0-9_]", "_", os.path.basename(os.path.normpath(sf_dir)))
-    coarse_table = os.path.normpath(
-        os.path.join(_GATE_ROOT, f"annidx_coarse_{tag}")
+    coarse_table, pq_table, codes_table, src = gate_scratch(
+        sf_dir, "annidx_coarse", "annidx_pq", "annidx_codes", "annidx_src"
     )
-    pq_table = os.path.normpath(os.path.join(_GATE_ROOT, f"annidx_pq_{tag}"))
-    codes_table = os.path.normpath(
-        os.path.join(_GATE_ROOT, f"annidx_codes_{tag}")
-    )
-    src = os.path.normpath(os.path.join(_GATE_ROOT, f"annidx_src_{tag}"))
-    for p in (coarse_table, pq_table, codes_table, src, _ckpt_dir(codes_table)):
-        shutil.rmtree(p, ignore_errors=True)
-    os.makedirs(src, exist_ok=True)
 
     par = spark.sparkContext.defaultParallelism
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")

@@ -21,12 +21,12 @@ batch join + hourly rollup.
 from __future__ import annotations
 
 import os
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ecommerce_dbt_medallion_spark.sources.registry import load_event_stream, load_table
+from ecommerce_dbt_medallion_spark.streaming.drain import drain_to_memory
 
 # Conservative expansion from compressed parquet bytes to in-memory
 # relation bytes (dictionary/RLE parquet typically inflates 3-5× when
@@ -125,16 +125,7 @@ def stream_enrich_purchases(
         )
     )
 
-    sink = f"stream_enrich_{uuid.uuid4().hex[:8]}"
-    q = (
-        enriched.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink)
+    return drain_to_memory(enriched, "complete")
 
 
 ORACLE_STREAM_ENRICH_PURCHASES = """

@@ -13,12 +13,12 @@ standard partial-agg shuffle keyed on (window, event_type).
 
 from __future__ import annotations
 
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ecommerce_dbt_medallion_spark.sources.registry import load_event_stream
+from ecommerce_dbt_medallion_spark.streaming.drain import drain_to_memory
 
 
 def stream_event_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -42,16 +42,7 @@ def stream_event_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    sink = f"stream_rollup_{uuid.uuid4().hex[:8]}"
-    q = (
-        rollup.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink)
+    return drain_to_memory(rollup, "complete")
 
 
 def oracle_stream_event_rollup() -> str:
@@ -90,16 +81,7 @@ def stream_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("total_dec").cast("double").alias("total_value"),
         )
     )
-    sink = f"stream_dedup_{uuid.uuid4().hex[:8]}"
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink)
+    return drain_to_memory(deduped, "complete")
 
 
 # Tie-break note: dropDuplicatesWithinWatermark keeps the FIRST-ARRIVAL
@@ -157,16 +139,7 @@ def stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    sink = f"stream_sesswin_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink)
+    return drain_to_memory(agg, "complete")
 
 
 def stream_hopping_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -201,16 +174,7 @@ def stream_hopping_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    sink = f"stream_hop_{uuid.uuid4().hex[:8]}"
-    q = (
-        rollup.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink)
+    return drain_to_memory(rollup, "complete")
 
 
 ORACLE_STREAM_HOPPING_ROLLUP = """

@@ -16,28 +16,17 @@ every commit is keyed or batch-tagged).
 
 from __future__ import annotations
 
-import os
+from functools import partial
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from ecommerce_dbt_medallion_spark import lakehouse
-
-
-def _ckpt_dir(table: str) -> str:
-    """Streaming-checkpoint directory for a lakehouse table: a SIBLING
-    of the table root, never inside it. A checkpoint inside the table
-    directory entangles engine-internal replay state with versioned
-    storage — a byte-copy snapshot export or directory-walk consumer
-    picks it up, and resetting the table destroys replay state (or vice
-    versa) (round-8 ADVICE).
-
-    A pre-round-8 checkpoint living INSIDE the table migrates once:
-    orphaning it would silently replay the whole source."""
-    new = table.rstrip("/\\") + "_ckpt"
-    legacy = os.path.join(table, "_streaming_ckpt")
-    if os.path.isdir(legacy) and not os.path.exists(new):
-        os.rename(legacy, new)
-    return new
+from ecommerce_dbt_medallion_spark.streaming.drain import (
+    drain_batches,
+    gate_scratch,
+    stage_microbatch_files_by,
+)
 
 
 def stream_ingest_dedup(
@@ -109,17 +98,10 @@ def stream_ingest_dedup(
     """
     import time as _time
     from pyspark.sql import Window
-    from pyspark.sql import functions as F
 
     from ecommerce_dbt_medallion_spark.ops.dedup import (
         doc_signatures,
         signature_verdicts,
-    )
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
     )
 
     def _mark(batch_id: int, phase: str, t0: float) -> float:
@@ -131,9 +113,7 @@ def stream_ingest_dedup(
             )
         return t1
 
-    def _batch(batch_df, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def _batch(batch_df: DataFrame, batch_id: int) -> None:
         t = _time.perf_counter()
         bsig = doc_signatures(batch_df, id_col, text_col).localCheckpoint(
             eager=True
@@ -152,7 +132,7 @@ def stream_ingest_dedup(
         )
         verd = (
             signature_verdicts(bsig, corpus, id_col)
-            .withColumn("batch_id", F.lit(int(batch_id)).cast("long"))
+            .withColumn("batch_id", F.lit(batch_id).cast("long"))
             .localCheckpoint(eager=True)
         )
         # merge_into/append fall back to CREATE themselves on a
@@ -215,7 +195,7 @@ def stream_ingest_dedup(
         # partition-declared on cluster_id, so OPTIMIZE would re-emit
         # ~one file per cluster value — its layout is maintained by the
         # churn-scale MERGEs in maintain_cluster_labels instead.)
-        if compact_every and (int(batch_id) + 1) % compact_every == 0:
+        if compact_every and (batch_id + 1) % compact_every == 0:
             for tbl in (sig_table, verdict_table):
                 if lakehouse.versions(tbl):
                     lakehouse.optimize(
@@ -223,21 +203,11 @@ def stream_ingest_dedup(
                     )
             _mark(batch_id, "compact", t)
 
-    q = (
-        stream.writeStream.foreachBatch(_batch)
-        .option(
-            "checkpointLocation", _ckpt_dir(verdict_table)
-        )
-        .trigger(availableNow=True)
-        .start()
+    v_verdict = drain_batches(
+        spark, source_dir, schema, verdict_table, _batch, max_files_per_trigger
     )
-    q.awaitTermination()
-    return (
-        lakehouse.versions(sig_table)[-1] if lakehouse.versions(sig_table) else -1,
-        lakehouse.versions(verdict_table)[-1]
-        if lakehouse.versions(verdict_table)
-        else -1,
-    )
+    v_sig = lakehouse.versions(sig_table)
+    return (v_sig[-1] if v_sig else -1), v_verdict
 
 
 def _gate_three_batch_tables(
@@ -258,28 +228,15 @@ def _gate_three_batch_tables(
         time-ordered feed actually has (new ids arrive after old ids),
         where relabel reads should prune to the churn's id range.
     """
-    import re as _re
-    import shutil as _sh
-
-    from pyspark.sql import functions as F
-
-    from ecommerce_dbt_medallion_spark.models.cdf import _GATE_ROOT
     from ecommerce_dbt_medallion_spark.sources.registry import load_table
 
-    tag = _re.sub(r"[^A-Za-z0-9_]", "_", os.path.basename(os.path.normpath(sf_dir)))
-    src = os.path.normpath(os.path.join(_GATE_ROOT, f"{prefix}_src_{tag}"))
-    sig_table = os.path.normpath(os.path.join(_GATE_ROOT, f"{prefix}_sigs_{tag}"))
-    verdict_table = os.path.normpath(
-        os.path.join(_GATE_ROOT, f"{prefix}_verdicts_{tag}")
+    src, sig_table, verdict_table, labels_table = gate_scratch(
+        sf_dir,
+        f"{prefix}_src",
+        f"{prefix}_sigs",
+        f"{prefix}_verdicts",
+        f"{prefix}_labels",
     )
-    labels_table = os.path.normpath(
-        os.path.join(_GATE_ROOT, f"{prefix}_labels_{tag}")
-    )
-    for p in (src, sig_table, verdict_table, labels_table,
-              _ckpt_dir(verdict_table)):
-        _sh.rmtree(p, ignore_errors=True)
-    os.makedirs(src, exist_ok=True)
-
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     if batch_mode == "contiguous":
         # tercile boundaries from min/max: deterministic, one cheap
@@ -301,13 +258,6 @@ def _gate_three_batch_tables(
         batch_of = (F.col("doc_id") % 3).cast("int")
     else:  # pragma: no cover - caller bug
         raise ValueError(f"unknown batch_mode: {batch_mode!r}")
-    # ONE partitioned write stages all three batch files (round 15):
-    # the previous 3 sequential coalesce(1) jobs each re-scanned the
-    # documents table purely to cut one mod-3 slice
-    from ecommerce_dbt_medallion_spark.streaming.sketch_stream import (
-        stage_microbatch_files_by,
-    )
-
     stage_microbatch_files_by(src, docs.withColumn("__b", batch_of), 3)
     return src, sig_table, verdict_table, labels_table
 
@@ -333,8 +283,6 @@ def stream_dedup_ingest(
     state, never re-shingled; both state tables are versioned lakehouse
     tables (one MERGE + at most one APPEND commit per batch).
     """
-    from pyspark.sql import functions as F
-
     src, sig_table, verdict_table, _ = _gate_three_batch_tables(
         spark, sf_dir, "dedupstream"
     )
@@ -385,8 +333,6 @@ def _run_cluster_maintain(
     given ``batch_mode``, the 3-batch dedup+maintenance drain, then the
     maintained labels joined to cluster sizes. One implementation so a
     future output-shape change cannot silently diverge the twins."""
-    from pyspark.sql import functions as F
-
     src, sig_table, verdict_table, labels_table = _gate_three_batch_tables(
         spark, sf_dir, prefix, batch_mode=batch_mode
     )
@@ -619,6 +565,22 @@ order by doc_id
 CDC_BATCHES = 3
 
 
+def _cdc_apply_batch(
+    spark: SparkSession, state: str, batch_df: DataFrame, batch_id: int
+) -> None:
+    """One CDC micro-batch folded into ``state``: ``'error'`` rows are
+    tombstones, everything else upserts, sequenced by (ts, event_id)."""
+    from ecommerce_dbt_medallion_spark.models.events import CDC_DELETE_TYPE
+
+    chg = batch_df.withColumn(
+        "op",
+        F.when(F.col("event_type") == CDC_DELETE_TYPE, F.lit("D")).otherwise(
+            F.lit("U")
+        ),
+    )
+    lakehouse.apply_changes(spark, state, chg, "user_id", ["ts", "event_id"])
+
+
 def stream_cdc_apply(spark: SparkSession, sf_dir: str):
     """Gated key (SURVEY §2 #14i, round 8): streaming CDC APPLY — the
     Delta Live Tables ``apply_changes`` pattern end-to-end. The events
@@ -640,71 +602,23 @@ def stream_cdc_apply(spark: SparkSession, sf_dir: str):
     a MERGE-shaped touched-file rewrite (stats-pruned, untouched files
     by reference); state stays a versioned, time-travelable table.
     """
-    import re as _re
-    import shutil as _sh
-    import time as _time
-
     from pyspark.sql import Window
-    from pyspark.sql import functions as F
 
-    from ecommerce_dbt_medallion_spark.models.cdf import _GATE_ROOT
-    from ecommerce_dbt_medallion_spark.models.events import (
-        CDC_DELETE_TYPE,
-        load_events,
-    )
+    from ecommerce_dbt_medallion_spark.models.events import load_events
 
-    tag = _re.sub(r"[^A-Za-z0-9_]", "_", os.path.basename(os.path.normpath(sf_dir)))
-    src = os.path.normpath(os.path.join(_GATE_ROOT, f"cdcstream_src_{tag}"))
-    state = os.path.normpath(os.path.join(_GATE_ROOT, f"cdcstream_state_{tag}"))
-    for p in (src, state, _ckpt_dir(state)):
-        _sh.rmtree(p, ignore_errors=True)
-    os.makedirs(src, exist_ok=True)
-
+    src, state = gate_scratch(sf_dir, "cdcstream_src", "cdcstream_state")
     ev = load_events(spark, sf_dir).select(
         "user_id", "ts", "event_id", "event_type", "value"
     )
     # contiguous (ts, event_id) terciles — gate setup only, not the
     # production path (a real feed arrives already batched)
     w = Window.orderBy("ts", "event_id")
-    ranked = ev.withColumn("__b", F.ntile(CDC_BATCHES).over(w) - 1)
-    base = _time.time()
-    for k in range(CDC_BATCHES):
-        staging = os.path.join(src, f"_stage{k}")
-        ranked.where(F.col("__b") == k).drop("__b").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(staging)
-        (part,) = [f for f in os.listdir(staging) if f.endswith(".parquet")]
-        dest = os.path.join(src, f"b{k}.parquet")
-        os.rename(os.path.join(staging, part), dest)
-        _sh.rmtree(staging, ignore_errors=True)
-        os.utime(dest, (base + k * 10, base + k * 10))
-
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+    stage_microbatch_files_by(
+        src, ev.withColumn("__b", F.ntile(CDC_BATCHES).over(w) - 1), CDC_BATCHES
     )
-
-    def _batch(batch_df, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        chg = batch_df.withColumn(
-            "op",
-            F.when(
-                F.col("event_type") == CDC_DELETE_TYPE, F.lit("D")
-            ).otherwise(F.lit("U")),
-        )
-        lakehouse.apply_changes(
-            spark, state, chg, "user_id", ["ts", "event_id"]
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", _ckpt_dir(state))
-        .trigger(availableNow=True)
-        .start()
+    drain_batches(
+        spark, src, ev.schema, state, partial(_cdc_apply_batch, spark, state)
     )
-    q.awaitTermination()
     return lakehouse.read_cdc_state(spark, state).select(
         F.col("user_id").cast("long").alias("user_id"),
         F.col("ts").alias("last_ts"),

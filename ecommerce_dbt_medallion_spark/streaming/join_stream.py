@@ -17,12 +17,12 @@ oracle-checkable against a plain SQL interval join.
 
 from __future__ import annotations
 
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ecommerce_dbt_medallion_spark.sources.registry import load_event_stream
+from ecommerce_dbt_medallion_spark.streaming.drain import drain_to_memory
 
 ATTRIBUTION_WINDOW = "1 hour"
 WATERMARK_DELAY = "2 hours"
@@ -72,16 +72,7 @@ def stream_join_view_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
         "purchase_ts",
         "purchase_value",
     )
-    sink = f"stream_join_{uuid.uuid4().hex[:8]}"
-    q = (
-        joined.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink)
+    return drain_to_memory(joined, "append")
 
 
 ORACLE_STREAM_JOIN_VIEW_PURCHASE = """
@@ -162,16 +153,7 @@ def stream_join_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
         "purchase_value",
         F.col("purchase_id").isNotNull().alias("attributed"),
     )
-    sink = f"stream_ljoin_{uuid.uuid4().hex[:8]}"
-    q = (
-        joined.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink)
+    return drain_to_memory(joined, "append")
 
 
 ORACLE_STREAM_JOIN_LEFT_OUTER = """

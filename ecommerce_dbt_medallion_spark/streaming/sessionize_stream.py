@@ -15,7 +15,6 @@ tests assert explicitly against the batch operator.
 
 from __future__ import annotations
 
-import uuid
 from collections.abc import Iterator
 from typing import Any
 
@@ -32,6 +31,7 @@ from pyspark.sql.types import (
 
 from ecommerce_dbt_medallion_spark.config import SESSION_GAP_SECONDS
 from ecommerce_dbt_medallion_spark.sources.registry import load_event_stream
+from ecommerce_dbt_medallion_spark.streaming.drain import drain_to_memory
 
 OUTPUT_SCHEMA = StructType(
     [
@@ -124,16 +124,7 @@ def stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
             timeoutConf=GroupStateTimeout.EventTimeTimeout,
         )
     )
-    sink = f"stream_sessions_{uuid.uuid4().hex[:8]}"
-    q = (
-        sessions.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(sink)
+    return drain_to_memory(sessions, "append")
 
 
 def oracle_stream_sessionize() -> str:

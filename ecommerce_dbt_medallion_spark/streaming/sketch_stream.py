@@ -19,14 +19,13 @@ with OPTIMIZE or a periodic re-base if batch counts grow unbounded —
 the cells themselves never do).
 
 REPLAY IDEMPOTENCY: a batch replayed after checkpoint loss would
-double its counts under blind addition. Batch states are batch-tagged
-and the append anti-joins already-stored batch ids, so a replay
-appends nothing and the state is unchanged (test-pinned).
+double its counts under blind addition. Every state table here is
+batch-tagged and committed through ``drain.commit_batch_state``, which
+commits nothing for a batch id the table already holds, so a replay
+leaves the state unchanged (test-pinned).
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -37,80 +36,13 @@ from ecommerce_dbt_medallion_spark.ops.sketch import (
     merge_sketch_states,
     quantile_sketch_state,
 )
-from ecommerce_dbt_medallion_spark.streaming.ingest_stream import _ckpt_dir
-
-
-def stage_microbatch_files_by(src_dir: str, df, n: int) -> None:
-    """Stage ``df`` as ``n`` deterministic micro-batch files
-    ``src_dir/b{k}.parquet`` with strictly increasing mtimes —
-    FileStreamSource orders by (mtime, name), so this pins batch order.
-    ``df`` carries an int ``__b`` batch column in [0, n); ONE
-    partitioned write stages every batch. ``repartition(n, "__b")`` puts
-    every batch value in exactly one task, so each ``__b=k`` directory
-    holds exactly one file; partition columns are not written into the
-    data files, so the staged files carry exactly the data columns, as
-    before. A batch value with NO rows gets an empty schema-carrying
-    file (readStream declares the schema explicitly) — batch COUNT and
-    ORDER are part of the gates' oracle contract and must not shift."""
-    import shutil as _sh
-    import time as _time
-
-    import pyarrow.parquet as _pq
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    staging = os.path.join(src_dir, "_stage_all")
-    data_schema = df.drop("__b").schema
-    (
-        df.repartition(n, "__b")
-        .write.mode("overwrite")
-        .partitionBy("__b")
-        .parquet(staging)
-    )
-    base = _time.time()
-    for k in range(n):
-        d = os.path.join(staging, f"__b={k}")
-        parts = (
-            [
-                f
-                for f in os.listdir(d)
-                if f.endswith(".parquet") and not f.startswith(".")
-            ]
-            if os.path.isdir(d)
-            else []
-        )
-        dst = os.path.join(src_dir, f"b{k}.parquet")
-        if parts:
-            (part,) = parts
-            os.replace(os.path.join(d, part), dst)
-        else:
-            # empty batch: stage a 0-row file with the data schema so
-            # the stream still sees (and numbers) this batch
-            _pq.write_table(to_arrow_schema(data_schema).empty_table(), dst)
-        os.utime(dst, (base + k * 10, base + k * 10))
-    _sh.rmtree(staging, ignore_errors=True)
-
-
-def _gate_scratch(sf_dir: str, *names: str) -> list[str]:
-    """Fresh streaming-gate scratch paths under the gitignored gate
-    root — ONE sanitization recipe with models/cdf._gate_path (the
-    round-7 'inline copies drift' review; this module had grown four
-    verbatim copies). Each path AND its streaming-checkpoint sibling
-    is reset; callers mkdir their source dir."""
-    import re as _re
-    import shutil as _sh
-
-    from ecommerce_dbt_medallion_spark.models.cdf import _GATE_ROOT
-
-    tag = _re.sub(
-        r"[^A-Za-z0-9_]", "_", os.path.basename(os.path.normpath(sf_dir))
-    )
-    out = []
-    for n in names:
-        path = os.path.normpath(os.path.join(_GATE_ROOT, f"{n}_{tag}"))
-        for q in (path, _ckpt_dir(path)):
-            _sh.rmtree(q, ignore_errors=True)
-        out.append(path)
-    return out
+from ecommerce_dbt_medallion_spark.streaming.drain import (
+    commit_batch_state,
+    drain_batches,
+    gate_scratch,
+    stage_microbatch_files_by,
+    stored_values,
+)
 
 
 def stream_quantile_sketch_ingest(
@@ -125,28 +57,8 @@ def stream_quantile_sketch_ingest(
     version. Each row feeds its own group AND the ALL group via a
     constant 2-element explode (the same one-scan shape as the batch
     key)."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
-    )
 
-    def _batch(batch_df, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        # replay safety: a batch id already merged never re-appends.
-        # The guard resolves DRIVER-SIDE when the state table is
-        # metadata-scale (it always is: sketch cells × batches) — the
-        # former read+anti-join+checkpoint cost one Spark job per
-        # micro-batch to test an integer tag (round 14); the distributed
-        # anti-join remains as the fallback.
-        seen_ids = (
-            lakehouse.distinct_values_local(state_table, "batch_id")
-            if lakehouse.versions(state_table)
-            else None
-        )
-        if seen_ids is not None and int(batch_id) in seen_ids:
-            return
+    def _batch(batch_df: DataFrame, batch_id: int) -> None:
         bdf = quantile_sketch_state(
             batch_df.select(
                 F.explode(F.array(F.col("grp"), F.lit("ALL"))).alias("grp"),
@@ -154,38 +66,12 @@ def stream_quantile_sketch_ingest(
             ),
             "cents",
             ["grp"],
-        ).withColumn("batch_id", F.lit(int(batch_id)).cast("long"))
-        # ONE job: collect the bounded cell state (sketch cells, never
-        # batch rows) and pass the rows alongside — create/append then
-        # stage the file DRIVER-SIDE with zero further Spark jobs
-        # (round 15; replaces eager checkpoint + distributed staging
-        # write = 2 jobs/batch)
-        brows = bdf.collect()
-        bstate = spark.createDataFrame(brows, bdf.schema)
-        if not lakehouse.versions(state_table):
-            lakehouse.create_or_replace(
-                spark, state_table, bstate, local_rows=brows
-            )
-            return
-        if seen_ids is not None:
-            lakehouse.append(spark, state_table, bstate, local_rows=brows)
-            return
-        seen = lakehouse.read(spark, state_table).select("batch_id").distinct()
-        fresh = bstate.join(seen, "batch_id", "left_anti").localCheckpoint(
-            eager=True
-        )
-        if not fresh.isEmpty():
-            lakehouse.append(spark, state_table, fresh)
+        ).withColumn("batch_id", F.lit(batch_id).cast("long"))
+        commit_batch_state(spark, state_table, bdf, batch_id)
 
-    q = (
-        stream.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", _ckpt_dir(state_table))
-        .trigger(availableNow=True)
-        .start()
+    return drain_batches(
+        spark, source_dir, schema, state_table, _batch, max_files_per_trigger
     )
-    q.awaitTermination()
-    vs = lakehouse.versions(state_table)
-    return vs[-1] if vs else -1
 
 
 def stream_state_quantiles(spark: SparkSession, state_table: str) -> DataFrame:
@@ -210,11 +96,9 @@ def stream_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ecommerce_dbt_medallion_spark.sources.registry import load_table
 
-    src, state_table = _gate_scratch(
+    src, state_table = gate_scratch(
         sf_dir, "qsketchstream_src", "qsketchstream_state"
     )
-    os.makedirs(src, exist_ok=True)
-
     orders = load_table(spark, sf_dir, "orders").select(
         F.col("o_orderkey"),
         F.col("o_orderpriority").alias("grp"),
@@ -252,68 +136,26 @@ def stream_hll_ingest(
 
     Per batch the exchange is bounded by the REGISTER count (types ×
     4368 rows after map-side partial max), never the batch row count —
-    the same bounded-state shape as the quantile sibling above. Replay
-    idempotency mirrors it too: batch-tagged rows + an anti-join on
-    already-stored batch ids (a max-merge is idempotent under exact
-    replay anyway — max(a, a) = a — but the tag keeps the state table's
-    growth deterministic and the guard uniform across sketch kinds).
+    the same bounded-state shape as the quantile sibling above, and the
+    same ``commit_batch_state`` replay guard (a max-merge is idempotent
+    under exact replay anyway — max(a, a) = a — but the tag keeps the
+    state table's growth deterministic). An all-NULL-user batch yields
+    an EMPTY register state, which commits nothing after the first
+    batch (ADVICE r14).
     """
     from ecommerce_dbt_medallion_spark.models.events import hll_register_state
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
-    )
-
-    def _batch(batch_df, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        # driver-side replay guard, same shape as the quantile sibling
-        seen_ids = (
-            lakehouse.distinct_values_local(state_table, "batch_id")
-            if lakehouse.versions(state_table)
-            else None
-        )
-        if seen_ids is not None and int(batch_id) in seen_ids:
-            return
+    def _batch(batch_df: DataFrame, batch_id: int) -> None:
         bdf = hll_register_state(
             batch_df.where(F.col("user_id").isNotNull()).select(
                 "event_type", "user_id"
             )
-        ).withColumn("batch_id", F.lit(int(batch_id)).cast("long"))
-        # ONE job + zero-job driver-side staging (see quantile sibling)
-        brows = bdf.collect()
-        bstate = spark.createDataFrame(brows, bdf.schema)
-        if not lakehouse.versions(state_table):
-            lakehouse.create_or_replace(
-                spark, state_table, bstate, local_rows=brows
-            )
-            return
-        if seen_ids is not None:
-            # an all-NULL-user batch yields an EMPTY register state:
-            # appending it would commit a zero-row file + version per
-            # such batch (ADVICE r14) — keep the anti-join path's
-            # non-empty guard on the driver fast path too
-            if brows:
-                lakehouse.append(spark, state_table, bstate, local_rows=brows)
-            return
-        seen = lakehouse.read(spark, state_table).select("batch_id").distinct()
-        fresh = bstate.join(seen, "batch_id", "left_anti").localCheckpoint(
-            eager=True
-        )
-        if not fresh.isEmpty():
-            lakehouse.append(spark, state_table, fresh)
+        ).withColumn("batch_id", F.lit(batch_id).cast("long"))
+        commit_batch_state(spark, state_table, bdf, batch_id)
 
-    q = (
-        stream.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", _ckpt_dir(state_table))
-        .trigger(availableNow=True)
-        .start()
+    return drain_batches(
+        spark, source_dir, schema, state_table, _batch, max_files_per_trigger
     )
-    q.awaitTermination()
-    vs = lakehouse.versions(state_table)
-    return vs[-1] if vs else -1
 
 
 def stream_state_hll_estimates(spark: SparkSession, state_table: str) -> DataFrame:
@@ -344,11 +186,7 @@ def stream_distinct_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ecommerce_dbt_medallion_spark.models.events import load_events
 
-    src, state_table = _gate_scratch(
-        sf_dir, "hllstream_src", "hllstream_state"
-    )
-    os.makedirs(src, exist_ok=True)
-
+    src, state_table = gate_scratch(sf_dir, "hllstream_src", "hllstream_state")
     ev = load_events(spark, sf_dir).select("event_id", "event_type", "user_id")
     stage_microbatch_files_by(
         src,
@@ -382,9 +220,10 @@ def stream_cms_ingest(
 ) -> None:
     """Drain ``source_dir`` (rows of (user_id bigint)) into TWO
     lakehouse state tables: an additive count-min-sketch cell table
-    (batch-tagged, replay-guarded — same algebra as the quantile
-    sibling: sums merge across any partitioning, so the merged cells
-    equal the batch CMS over the union) and a candidate table holding
+    (batch-tagged, replay-guarded by ``commit_batch_state`` — same
+    algebra as the quantile sibling: sums merge across any partitioning,
+    so the merged cells equal the batch CMS over the union) and a
+    candidate table holding
     the union of per-batch top-``HH_CAND_PER_BATCH`` users (the
     SpaceSaving insight at micro-batch grain: a global heavy hitter is
     batch-local-heavy in at least one batch long before it matters;
@@ -396,58 +235,18 @@ def stream_cms_ingest(
     """
     from ecommerce_dbt_medallion_spark.ops.sketch import cms_cell_structs
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
-    )
-
     cell_structs = cms_cell_structs(F.col("user_id"))
 
-    def _batch(batch_df, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def _batch(batch_df: DataFrame, batch_id: int) -> None:
         ev = batch_df.where(F.col("user_id").isNotNull())
-        # driver-side replay guard (round 14, the quantile/HLL shape):
-        # the batch tag test and the candidate-novelty test both run
-        # against METADATA-SCALE state (cells × batches / M × batches
-        # rows), so they resolve driver-side with zero Spark jobs; the
-        # distributed anti-joins remain as fallbacks.
-        cms_seen = (
-            lakehouse.distinct_values_local(cms_table, "batch_id")
-            if lakehouse.versions(cms_table)
-            else None
+        cells = (
+            ev.select(F.explode(cell_structs).alias("rb"))
+            .select("rb.row_i", "rb.bucket")
+            .groupBy("row_i", "bucket")
+            .agg(F.count("*").alias("cell_count"))
+            .withColumn("batch_id", F.lit(batch_id).cast("long"))
         )
-        if cms_seen is None or int(batch_id) not in cms_seen:
-            bdf = (
-                ev.select(F.explode(cell_structs).alias("rb"))
-                .select("rb.row_i", "rb.bucket")
-                .groupBy("row_i", "bucket")
-                .agg(F.count("*").alias("cell_count"))
-                .withColumn("batch_id", F.lit(int(batch_id)).cast("long"))
-            )
-            # ONE job + zero-job driver-side staging (quantile sibling)
-            brows = bdf.collect()
-            bcells = spark.createDataFrame(brows, bdf.schema)
-            if not lakehouse.versions(cms_table):
-                lakehouse.create_or_replace(
-                    spark, cms_table, bcells, local_rows=brows
-                )
-            elif cms_seen is not None:
-                # same non-empty guard as the HLL fast path (ADVICE r14)
-                if brows:
-                    lakehouse.append(spark, cms_table, bcells, local_rows=brows)
-            else:
-                seen = (
-                    lakehouse.read(spark, cms_table)
-                    .select("batch_id")
-                    .distinct()
-                )
-                fresh = bcells.join(
-                    seen, "batch_id", "left_anti"
-                ).localCheckpoint(eager=True)
-                if not fresh.isEmpty():
-                    lakehouse.append(spark, cms_table, fresh)
+        commit_batch_state(spark, cms_table, cells, batch_id)
         # deterministic per-batch top-M: (count desc, user_id) is a
         # total order, so the candidate set is engine-reproducible —
         # and orderBy().limit() under a total order IS row_number<=M,
@@ -461,45 +260,27 @@ def stream_cms_ingest(
             .limit(HH_CAND_PER_BATCH)
             .select("user_id")
         )
-        # ≤ HH_CAND_PER_BATCH rows by construction: one TakeOrdered job,
-        # then LocalRelation → zero-job driver-side create/append
+        # ≤ HH_CAND_PER_BATCH rows by construction: one TakeOrdered job
         bcand_rows = bcand_df.collect()
-        bcand = spark.createDataFrame(bcand_rows, bcand_df.schema)
-        if not lakehouse.versions(cand_table):
-            lakehouse.create_or_replace(
-                spark, cand_table, bcand, key="user_id", local_rows=bcand_rows
-            )
-            return
         # novelty filter: the known candidate set is metadata-scale
-        # (M × batches), so resolve it driver-side when possible — the
-        # batch candidates are already in hand, so the filter is a plain
-        # Python set test (ADVICE r14: the previous ~isin() was
-        # NULL-poisonable and embedded an unbounded literal list)
-        known = lakehouse.distinct_values_local(cand_table, "user_id")
-        if known is not None:
-            new_rows = [r for r in bcand_rows if r["user_id"] not in known]
-            if new_rows:
-                lakehouse.append(
-                    spark,
-                    cand_table,
-                    spark.createDataFrame(new_rows, bcand_df.schema),
-                    local_rows=new_rows,
-                )
-        else:
-            knownf = lakehouse.read(spark, cand_table).select("user_id")
-            new = bcand.join(knownf, "user_id", "left_anti").localCheckpoint(
-                eager=True
+        # (M × batches) and the batch candidates are in hand, so the
+        # filter is a plain Python set test. append CREATEs the table on
+        # the first batch, even with no candidates.
+        exists = bool(lakehouse.versions(cand_table))
+        known = stored_values(spark, cand_table, "user_id") if exists else set()
+        new_rows = [r for r in bcand_rows if r["user_id"] not in known]
+        if new_rows or not exists:
+            lakehouse.append(
+                spark,
+                cand_table,
+                spark.createDataFrame(new_rows, bcand_df.schema),
+                key="user_id",
+                local_rows=new_rows,
             )
-            if not new.isEmpty():
-                lakehouse.append(spark, cand_table, new)
 
-    q = (
-        stream.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", _ckpt_dir(cms_table))
-        .trigger(availableNow=True)
-        .start()
+    drain_batches(
+        spark, source_dir, schema, cms_table, _batch, max_files_per_trigger
     )
-    q.awaitTermination()
 
 
 def stream_state_heavy_hitters(
@@ -542,11 +323,9 @@ def stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ecommerce_dbt_medallion_spark.models.events import load_events
 
-    src, cms_table, cand_table = _gate_scratch(
+    src, cms_table, cand_table = gate_scratch(
         sf_dir, "hhstream_src", "hhstream_cms", "hhstream_cand"
     )
-    os.makedirs(src, exist_ok=True)
-
     ev = load_events(spark, sf_dir).select("event_id", "user_id")
     stage_microbatch_files_by(
         src,
@@ -621,7 +400,7 @@ def stream_gram_ingest(
     Gram state table (2080 integer cells per batch after the in-batch
     fold). Same algebra story as the quantile sketch: the cells are
     exact bigints, so any chop of the corpus into micro-batches sums to
-    the same state; same replay guard (batch-tagged anti-join).
+    the same state; same replay guard (``commit_batch_state``).
 
     ``schema`` defaults to the staged files' OWN parquet schema (one
     footer read, metadata-scale) — the source contract permits
@@ -644,38 +423,16 @@ def stream_gram_ingest(
         except AnalysisException:
             # Empty dir: no footers to infer from (r12 ADVICE).
             schema = "vec_id bigint, embedding array<float>"
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(source_dir)
-    )
 
-    def _batch(batch_df, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def _batch(batch_df: DataFrame, batch_id: int) -> None:
         bstate = gram_partial_sums(
             _quantize_embeddings(batch_df)
-        ).withColumn("batch_id", F.lit(int(batch_id)).cast("long"))
-        bstate = bstate.localCheckpoint(eager=True)
-        if not lakehouse.versions(state_table):
-            lakehouse.create_or_replace(spark, state_table, bstate)
-            return
-        seen = lakehouse.read(spark, state_table).select("batch_id").distinct()
-        fresh = bstate.join(seen, "batch_id", "left_anti").localCheckpoint(
-            eager=True
-        )
-        if not fresh.isEmpty():
-            lakehouse.append(spark, state_table, fresh)
+        ).withColumn("batch_id", F.lit(batch_id).cast("long"))
+        commit_batch_state(spark, state_table, bstate, batch_id)
 
-    q = (
-        stream.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", _ckpt_dir(state_table))
-        .trigger(availableNow=True)
-        .start()
+    return drain_batches(
+        spark, source_dir, schema, state_table, _batch, max_files_per_trigger
     )
-    q.awaitTermination()
-    vs = lakehouse.versions(state_table)
-    return vs[-1] if vs else -1
 
 
 def stream_gram_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -694,11 +451,7 @@ def stream_gram_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ecommerce_dbt_medallion_spark.ops.quantize import gram_finalize
     from ecommerce_dbt_medallion_spark.sources.registry import load_table
 
-    src, state_table = _gate_scratch(
-        sf_dir, "gramstream_src", "gramstream_state"
-    )
-    os.makedirs(src, exist_ok=True)
-
+    src, state_table = gate_scratch(sf_dir, "gramstream_src", "gramstream_state")
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     stage_microbatch_files_by(
         src,

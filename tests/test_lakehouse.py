@@ -481,9 +481,7 @@ def test_stage_microbatch_empty_batch_with_timestamp(spark, tmp_path):
     import datetime
     import os
 
-    from ecommerce_dbt_medallion_spark.streaming.sketch_stream import (
-        stage_microbatch_files_by,
-    )
+    from ecommerce_dbt_medallion_spark.streaming.drain import stage_microbatch_files_by
 
     ts = datetime.datetime(2026, 1, 1, 12, 0)
     df = spark.createDataFrame(
@@ -1467,7 +1465,7 @@ def test_stream_ingest_dedup_replay_idempotent(spark, tmp_path):
 
     # lose the checkpoint → full replay of both batches. The checkpoint
     # is a SIBLING of the table dir (round-8 ADVICE), never inside it.
-    from ecommerce_dbt_medallion_spark.streaming.ingest_stream import _ckpt_dir
+    from ecommerce_dbt_medallion_spark.streaming.drain import _ckpt_dir
 
     assert not os.path.exists(os.path.join(verdict_table, "_streaming_ckpt"))
     shutil.rmtree(_ckpt_dir(verdict_table))
@@ -1986,7 +1984,7 @@ def test_uf_min_labels_matches_cc(spark, monkeypatch):
 def test_stream_cluster_maintain_matches_scratch(spark):
     """End-to-end: the streaming pipeline's maintained labels equal a
     from-scratch CC over the final verdict tables' dup edges."""
-    from ecommerce_dbt_medallion_spark.models.cdf import _GATE_ROOT
+    from ecommerce_dbt_medallion_spark.streaming.drain import _GATE_ROOT
     from ecommerce_dbt_medallion_spark.ops.graph import connected_components
     from ecommerce_dbt_medallion_spark.streaming.ingest_stream import (
         stream_cluster_maintain,
@@ -2025,7 +2023,7 @@ def test_stream_cluster_maintain_contiguous_matches_scratch(spark):
     layout produced (the edge set may differ from mod-3's: near-dup
     pairs co-arriving in one batch both verdict novel, and co-arrival
     depends on the layout)."""
-    from ecommerce_dbt_medallion_spark.models.cdf import _GATE_ROOT
+    from ecommerce_dbt_medallion_spark.streaming.drain import _GATE_ROOT
     from ecommerce_dbt_medallion_spark.ops.graph import connected_components
     from ecommerce_dbt_medallion_spark.streaming.ingest_stream import (
         stream_cluster_maintain_contiguous,
@@ -2142,7 +2140,7 @@ def test_ckpt_dir_migrates_legacy_checkpoint(tmp_path):
     and duplicate appended rows)."""
     import os
 
-    from ecommerce_dbt_medallion_spark.streaming.ingest_stream import _ckpt_dir
+    from ecommerce_dbt_medallion_spark.streaming.drain import _ckpt_dir
 
     table = str(tmp_path / "t")
     legacy = os.path.join(table, "_streaming_ckpt")
@@ -2438,17 +2436,27 @@ def test_checkpoint_retention_gc(spark, tmp_path, monkeypatch):
     assert {r["id"] for r in lh.read(spark, path, version=3).collect()} == {0, 1, 2, 3}
 
 
-def test_stream_quantile_sketch_replay_idempotent(spark, tmp_path):
+@pytest.mark.parametrize("guard", ["driver", "distributed"])
+def test_stream_quantile_sketch_replay_idempotent(
+    spark, tmp_path, monkeypatch, guard
+):
     """Additive state is the classic replay hazard (a re-merged batch
-    doubles its counts). Batch-tagged appends + the anti-join guard
-    must make a full checkpoint-loss replay a no-op, and the merged
-    state must equal the batch-built state at every point."""
+    doubles its counts). Batch-tagged appends + the replay guard must
+    make a full checkpoint-loss replay a no-op, and the merged state
+    must equal the batch-built state at every point. ``distributed``
+    denies the driver-side read of the stored batch ids, so the guard's
+    distributed fallback runs — the one every batch-tagged state commit
+    (quantile, HLL, CMS cells, Gram) shares through
+    ``commit_batch_state``."""
     import shutil
+
+    if guard == "distributed":
+        monkeypatch.setattr(lh, "distinct_values_local", lambda table, col: None)
 
     from pyspark.sql import functions as F
 
     from ecommerce_dbt_medallion_spark.ops.sketch import quantile_sketch_state
-    from ecommerce_dbt_medallion_spark.streaming.ingest_stream import _ckpt_dir
+    from ecommerce_dbt_medallion_spark.streaming.drain import _ckpt_dir
     from ecommerce_dbt_medallion_spark.streaming.sketch_stream import (
         stream_quantile_sketch_ingest,
         stream_state_quantiles,
@@ -2947,43 +2955,29 @@ def test_stream_cdc_apply_restart_is_noop(spark):
     change the state table: the second availableNow start finds no new
     files, and even a re-delivered batch would be absorbed by the seq
     comparison inside apply_changes."""
-    import os
+    from functools import partial
 
-    from ecommerce_dbt_medallion_spark.models.cdf import _GATE_ROOT
+    from ecommerce_dbt_medallion_spark.streaming.drain import (
+        drain_batches,
+        gate_path,
+    )
     from ecommerce_dbt_medallion_spark.streaming.ingest_stream import (
-        _ckpt_dir,
+        _cdc_apply_batch,
         stream_cdc_apply,
     )
 
     first = stream_cdc_apply(spark, SF_SMOKE).collect()
-    tag = os.path.basename(os.path.normpath(SF_SMOKE)).replace(".", "_")
-    state = os.path.normpath(os.path.join(_GATE_ROOT, f"cdcstream_state_{tag}"))
+    state = gate_path(SF_SMOKE, "cdcstream_state")
     v_after = lh.versions(state)[-1]
-    # re-drain WITHOUT the gate's fresh-dirs reset: same source, same
-    # checkpoint, existing state
-    src = os.path.normpath(os.path.join(_GATE_ROOT, f"cdcstream_src_{tag}"))
-    stream = (
-        spark.readStream.schema(lh.read_cdc_state(spark, state).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
+    # re-drain the gate's own batch function WITHOUT the gate's
+    # fresh-dirs reset: same source, same checkpoint, existing state
+    drain_batches(
+        spark,
+        gate_path(SF_SMOKE, "cdcstream_src"),
+        lh.read_cdc_state(spark, state).schema,
+        state,
+        partial(_cdc_apply_batch, spark, state),
     )
-    from pyspark.sql import functions as F
-
-    def _batch(batch_df, batch_id):
-        if not batch_df.isEmpty():
-            chg = batch_df.withColumn(
-                "op",
-                F.when(F.col("event_type") == "error", "D").otherwise("U"),
-            )
-            lh.apply_changes(spark, state, chg, "user_id", ["ts", "event_id"])
-
-    q = (
-        stream.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", _ckpt_dir(state))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     assert lh.versions(state)[-1] == v_after  # no new commit
     second = lh.read_cdc_state(spark, state).select(
         "user_id", "ts", "event_type", "value"
@@ -2992,6 +2986,47 @@ def test_stream_cdc_apply_restart_is_noop(spark):
         (r["user_id"], r["last_ts"], r["last_event_type"], r["last_value"])
         for r in first
     )
+
+
+def test_stream_cdc_apply_stages_contiguous_batches(spark):
+    """The CDC oracle holds however the feed is chopped, so value parity
+    cannot catch a broken split: pin it on the staged source dir. It
+    holds exactly CDC_BATCHES files b0.. in increasing mtime order, each
+    file's first (ts, event_id) lies past the previous file's last, and
+    together they hold every event exactly once."""
+    import os
+    from collections import Counter
+
+    from ecommerce_dbt_medallion_spark.models.events import load_events
+    from ecommerce_dbt_medallion_spark.streaming.drain import gate_path
+    from ecommerce_dbt_medallion_spark.streaming.ingest_stream import (
+        CDC_BATCHES,
+        stream_cdc_apply,
+    )
+
+    stream_cdc_apply(spark, SF_SMOKE)
+    src = gate_path(SF_SMOKE, "cdcstream_src")
+    names = [f"b{k}.parquet" for k in range(CDC_BATCHES)]
+    assert sorted(os.listdir(src)) == names
+    paths = [os.path.join(src, n) for n in names]
+    mtimes = [os.path.getmtime(p) for p in paths]
+    assert all(a < b for a, b in zip(mtimes, mtimes[1:])), mtimes
+    batches = [
+        sorted(
+            (r["ts"], r["event_id"])
+            for r in spark.read.parquet(p).select("ts", "event_id").collect()
+        )
+        for p in paths
+    ]
+    assert all(batches), [len(b) for b in batches]
+    for prev, cur in zip(batches, batches[1:]):
+        assert cur[0] > prev[-1], (prev[-1], cur[0])
+    staged = Counter(eid for b in batches for _, eid in b)
+    events = Counter(
+        r["event_id"]
+        for r in load_events(spark, SF_SMOKE).select("event_id").collect()
+    )
+    assert staged == events
 
 
 # -------------------------------------- clustering depth / incremental
@@ -3061,7 +3096,7 @@ def test_stream_hll_replay_and_batch_equality(spark, tmp_path):
         hll_estimates_from_regs,
         hll_register_state,
     )
-    from ecommerce_dbt_medallion_spark.streaming.ingest_stream import _ckpt_dir
+    from ecommerce_dbt_medallion_spark.streaming.drain import _ckpt_dir
     from ecommerce_dbt_medallion_spark.streaming.sketch_stream import (
         stream_hll_ingest,
         stream_state_hll_estimates,
@@ -3360,9 +3395,9 @@ def test_stream_cms_heavy_hitters_replay_and_batch_equality(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from ecommerce_dbt_medallion_spark.ops.sketch import cms_cell_structs
-    from ecommerce_dbt_medallion_spark.streaming.ingest_stream import _ckpt_dir
+    from ecommerce_dbt_medallion_spark.streaming.drain import _ckpt_dir
+    from ecommerce_dbt_medallion_spark.streaming.drain import stage_microbatch_files_by
     from ecommerce_dbt_medallion_spark.streaming.sketch_stream import (
-        stage_microbatch_files_by,
         stream_cms_ingest,
         stream_state_heavy_hitters,
     )
@@ -3572,10 +3607,8 @@ def test_ann_index_maintain_replay_and_equals_batch(spark, tmp_path):
         ann_index_bootstrap,
         stream_ann_index_ingest,
     )
-    from ecommerce_dbt_medallion_spark.streaming.ingest_stream import _ckpt_dir
-    from ecommerce_dbt_medallion_spark.streaming.sketch_stream import (
-        stage_microbatch_files_by,
-    )
+    from ecommerce_dbt_medallion_spark.streaming.drain import _ckpt_dir
+    from ecommerce_dbt_medallion_spark.streaming.drain import stage_microbatch_files_by
     from tests.conftest import SF_SMOKE
 
     coarse_t = str(tmp_path / "annidx_coarse")
@@ -3632,10 +3665,10 @@ def test_stream_gram_maintain_replay_and_equals_batch(spark, tmp_path):
     import numpy as np
     from pyspark.sql import functions as F
 
-    from ecommerce_dbt_medallion_spark.streaming.ingest_stream import _ckpt_dir
+    from ecommerce_dbt_medallion_spark.streaming.drain import _ckpt_dir
+    from ecommerce_dbt_medallion_spark.streaming.drain import stage_microbatch_files_by
     from ecommerce_dbt_medallion_spark.streaming.sketch_stream import (
         stream_gram_ingest,
-        stage_microbatch_files_by,
     )
     from ecommerce_dbt_medallion_spark.ops.quantize import (
         GRAM_DIM,
@@ -3698,8 +3731,8 @@ def test_gram_stream_accepts_double_embeddings(spark, tmp_path):
         gram_finalize,
         gram_partial_sums,
     )
+    from ecommerce_dbt_medallion_spark.streaming.drain import stage_microbatch_files_by
     from ecommerce_dbt_medallion_spark.streaming.sketch_stream import (
-        stage_microbatch_files_by,
         stream_gram_ingest,
     )
 
@@ -3743,8 +3776,8 @@ def test_gram_stream_starts_on_empty_source_dir(spark, tmp_path):
         gram_finalize,
         gram_partial_sums,
     )
+    from ecommerce_dbt_medallion_spark.streaming.drain import stage_microbatch_files_by
     from ecommerce_dbt_medallion_spark.streaming.sketch_stream import (
-        stage_microbatch_files_by,
         stream_gram_ingest,
     )
 
