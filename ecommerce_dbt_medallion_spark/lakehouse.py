@@ -579,9 +579,9 @@ BLOOM_K = 4
 #   dominated churn-scale micro-batch MERGEs); above it the generic
 #   distributed path runs and bloom pruning is skipped. 20k, not the
 #   initial 100k (round 14): every small-path perk is dead weight well
-#   below 100k keys — bloom masks saturate >~1k, the isin rewrite caps
-#   at MERGE_ISIN_MAX_KEYS=10k, and pyarrow discovery's per-value set
-#   probes are serial driver work — measured 1.6 s off
+#   below 100k keys — bloom masks saturate >~1k, the keyed rewrite's
+#   IN filter grows with the key set, and pyarrow discovery's
+#   per-value set probes are serial driver work — measured 1.6 s off
 #   lakehouse_snapshot_cut's bump MERGE at sf0.1 by routing a 75k-row
 #   source to the distributed path instead;
 # - the pyarrow staging writer (_plan_commit): the per-commit fixed cost
@@ -623,11 +623,6 @@ MERGE_COALESCE_MAX_ROWS = 2_000_000
 # rewrite) — C-speed column decode + set probes, cheap per row.
 BLOOM_DRIVER_MAX_ROWS = 250_000
 
-# merge_into small path: up to this many probed source keys the
-# touched-row anti-join is expressed as an isin() filter inside the
-# rewrite job (no separate broadcast-build); above it, the join.
-MERGE_ISIN_MAX_KEYS = 10_000
-
 # _discover_touched small path: exact touched-file discovery runs driver-side
 # (pyarrow key-column reads, no Spark job) when the candidate set is at
 # most this many files, each under BLOOM_DRIVER_MAX_ROWS rows; above
@@ -650,7 +645,9 @@ def _sql_literal(v) -> str:
     """A Python key value as a Spark SQL literal. repr()/str() alone
     mis-render non-int keys: str(date(2024,1,1)) parses as the
     arithmetic expression 2024-01-01 = 2022 inside an IN list
-    (round-7 review)."""
+    (round-7 review). Spark's parser unescapes backslashes inside
+    string literals, so a string's backslashes and quotes are escaped
+    with one (otherwise 'a\\b' silently matches nothing)."""
     import datetime
 
     if isinstance(v, bool):
@@ -661,7 +658,7 @@ def _sql_literal(v) -> str:
         return f"TIMESTAMP '{v}'"
     if isinstance(v, datetime.date):
         return f"DATE '{v}'"
-    s = str(v).replace("'", "''")
+    s = str(v).replace("\\", "\\\\").replace("'", "\\'")
     return f"'{s}'"
 
 
@@ -2239,8 +2236,9 @@ def _discover_touched(
     rows: list | None = None,
     full_rows: bool = False,
 ) -> _Discovery:
-    """Key-set touched-file discovery — the file mechanics merge_into and
-    apply_changes share (the Delta MERGE shape):
+    """Key-set touched-file discovery — the files the one keyed rewrite
+    (:func:`_keyed_rewrite`) under merge_into and apply_changes replaces
+    (the Delta MERGE shape):
 
     0. ONE bounded probe job: collect up to STAGE_DRIVER_MAX_ROWS+1
        source rows (LIMIT over the bare scan early-exits at scale, and
@@ -2357,19 +2355,115 @@ def _discover_touched(
 
 
 def _stage_rewrite(merged: DataFrame, snap: _Snapshot, key: str, bound: int | None):
-    """Stage a MERGE / APPLY CHANGES rewrite. Metadata-scale rewrites
-    collapse to one task/file: the row bound (logged touched-file rows +
-    probed source rows) is exact from stats already in hand, and N
-    near-empty shuffle partitions would otherwise become N write tasks +
-    N files + N bloom/footer reads per churn batch, decaying the table
-    layout commit after commit. repartition, NOT coalesce: coalesce(1)
-    would pull the source pipeline's whole final stage into one task
-    (measured 2.5× slower on the maintenance verdict MERGE); the
-    explicit exchange keeps upstream parallelism and single-tasks only
-    the tiny write."""
+    """Stage the distributed writer's output of :func:`_keyed_rewrite`.
+    Metadata-scale rewrites collapse to one task/file: the row bound
+    (logged touched-file rows + probed source rows) is exact from stats
+    already in hand, and N near-empty shuffle partitions would otherwise
+    become N write tasks + N files + N bloom/footer reads per churn
+    batch, decaying the table layout commit after commit. repartition,
+    NOT coalesce: coalesce(1) would pull the source pipeline's whole
+    final stage into one task (measured 2.5× slower on the maintenance
+    verdict MERGE); the explicit exchange keeps upstream parallelism and
+    single-tasks only the tiny write."""
     if bound is not None and bound <= MERGE_COALESCE_MAX_ROWS:
         merged = merged.repartition(1)
     return _stage_files(merged, snap, key)
+
+
+def _keyed_rewrite(
+    spark: SparkSession,
+    snap: _Snapshot,
+    source: DataFrame,
+    key: str,
+    d: _Discovery,
+    plan_schema,
+    entry: dict,
+    allow_missing: bool = False,
+) -> int:
+    """The one keyed rewrite under MERGE and APPLY CHANGES (the Delta
+    MERGE shape): each touched file of ``d`` is replaced by its rows
+    whose key misses the source's keys (NULL keys always survive), and
+    the source rows are added; untouched files carry over by reference.
+    ``d.keys`` / ``d.rows`` hold the source's non-NULL keys and full
+    rows when they are in the driver's hand.
+
+    :func:`_plan_commit`, asked with ``plan_schema`` (the source's
+    schema before any evolution cast), picks the writer: when the full
+    rows are in hand, the driver may read the touched files and the row
+    bound is admitted, the merged rows are assembled in Python and
+    staged with :func:`_stage_rows_local` — zero Spark jobs. Otherwise
+    the kept rows (an IN filter folded into the scan when the keys are
+    in hand, an anti-join against the source keys when not) union
+    the source and stage through :func:`_stage_rewrite`.
+
+    Commits ``entry`` (the operation name, any extra fields and its
+    ``stats``) with the adds, the removes and the touched/untouched
+    counts at ``snap.version + 1``, which it returns."""
+    touched = d.touched
+    if (
+        d.rows is not None
+        and d.bound is not None
+        and _driver_readable(touched)
+        and _plan_commit(snap, plan_schema, key, None, d.bound)
+    ):
+        mapping = snap.mapping
+        names = [f.name for f in source.schema.fields]
+        merged_rows: list = []
+        for a in touched:
+            t = pq.read_table(_abs(snap.table, a["file"]))
+            present = set(t.column_names)
+            n = t.num_rows
+            colvals = [
+                (
+                    t.column(mapping.get(c, c)).to_pylist()
+                    if mapping.get(c, c) in present
+                    else [None] * n  # pre-evolution file: null-fill
+                )
+                for c in names
+            ]
+            kvals = colvals[names.index(key)]
+            for i in range(n):
+                if kvals[i] is None or kvals[i] not in d.keys:
+                    merged_rows.append(tuple(cv[i] for cv in colvals))
+        merged_rows.extend(d.rows)
+        adds = _stage_rows_local(snap, merged_rows, source.schema, key)
+    else:
+        merged = source
+        if touched:
+            # log-schema read: a footer read of a pre-evolution touched
+            # file would rewrite it without the evolved columns
+            kept = _read_files(spark, snap, touched, with_tombstones=False)
+            if d.keys is None:
+                kept = kept.join(source.select(key).distinct(), key, "left_anti")
+            elif d.keys:  # (no keys: only NULL-keyed winners, all rows kept)
+                # one SQL IN over the keys in hand: Column.isin pays a
+                # py4j round trip per key (~0.4 ms: 5 s at 14k keys).
+                # SQL three-valued logic would drop NULL keys at NOT IN.
+                vals = ", ".join(_sql_literal(k) for k in d.keys)
+                kept = kept.where(f"`{key}` IS NULL OR `{key}` NOT IN ({vals})")
+            # allowMissingColumns only under declared evolution: an
+            # UNdeclared mismatch must keep failing loudly
+            merged = kept.unionByName(source, allowMissingColumns=allow_missing)
+        adds = _stage_rewrite(merged, snap, key, d.bound)
+
+    v = snap.version + 1
+    _commit_exclusive(
+        snap.table,
+        {
+            "version": v,
+            "timestamp": time.time(),
+            **entry,
+            "key": key,
+            "add": adds,
+            "remove": [a["file"] for a in touched],
+            "stats": {
+                **entry["stats"],
+                "files_touched": len(touched),
+                "files_untouched": len(d.untouched),
+            },
+        },
+    )
+    return v
 
 
 def merge_into(
@@ -2394,10 +2488,8 @@ def merge_into(
     (positional, in source.schema order) — they replace the probe job.
 
     Execution: :func:`_discover_touched` finds exactly the files holding
-    source keys; only those are rewritten — their rows anti-join the
-    source keys (an isin() filter when the probed key set is in hand),
-    union the full source, and stage as new files. Untouched files
-    carry over by reference — no full-table rewrite.
+    source keys, and the one keyed rewrite (:func:`_keyed_rewrite`)
+    replaces only those — no full-table rewrite.
     """
     snap = _head_or_new(table)
     if snap.version < 0:
@@ -2419,88 +2511,18 @@ def merge_into(
     _enforce_constraints(source, snap.constraints, "MERGE")
 
     d = _discover_touched(spark, snap, source, key, source_rows, full_rows)
-    touched = d.touched
-
-    # FULLY driver-side rewrite (round 15): when the probe holds the
-    # complete source rows, the driver may read the touched files and
-    # the plan admits the row bound, the merged rows (touched-file rows
-    # whose key misses the source keyset, plus the source rows) are
-    # assembled in Python and staged with _stage_rows_local: ZERO
-    # further Spark jobs after the one bounded probe.
-    if (
-        d.rows is not None
-        and d.bound is not None
-        and _driver_readable(touched)
-        and _plan_commit(snap, src_schema, key, None, d.bound)
-    ):
-        mapping = snap.mapping
-        names = [f.name for f in source.schema.fields]
-        merged_rows: list = []
-        for a in touched:
-            t = pq.read_table(_abs(snap.table, a["file"]))
-            present = set(t.column_names)
-            n = t.num_rows
-            colvals = [
-                (
-                    t.column(mapping.get(c, c)).to_pylist()
-                    if mapping.get(c, c) in present
-                    else [None] * n  # pre-evolution file: null-fill
-                )
-                for c in names
-            ]
-            kvals = colvals[names.index(key)]
-            for i in range(n):
-                # NULL target keys survive, matching the NOT-IN +
-                # isNull() filter of the distributed rewrite
-                if kvals[i] is None or kvals[i] not in d.keys:
-                    merged_rows.append(tuple(cv[i] for cv in colvals))
-        merged_rows.extend(d.rows)
-        adds = _stage_rows_local(snap, merged_rows, source.schema, key)
-    else:
-        # rewrite touched rows + insert source (log-schema read — a
-        # footer read of a pre-evolution touched file would rewrite it
-        # without the evolved columns, permanently losing that data)
-        if touched:
-            kept = _read_files(spark, snap, touched, with_tombstones=False)
-            if d.keys is not None and len(d.keys) <= MERGE_ISIN_MAX_KEYS:
-                # keys are in hand: an isin() filter folds the anti-join
-                # into the rewrite job's scan (no broadcast-build job).
-                # NULL target keys must survive the NOT-IN (SQL
-                # three-valued logic would drop them).
-                kept = kept.where(
-                    ~F.col(key).isin(list(d.keys)) | F.col(key).isNull()
-                )
-            else:
-                kept = kept.join(source.select(key).distinct(), key, "left_anti")
-            # allowMissingColumns only under declared evolution: carried
-            # rows null-fill new source columns (and an evolving source
-            # may omit historical columns, mirroring append's posture) —
-            # but an UNdeclared mismatch must keep failing loudly
-            merged = kept.unionByName(source, allowMissingColumns=merge_schema)
-        else:
-            merged = source
-        adds = _stage_rewrite(merged, snap, key, d.bound)
-
-    v = snap.version + 1
-    _commit_exclusive(
-        table,
+    return _keyed_rewrite(
+        spark, snap, source, key, d, src_schema,
         {
-            "version": v,
-            "timestamp": time.time(),
             "operation": "MERGE",
-            "key": key,
             "schema_json": evolved_schema.json(),
-            "add": adds,
-            "remove": [a["file"] for a in touched],
             "stats": {
                 "files_pruned_by_stats": d.pruned,
                 "files_pruned_by_bloom": d.pruned_by_bloom,
-                "files_touched": len(touched),
-                "files_untouched": len(d.untouched),
             },
         },
+        allow_missing=merge_schema,
     )
-    return v
 
 
 CDC_DELETED_COL = "__cdc_deleted"
@@ -2548,10 +2570,16 @@ def apply_changes(
     guarantees no more stragglers (the retention knob every CDC sink
     has).
 
-    File mechanics are MERGE's (:func:`_discover_touched`: stats + bloom
-    pruned candidates, exact touched-file discovery; rewrite ∝ touched
-    files, untouched files carry by reference); a batch that changes
-    nothing commits nothing.
+    An APPLY CHANGES is a MERGE whose source is cut down to the changes
+    that win: the changelog resolves to its winning rows (latest per
+    key, strictly newer than the stored row of the touched files
+    :func:`_discover_touched` found, each flagged ``__cdc_deleted``),
+    and those go through MERGE's keyed rewrite (:func:`_keyed_rewrite`:
+    rewrite ∝ touched files, untouched files carry by reference). One
+    bounded collect of the winners — full rows when the driver writer
+    admits their schema, keys and flags otherwise — yields the key set
+    and the deleted-key count; a batch that changes nothing commits
+    nothing.
     Returns the table version (new or unchanged).
     """
     snap = _head_or_new(table)
@@ -2586,102 +2614,46 @@ def apply_changes(
         snap.constraints,
         "APPLY CHANGES",
     )
-
-    # the touched-file mechanics are MERGE's (round 14: a churn-scale
-    # changelog resolves its key range AND the exact touched-file set
-    # driver-side); latest's lazy checkpoint makes the probe's
-    # materialization reusable by every later consumer
     d = _discover_touched(spark, snap, latest, key)
-    touched = d.touched
 
-    src_cols = latest.columns
-    pref = latest.select([F.col(c).alias("__s_" + c) for c in src_cols])
-    src_flag = (F.col("__s_" + op_col) == F.lit(delete_value)).alias(
-        CDC_DELETED_COL
+    # a change wins iff no touched file stores its key, or its seq
+    # struct is strictly greater than the stored row's
+    is_delete = F.col(op_col) == F.lit(delete_value)
+    winners, newly_deleted = latest, F.lit(False)
+    if d.touched:
+        stored = _read_files(spark, snap, d.touched, with_tombstones=False).select(
+            F.col(key).alias("__t_key"),
+            F.struct(*seq_cols).alias("__t_seq"),
+            F.col(CDC_DELETED_COL).alias("__t_del"),
+        )
+        winners = latest.join(stored, F.col(key) == F.col("__t_key"), "left").where(
+            F.col("__t_key").isNull() | (F.struct(*seq_cols) > F.col("__t_seq"))
+        )
+        newly_deleted = F.col("__t_key").isNotNull() & is_delete & ~F.col("__t_del")
+    resolved = winners.select(
+        *[is_delete.alias(c) if c == CDC_DELETED_COL else F.col(c) for c in sch.fieldNames()],
+        newly_deleted.alias("__new_del"),
     )
-    if touched:
-        # ONE materialization of the stored⋈changes pipeline (round 15):
-        # the previous shape executed the join up to four times per
-        # micro-batch — once for the deleted-keys count, twice for the
-        # has-changes probes, once more for the rewrite itself. The
-        # kept/updated split is now a per-row CASE carrying marker
-        # columns, eagerly checkpointed; the counts become metadata-scale
-        # actions over the checkpoint and the rewrite projects it.
-        stored = _read_files(spark, snap, touched, with_tombstones=False)
-        tbl_cols = stored.columns
-        j = stored.join(pref, F.col(key) == F.col("__s_" + key), "left")
-        newer = F.col("__s_" + key).isNotNull() & (
-            F.struct(*[F.col("__s_" + c) for c in seq_cols])
-            > F.struct(*[F.col(c) for c in seq_cols])
-        )
-        upd = F.coalesce(newer, F.lit(False))
-        src_del = F.col("__s_" + op_col) == F.lit(delete_value)
-        survivors = j.select(
-            *[
-                F.when(
-                    upd,
-                    src_del if c == CDC_DELETED_COL else F.col("__s_" + c),
-                )
-                .otherwise(F.col(c))
-                .alias(c)
-                for c in tbl_cols
-            ],
-            upd.alias("__chg"),
-            (
-                upd
-                & (F.col("__s_" + op_col) == F.lit(delete_value))
-                & ~F.col(CDC_DELETED_COL)
-            ).alias("__new_del"),
-        )
-        inserts = latest.join(
-            stored.select(key).distinct(), key, "left_anti"
-        ).select(
-            *[
-                (F.col(op_col) == F.lit(delete_value)).alias(CDC_DELETED_COL)
-                if c == CDC_DELETED_COL
-                else F.col(c)
-                for c in tbl_cols
-            ],
-            F.lit(True).alias("__chg"),
-            F.lit(False).alias("__new_del"),
-        )
-        flagged = survivors.unionByName(inserts).localCheckpoint(eager=True)
-        n_deleted_keys = flagged.where(F.col("__new_del")).count()
-        n_changes = flagged.where(F.col("__chg")).limit(1).count()
-        merged = flagged.select(*tbl_cols)
-    else:
-        # discovery is sound: no touched file ⇒ no source key exists in
-        # the table ⇒ every change is a pure insert (deletes of unseen
-        # keys insert tombstones so older stragglers can't resurrect)
-        tbl_cols = [c for c in src_cols if c != op_col] + [CDC_DELETED_COL]
-        n_deleted_keys = 0
-        merged = latest.withColumn(
-            CDC_DELETED_COL, F.col(op_col) == F.lit(delete_value)
-        ).select(*tbl_cols)
-        n_changes = merged.limit(1).count()
-    # a batch that changes nothing (pure replay / stale stragglers)
-    # must not commit an empty rewrite
-    if n_changes == 0:
+    winners = resolved.drop("__new_del")
+    full_rows = _plan_commit(snap, winners.schema, key, None, 0)
+    n = STAGE_DRIVER_MAX_ROWS
+    probe = (resolved if full_rows else resolved.select(key, "__new_del")).limit(n + 1).collect()
+    if not probe:
+        # pure replay / stale stragglers: no empty rewrite
         return snap.version
-    adds = _stage_rewrite(merged, snap, key, d.bound)
-    v = snap.version + 1
-    _commit_exclusive(
-        table,
-        {
-            "version": v,
-            "timestamp": time.time(),
-            "operation": "APPLY_CHANGES",
-            "key": key,
-            "add": adds,
-            "remove": [a["file"] for a in touched],
-            "stats": {
-                "files_touched": len(touched),
-                "files_untouched": len(d.untouched),
-                "keys_deleted": int(n_deleted_keys),
-            },
-        },
+    if len(probe) <= n:
+        keys_deleted = sum(1 for r in probe if r["__new_del"])
+        d = d._replace(
+            keys={r[key] for r in probe if r[key] is not None},
+            rows=[tuple(r)[:-1] for r in probe] if full_rows else None,
+        )
+    else:
+        keys_deleted = resolved.where(F.col("__new_del")).count()
+        d = d._replace(keys=None, rows=None)
+    return _keyed_rewrite(
+        spark, snap, winners, key, d, winners.schema,
+        {"operation": "APPLY_CHANGES", "stats": {"keys_deleted": keys_deleted}},
     )
-    return v
 
 
 def verify_table(spark: SparkSession, table: str) -> dict:

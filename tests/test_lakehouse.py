@@ -248,6 +248,36 @@ def test_merge_driver_write_matches_distributed(spark, tmp_path, monkeypatch):
     assert sorted(rows[99]) == ["dup·99", "up·99"]
 
 
+@pytest.mark.parametrize("writer", ["driver", "distributed"])
+def test_key_sql_rendering_is_exact_for_quotes_and_backslashes(
+    spark, tmp_path, monkeypatch, writer
+):
+    """String keys reach SQL IN lists through _sql_literal: the keyed
+    rewrite's filter of the keys in hand, and materialize_tombstones'
+    delete. A quote or backslash in a key must match exactly that key:
+    a missed match leaves a duplicate after MERGE, or a deferred-deleted
+    row alive."""
+    if writer == "distributed":
+        monkeypatch.setattr(lh, "_plan_commit", lambda *a: False)
+    odd = ["it's", "a\\b", "\\", "a\\'b", "\\n"]
+    t = str(tmp_path / "skeys")
+    lh.create_or_replace(
+        spark, t,
+        spark.createDataFrame([(k, "old") for k in odd + ["plain"]], "k string, v string"),
+        "k",
+    )
+    lh.merge_into(
+        spark, t, spark.createDataFrame([(k, "new") for k in odd], "k string, v string"), "k"
+    )
+    got = sorted((r["k"], r["v"]) for r in lh.read(spark, t).collect())
+    assert got == sorted([(k, "new") for k in odd] + [("plain", "old")])
+    lh.delete_keys_deferred(spark, t, ["a\\b", "it's"])
+    lh.materialize_tombstones(spark, t)
+    assert sorted(r["k"] for r in lh.read(spark, t).collect()) == sorted(
+        ["\\", "a\\'b", "\\n", "plain"]
+    )
+
+
 def test_merge_generic_path_matches_fast_path(spark, tmp_path, monkeypatch):
     """Round 14: merge_into gained a small-source fast path (bounded
     probe resolves range/bloom/touched driver-side). Both paths must
@@ -2645,6 +2675,25 @@ def _chg(spark, rows):
     )
 
 
+@pytest.fixture
+def writer_staged(writer, monkeypatch):
+    """The keyed rewrite's writer for an apply_changes test: "driver"
+    leaves the choice to the planner (which admits the ``_chg`` schema),
+    "distributed" forces the Spark writer. Returns the versions whose
+    files went through the driver writer (_stage_rows_local)."""
+    staged = []
+    if writer == "distributed":
+        monkeypatch.setattr(lh, "_plan_commit", lambda *a: False)
+    real = lh._stage_rows_local
+
+    def spy(snap, *a, **kw):
+        staged.append(snap.version + 1)
+        return real(snap, *a, **kw)
+
+    monkeypatch.setattr(lh, "_stage_rows_local", spy)
+    return staged
+
+
 def test_apply_changes_create_and_upsert(spark, tmp_path):
     t = str(tmp_path / "cdc")
     lh.apply_changes(
@@ -2658,7 +2707,8 @@ def test_apply_changes_create_and_upsert(spark, tmp_path):
     assert "op" not in lh.read_cdc_state(spark, t).columns
 
 
-def test_apply_changes_seq_aware_and_delete(spark, tmp_path):
+@pytest.mark.parametrize("writer", ["driver", "distributed"])
+def test_apply_changes_seq_aware_and_delete(spark, tmp_path, writer, writer_staged):
     t = str(tmp_path / "cdc2")
     lh.apply_changes(
         spark, t, _chg(spark, [(1, 5, "new", "U"), (2, 5, "x", "U"),
@@ -2679,15 +2729,20 @@ def test_apply_changes_seq_aware_and_delete(spark, tmp_path):
     assert lh.history(t)[-1]["operation"] == "APPLY_CHANGES"
     assert lh._read_entry(t, lh.versions(t)[-1])["stats"]["keys_deleted"] == 1
     assert v == lh.versions(t)[-1]
+    assert (v in writer_staged) == (writer == "driver")
 
 
-def test_apply_changes_replay_idempotent_no_empty_commit(spark, tmp_path):
+@pytest.mark.parametrize("writer", ["driver", "distributed"])
+def test_apply_changes_replay_idempotent_no_empty_commit(
+    spark, tmp_path, writer, writer_staged
+):
     t = str(tmp_path / "cdc3")
     batch = _chg(spark, [(1, 1, "a", "U"), (2, 1, "b", "U")])
     v1 = lh.apply_changes(spark, t, batch, "id", ["seq"])
     # exact replay: equal seq absorbs every change — no new version
     v2 = lh.apply_changes(spark, t, batch, "id", ["seq"])
     assert v2 == v1
+    assert writer_staged == []  # nothing won: no rewrite staged
     assert sorted(
         (r["id"], r["val"]) for r in lh.read_cdc_state(spark, t).collect()
     ) == [(1, "a"), (2, "b")]
@@ -2790,7 +2845,10 @@ def test_apply_changes_order_robust_vs_compaction(spark, tmp_path):
     assert got == want
 
 
-def test_apply_changes_tombstone_blocks_resurrection(spark, tmp_path):
+@pytest.mark.parametrize("writer", ["driver", "distributed"])
+def test_apply_changes_tombstone_blocks_resurrection(
+    spark, tmp_path, writer, writer_staged
+):
     """A delete's tombstone (retained with the delete's seq) absorbs an
     out-of-order OLDER upsert arriving in a later batch; a NEWER upsert
     legitimately recreates the key. delete_where on the tombstone
@@ -2806,8 +2864,9 @@ def test_apply_changes_tombstone_blocks_resurrection(spark, tmp_path):
                      "id", ["seq"])
     assert {r["id"] for r in lh.read_cdc_state(spark, t).collect()} == {2}
     # newer upsert (seq 7): key legitimately reborn
-    lh.apply_changes(spark, t, _chg(spark, [(1, 7, "alive", "U")]),
-                     "id", ["seq"])
+    v = lh.apply_changes(spark, t, _chg(spark, [(1, 7, "alive", "U")]),
+                         "id", ["seq"])
+    assert (v in writer_staged) == (writer == "driver")
     got = {r["id"]: r["val"] for r in lh.read_cdc_state(spark, t).collect()}
     assert got == {1: "alive", 2: "b"}
     # delete again, then purge: live state unchanged, raw rows shrink
@@ -2988,14 +3047,35 @@ def test_stream_cdc_apply_restart_is_noop(spark):
     )
 
 
-def test_stream_cdc_apply_stages_contiguous_batches(spark):
+def test_stream_cdc_apply_stages_contiguous_batches(spark, tmp_path):
     """The CDC oracle holds however the feed is chopped, so value parity
     cannot catch a broken split: pin it on the staged source dir. It
     holds exactly CDC_BATCHES files b0.. in increasing mtime order, each
     file's first (ts, event_id) lies past the previous file's last, and
-    together they hold every event exactly once."""
+    together they hold every event exactly once. The smoke events'
+    ids follow their ts order, so the gate runs on a copy whose ids are
+    permuted: a split ordered by event_id alone must fail here."""
     import os
+    import random
     from collections import Counter
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    ev = pq.read_table(os.path.join(SF_SMOKE, "events.parquet"))
+    ids = ev.column("event_id").to_pylist()
+    random.Random(7).shuffle(ids)
+    sf_dir = tmp_path / "sf_permuted_ids"
+    sf_dir.mkdir()
+    pq.write_table(
+        ev.set_column(
+            ev.schema.get_field_index("event_id"),
+            ev.schema.field("event_id"),
+            pa.array(ids, ev.schema.field("event_id").type),
+        ),
+        str(sf_dir / "events.parquet"),
+    )
+    sf_dir = str(sf_dir)
 
     from ecommerce_dbt_medallion_spark.models.events import load_events
     from ecommerce_dbt_medallion_spark.streaming.drain import gate_path
@@ -3004,8 +3084,8 @@ def test_stream_cdc_apply_stages_contiguous_batches(spark):
         stream_cdc_apply,
     )
 
-    stream_cdc_apply(spark, SF_SMOKE)
-    src = gate_path(SF_SMOKE, "cdcstream_src")
+    stream_cdc_apply(spark, sf_dir)
+    src = gate_path(sf_dir, "cdcstream_src")
     names = [f"b{k}.parquet" for k in range(CDC_BATCHES)]
     assert sorted(os.listdir(src)) == names
     paths = [os.path.join(src, n) for n in names]
@@ -3024,7 +3104,7 @@ def test_stream_cdc_apply_stages_contiguous_batches(spark):
     staged = Counter(eid for b in batches for _, eid in b)
     events = Counter(
         r["event_id"]
-        for r in load_events(spark, SF_SMOKE).select("event_id").collect()
+        for r in load_events(spark, sf_dir).select("event_id").collect()
     )
     assert staged == events
 
