@@ -618,27 +618,16 @@ BLOOM_PROBE_MAX_KEYS = 2_048
 # into N near-empty files per batch.
 MERGE_COALESCE_MAX_ROWS = 2_000_000
 
-# _driver_readable: the largest logged file the driver reads with
-# pyarrow (read_keys_local, _discover_touched, the driver-side MERGE
-# rewrite) — C-speed column decode + set probes, cheap per row.
+# _read_local, the one driver-side reader of live table files (key
+# lookups, touched-file discovery, the driver-side keyed rewrite, state
+# reads): the largest logged file it reads with pyarrow — C-speed
+# column decode + set probes, cheap per row.
 BLOOM_DRIVER_MAX_ROWS = 250_000
 
-# _discover_touched small path: exact touched-file discovery runs driver-side
-# (pyarrow key-column reads, no Spark job) when the candidate set is at
-# most this many files, each under BLOOM_DRIVER_MAX_ROWS rows; above
-# either bound the distributed semi-join discovery decides.
+# _read_local: the most files one driver-side read takes, each under
+# BLOOM_DRIVER_MAX_ROWS rows; above either bound the caller's
+# distributed read decides (for _discover_touched, the semi-join).
 MERGE_DRIVER_DISCOVERY_MAX_FILES = 64
-
-
-def _driver_readable(files: list[dict]) -> bool:
-    """True iff the driver may read ``files`` with pyarrow: at most
-    MERGE_DRIVER_DISCOVERY_MAX_FILES of them, each with a logged row
-    count of at most BLOOM_DRIVER_MAX_ROWS. ``rows`` is optional in
-    legacy log entries — missing means unknown size, which must mean
-    the distributed fallback, never a KeyError."""
-    return len(files) <= MERGE_DRIVER_DISCOVERY_MAX_FILES and all(
-        "rows" in a and a["rows"] <= BLOOM_DRIVER_MAX_ROWS for a in files
-    )
 
 
 def _sql_literal(v) -> str:
@@ -652,6 +641,8 @@ def _sql_literal(v) -> str:
 
     if isinstance(v, bool):
         return "true" if v else "false"
+    if isinstance(v, float) and (v != v or abs(v) == float("inf")):
+        return f"CAST('{v}' AS DOUBLE)"  # 'nan', 'inf', '-inf' are no literals
     if isinstance(v, (int, float)):
         return str(v)
     if isinstance(v, datetime.datetime):
@@ -660,6 +651,18 @@ def _sql_literal(v) -> str:
         return f"DATE '{v}'"
     s = str(v).replace("\\", "\\\\").replace("'", "\\'")
     return f"'{s}'"
+
+
+def _sql_in(col: str, values) -> str:
+    """``col IN (...)`` over ``values`` as ONE SQL string: Column.isin
+    pays a py4j round trip per value (4 vCPUs: ~0.4 ms, 5 s at 14k keys;
+    4.3-5.0 s to build a read() filtering 10k tombstones, 0.5 s as one
+    string). None values are dropped — SQL IN never matches a NULL, and
+    _sql_literal(None) would render the string 'None' — and no values
+    left renders FALSE. Callers that must keep NULL keys at a NOT say so
+    themselves: NOT (NULL IN (...)) is NULL, which where() drops."""
+    vals = ", ".join(_sql_literal(v) for v in values if v is not None)
+    return f"`{col}` IN ({vals})" if vals else "FALSE"
 
 
 def _json_stat(v, side: str | None = None):
@@ -1391,11 +1394,10 @@ def materialize_tombstones(spark: SparkSession, table: str) -> int:
     # otherwise make this destructive rewrite delete by the wrong
     # column. Tombstones pending implies delete_keys_deferred found a
     # key, so it cannot miss.
-    vals = ", ".join(_sql_literal(k) for k in pend)
     return _delete_where(
         spark,
         snap,
-        f"{snap.require_key()} in ({vals})",
+        _sql_in(snap.require_key(), pend),
         clear_tombstones=True,
         # bounds the discovery scan via blooms + key stats: O(candidate
         # files), not O(table) — the erasure-request batch shape
@@ -2032,86 +2034,20 @@ def read_keys(
         if snap.schema is not None:
             return spark.createDataFrame([], snap.schema)
         return _read_live(spark, snap).where(F.lit(False))
-    k = F.col(snap.require_key())
-    return _read_files(spark, snap, files).where(k.isin(list(keys)))
-
-
-def read_keys_local(
-    spark: SparkSession, table: str, keys: list, columns: list[str]
-) -> list[dict] | None:
-    """Driver-side twin of :func:`read_keys` for churn-scale lookups:
-    prune files by key stats + bloom (_files_maybe_containing), then read
-    the requested columns locally via pyarrow and filter to the key set
-    — zero Spark jobs. Returns None whenever the full read() contract is
-    actually needed, and the caller must fall back to the distributed
-    read: pending tombstones (the anti-filter must apply), a
-    non-identity column mapping, any pruned file above the driver dials,
-    or a pre-evolution file missing a requested column. Sound because
-    _files_maybe_containing never drops a key holder and the gates refuse
-    every table state where a raw file read could differ from read()."""
-    snap = _snapshot(table)
-    if snap.tombstones or snap.mapping:
-        return None
-    # key-type gate (round-14 review): pyarrow-decoded values must
-    # compare EQUAL to Spark-collected ones (_DRIVER_KEY_TYPES) — a
-    # timestamp key (pyarrow UTC datetimes vs Spark session-local naive)
-    # would silently match nothing and report every key as absent
-    # instead of falling back
-    kcol = snap.require_key()
-    sch = snap.schema
-    ktype = (
-        next((f.dataType.typeName() for f in sch.fields if f.name == kcol), None)
-        if sch is not None
-        else None
-    )
-    if ktype not in _DRIVER_KEY_TYPES:
-        return None
-    files = _files_maybe_containing(spark, snap, list(keys))
-    if not _driver_readable(files):
-        return None
-    if kcol not in columns:
-        columns = [kcol] + list(columns)
-    keyset = set(keys)
-    out: list[dict] = []
-    for a in files:
-        try:
-            tbl = pq.read_table(_abs(table, a["file"]), columns=list(columns))
-        except Exception:
-            return None  # pre-evolution file lacking a column, etc.
-        cols = {c: tbl.column(c).to_pylist() for c in columns}
-        for i in range(tbl.num_rows):
-            if cols[kcol][i] in keyset:
-                out.append({c: cols[c][i] for c in columns})
-    return out
+    return _read_files(spark, snap, files).where(_sql_in(snap.require_key(), keys))
 
 
 def distinct_values_local(table: str, col: str) -> set | None:
-    """Driver-side distinct values of one column across a table's live
-    files via pyarrow — zero Spark jobs — for METADATA-SCALE state
-    tables (streaming sketch/replay-guard tables: a few small files).
-    Returns None whenever the full read() contract is needed and the
-    caller must fall back to a distributed read: pending tombstones, a
-    non-identity column mapping, too many / too large / unsized files,
-    or a file missing the column (pre-evolution). Round 14: the
-    streaming sketch ingests burned one read+anti-join Spark job per
-    micro-batch just to test replay of an integer batch tag."""
+    """Distinct values of one column of a METADATA-SCALE state table
+    (streaming sketch / replay-guard tables: a few small files) read
+    driver-side by :func:`_read_local` — zero Spark jobs; None when that
+    reader refuses the table and the caller must read it distributed.
+    Round 14: the streaming sketch ingests burned one read+anti-join
+    Spark job per micro-batch just to test replay of an integer batch
+    tag."""
     snap = _snapshot(table)
-    if snap.tombstones or snap.mapping:
-        return None
-    files = snap.files
-    if not _driver_readable(files):
-        return None
-    out: set = set()
-    for a in files:
-        try:
-            out.update(
-                pq.read_table(_abs(table, a["file"]), columns=[col])
-                .column(0)
-                .to_pylist()
-            )
-        except Exception:
-            return None
-    return out
+    got = _read_local(snap, snap.files, [col])
+    return None if got is None else {r[0] for rows in got for r in rows}
 
 
 def read_pruned_multi(
@@ -2192,9 +2128,64 @@ def _read_files(
         # merge-on-read: un-materialized deletes filter at scan time.
         # NULL-key rows pass: NOT(NULL IN (...)) is NULL under
         # three-valued logic and where() would silently drop them
-        k = F.col(snap.require_key())
-        df = df.where(k.isNull() | ~k.isin(snap.tombstones))
+        k = snap.require_key()
+        df = df.where(f"`{k}` IS NULL OR NOT ({_sql_in(k, snap.tombstones)})")
     return df
+
+
+def _read_local(
+    snap: _Snapshot, files: list[dict], columns: list[str], keep=None
+) -> list[list[tuple]] | None:
+    """THE driver-side reader of live table files, :func:`_read_files`'
+    pyarrow twin: each of ``files``' rows as a tuple in ``columns``
+    order, one list per file — zero Spark jobs. ``keep`` (a predicate on
+    such a tuple) drops rows as each file decodes, so a lookup holds
+    only its hits.
+
+    The read contract is read()'s: physical names map back to logical
+    ones through ``snap.mapping``, and a column a file lacks reads NULL
+    (a pre-evolution file; or a column the log schema lacks, which an
+    evolving MERGE is adding — the collision guard keeps it off every
+    retired physical name). Returns None, and the caller takes its
+    distributed read, whenever the driver may not read the files:
+
+    - tombstones are pending (their anti-filter is the distributed
+      read's);
+    - the table predates schema tracking (no log schema to read by);
+    - a requested column's type has no value-exact pyarrow twin
+      (:func:`_pa_type`, the pyarrow writer's rule: a timestamp decodes
+      UTC-aware where Spark collects it session-local);
+    - more than MERGE_DRIVER_DISCOVERY_MAX_FILES files, or one whose
+      logged row count is above BLOOM_DRIVER_MAX_ROWS or missing (a
+      legacy entry: unknown size must mean the distributed read);
+    - a pyarrow read fails."""
+    if (
+        snap.tombstones
+        or snap.schema is None
+        or len(files) > MERGE_DRIVER_DISCOVERY_MAX_FILES
+        or not all("rows" in a and a["rows"] <= BLOOM_DRIVER_MAX_ROWS for a in files)
+    ):
+        return None
+    types = {f.name: f.dataType for f in snap.schema.fields}
+    try:
+        for c in columns:
+            if c in types:
+                _pa_type(types[c])
+    except KeyError:
+        return None
+    phys = [snap.mapping.get(c, c) for c in columns]
+    out = []
+    for a in files:
+        try:
+            with pq.ParquetFile(_abs(snap.table, a["file"])) as f:
+                present = set(f.schema_arrow.names)
+                t = f.read(columns=[p for p in phys if p in present])
+        except Exception:
+            return None
+        n = t.num_rows
+        rows = zip(*[t.column(p).to_pylist() if p in present else [None] * n for p in phys])
+        out.append([r for r in rows if keep(r)] if keep else list(rows))
+    return out
 
 
 def read_pruned(
@@ -2263,11 +2254,12 @@ def _discover_touched(
        keys only: above that the 1024-bit masks saturate and prune
        nothing.
     3. Find the files ACTUALLY containing source keys — EXACTLY, on both
-       paths: pyarrow key-column reads against the probed key set when
-       the driver may read the candidates (no Spark job; a disjoint-key
-       micro-batch stays a pure append), else a semi-join of the
-       candidates (tagged with input_file_name) against the source keys,
-       collecting the distinct file names (O(files), not O(rows))."""
+       paths: the candidates' key column read by :func:`_read_local`
+       against the probed key set when that reader admits them (no
+       Spark job; a disjoint-key micro-batch stays a pure append), else
+       a semi-join of the candidates (tagged with input_file_name)
+       against the source keys, collecting the distinct file names
+       (O(files), not O(rows))."""
     n = STAGE_DRIVER_MAX_ROWS
     driver_key = source.schema[key].dataType.typeName() in _DRIVER_KEY_TYPES
     if driver_key and rows is not None and len(rows) <= n:
@@ -2309,18 +2301,10 @@ def _discover_touched(
         candidates = _may_hold(candidates, key, key, points)
 
     touched = [] if not candidates else None
-    if candidates and small and driver_key and _driver_readable(candidates):
-        # key columns are rename-protected (identity-mapped), so the
-        # physical column name IS the logical one
-        touched = []
-        for a in candidates:
-            try:
-                col = pq.read_table(_abs(snap.table, a["file"]), columns=[key])
-            except Exception:
-                touched = None
-                break
-            if any(v in keys for v in col.column(0).to_pylist()):
-                touched.append(a)
+    if candidates and small and driver_key:
+        hits = _read_local(snap, candidates, [key], keep=lambda r: r[0] in keys)
+        if hits is not None:
+            touched = [a for a, h in zip(candidates, hits) if h]
     if touched is None:
         # log-schema read: a mixed pre-/post-evolution candidate set must
         # not take an arbitrary footer as its schema
@@ -2389,43 +2373,30 @@ def _keyed_rewrite(
 
     :func:`_plan_commit`, asked with ``plan_schema`` (the source's
     schema before any evolution cast), picks the writer: when the full
-    rows are in hand, the driver may read the touched files and the row
-    bound is admitted, the merged rows are assembled in Python and
-    staged with :func:`_stage_rows_local` — zero Spark jobs. Otherwise
-    the kept rows (an IN filter folded into the scan when the keys are
-    in hand, an anti-join against the source keys when not) union
-    the source and stage through :func:`_stage_rewrite`.
+    rows are in hand, the row bound is admitted and :func:`_read_local`
+    reads the touched files' kept rows, the merged rows are assembled
+    in Python and staged with :func:`_stage_rows_local` — zero Spark
+    jobs. Otherwise the kept rows (an IN filter folded into the scan
+    when the keys are in hand, an anti-join against the source keys
+    when not) union the source and stage through :func:`_stage_rewrite`.
 
     Commits ``entry`` (the operation name, any extra fields and its
     ``stats``) with the adds, the removes and the touched/untouched
     counts at ``snap.version + 1``, which it returns."""
     touched = d.touched
+    kept_rows = None
     if (
         d.rows is not None
         and d.bound is not None
-        and _driver_readable(touched)
         and _plan_commit(snap, plan_schema, key, None, d.bound)
     ):
-        mapping = snap.mapping
-        names = [f.name for f in source.schema.fields]
-        merged_rows: list = []
-        for a in touched:
-            t = pq.read_table(_abs(snap.table, a["file"]))
-            present = set(t.column_names)
-            n = t.num_rows
-            colvals = [
-                (
-                    t.column(mapping.get(c, c)).to_pylist()
-                    if mapping.get(c, c) in present
-                    else [None] * n  # pre-evolution file: null-fill
-                )
-                for c in names
-            ]
-            kvals = colvals[names.index(key)]
-            for i in range(n):
-                if kvals[i] is None or kvals[i] not in d.keys:
-                    merged_rows.append(tuple(cv[i] for cv in colvals))
-        merged_rows.extend(d.rows)
+        names = source.schema.fieldNames()
+        ki = names.index(key)
+        kept_rows = _read_local(
+            snap, touched, names, keep=lambda r: r[ki] is None or r[ki] not in d.keys
+        )
+    if kept_rows is not None:
+        merged_rows = [r for rows in kept_rows for r in rows] + list(d.rows)
         adds = _stage_rows_local(snap, merged_rows, source.schema, key)
     else:
         merged = source
@@ -2436,11 +2407,8 @@ def _keyed_rewrite(
             if d.keys is None:
                 kept = kept.join(source.select(key).distinct(), key, "left_anti")
             elif d.keys:  # (no keys: only NULL-keyed winners, all rows kept)
-                # one SQL IN over the keys in hand: Column.isin pays a
-                # py4j round trip per key (~0.4 ms: 5 s at 14k keys).
-                # SQL three-valued logic would drop NULL keys at NOT IN.
-                vals = ", ".join(_sql_literal(k) for k in d.keys)
-                kept = kept.where(f"`{key}` IS NULL OR `{key}` NOT IN ({vals})")
+                # SQL three-valued logic would drop NULL keys at NOT IN
+                kept = kept.where(f"`{key}` IS NULL OR NOT ({_sql_in(key, d.keys)})")
             # allowMissingColumns only under declared evolution: an
             # UNdeclared mismatch must keep failing loudly
             merged = kept.unionByName(source, allowMissingColumns=allow_missing)
@@ -3368,7 +3336,10 @@ def _delete_where(
     n_deleted = 0
     if touched:
         tdf = _read_files(spark, snap, touched, with_tombstones=False)
-        kept = tdf.where(f"not ({predicate})")
+        # DELETE drops the rows whose predicate is TRUE: a NULL-key row
+        # under `k IN (...)` is NULL there, and `not (...)` alone would
+        # drop it too
+        kept = tdf.where(f"NOT coalesce(({predicate}), false)")
         n_kept = kept.count()
         n_deleted = sum(a["rows"] for a in touched) - n_kept
         if n_kept:

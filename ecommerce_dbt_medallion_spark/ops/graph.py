@@ -274,7 +274,8 @@ def _maintain_driver_side(
     """Round 14: the WHOLE incremental label maintenance runs
     driver-side when the batch is churn-scale — one bounded probe job
     over the raw edges, a zero-job point lookup of the endpoints'
-    stored labels (lakehouse.read_keys_local), then contraction,
+    stored labels (lakehouse._read_local over the files their key
+    stats and blooms admit), then contraction,
     union-find mini-CC, relabel-map and the merge SOURCE all in plain
     Python; only the final keyed MERGE touches Spark. The pre-round-14
     shape paid ~6 fixed-overhead Spark jobs (eager checkpoints of
@@ -284,9 +285,9 @@ def _maintain_driver_side(
     (BENCH_SUMMARY maintenance_split r13/r14).
 
     Returns the new table version, or None to fall back to the
-    distributed body (probe saturated; table state needs the full read
-    contract — tombstones / column mapping / oversized files; or the
-    relabel read exceeds the driver dials). Both paths are pinned equal
+    distributed body (probe saturated, or lakehouse._read_local refuses
+    the endpoint lookup or the relabel read — both read one snapshot
+    of the labels table). Both paths are pinned equal
     by the from-scratch CC invariant test after every batch and the
     dial-parametrized both-paths tests."""
     from ecommerce_dbt_medallion_spark import lakehouse
@@ -307,15 +308,18 @@ def _maintain_driver_side(
         return vs[-1] if vs else -1
     nodes = {a for ab in pairs for a in ab}
 
-    exists = bool(lakehouse.versions(labels_table))
+    snap = lakehouse._head_or_new(labels_table)
+    exists = snap.version >= 0
+    cols = [id_col, "cluster_id"]
     stored: dict = {}
     if exists:
-        rows = lakehouse.read_keys_local(
-            spark, labels_table, list(nodes), [id_col, "cluster_id"]
+        hits = lakehouse._read_local(
+            snap, lakehouse._files_maybe_containing(spark, snap, list(nodes)),
+            cols, keep=lambda r: r[0] in nodes,
         )
-        if rows is None:
+        if hits is None:
             return None
-        stored = {r[id_col]: r["cluster_id"] for r in rows}
+        stored = dict(r for rows in hits for r in rows)
 
     sup = {n: stored.get(n, n) for n in nodes}
     sup_edges = {(sup[a], sup[b]) for a, b in pairs if sup[a] != sup[b]}
@@ -328,29 +332,18 @@ def _maintain_driver_side(
         # stored rows of MERGED components relabel too: admit files by
         # their cluster_id stats (conservative keep when absent), read
         # them locally, fold by min like the distributed groupBy
-        admitted = lakehouse._may_hold(
-            lakehouse.live_files(labels_table), id_col, "cluster_id",
-            [(s, s) for s in affected],
+        hits = lakehouse._read_local(
+            snap,
+            lakehouse._may_hold(
+                snap.files, id_col, "cluster_id", [(s, s) for s in affected]
+            ),
+            cols, keep=lambda r: r[1] in affected,
         )
-        if not lakehouse._driver_readable(admitted):
+        if hits is None:
             return None
-        import pyarrow.parquet as _pq
-
-        for a in admitted:
-            try:
-                tbl = _pq.read_table(
-                    lakehouse._abs(labels_table, a["file"]),
-                    columns=[id_col, "cluster_id"],
-                )
-            except Exception:
-                return None
-            ids = tbl.column(id_col).to_pylist()
-            cls = tbl.column("cluster_id").to_pylist()
-            for i, c in enumerate(cls):
-                if c in affected:
-                    d = ids[i]
-                    nl = affected[c]
-                    src_rows[d] = min(src_rows[d], nl) if d in src_rows else nl
+        for d, c in (r for rows in hits for r in rows):
+            nl = affected[c]
+            src_rows[d] = min(src_rows[d], nl) if d in src_rows else nl
 
     rows = sorted(src_rows.items())
     src = spark.createDataFrame(rows, f"{id_col} {dtype}, cluster_id {dtype}")

@@ -385,12 +385,8 @@ def incremental_mart_refresh(
     if refreshed.limit(1).count() > 0:
         lakehouse.merge_into(spark, mart_table, refreshed, group_key)
     if gone:
-        non_null = [v for v in gone if v is not None]
-        preds = []
-        if non_null:
-            vals = ", ".join(lakehouse._sql_literal(v) for v in non_null)
-            preds.append(f"{group_key} in ({vals})")
-        if len(non_null) < len(gone):
-            preds.append(f"{group_key} is null")
-        lakehouse.delete_where(spark, mart_table, " or ".join(preds))
+        pred = lakehouse._sql_in(group_key, gone)
+        if None in gone:
+            pred += f" OR `{group_key}` IS NULL"
+        lakehouse.delete_where(spark, mart_table, pred)
     return to_version

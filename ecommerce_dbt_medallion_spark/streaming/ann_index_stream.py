@@ -210,11 +210,10 @@ def ann_index_search(
         .collect()
     )
     snap = lakehouse._snapshot(codes_table)
-    by_file: dict[str, dict] = {}
-    for lid in probe_lists:
-        for a in lakehouse._pruned_files(snap, {"list_id": (lid, lid)}):
-            by_file[a["file"]] = a
-    codes = lakehouse._read_files(spark, snap, list(by_file.values())).where(
+    files = lakehouse._may_hold(
+        snap.files, snap.key, "list_id", [(lid, lid) for lid in probe_lists]
+    )
+    codes = lakehouse._read_files(spark, snap, files).where(
         F.col("list_id").isin([int(x) for x in probe_lists])
     )
     return _ivfpq_search(queries, coarse, codebooks, codes)

@@ -458,6 +458,22 @@ def test_plan_commit_refuses_timestamp_and_decimal_schemas(
     assert plain_full is True and plain_rows is not None
 
 
+def _n_jobs(spark, fn) -> int:
+    """Spark jobs ``fn()`` runs, counted through a job group on the
+    status tracker."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"zero-job-pin-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_driver_commits_run_zero_spark_jobs(spark, tmp_path):
     """The benchmark never takes the driver write path (its merges touch
     too many rows), so this pins its whole point: create_or_replace and
@@ -465,19 +481,9 @@ def test_driver_commits_run_zero_spark_jobs(spark, tmp_path):
     ``source_rows`` run ZERO Spark jobs. Jobs are counted through a job
     group on the status tracker; the same merge without rows in hand is
     the control that shows the counter sees jobs at all."""
-    import uuid
-
-    sc = spark.sparkContext
 
     def n_jobs(fn):
-        group = f"zero-job-pin-{uuid.uuid4().hex}"
-        sc.setJobGroup(group, group)
-        try:
-            fn()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        return len(sc.statusTracker().getJobIdsForGroup(group))
+        return _n_jobs(spark, fn)
 
     path = str(tmp_path / "z")
     ddl = "id long, val string"
@@ -502,6 +508,45 @@ def test_driver_commits_run_zero_spark_jobs(spark, tmp_path):
     assert (got[5], got[6], got[120], got[500], got[501]) == (
         "u5", "u6", "u120", "new", "new2"
     )
+
+
+def test_local_reads_run_zero_spark_jobs(spark, tmp_path):
+    """The driver-side reads of a small table run ZERO Spark jobs:
+    graph's churn-scale label maintenance (its endpoint lookup and its
+    relabel read, both through lakehouse._read_local; the edge probe
+    reads a local relation) and drain.stored_values, the replay guard
+    of every batch-tagged state commit. A distributed read is the
+    control that shows the counter sees jobs at all."""
+    from ecommerce_dbt_medallion_spark.ops import graph
+    from ecommerce_dbt_medallion_spark.streaming import drain
+
+    labels = str(tmp_path / "labels")
+
+    def maintain(edges):
+        vals = ", ".join(f"({a}L, {b}L)" for a, b in edges)
+        edf = spark.sql(f"SELECT * FROM VALUES {vals} AS t(doc_a, doc_b)")
+        v = graph._maintain_driver_side(spark, labels, edf, "doc_id")
+        assert v is not None  # the driver body ran, no fallback
+
+    assert _n_jobs(spark, lambda: maintain([(1, 2), (3, 4), (8, 9)])) == 0
+    # (2, 3) merges two stored components: 4's stored label 3 relabels
+    assert _n_jobs(spark, lambda: maintain([(2, 3)])) == 0
+    got = {r["doc_id"]: r["cluster_id"] for r in lh.read(spark, labels).collect()}
+    assert got == {1: 1, 2: 1, 3: 1, 4: 1, 8: 8, 9: 8}
+
+    state = str(tmp_path / "state")
+    for b in range(3):
+        rows = [(b, f"cell{i}") for i in range(4)]
+        lh.append(
+            spark, state, spark.createDataFrame(rows, "batch_id long, cell string"),
+            local_rows=rows,
+        )
+    seen = []
+    assert _n_jobs(spark, lambda: seen.append(
+        drain.stored_values(spark, state, "batch_id")
+    )) == 0
+    assert seen == [{0, 1, 2}]
+    assert _n_jobs(spark, lambda: lh.read(spark, state).collect()) >= 1
 
 
 def test_stage_microbatch_empty_batch_with_timestamp(spark, tmp_path):
@@ -1560,6 +1605,130 @@ def test_null_key_rows_survive_pending_tombstones(spark, tmp_path):
     got = lh.read(spark, path)
     assert got.count() == 9, "exactly the tombstoned key hidden"
     assert got.where(F.col("id").isNull()).count() == 2
+
+
+def test_key_filters_render_one_sql_list(spark, tmp_path, monkeypatch):
+    """read()'s tombstone anti-filter and read_keys' key filter render
+    their key list as ONE SQL string (lakehouse._sql_in): Column.isin
+    pays a py4j round trip per key, ~5 s on 4 vCPUs just to build a
+    read() over 10k pending tombstones. With isin made to raise, both
+    still return the right rows; NULL-key rows survive the tombstones,
+    and a None tombstone (a string key admits one) hides no other
+    row."""
+
+    def no_isin(*a, **kw):
+        raise AssertionError("Column.isin: one py4j round trip per key")
+
+    path = str(tmp_path / "sqlin")
+    rows = [(i, i * 10) for i in range(20)] + [(None, -1), (None, -2)]
+    lh.create_or_replace(
+        spark, path, spark.createDataFrame(rows, "id long, val long"), key="id"
+    )
+    lh.delete_keys_deferred(spark, path, [3, 7, 500])
+    spath = str(tmp_path / "sqlin_str")
+    srows = [("x", 1), (None, 2), ("y", 3), ("it's", 4)]
+    lh.create_or_replace(
+        spark, spath, spark.createDataFrame(srows, "k string, v long"), key="k"
+    )
+    lh.delete_keys_deferred(spark, spath, [None, "it's"])
+    # NaN and infinity have no SQL literal: they render as casts
+    fpath = str(tmp_path / "sqlin_double")
+    frows = [(1.5, 1), (float("nan"), 2), (float("inf"), 3), (-2.0, 4)]
+    lh.create_or_replace(
+        spark, fpath, spark.createDataFrame(frows, "k double, v long"), key="k"
+    )
+    lh.delete_keys_deferred(spark, fpath, [float("nan"), float("inf")])
+    # the class columns are made of (pyspark.sql.Column is only its base
+    # on pyspark 4)
+    monkeypatch.setattr(type(F.col("id")), "isin", no_isin)
+
+    def got(df):
+        return sorted(map(tuple, df.collect()), key=str)
+
+    assert got(lh.read(spark, path)) == sorted(
+        [r for r in rows if r[0] not in (3, 7)], key=str
+    )
+    assert got(lh.read_keys(spark, path, [2, 3, 19, None])) == [(19, 190), (2, 20)]
+    assert got(lh.read(spark, spath)) == sorted(srows[:3], key=str)
+    assert got(lh.read_keys(spark, spath, ["y", "it's"])) == [("y", 3)]
+    assert got(lh.read(spark, fpath)) == [(-2.0, 4), (1.5, 1)]
+
+
+def test_delete_keeps_rows_whose_predicate_is_null(spark, tmp_path):
+    """DELETE drops the rows whose predicate is TRUE. A NULL-key row is
+    NULL under ``id IN (...)``, so a rewrite of its file must keep it,
+    through delete_where and through materialize_tombstones."""
+    path = str(tmp_path / "delnull")
+    df = spark.createDataFrame([(1, "a"), (None, "n"), (2, "b")], "id long, v string")
+    lh.create_or_replace(spark, path, df.coalesce(1), key="id")
+
+    def got():
+        return sorted(map(tuple, lh.read(spark, path).collect()), key=str)
+
+    v = lh.delete_where(spark, path, "id in (1)")
+    assert got() == [(2, "b"), (None, "n")]
+    assert lh._read_entry(path, v)["stats"]["rows_deleted"] == 1
+    lh.delete_keys_deferred(spark, path, [2])
+    v = lh.materialize_tombstones(spark, path)
+    assert got() == [(None, "n")]
+    assert lh._read_entry(path, v)["stats"]["rows_deleted"] == 1
+
+
+def test_read_local_matches_read_files(spark, tmp_path):
+    """lakehouse._read_local, the one driver-side reader, applies
+    read()'s contract: on a table with a renamed column, a float→double
+    widening and an additive evolution that leaves pre-evolution files,
+    each file's rows equal _read_files' distributed read of it."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "reader")
+    base = spark.createDataFrame(
+        [(i, f"s{i}", float(i)) for i in range(6)], "id long, s string, x double"
+    )
+    lh.create_or_replace(spark, path, base.repartitionByRange(2, "id"), key="id")
+    lh.rename_column(path, "s", "label")
+    # a float source into the double column: the append widens it
+    lh.append(
+        spark, path,
+        spark.createDataFrame([(10, "t", 0.1)], "id long, label string, x float"),
+    )
+    # additive evolution; the merge's driver rewrite reads through the
+    # same reader (the new column null-fills for the kept rows)
+    lh.merge_into(
+        spark, path,
+        spark.createDataFrame(
+            [(2, "u", 2.5, 7), (20, "v", None, 8)],
+            "id long, label string, x double, extra long",
+        ),
+        "id", merge_schema=True,
+    )
+    snap = lh._snapshot(path)
+    assert snap.mapping == {"label": "s"}
+    cols = snap.schema.fieldNames()
+    assert cols == ["id", "label", "x", "extra"]
+    assert any(
+        "extra" not in pq.read_schema(os.path.join(path, "data", a["file"])).names
+        for a in snap.files
+    )
+    got = lh._read_local(snap, snap.files, cols)
+    assert got is not None and len(got) == len(snap.files)
+    for a, rows in zip(snap.files, got):
+        want = lh._read_files(spark, snap, [a]).collect()
+        assert sorted(rows, key=str) == sorted(map(tuple, want), key=str)
+    flat = {r[0]: r for rows in got for r in rows}
+    assert flat[2] == (2, "u", 2.5, 7) and flat[3] == (3, "s3", 3.0, None)
+    assert flat[10][2] == 0.10000000149011612
+    # a column outside the value-exact pyarrow set refuses the read
+    ts = str(tmp_path / "ts")
+    lh.create_or_replace(
+        spark, ts, spark.sql("select 1L as id, timestamp'2026-01-01 12:00' as t"),
+        key="id",
+    )
+    tsnap = lh._snapshot(ts)
+    assert lh._read_local(tsnap, tsnap.files, ["id"]) is not None
+    assert lh._read_local(tsnap, tsnap.files, ["id", "t"]) is None
 
 
 def test_date_key_commits_and_prunes(spark, tmp_path):
