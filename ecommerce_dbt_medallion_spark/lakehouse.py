@@ -24,13 +24,14 @@ Stores", VLDB 2020):
 
 Commit protocol (Delta's optimistic concurrency): every operation folds
 the log ONCE at its start into a :class:`_Snapshot` at version N
-(:func:`_snapshot`), reads only from that fold, and commits its entry
-at N+1 with a put-if-absent link (:func:`_commit`). Data files land
-first; the entry is published last, so readers see all of a commit or
-none of it. When another writer got N+1 first, an add-only entry
-(append, staged append) rebases past the winner if every intervening
-commit is benign (:func:`_commit_rebase`); any other operation aborts
-with the typed :class:`ConcurrentWriteConflict` (:func:`_commit_exclusive`)
+(:func:`_snapshot`), reads only from that fold, and commits through ONE
+function, :func:`_commit_op`, which builds the entry at N+1 and
+publishes it with a put-if-absent link (:func:`_commit`). Data files
+land first; the entry is published last, so readers see all of a
+commit or none of it. When another writer got N+1 first,
+:func:`_commit_op` rebases an add-only operation (APPEND, APPEND
+STAGED) past the winner if every intervening commit is benign; any
+other operation aborts with the typed :class:`ConcurrentWriteConflict`
 and must be re-run against the new HEAD.
 """
 
@@ -135,6 +136,8 @@ def _fold_entry(state: dict, e: dict) -> dict:
         e.get("operation", "")
     ).startswith("CLONE "):
         state["partition_by"] = e.get("partition_by")
+        # so does its Z-order spec (CLONE re-sets the source's below)
+        state["zorder_by"] = []
         # a table redefinition resets the column mapping unless the
         # entry carries one (CLONE carries the source's)
         state["mapping"] = dict(e.get("column_mapping") or {})
@@ -275,6 +278,17 @@ class _Snapshot(NamedTuple):
             raise ValueError(f"table {self.table} has no declared key")
         return self.key
 
+    def require_no_tombstones(self, op: str) -> None:
+        """Writers of new rows refuse while deferred deletes are pending:
+        a key tombstone cannot tell a pre-delete row from a re-inserted
+        one."""
+        if self.tombstones:
+            raise ValueError(
+                "table has pending deferred deletes; run materialize_tombstones "
+                f"before {op} (a key tombstone cannot distinguish a pre-delete "
+                "row from a re-inserted one)"
+            )
+
 
 def _snapshot(table: str, version: int | None = None) -> _Snapshot:
     """THE fold: the table state as of ``version`` (inclusive; default
@@ -350,7 +364,7 @@ class ConcurrentWriteConflict(CommitConflict):
     class. The caller must re-run the whole operation against current
     table state. Contrast with plain :class:`CommitConflict`, which
     add-only transactions recover from automatically via
-    :func:`_commit_rebase` (Delta's ConcurrentAppend rebase)."""
+    :func:`_commit_op` (Delta's ConcurrentAppend rebase)."""
 
 
 # Log operations an ADD-ONLY transaction can safely rebase across: they
@@ -364,6 +378,7 @@ _APPEND_REBASE_SAFE_OPS = {
     "APPEND STAGED",
     "MERGE",
     "OPTIMIZE",
+    "OPTIMIZE INCREMENTAL",
     "DELETE",
     "MATERIALIZE TOMBSTONES",
     "PUBLISH",
@@ -395,58 +410,61 @@ def _append_rebase_conflict(e: dict, expected_schema: str | None) -> str | None:
     return None
 
 
-def _commit_rebase(table: str, entry: dict, max_retries: int = 10) -> int:
-    """Optimistic commit for ADD-ONLY entries (``remove == []``): on a
-    version collision, classify every intervening commit; if all are
-    rebase-safe, bump the version and re-commit (Delta's
-    ConcurrentAppend resolution — disjoint writers serialize instead of
-    failing), else raise :class:`ConcurrentWriteConflict`."""
-    if entry.get("remove"):
-        raise ValueError("_commit_rebase is only sound for add-only entries")
-    expected_schema = entry.get("schema_json")
-    attempts = 0
-    while True:
+# Lost commit races an add-only commit rebases across before giving up.
+_REBASE_MAX_RETRIES = 10
+
+
+def _commit_op(snap: _Snapshot, operation: str, add=(), remove=(), **fields) -> int:
+    """THE commit of every write operation (Delta's
+    OptimisticTransaction): builds the log entry at ``snap.version + 1``
+    from the operation, its file actions and its own ``fields``,
+    publishes it with the put-if-absent :func:`_commit` and returns the
+    committed version.
+
+    On a lost race, an add-only operation (APPEND, APPEND STAGED)
+    classifies every intervening commit; if all are rebase-safe it bumps
+    its version and re-commits (Delta's ConcurrentAppend resolution:
+    disjoint writers serialize instead of failing). Every other
+    operation READ table state it then rewrites or redefines, so any
+    concurrent commit may have changed what it read (files it rewrites,
+    rows a predicate matched, state it validated): the collision is a
+    typed :class:`ConcurrentWriteConflict`, never a blind retry (Delta's
+    ConcurrentDeleteRead conservatism)."""
+    table = snap.table
+    entry = {
+        "version": snap.version + 1,
+        "timestamp": time.time(),
+        "operation": operation,
+        "add": list(add),
+        "remove": list(remove),
+        **fields,
+    }
+    for _ in range(_REBASE_MAX_RETRIES + 1):
         try:
             _commit(table, entry)
             return entry["version"]
-        except ConcurrentWriteConflict:
-            raise
-        except CommitConflict:
-            vs = versions(table)
-            for v in vs:
-                if v < entry["version"]:
-                    continue
-                reason = _append_rebase_conflict(_read_entry(table, v), expected_schema)
-                if reason is not None:
-                    raise ConcurrentWriteConflict(
-                        f"{entry.get('operation')} on {table} aborted: {reason}; "
-                        "re-run against current table state"
-                    ) from None
-            attempts += 1
-            if attempts > max_retries:
+        except CommitConflict as ex:
+            if operation not in ("APPEND", "APPEND STAGED"):
                 raise ConcurrentWriteConflict(
-                    f"{entry.get('operation')} on {table} lost the commit race "
-                    f"{attempts} times; giving up"
+                    f"{operation} on {table} aborted: {ex}; the snapshot "
+                    "this transaction read was invalidated by a concurrent commit — "
+                    "re-run the operation against current table state"
                 ) from None
-            entry["version"] = vs[-1] + 1
-
-
-def _commit_exclusive(table: str, entry: dict) -> None:
-    """Commit for transactions that READ table state they then rewrite
-    or redefine (MERGE, OPTIMIZE, DELETE, RESTORE, REPLACE, constraint
-    and tombstone changes): ANY concurrent commit may have changed what
-    this transaction read — files it rewrites, rows a predicate
-    matched, state it validated — so a version collision is always a
-    typed abort, never a blind retry (Delta's ConcurrentDeleteRead
-    conservatism)."""
-    try:
-        _commit(table, entry)
-    except CommitConflict as ex:
-        raise ConcurrentWriteConflict(
-            f"{entry.get('operation')} on {table} aborted: {ex}; the snapshot "
-            "this transaction read was invalidated by a concurrent commit — "
-            "re-run the operation against current table state"
-        ) from None
+        vs = versions(table)
+        for v in vs:
+            if v < entry["version"]:
+                continue
+            reason = _append_rebase_conflict(_read_entry(table, v), entry.get("schema_json"))
+            if reason is not None:
+                raise ConcurrentWriteConflict(
+                    f"{operation} on {table} aborted: {reason}; "
+                    "re-run against current table state"
+                )
+        entry["version"] = vs[-1] + 1
+    raise ConcurrentWriteConflict(
+        f"{operation} on {table} lost the commit race "
+        f"{_REBASE_MAX_RETRIES + 1} times; giving up"
+    )
 
 
 def _commit(table: str, entry: dict) -> None:
@@ -459,9 +477,10 @@ def _commit(table: str, entry: dict) -> None:
     d = _log_path(table)
     os.makedirs(d, exist_ok=True)
     tmp = os.path.join(d, f".tmp-{uuid.uuid4().hex}.json")
-    with open(tmp, "w") as fh:
-        json.dump(entry, fh, indent=1)
+    fh = open(tmp, "w")
     try:
+        with fh:
+            json.dump(entry, fh, indent=1)
         os.link(tmp, os.path.join(d, f"v{entry['version']}.json"))
     except FileExistsError:
         raise CommitConflict(
@@ -1364,20 +1383,7 @@ def delete_keys_deferred(spark: SparkSession, table: str, keys: list) -> int:
                 f"tombstone key(s) not castable to {key}'s type "
                 f"{ktype.simpleString()}: {[r['k'] for r in bad][:5]}"
             )
-    v = snap.version + 1
-    _commit_exclusive(
-        table,
-        {
-            "version": v,
-            "timestamp": time.time(),
-            "operation": "DELETE DEFERRED",
-            "key": key,
-            "tombstones": list(keys),
-            "add": [],
-            "remove": [],
-        },
-    )
-    return v
+    return _commit_op(snap, "DELETE DEFERRED", key=key, tombstones=list(keys))
 
 
 def materialize_tombstones(spark: SparkSession, table: str) -> int:
@@ -1415,20 +1421,7 @@ def add_constraint(spark: SparkSession, table: str, name: str, expr: str) -> int
     if name in snap.constraints:
         raise ValueError(f"constraint {name!r} already exists")
     _enforce_constraints(_read_live(spark, snap), {name: expr}, "existing data")
-    cons = {**snap.constraints, name: expr}
-    v = snap.version + 1
-    _commit_exclusive(
-        table,
-        {
-            "version": v,
-            "timestamp": time.time(),
-            "operation": "ADD CONSTRAINT",
-            "constraints": cons,
-            "add": [],
-            "remove": [],
-        },
-    )
-    return v
+    return _commit_op(snap, "ADD CONSTRAINT", constraints={**snap.constraints, name: expr})
 
 
 def _protected_columns(snap: _Snapshot) -> dict[str, str]:
@@ -1528,21 +1521,13 @@ def rename_column(table: str, old: str, new: str) -> int:
     for f in sch["fields"]:
         if f["name"] == old:
             f["name"] = new
-    v = snap.version + 1
-    _commit_exclusive(
-        table,
-        {
-            "version": v,
-            "timestamp": time.time(),
-            "operation": f"RENAME COLUMN ({old} -> {new})",
-            "schema_json": json.dumps(sch),
-            "column_mapping": mapping,
-            "retired_physical": list(snap.retired),
-            "add": [],
-            "remove": [],
-        },
+    return _commit_op(
+        snap,
+        f"RENAME COLUMN ({old} -> {new})",
+        schema_json=json.dumps(sch),
+        column_mapping=mapping,
+        retired_physical=list(snap.retired),
     )
-    return v
 
 
 def drop_column(table: str, col: str) -> int:
@@ -1573,21 +1558,13 @@ def drop_column(table: str, col: str) -> int:
     if physical not in retired:
         retired.append(physical)
     sch["fields"] = [f for f in sch["fields"] if f["name"] != col]
-    v = snap.version + 1
-    _commit_exclusive(
-        table,
-        {
-            "version": v,
-            "timestamp": time.time(),
-            "operation": f"DROP COLUMN ({col})",
-            "schema_json": json.dumps(sch),
-            "column_mapping": mapping,
-            "retired_physical": retired,
-            "add": [],
-            "remove": [],
-        },
+    return _commit_op(
+        snap,
+        f"DROP COLUMN ({col})",
+        schema_json=json.dumps(sch),
+        column_mapping=mapping,
+        retired_physical=retired,
     )
-    return v
 
 
 def drop_constraint(table: str, name: str) -> int:
@@ -1596,19 +1573,7 @@ def drop_constraint(table: str, name: str) -> int:
     if name not in snap.constraints:
         raise ValueError(f"no such constraint: {name!r}")
     cons = {n: e for n, e in snap.constraints.items() if n != name}
-    v = snap.version + 1
-    _commit_exclusive(
-        table,
-        {
-            "version": v,
-            "timestamp": time.time(),
-            "operation": "DROP CONSTRAINT",
-            "constraints": cons,
-            "add": [],
-            "remove": [],
-        },
-    )
-    return v
+    return _commit_op(snap, "DROP CONSTRAINT", constraints=cons)
 
 
 # Safe implicit widenings for appends (source type → acceptable wider
@@ -1754,24 +1719,18 @@ def create_or_replace(
             stats_cols=stats_cols,
             mapping={},  # a REPLACE starts a fresh identity mapping
         )
-    v = snap.version + 1
-    _commit_exclusive(
-        table,
-        {
-            "version": v,
-            "timestamp": time.time(),
-            "operation": "CREATE OR REPLACE" if v else "CREATE",
-            "key": key,
-            "partition_by": partition_by,
-            # REPLACE resets table metadata (Delta semantics): declared
-            # constraints do not survive a full re-creation
-            "constraints": {},
-            "schema_json": df.schema.json(),
-            "add": adds,
-            "remove": list(snap.live),
-        },
+    return _commit_op(
+        snap,
+        "CREATE" if snap.version < 0 else "CREATE OR REPLACE",
+        add=adds,
+        remove=list(snap.live),
+        key=key,
+        partition_by=partition_by,
+        # REPLACE resets table metadata (Delta semantics): declared
+        # constraints do not survive a full re-creation
+        constraints={},
+        schema_json=df.schema.json(),
     )
-    return v
 
 
 def append(
@@ -1811,12 +1770,7 @@ def append(
         snap, df.schema, key, partition_by, len(local_rows)
     )
     df, schema = _evolve_schema(snap, df, merge_schema)
-    if snap.tombstones:
-        raise ValueError(
-            "table has pending deferred deletes; run materialize_tombstones "
-            "first (a key tombstone cannot distinguish a pre-delete row from "
-            "a re-inserted one)"
-        )
+    snap.require_no_tombstones("APPEND")
     _enforce_constraints(df, snap.constraints, "APPEND")
     if use_local:
         adds = _stage_rows_local(
@@ -1834,20 +1788,9 @@ def append(
             key,
             stats_cols=stats_cols,
         )
-    # add-only: a lost commit race against another add-only writer
-    # rebases onto the new HEAD instead of failing (classified retry)
-    return _commit_rebase(
-        table,
-        {
-            "version": snap.version + 1,
-            "timestamp": time.time(),
-            "operation": "APPEND",
-            "key": key,
-            "partition_by": partition_by,
-            "schema_json": schema.json(),
-            "add": adds,
-            "remove": [],
-        },
+    return _commit_op(
+        snap, "APPEND", add=adds, key=key, partition_by=partition_by,
+        schema_json=schema.json(),
     )
 
 
@@ -1931,25 +1874,13 @@ def append_staged(
     opinions); schema must match exactly (no evolution through the
     staging path)."""
     snap = _snapshot(table)
-    if snap.tombstones:
-        raise ValueError("materialize deferred deletes before staging")
+    snap.require_no_tombstones("APPEND STAGED")
     df, _schema = _evolve_schema(snap, df, merge_schema=False)
     _enforce_constraints(df, snap.constraints, "APPEND STAGED")
     adds = _stage_files(df, snap, key)
     # staged adds are invisible until PUBLISH, so the same add-only
     # rebase applies
-    return _commit_rebase(
-        table,
-        {
-            "version": snap.version + 1,
-            "timestamp": time.time(),
-            "operation": "APPEND STAGED",
-            "staged": True,
-            "key": key,
-            "add": adds,
-            "remove": [],
-        },
-    )
+    return _commit_op(snap, "APPEND STAGED", add=adds, staged=True, key=key)
 
 
 def read_staged(spark: SparkSession, table: str, staged_version: int) -> DataFrame:
@@ -1970,19 +1901,7 @@ def _resolve_staged(table: str, staged_version: int, op: str, field: str) -> int
         raise ValueError(
             f"version {staged_version} is not an unresolved staged commit"
         )
-    v = snap.version + 1
-    _commit_exclusive(
-        table,
-        {
-            "version": v,
-            "timestamp": time.time(),
-            "operation": op,
-            field: staged_version,
-            "add": [],
-            "remove": [],
-        },
-    )
-    return v
+    return _commit_op(snap, op, **{field: staged_version})
 
 
 def publish(table: str, staged_version: int) -> int:
@@ -2361,8 +2280,10 @@ def _keyed_rewrite(
     key: str,
     d: _Discovery,
     plan_schema,
-    entry: dict,
+    operation: str,
+    stats: dict,
     allow_missing: bool = False,
+    **fields,
 ) -> int:
     """The one keyed rewrite under MERGE and APPLY CHANGES (the Delta
     MERGE shape): each touched file of ``d`` is replaced by its rows
@@ -2380,9 +2301,9 @@ def _keyed_rewrite(
     when the keys are in hand, an anti-join against the source keys
     when not) union the source and stage through :func:`_stage_rewrite`.
 
-    Commits ``entry`` (the operation name, any extra fields and its
-    ``stats``) with the adds, the removes and the touched/untouched
-    counts at ``snap.version + 1``, which it returns."""
+    Commits ``operation`` with the adds, the removes, ``fields`` and
+    ``stats`` plus the touched/untouched counts, and returns the
+    committed version."""
     touched = d.touched
     kept_rows = None
     if (
@@ -2414,24 +2335,15 @@ def _keyed_rewrite(
             merged = kept.unionByName(source, allowMissingColumns=allow_missing)
         adds = _stage_rewrite(merged, snap, key, d.bound)
 
-    v = snap.version + 1
-    _commit_exclusive(
-        snap.table,
-        {
-            "version": v,
-            "timestamp": time.time(),
-            **entry,
-            "key": key,
-            "add": adds,
-            "remove": [a["file"] for a in touched],
-            "stats": {
-                **entry["stats"],
-                "files_touched": len(touched),
-                "files_untouched": len(d.untouched),
-            },
-        },
+    return _commit_op(
+        snap,
+        operation,
+        add=adds,
+        remove=[a["file"] for a in touched],
+        **fields,
+        key=key,
+        stats={**stats, "files_touched": len(touched), "files_untouched": len(d.untouched)},
     )
-    return v
 
 
 def merge_into(
@@ -2462,11 +2374,7 @@ def merge_into(
     snap = _head_or_new(table)
     if snap.version < 0:
         return create_or_replace(spark, table, source, key, local_rows=source_rows)
-    if snap.tombstones:
-        raise ValueError(
-            "table has pending deferred deletes; run materialize_tombstones "
-            "before MERGE"
-        )
+    snap.require_no_tombstones("MERGE")
     # plan from the caller's schema before evolution casts it: only a
     # source the driver writer could stage needs its full rows probed;
     # any other probes a key projection
@@ -2480,16 +2388,10 @@ def merge_into(
 
     d = _discover_touched(spark, snap, source, key, source_rows, full_rows)
     return _keyed_rewrite(
-        spark, snap, source, key, d, src_schema,
-        {
-            "operation": "MERGE",
-            "schema_json": evolved_schema.json(),
-            "stats": {
-                "files_pruned_by_stats": d.pruned,
-                "files_pruned_by_bloom": d.pruned_by_bloom,
-            },
-        },
+        spark, snap, source, key, d, src_schema, "MERGE",
+        {"files_pruned_by_stats": d.pruned, "files_pruned_by_bloom": d.pruned_by_bloom},
         allow_missing=merge_schema,
+        schema_json=evolved_schema.json(),
     )
 
 
@@ -2560,11 +2462,7 @@ def apply_changes(
             CDC_DELETED_COL, F.col(op_col) == F.lit(delete_value)
         ).drop(op_col)
         return create_or_replace(spark, table, first, key)
-    if snap.tombstones:
-        raise ValueError(
-            "table has pending deferred deletes; run materialize_tombstones "
-            "before APPLY CHANGES"
-        )
+    snap.require_no_tombstones("APPLY CHANGES")
     sch = snap.schema
     if sch is not None and CDC_DELETED_COL not in sch.fieldNames():
         # a pre-existing non-CDC table has no tombstone column: winning
@@ -2619,8 +2517,8 @@ def apply_changes(
         keys_deleted = resolved.where(F.col("__new_del")).count()
         d = d._replace(keys=None, rows=None)
     return _keyed_rewrite(
-        spark, snap, winners, key, d, winners.schema,
-        {"operation": "APPLY_CHANGES", "stats": {"keys_deleted": keys_deleted}},
+        spark, snap, winners, key, d, winners.schema, "APPLY_CHANGES",
+        {"keys_deleted": keys_deleted},
     )
 
 
@@ -2845,7 +2743,6 @@ def restore(table: str, to_version: int) -> int:
             f"cannot restore {table} to v{to_version}: {len(gone)} data "
             f"file(s) were vacuumed past the retention horizon (e.g. {gone[0]})"
         )
-    v = snap.version + 1
     # Re-declare the ENTIRE table state of to_version, not just its
     # file set (round-7 review): schema (a post-target REPLACE would
     # otherwise make read() null-fill every restored column), CHECK
@@ -2857,25 +2754,21 @@ def restore(table: str, to_version: int) -> int:
     # guard then admits a new column whose name aliases old file data,
     # and every later write crashes on the phantom collision — round-8
     # review repro), and the physical layout spec (partition/zorder).
-    entry = {
-        "version": v,
-        "timestamp": time.time(),
-        "operation": f"RESTORE AS OF {to_version}",
-        "key": target_snap.key,
-        "constraints": target_snap.constraints,
-        "tombstones_cleared": True,
-        "tombstones": target_snap.tombstones,
-        "column_mapping": target_snap.mapping,
-        "retired_physical": target_snap.retired,
-        "partition_by": target_snap.partition_by,
-        "zorder_by": target_snap.zorder_by,
-        "add": [a for f, a in target.items() if f not in head],
-        "remove": [f for f in head if f not in target],
-    }
-    if target_snap.schema_json:
-        entry["schema_json"] = target_snap.schema_json
-    _commit_exclusive(table, entry)
-    return v
+    return _commit_op(
+        snap,
+        f"RESTORE AS OF {to_version}",
+        add=[a for f, a in target.items() if f not in head],
+        remove=[f for f in head if f not in target],
+        key=target_snap.key,
+        constraints=target_snap.constraints,
+        tombstones_cleared=True,
+        tombstones=target_snap.tombstones,
+        column_mapping=target_snap.mapping,
+        retired_physical=target_snap.retired,
+        partition_by=target_snap.partition_by,
+        zorder_by=target_snap.zorder_by,
+        **({"schema_json": target_snap.schema_json} if target_snap.schema_json else {}),
+    )
 
 
 def clone_table(source: str, dest: str, version: int | None = None) -> int:
@@ -2902,43 +2795,42 @@ def clone_table(source: str, dest: str, version: int | None = None) -> int:
     operator.
     """
     snap = _snapshot(source, version)
-    if versions(dest):
+    dest_snap = _head_or_new(dest)
+    if dest_snap.version >= 0:
         raise ValueError(f"clone target already exists: {dest}")
     adds = []
     for a in snap.files:
         b = dict(a)
         b["file"] = os.path.abspath(_abs(source, a["file"]))
         adds.append(b)
-    entry: dict = {
-        "version": 0,
-        "timestamp": time.time(),
-        "operation": f"CLONE {os.path.abspath(source)} AS OF {snap.version}",
-        "key": snap.key,
-        "constraints": snap.constraints,
-        "tombstones": snap.tombstones,
-        "partition_by": snap.partition_by,
-        "add": adds,
-        "remove": [],
-    }
+    fields = {}
     if snap.schema_json:
-        entry["schema_json"] = snap.schema_json
+        fields["schema_json"] = snap.schema_json
     if snap.zorder_by:
-        entry["zorder_by"] = snap.zorder_by
+        fields["zorder_by"] = snap.zorder_by
     if snap.mapping:
         # referenced files carry the SOURCE's physical names: the clone
         # inherits the column mapping or its reads would null out every
         # renamed column
-        entry["column_mapping"] = snap.mapping
+        fields["column_mapping"] = snap.mapping
     if snap.retired:
-        entry["retired_physical"] = snap.retired
+        fields["retired_physical"] = snap.retired
     try:
-        _commit(dest, entry)
+        return _commit_op(
+            dest_snap,
+            f"CLONE {os.path.abspath(source)} AS OF {snap.version}",
+            add=adds,
+            key=snap.key,
+            constraints=snap.constraints,
+            tombstones=snap.tombstones,
+            partition_by=snap.partition_by,
+            **fields,
+        )
     except CommitConflict:
         # two racing clones to the same dest: the loser's condition IS
         # "target already exists" — surface the typed API error, not
         # the raw commit-protocol conflict
         raise ValueError(f"clone target already exists: {dest}") from None
-    return 0
 
 
 def vacuum_retain(table: str, retain_last: int) -> int:
@@ -3097,26 +2989,16 @@ def optimize(
         df = df.coalesce(nfiles)
     adds = _stage_files(df, snap, key, stats_cols=zorder_by)
 
-    v = snap.version + 1
-    _commit_exclusive(
-        table,
-        {
-            "version": v,
-            "timestamp": time.time(),
-            "operation": "OPTIMIZE",
-            "key": key,
-            "zorder_by": zorder_by,
-            "partition_by": part_col,
-            "add": adds,
-            "remove": [a["file"] for a in small],
-            "stats": {
-                "files_compacted": len(small),
-                "files_written": len(adds),
-                "rows": total,
-            },
-        },
+    return _commit_op(
+        snap,
+        "OPTIMIZE",
+        add=adds,
+        remove=[a["file"] for a in small],
+        key=key,
+        zorder_by=zorder_by,
+        partition_by=part_col,
+        stats={"files_compacted": len(small), "files_written": len(adds), "rows": total},
     )
-    return v
 
 
 def clustering_depth(
@@ -3260,25 +3142,19 @@ def optimize_incremental(
             df = df.coalesce(nfiles)
         adds += _stage_files(df, snap, key)
         removed += c["files"]
-    v = snap.version + 1
-    _commit_exclusive(
-        table,
-        {
-            "version": v,
-            "timestamp": time.time(),
-            "operation": "OPTIMIZE INCREMENTAL",
-            "key": key,
-            "add": adds,
-            "remove": removed,
-            "stats": {
-                "clusters_rewritten": len(bad),
-                "files_rewritten": len(removed),
-                "files_carried": len(by_name) - len(removed),
-                "depth_before": rep["depth"],
-            },
+    return _commit_op(
+        snap,
+        "OPTIMIZE INCREMENTAL",
+        add=adds,
+        remove=removed,
+        key=key,
+        stats={
+            "clusters_rewritten": len(bad),
+            "files_rewritten": len(removed),
+            "files_carried": len(by_name) - len(removed),
+            "depth_before": rep["depth"],
         },
     )
-    return v
 
 
 def delete_where(spark: SparkSession, table: str, predicate: str) -> int:
@@ -3345,26 +3221,20 @@ def _delete_where(
         if n_kept:
             adds = _stage_files(kept, snap, key)
 
-    v = snap.version + 1
-    entry = {
-        "version": v,
-        "timestamp": time.time(),
-        "operation": "DELETE",
-        "key": key,
-        "predicate": predicate,
-        "add": adds,
-        "remove": [a["file"] for a in touched],
-        "stats": {
+    return _commit_op(
+        snap,
+        "MATERIALIZE TOMBSTONES" if clear_tombstones else "DELETE",
+        add=adds,
+        remove=[a["file"] for a in touched],
+        key=key,
+        predicate=predicate,
+        stats={
             "files_touched": len(touched),
             "files_untouched": len(live) - len(touched),
             "rows_deleted": n_deleted,
         },
-    }
-    if clear_tombstones:
-        entry["operation"] = "MATERIALIZE TOMBSTONES"
-        entry["tombstones_cleared"] = True
-    _commit_exclusive(snap.table, entry)
-    return v
+        **({"tombstones_cleared": True} if clear_tombstones else {}),
+    )
 
 
 def table_changes(

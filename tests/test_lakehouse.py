@@ -815,6 +815,12 @@ def test_commit_is_put_if_absent(spark, table):
     with pytest.raises(lh.CommitConflict):
         lh._commit(table, e2)
     assert lh._read_entry(table, 0)["operation"] != "EVIL OVERWRITE"
+    # an entry json cannot encode fails before it publishes anything
+    import numpy as np
+
+    with pytest.raises(TypeError):
+        lh._commit(table, dict(e, version=1, tombstones=[np.int64(3)]))
+    assert lh.versions(table) == [0]
     # no tmp litter left behind
     assert not [f for f in os.listdir(os.path.join(table, "_txn_log"))
                 if f.startswith(".tmp-")]
@@ -1927,6 +1933,25 @@ def test_concurrent_disjoint_appends_both_land(spark, table, monkeypatch):
     ]
     got = {r["id"]: r["val"] for r in lh.read(spark, table).collect()}
     assert got[200] == 1 and got[300] == 2 and len(got) == 102
+
+
+@pytest.mark.parametrize("compaction", ["OPTIMIZE", "OPTIMIZE INCREMENTAL"])
+def test_concurrent_append_rebases_past_compaction(spark, table, monkeypatch, compaction):
+    """A compaction rewrites files the append never read and changes no
+    schema, constraint or tombstone: an append that loses the race to
+    either OPTIMIZE flavour rebases past it instead of aborting."""
+    # one file spanning the fixture's four key ranges: clustering depth 2
+    lh.append(spark, table, spark.createDataFrame([(0, 1), (99, 1)], "id long, val long"), key="id")
+    run = {
+        "OPTIMIZE": lambda: lh.optimize(spark, table, target_rows=1000),
+        "OPTIMIZE INCREMENTAL": lambda: lh.optimize_incremental(spark, table, max_depth=1),
+    }[compaction]
+    _interleave(monkeypatch, run)
+    mine = spark.createDataFrame([(300, 2)], "id long, val long")
+    assert lh.append(spark, table, mine, key="id") == 3
+    assert [lh._read_entry(table, v)["operation"] for v in (2, 3)] == [compaction, "APPEND"]
+    rows = lh.read(spark, table).collect()
+    assert len(rows) == 103 and (300, 2) in [tuple(r) for r in rows]
 
 
 def test_concurrent_merge_vs_optimize_aborts_typed(spark, table, monkeypatch):
@@ -3827,6 +3852,32 @@ def test_create_or_replace_clears_pending_tombstones(spark, tmp_path):
     lh.clone_table(t, c)
     assert lh.pending_tombstones(c) == [2]
     assert {r["id"] for r in lh.read(spark, c).collect()} == {1}
+
+
+def test_create_or_replace_resets_zorder_spec(tmp_path):
+    """A redefinition resets the Z-order spec the way it resets
+    partitioning: the replaced table's spec made rename refuse its
+    column as a "zorder column" and a clone copy the stale spec. A CLONE
+    still carries the source's spec. Hand-written log entries, no Spark."""
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    t = str(tmp_path / "t")
+    schema = StructType([StructField("id", LongType()), StructField("val", LongType())]).json()
+
+    def commit(operation, **fields):
+        v = len(lh.versions(t))
+        lh._commit(t, {"version": v, "timestamp": 0.0, "operation": operation,
+                       "add": [], "remove": [], **fields})
+
+    commit("CREATE", key="id", schema_json=schema)
+    commit("OPTIMIZE", key="id", zorder_by=["val"])
+    lh.clone_table(t, str(tmp_path / "before"))
+    assert lh._snapshot(str(tmp_path / "before")).zorder_by == ["val"]
+    commit("CREATE OR REPLACE", key="id", schema_json=schema)
+    assert lh._snapshot(t).zorder_by == []
+    lh.clone_table(t, str(tmp_path / "after"))
+    assert lh._snapshot(str(tmp_path / "after")).zorder_by == []
+    lh.rename_column(t, "val", "v2")
 
 
 def test_ann_index_maintain_replay_and_equals_batch(spark, tmp_path):
