@@ -1355,6 +1355,11 @@ def delete_keys_deferred(spark: SparkSession, table: str, keys: list) -> int:
     materialize first. Tombstone volume is capped at TOMBSTONE_MAX —
     beyond that the rewrite is cheaper than the read-side filter.
     """
+    import numpy as np
+
+    # numpy scalars (keys taken from a pandas frame) pass the probe
+    # below through str(), but the log is JSON: commit plain values
+    keys = [k.item() if isinstance(k, np.generic) else k for k in keys]
     snap = _snapshot(table)
     key = snap.key
     if key is None:

@@ -33,9 +33,11 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ecommerce_dbt_medallion_spark.config import BATCH_TS
+from ecommerce_dbt_medallion_spark.models.bronze import bronze_orders
 from ecommerce_dbt_medallion_spark.models.silver import (
     silver_customers,
     silver_orders,
+    silver_orders_df,
     silver_payments_for_agg,
 )
 
@@ -63,12 +65,9 @@ def gold_customer_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     # join, as-of); checkpoint it so the orders⋈customers join runs once.
     # Payments use the id-free path: the mart only counts/sums payments,
     # so the payment-id sequence window is skipped (value-identical).
-    o = silver_orders(spark, sf_dir).localCheckpoint(eager=True)
-    return gold_customer_summary_df(
-        silver_customers(spark, sf_dir),
-        o,
-        silver_payments_for_agg(spark, sf_dir, o),
-    )
+    c = silver_customers(spark, sf_dir)
+    o = silver_orders_df(bronze_orders(spark, sf_dir), c).localCheckpoint(eager=True)
+    return gold_customer_summary_df(c, o, silver_payments_for_agg(spark, sf_dir, o))
 
 
 _BUCKETED_READY: set[str] = set()

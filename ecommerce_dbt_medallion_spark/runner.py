@@ -5,10 +5,11 @@ bronze=view, silver=table, gold=table).
 - **view** (bronze): nothing is written — bronze stays a lazy projection
   fused into downstream scans, exactly like a SQL view.
 - **table** (silver/gold): written to ``<warehouse>/<layer>/<model>`` as
-  parquet. Gold is built FROM the materialized silver parquet (layered
-  reads, not recomputation) — at 100 TB each layer is computed once per
-  batch, and silver tables are written partitioned/bucketed by their join
-  keys so downstream marts shuffle less.
+  parquet, unpartitioned, as the reference's dbt ``table``s are. Gold is
+  built FROM the materialized silver parquet (layered reads, not
+  recomputation) — at 100 TB each layer is computed once per batch.
+  ``materialize_bucketed_facts`` is the separate bucketed layout of the
+  two join-heavy facts, for shuffle-free marts.
 - **incremental** (dbt's incremental materialization): merge-by-unique-key.
   A real MERGE INTO on a transaction-log table
   (``incremental_merge_delta`` → lakehouse.py) with stats-pruned file
@@ -66,24 +67,23 @@ class _Model:
     layer: str
     upstream: tuple[str, ...]
     build: Callable[[SparkSession, str, dict[str, DataFrame]], DataFrame]
-    partition_by: tuple[str, ...] = ()
 
 
 # Declared in manifest order.
 # Bronze views are built inside their silver model (nothing is written).
+# Every table is written unpartitioned, as the reference's are: each
+# dependent scans the whole table, so partitions prune nothing and only
+# multiply the files a build writes and every reader opens.
 _MODELS: tuple[_Model, ...] = (
     _Model(
         "silver_customers", "silver", (),
         lambda spark, sf, up: ms.silver_customers_df(mb.bronze_customers(spark, sf)),
     ),
-    # Partition the orders fact by month: date-ranged gold rebuilds and
-    # incremental loads then scan only the touched partitions (pruning).
     _Model(
         "silver_orders", "silver", ("silver_customers",),
         lambda spark, sf, up: ms.silver_orders_df(
             mb.bronze_orders(spark, sf), up["silver_customers"]
         ),
-        ("order_year_month",),
     ),
     _Model(
         "silver_payments", "silver", ("silver_orders",),
@@ -123,7 +123,7 @@ def _materialize(
     spark.sparkContext.setJobDescription(m.name)
     path = os.path.join(warehouse, m.layer, m.name)
     df = m.build(spark, sf_dir, upstream)
-    _write(df, path, list(m.partition_by) or None)
+    _write(df, path)
     if any(m.name in d.upstream for d in _MODELS):
         # the written schema is known: reading with it skips the footer
         # job that schema inference would run before each dependent starts
@@ -294,7 +294,7 @@ def materialize_bucketed_facts(
     from urllib.parse import urlparse
 
     so = ms.silver_orders(spark, sf_dir)
-    sp = ms.silver_payments(spark, sf_dir)
+    sp = ms.silver_payments_df(mb.bronze_payments(spark, sf_dir), so)
     warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")).path
     for name, df in (("silver_orders_b", so), ("silver_payments_b", sp)):
         spark.sql(f"drop table if exists {name}")
@@ -345,13 +345,12 @@ def incremental_mart_refresh(
     # CDF diffs live FILE sets, and a DELETE DEFERRED commit is
     # metadata-only — tombstoned keys' groups would look clean and the
     # refresh would silently leave them stale. Same guard append/merge
-    # already apply: materialize first, then refresh.
-    if lakehouse.pending_tombstones(fact_table):
-        raise ValueError(
-            "fact table has pending deferred deletes; run "
-            "materialize_tombstones before incremental_mart_refresh"
-        )
-    to_version = lakehouse.versions(fact_table)[-1]
+    # already apply: materialize first, then refresh. One snapshot
+    # serves the refusal and the version caught up to, so a delete
+    # committed after the check cannot fall inside the refreshed range.
+    snap = lakehouse._snapshot(fact_table)
+    snap.require_no_tombstones("INCREMENTAL MART REFRESH")
+    to_version = snap.version
     if to_version == from_version:
         return to_version
     # include_preimage: an update that REASSIGNS a row's group must

@@ -91,9 +91,9 @@ def get_spark(app_name: str = "ecommerce-medallion-spark") -> SparkSession:
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # The master is always local[N], where listing local directories
         # on the driver costs less than the distributed listing job Spark
-        # launches above 32 paths (re-reading silver_orders' 80
-        # order_year_month partitions: 0.45-0.99 s as an 80-task job vs
-        # 0.08 s serially). Keep the threshold above any partition count.
+        # launches above 32 paths (re-reading a table of 80 month
+        # partitions: 0.45-0.99 s as an 80-task job vs 0.08 s serially).
+        # Keep the threshold above any partition or file count.
         .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "4096")
         # Console progress bars interleave with stdout; round 8's bench
         # JSON line was truncated by them in the driver's tail capture.

@@ -2358,6 +2358,20 @@ def test_coercible_tombstone_key_does_not_wedge(spark, tmp_path):
     assert remaining == {0.0, 1.0, 2.0, 4.0}
 
 
+def test_numpy_tombstone_key_commits_and_hides_row(spark, tmp_path):
+    """A numpy key (as a pandas frame yields it) must log as a plain
+    JSON value, not fail the commit, and read() must hide its row."""
+    import numpy as np
+
+    path = str(tmp_path / "npkey")
+    lh.create_or_replace(
+        spark, path, spark.range(5).select("id", (F.col("id") * 2).alias("val")), key="id"
+    )
+    lh.delete_keys_deferred(spark, path, [np.int64(3)])
+    assert lh.pending_tombstones(path) == [3]
+    assert {r["id"] for r in lh.read(spark, path).collect()} == {0, 1, 2, 4}
+
+
 def test_ckpt_dir_migrates_legacy_checkpoint(tmp_path):
     """A pre-round-8 checkpoint inside the table dir migrates to the
     sibling location once (orphaning it would replay the whole source

@@ -347,8 +347,8 @@ def test_dynamic_partition_pruning_on_partitioned_silver(spark, tmp_path):
     dynamic partition pruning: the fact scan receives a runtime filter
     on its PARTITION column derived from the dim's predicate — at
     100 TB this is the difference between scanning one month's
-    directories and the whole table, and it only exists because the
-    runner writes facts hive-partitioned (runner._write partition_by).
+    directories and the whole table. The runner writes its tables
+    unpartitioned, so this test builds its own partitioned fact.
     """
     from pyspark.sql import functions as F
 

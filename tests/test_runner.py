@@ -167,18 +167,16 @@ def test_snapshot_scd2_history(spark, tmp_path):
     )
 
 
-def test_partition_pruning_on_materialized_orders(spark, tmp_path):
-    wh = str(tmp_path / "wh2")
-    manifest = runner.run(spark, SF_SMOKE, wh)
-    so = spark.read.parquet(manifest["silver_orders"])
-    one_month = so.select("order_year_month").distinct().first()[0]
-    q = so.where(F.col("order_year_month") == one_month)
-    q.collect()
-    executed = q._jdf.queryExecution().executedPlan().toString()
-    # partition filter must reach the scan (pruning, not a post-filter)
-    assert "PartitionFilters" in executed and "order_year_month" in executed.split(
-        "PartitionFilters"
-    )[1][:200], executed[:800]
+def test_run_writes_every_table_flat(spark, tmp_path):
+    """Every materialized table holds its parquet files directly, with
+    no ``key=value`` partition directories: their fan-out multiplies the
+    files a build writes and every dependent opens."""
+    manifest = runner.run(spark, SF_SMOKE, str(tmp_path / "warehouse"))
+    for _, name in _TABLES:
+        entries = os.listdir(manifest[name])
+        subdirs = [e for e in entries if os.path.isdir(os.path.join(manifest[name], e))]
+        assert subdirs == [], (name, subdirs[:5])
+        assert any(e.endswith(".parquet") for e in entries), (name, entries)
 
 
 def test_bucketed_join_has_no_shuffle(spark):
@@ -358,6 +356,34 @@ def test_incremental_refresh_deletes_gone_string_and_date_groups(spark, tmp_path
     incremental_mart_refresh(spark, fact, mart, "d", agg_fn, from_version=v0)
     got = {str(r["d"]): r["total"] for r in lakehouse.read(spark, mart).collect()}
     assert got == {"2024-01-01": 30}, got
+
+
+def test_incremental_refresh_refuses_pending_deferred_deletes(spark, tmp_path):
+    """CDF diffs live file sets and a DELETE DEFERRED commit adds or
+    removes none: the refresh must refuse instead of leaving the
+    tombstoned rows' groups stale, and must not touch the mart."""
+    from ecommerce_dbt_medallion_spark import lakehouse
+    from ecommerce_dbt_medallion_spark.runner import incremental_mart_refresh
+
+    fact = str(tmp_path / "factt")
+    mart = str(tmp_path / "martt")
+    facts = spark.createDataFrame(
+        [(1, 100, 10), (2, 200, 20)], "order_id long, customer_id long, amount long"
+    )
+
+    def agg_fn(df):
+        return df.groupBy("customer_id").agg(F.sum("amount").alias("total"))
+
+    v0 = lakehouse.create_or_replace(spark, fact, facts, key="order_id")
+    lakehouse.create_or_replace(
+        spark, mart, agg_fn(lakehouse.read(spark, fact)), key="customer_id"
+    )
+    lakehouse.delete_keys_deferred(spark, fact, [2])
+    with pytest.raises(ValueError, match="pending deferred deletes"):
+        incremental_mart_refresh(
+            spark, fact, mart, "customer_id", agg_fn, from_version=v0
+        )
+    assert lakehouse.versions(mart) == [0]
 
 
 def test_snapshot_rejects_duplicate_keys_and_null_vs_value_change(spark, tmp_path):
