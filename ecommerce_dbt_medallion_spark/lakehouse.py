@@ -1241,14 +1241,14 @@ def current_schema(table: str, version: int | None = None):
     return _snapshot(table, version).schema
 
 
-def current_mapping(table: str, version: int | None = None) -> dict[str, str]:
-    """Column mapping (logical name → physical parquet name) as of
-    ``version`` — empty for tables that never renamed a column. The
-    mapping is what lets RENAME/DROP COLUMN be metadata-only commits:
-    immutable data files keep their creation-time (physical) column
-    names forever; readers alias physical→logical and writers alias
-    logical→physical at the two funnel boundaries."""
-    return _snapshot(table, version).mapping
+def current_mapping(table: str) -> dict[str, str]:
+    """Column mapping (logical name → physical parquet name) — empty for
+    tables that never renamed a column. The mapping is what lets
+    RENAME/DROP COLUMN be metadata-only commits: immutable data files
+    keep their creation-time (physical) column names forever; readers
+    alias physical→logical and writers alias logical→physical at the
+    two funnel boundaries."""
+    return _snapshot(table).mapping
 
 
 def _map_to_physical(df: DataFrame, mapping: dict[str, str]) -> DataFrame:
@@ -1298,11 +1298,11 @@ class ConstraintViolation(Exception):
     """Incoming rows violate a declared CHECK constraint."""
 
 
-def current_constraints(table: str, version: int | None = None) -> dict[str, str]:
-    """The table's CHECK constraints (name → boolean SQL expr) as of
-    ``version`` — carried in log entries like the schema; the latest
-    entry declaring ``constraints`` wins."""
-    return _snapshot(table, version).constraints
+def current_constraints(table: str) -> dict[str, str]:
+    """The table's CHECK constraints (name → boolean SQL expr) — carried
+    in log entries like the schema; the latest entry declaring
+    ``constraints`` wins."""
+    return _snapshot(table).constraints
 
 
 def _enforce_constraints(df: DataFrame, constraints: dict[str, str], ctx: str) -> None:
@@ -1334,11 +1334,11 @@ def _enforce_constraints(df: DataFrame, constraints: dict[str, str], ctx: str) -
 TOMBSTONE_MAX = 100_000
 
 
-def pending_tombstones(table: str, version: int | None = None) -> list:
-    """Key tombstones not yet materialized as of ``version``: replay
-    accumulates DELETE DEFERRED commits and clears on any commit flagged
+def pending_tombstones(table: str) -> list:
+    """Key tombstones not yet materialized: replay accumulates DELETE
+    DEFERRED commits and clears on any commit flagged
     ``tombstones_cleared`` (the materialization)."""
-    return _snapshot(table, version).tombstones
+    return _snapshot(table).tombstones
 
 
 def delete_keys_deferred(spark: SparkSession, table: str, keys: list) -> int:
@@ -1743,7 +1743,6 @@ def append(
     table: str,
     df: DataFrame,
     key: str | None = None,
-    partition_by: str | None = None,
     merge_schema: bool = False,
     local_rows: list | None = None,
 ) -> int:
@@ -1755,14 +1754,10 @@ def append(
     (see create_or_replace)."""
     snap = _head_or_new(table)
     if snap.version < 0:
-        return create_or_replace(
-            spark, table, df, key, partition_by=partition_by,
-            local_rows=local_rows,
-        )
-    # inherit the table's declared clustering: an append that forgot
-    # the partition column would otherwise write files spanning every
-    # partition value, quietly breaking pruning for all new data
-    partition_by = partition_by or snap.partition_by
+        return create_or_replace(spark, table, df, key, local_rows=local_rows)
+    # inherit the table's declared clustering: files spanning every
+    # partition value would quietly break pruning for all new data
+    partition_by = snap.partition_by
     # inherit the declared key the same way: a key-less append would
     # write files with no min/max key stats and no bloom, turning them
     # into permanent MERGE candidates (round-7 review)
@@ -1799,7 +1794,7 @@ def append(
     )
 
 
-def snapshot_versions(tables, max_attempts: int = 25) -> dict:
+def snapshot_versions(tables) -> dict:
     """A CONSISTENT cross-table version cut (the multi-table snapshot
     Delta lacks and Iceberg needs a Nessie-style catalog for): pin one
     version per table such that all pinned versions coexisted as the
@@ -1810,19 +1805,19 @@ def snapshot_versions(tables, max_attempts: int = 25) -> dict:
     Seqlock capture: sweep every HEAD, sweep again; versions only grow,
     so if the two sweeps agree then no table committed between them and
     the whole map was simultaneously HEAD at the instant between the
-    sweeps. Retries under write pressure, raises after
-    ``max_attempts`` racing sweeps rather than returning a torn cut.
+    sweeps. Retries under write pressure, raises after 25 racing
+    sweeps rather than returning a torn cut.
     Pure metadata (two listdir sweeps per attempt); feed the pins to
     :func:`read` / :func:`read_snapshot` for time-travel reads."""
     tables = list(tables)
-    for _ in range(max_attempts):
+    for _ in range(25):
         first = {t: _table_versions(t)[-1] for t in tables}
         second = {t: _table_versions(t)[-1] for t in tables}
         if first == second:
             return first
     raise RuntimeError(
         f"no stable version cut across {len(tables)} tables after "
-        f"{max_attempts} attempts (sustained concurrent commits)"
+        "25 attempts (sustained concurrent commits)"
     )
 
 
@@ -1852,7 +1847,7 @@ def _read_live(spark: SparkSession, snap: _Snapshot) -> DataFrame:
     return _read_files(spark, snap, snap.files)
 
 
-def table_row_count(table: str, version: int | None = None) -> int:
+def table_row_count(table: str) -> int:
     """COUNT(*) from METADATA: the log's per-file row counts summed over
     the live set — O(files-in-log) with zero data IO, the Delta
     numRecords trick. At 100 TB this is the difference between an
@@ -1860,7 +1855,7 @@ def table_row_count(table: str, version: int | None = None) -> int:
     tombstones are not reflected (they hide rows at scan time);
     callers needing exactness under pending tombstones should
     materialize first — the returned count is the PHYSICAL row count."""
-    return sum(a["rows"] for a in _snapshot(table, version).live.values())
+    return sum(a["rows"] for a in _snapshot(table).live.values())
 
 
 # Write-audit-publish (WAP): stage → validate → publish/discard. The
@@ -1943,16 +1938,14 @@ def audited_append(
     return versions(table)[-1], ok
 
 
-def read_keys(
-    spark: SparkSession, table: str, keys: list, version: int | None = None
-) -> DataFrame:
+def read_keys(spark: SparkSession, table: str, keys: list) -> DataFrame:
     """POINT-LOOKUP read: only the live files whose key stats AND bloom
     admit at least one of ``keys`` (_files_maybe_containing — sound,
     never drops a holder), read under the full read() contract and
     filtered to exactly those keys. ``keys`` must be metadata-scale
     (the probe mask check is O(files × keys) driver-side); callers with
     data-scale key sets should join against read() instead."""
-    snap = _snapshot(table, version)
+    snap = _snapshot(table)
     files = _files_maybe_containing(spark, snap, list(keys))
     if not files:
         if snap.schema is not None:
@@ -1974,12 +1967,7 @@ def distinct_values_local(table: str, col: str) -> set | None:
     return None if got is None else {r[0] for rows in got for r in rows}
 
 
-def read_pruned_multi(
-    spark: SparkSession,
-    table: str,
-    bounds: dict,
-    version: int | None = None,
-) -> DataFrame:
+def read_pruned_multi(spark: SparkSession, table: str, bounds: dict) -> DataFrame:
     """Conjunctive multi-column range scan with file skipping: keep only
     live files whose logged min/max intersects EVERY ``col: (lo, hi)``
     bound, then apply all residual filters. This is the reader that
@@ -1993,7 +1981,7 @@ def read_pruned_multi(
     arbitrary footer) and the pending-tombstone anti-filter (a skipped
     rewrite must not resurrect logically deleted rows) — pruning only
     ever cuts the FILE list, never changes the visible rows/columns."""
-    snap = _snapshot(table, version)
+    snap = _snapshot(table)
     files = _pruned_files(snap, bounds)
     if not files:
         return _read_live(spark, snap).where(F.lit(False))
@@ -2003,7 +1991,7 @@ def read_pruned_multi(
     return df
 
 
-def pruned_files(table: str, bounds: dict, version: int | None = None) -> list[dict]:
+def pruned_files(table: str, bounds: dict) -> list[dict]:
     """The live files a conjunctive multi-column range scan must read:
     keep a file iff its logged min/max intersects EVERY ``col: (lo,
     hi)`` bound (:func:`_may_hold` — the key column prunes by the key
@@ -2011,7 +1999,7 @@ def pruned_files(table: str, bounds: dict, version: int | None = None) -> list[d
     skipping stays sound). Shared by ``read_pruned_multi`` and
     skip-proof consumers so the guard and the actual read can never
     drift."""
-    return _pruned_files(_snapshot(table, version), bounds)
+    return _pruned_files(_snapshot(table), bounds)
 
 
 def _pruned_files(snap: _Snapshot, bounds: dict) -> list[dict]:
@@ -2112,14 +2100,7 @@ def _read_local(
     return out
 
 
-def read_pruned(
-    spark: SparkSession,
-    table: str,
-    col: str,
-    lo,
-    hi,
-    version: int | None = None,
-) -> DataFrame:
+def read_pruned(spark: SparkSession, table: str, col: str, lo, hi) -> DataFrame:
     """Range scan with file skipping: read ONLY the live files whose
     logged ``col`` min/max intersects [lo, hi], then apply the residual
     filter (skipping is sound — a file without stats is always read —
@@ -2128,7 +2109,7 @@ def read_pruned(
     that no Catalyst filter pushdown can achieve once all files are
     handed to the reader. Returns an empty DataFrame with the table
     schema when every file prunes away."""
-    return read_pruned_multi(spark, table, {col: (lo, hi)}, version)
+    return read_pruned_multi(spark, table, {col: (lo, hi)})
 
 
 class _Discovery(NamedTuple):
@@ -2697,14 +2678,12 @@ def verify_table(spark: SparkSession, table: str) -> dict:
     return report
 
 
-def read_cdc_state(
-    spark: SparkSession, table: str, version: int | None = None
-) -> DataFrame:
+def read_cdc_state(spark: SparkSession, table: str) -> DataFrame:
     """Live CDC state: ``read`` minus retained delete tombstones (and
     the hidden flag column) — what a consumer of an apply_changes
     target queries."""
     return (
-        read(spark, table, version)
+        read(spark, table)
         .where(~F.col(CDC_DELETED_COL))
         .drop(CDC_DELETED_COL)
     )
@@ -2776,10 +2755,10 @@ def restore(table: str, to_version: int) -> int:
     )
 
 
-def clone_table(source: str, dest: str, version: int | None = None) -> int:
+def clone_table(source: str, dest: str) -> int:
     """SHALLOW CLONE (Delta CLONE semantics): ``dest`` becomes a new
-    table whose v0 references ``source``'s live data files at
-    ``version`` BY ABSOLUTE PATH — zero bytes copied, O(log) metadata.
+    table whose v0 references ``source``'s live data files BY ABSOLUTE
+    PATH — zero bytes copied, O(log) metadata.
     This is the dev/test branching primitive: at 100 TB a full copy is
     days of IO; a clone is one commit.
 
@@ -2799,7 +2778,7 @@ def clone_table(source: str, dest: str, version: int | None = None) -> int:
     never delete source bytes, but the reverse discipline is on the
     operator.
     """
-    snap = _snapshot(source, version)
+    snap = _snapshot(source)
     dest_snap = _head_or_new(dest)
     if dest_snap.version >= 0:
         raise ValueError(f"clone target already exists: {dest}")
@@ -3006,9 +2985,7 @@ def optimize(
     )
 
 
-def clustering_depth(
-    table: str, col: str | None = None, version: int | None = None
-) -> dict:
+def clustering_depth(table: str, col: str | None = None) -> dict:
     """Clustering-health metric (the Delta/Iceberg "clustering depth"):
     the maximum number of live files whose ``col`` min/max ranges
     overlap at a single point. Depth 1 = perfectly range-clustered
@@ -3024,7 +3001,7 @@ def clustering_depth(
     conservative cluster with depth = its file count — they admit
     every probe, which IS worst-case depth.
     """
-    return _clustering_depth(_snapshot(table, version), col)
+    return _clustering_depth(_snapshot(table), col)
 
 
 def _clustering_depth(snap: _Snapshot, col: str | None) -> dict:
@@ -3102,7 +3079,6 @@ def _clustering_depth(snap: _Snapshot, col: str | None) -> dict:
 def optimize_incremental(
     spark: SparkSession,
     table: str,
-    key: str | None = None,
     max_depth: int = 2,
     target_rows: int = 1_000_000,
 ) -> int:
@@ -3127,7 +3103,7 @@ def optimize_incremental(
     if snap.tombstones:
         materialize_tombstones(spark, table)
         snap = _snapshot(table)
-    key = key or snap.key
+    key = snap.key
     rep = _clustering_depth(snap, key)
     bad = [c for c in rep["clusters"] if c["depth"] > max_depth]
     if not bad:

@@ -29,43 +29,19 @@ def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load_events_table(spark, sf_dir)
 
 
-def _date_bounded(ev: DataFrame, since, until) -> DataFrame:
-    """Apply [since, until) day bounds to an events frame as a pushed
-    filter on the session-TZ-independent UTC day (event_utc_date — a
-    to_date(ts) bound would render the instant in the reader session's
-    timezone and select different rows in a non-UTC session)."""
-    from ecommerce_dbt_medallion_spark.sources.registry import event_utc_date
-
-    if since is None and until is None:
-        return ev
-    d = event_utc_date()
-    if since is not None:
-        ev = ev.where(d >= F.lit(since))
-    if until is not None:
-        ev = ev.where(d < F.lit(until))
-    return ev
-
-
-def event_daily_stats(
-    spark: SparkSession, sf_dir: str, since=None, until=None
-) -> DataFrame:
+def event_daily_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per (event_date, event_type): volume, users, value stats.
 
     Exercises JSON extraction (props) and exact-decimal value sums.
-    ``since``/``until`` bound the scan to [since, until) days — the
-    incremental-rebuild shape; see _date_bounded for the pruning
-    contract. The driver key passes neither (full scan, unchanged).
     """
     from ecommerce_dbt_medallion_spark.sources.registry import event_utc_date
 
-    ev = _date_bounded(load_events(spark, sf_dir), since, until)
+    ev = load_events(spark, sf_dir)
     val = F.col("value").cast("decimal(18,2)")  # values are 2dp (verified)
     return (
         # event_utc_date, not ts.cast("date"): the oracle's naive-as-UTC
         # read makes the UTC day the contract, and a session-TZ cast
-        # would both diverge from it in non-UTC sessions AND label rows
-        # outside the [since, until) UTC-day bound (round-9 review —
-        # bound and grouping must share one day definition)
+        # would diverge from it in non-UTC sessions
         ev.groupBy(
             event_utc_date().alias("event_date"),
             "event_type",
@@ -270,9 +246,7 @@ asof left join orders_d o
 """
 
 
-def hypertable_rollup(
-    spark: SparkSession, sf_dir: str, since=None, until=None
-) -> DataFrame:
+def hypertable_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hypertable-style continuous aggregate: cascading hour → day →
     month rollups where each coarser resolution is computed FROM the
     next finer one (the TimescaleDB continuous-aggregate shape — at
@@ -281,19 +255,13 @@ def hypertable_rollup(
 
     One unioned result with a ``resolution`` column; decimal sums make
     the cascade exactly associative (hour sums == day sums == month
-    sums), which the oracle verifies value-for-value. ``since``/
-    ``until`` bound the raw-event scan to [since, until) days (the
-    continuous-aggregate REFRESH shape — recompute only the invalidated
-    window, _date_bounded). The driver key passes neither.
+    sums), which the oracle verifies value-for-value.
 
-    TZ note: the bound is defined on UTC days (event_utc_date); the
-    hour buckets are instants so any UTC-day window covers whole
-    buckets, but the day/month CASCADE labels use
-    date_trunc in the session timezone — run bounded rollups in the
-    repo's pinned UTC sessions (session.get_spark) for calendar-aligned
-    labels.
+    TZ note: the day/month CASCADE labels use date_trunc in the session
+    timezone — run rollups in the repo's pinned UTC sessions
+    (session.get_spark) for calendar-aligned labels.
     """
-    ev = _date_bounded(load_events(spark, sf_dir), since, until)
+    ev = load_events(spark, sf_dir)
     hourly = (
         ev.groupBy(
             F.date_trunc("hour", F.col("ts")).alias("bucket"),

@@ -70,9 +70,6 @@ def gold_customer_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     return gold_customer_summary_df(c, o, silver_payments_for_agg(spark, sf_dir, o))
 
 
-_BUCKETED_READY: set[str] = set()
-
-
 def gold_customer_summary_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bucketed-facts variant of gold_customer_summary.
 
@@ -84,16 +81,15 @@ def gold_customer_summary_bucketed(spark: SparkSession, sf_dir: str) -> DataFram
     This is the 100 TB shape: the dominant fact-fact shuffle is paid once
     at materialization time, then every mart build skips it.
 
-    Materialization runs here (memoized per sf_dir) so the query is
-    self-contained for the driver; it is setup, not query work.
+    Materialization runs here (skipped while the tables already hold
+    ``sf_dir``'s facts) so the query is self-contained for the driver; it
+    is setup, not query work.
     """
-    if sf_dir not in _BUCKETED_READY:
-        from ecommerce_dbt_medallion_spark.runner import materialize_bucketed_facts
+    from ecommerce_dbt_medallion_spark.runner import materialize_bucketed_facts
 
-        materialize_bucketed_facts(spark, sf_dir)
-        _BUCKETED_READY.add(sf_dir)
-    o = spark.table("silver_orders_b")
-    p = spark.table("silver_payments_b")
+    orders_t, payments_t = materialize_bucketed_facts(spark, sf_dir)
+    o = spark.table(orders_t)
+    p = spark.table(payments_t)
     return gold_customer_summary_df(
         silver_customers(spark, sf_dir), o, p, payments_join_key="order_id"
     )

@@ -29,13 +29,13 @@ WINSOR_LO_PCT = 5
 WINSOR_HI_PCT = 95
 
 
-def _order_cents(col: str = "o_totalprice") -> F.Column:
-    """Exact money: double → decimal(18,2) → bigint cents."""
-    return (F.col(col).cast("decimal(18,2)") * 100).cast("bigint")
+def _order_cents() -> F.Column:
+    """Exact money: o_totalprice double → decimal(18,2) → bigint cents."""
+    return (F.col("o_totalprice").cast("decimal(18,2)") * 100).cast("bigint")
 
 
-def _epoch_day(col: str = "o_orderdate") -> F.Column:
-    return F.datediff(F.to_date(F.col(col)), F.lit(EPOCH).cast("date"))
+def _epoch_day() -> F.Column:
+    return F.datediff(F.to_date(F.col("o_orderdate")), F.lit(EPOCH).cast("date"))
 
 
 def revenue_trend(spark: SparkSession, sf_dir: str) -> DataFrame:

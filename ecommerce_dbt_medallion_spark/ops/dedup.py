@@ -927,9 +927,7 @@ join sizes sb on sb.doc_id = m.doc_b
 # Stored-signature primitives (streaming / incremental ingestion)
 # ---------------------------------------------------------------------------
 
-def doc_signatures(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def doc_signatures(docs: DataFrame) -> DataFrame:
     """Per-doc dedup state: normalized-md5 ``fingerprint``, the 64-perm
     md5 MinHash ``sig`` array (same family as ``dedup_minhash_md5``,
     same shingling as ``dedup_ngram_jaccard`` — so signature agreement
@@ -955,12 +953,12 @@ def doc_signatures(
     spark = docs.sparkSession
     par = spark.sparkContext.defaultParallelism
     if docs.rdd.getNumPartitions() < par:
-        docs = docs.repartition(par, id_col)
+        docs = docs.repartition(par, "doc_id")
     sh = docs.select(
-        F.col(id_col), F.explode(_shingles(F.col(text_col))).alias("shingle")
+        F.col("doc_id"), F.explode(_shingles(F.col("text"))).alias("shingle")
     )
     fp = docs.select(
-        F.col(id_col), F.md5(_norm_text(F.col(text_col))).alias("fingerprint")
+        F.col("doc_id"), F.md5(_norm_text(F.col("text"))).alias("fingerprint")
     )
     hs = [F.col(f"h{p}") for p in range(MINHASH_PERMS)]
     band_keys = [
@@ -972,7 +970,7 @@ def doc_signatures(
         for b in range(LSH_BANDS)
     ]
     sigs = (
-        sh.groupBy(id_col)
+        sh.groupBy("doc_id")
         .agg(
             *[
                 F.min(
@@ -982,17 +980,15 @@ def doc_signatures(
             ]
         )
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.array(*hs).alias("sig"),
             F.array(*band_keys).alias("bands"),
         )
     )
-    return fp.join(sigs, id_col, "left")
+    return fp.join(sigs, "doc_id", "left")
 
 
-def signature_verdicts(
-    batch_sigs: DataFrame, corpus_sigs: DataFrame | None, id_col: str = "doc_id"
-) -> DataFrame:
+def signature_verdicts(batch_sigs: DataFrame, corpus_sigs: DataFrame | None) -> DataFrame:
     """Verdict per batch doc against a STORED signature corpus:
     ``exact_dup`` (fingerprint already present; match = min corpus id),
     ``near_dup`` (best LSH-candidate with signature-agreement Jaccard
@@ -1007,10 +1003,10 @@ def signature_verdicts(
     """
     from pyspark.sql import Window
 
-    id_type = dict(batch_sigs.dtypes)[id_col]
+    id_type = dict(batch_sigs.dtypes)["doc_id"]
     if corpus_sigs is None:
         return batch_sigs.select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.lit("novel").alias("verdict"),
             F.lit(None).cast(id_type).alias("match_id"),
             F.lit(None).cast("double").alias("est_jaccard"),
@@ -1019,8 +1015,8 @@ def signature_verdicts(
     exact = (
         batch_sigs.alias("b")
         .join(corpus_sigs.alias("c"), "fingerprint")
-        .groupBy(F.col(f"b.{id_col}").alias(id_col))
-        .agg(F.min(F.col(f"c.{id_col}")).alias("exact_match"))
+        .groupBy(F.col("b.doc_id").alias("doc_id"))
+        .agg(F.min(F.col("c.doc_id")).alias("exact_match"))
     )
 
     def _bands(df: DataFrame) -> DataFrame:
@@ -1045,7 +1041,7 @@ def signature_verdicts(
                 ]
             )
         return df.where(F.col("sig").isNotNull()).select(
-            F.col(id_col), F.posexplode(keys).alias("band_id", "band_key")
+            F.col("doc_id"), F.posexplode(keys).alias("band_id", "band_key")
         )
 
     cand = (
@@ -1057,23 +1053,23 @@ def signature_verdicts(
             & (F.col("bb.band_key") == F.col("cb.band_key")),
         )
         .select(
-            F.col(f"bb.{id_col}").alias(id_col),
-            F.col(f"cb.{id_col}").alias("match_id"),
+            F.col("bb.doc_id").alias("doc_id"),
+            F.col("cb.doc_id").alias("match_id"),
         )
         .distinct()
     )
     est = (
         cand.join(
-            batch_sigs.select(F.col(id_col), F.col("sig").alias("bsig")), id_col
+            batch_sigs.select(F.col("doc_id"), F.col("sig").alias("bsig")), "doc_id"
         )
         .join(
             corpus_sigs.select(
-                F.col(id_col).alias("match_id"), F.col("sig").alias("csig")
+                F.col("doc_id").alias("match_id"), F.col("sig").alias("csig")
             ),
             "match_id",
         )
         .select(
-            id_col,
+            "doc_id",
             "match_id",
             (
                 F.aggregate(
@@ -1088,20 +1084,20 @@ def signature_verdicts(
         )
         .where(F.col("est_jaccard") >= MINHASH_JACCARD_THRESHOLD)
     )
-    w = Window.partitionBy(id_col).orderBy(
+    w = Window.partitionBy("doc_id").orderBy(
         F.desc("est_jaccard"), F.asc("match_id")
     )
     near = (
         est.withColumn("rn", F.row_number().over(w))
         .where(F.col("rn") == 1)
-        .select(id_col, F.col("match_id").alias("near_match"), "est_jaccard")
+        .select("doc_id", F.col("match_id").alias("near_match"), "est_jaccard")
     )
     return (
-        batch_sigs.select(id_col)
-        .join(exact, id_col, "left")
-        .join(near, id_col, "left")
+        batch_sigs.select("doc_id")
+        .join(exact, "doc_id", "left")
+        .join(near, "doc_id", "left")
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.when(F.col("exact_match").isNotNull(), F.lit("exact_dup"))
             .when(F.col("near_match").isNotNull(), F.lit("near_dup"))
             .otherwise(F.lit("novel"))

@@ -84,7 +84,7 @@ def _uf_min_labels(pairs) -> dict:
     return {x: find(x) for x in parent}
 
 
-def connected_components(pairs: DataFrame, max_rounds: int = MAX_CC_ROUNDS) -> DataFrame:
+def connected_components(pairs: DataFrame) -> DataFrame:
     """(doc_a, doc_b) undirected edges → (doc_id, cluster_id) where
     cluster_id = min node id in the component. Only nodes appearing in
     at least one edge are labeled (singletons aren't duplicates).
@@ -138,7 +138,7 @@ def connected_components(pairs: DataFrame, max_rounds: int = MAX_CC_ROUNDS) -> D
         .withColumn("label", F.col("doc_id"))
         .localCheckpoint(eager=True)
     )
-    for _ in range(max_rounds):
+    for _ in range(MAX_CC_ROUNDS):
         prop = edges.join(
             labels, edges.src == labels.doc_id, "inner"
         ).select(F.col("dst").alias("doc_id"), "label")
@@ -165,7 +165,7 @@ def connected_components(pairs: DataFrame, max_rounds: int = MAX_CC_ROUNDS) -> D
         labels = merged.select("doc_id", "label")
         if changed == 0:
             return labels.select("doc_id", F.col("label").alias("cluster_id"))
-    raise RuntimeError(f"connected_components did not converge in {max_rounds} rounds")
+    raise RuntimeError(f"connected_components did not converge in {MAX_CC_ROUNDS} rounds")
 
 
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -269,7 +269,7 @@ from clusters c join sizes s using (cluster_id)
 
 
 def _maintain_driver_side(
-    spark: SparkSession, labels_table: str, new_edges: DataFrame, id_col: str
+    spark: SparkSession, labels_table: str, new_edges: DataFrame
 ) -> int | None:
     """Round 14: the WHOLE incremental label maintenance runs
     driver-side when the batch is churn-scale — one bounded probe job
@@ -310,7 +310,7 @@ def _maintain_driver_side(
 
     snap = lakehouse._head_or_new(labels_table)
     exists = snap.version >= 0
-    cols = [id_col, "cluster_id"]
+    cols = ["doc_id", "cluster_id"]
     stored: dict = {}
     if exists:
         hits = lakehouse._read_local(
@@ -335,7 +335,7 @@ def _maintain_driver_side(
         hits = lakehouse._read_local(
             snap,
             lakehouse._may_hold(
-                snap.files, id_col, "cluster_id", [(s, s) for s in affected]
+                snap.files, "doc_id", "cluster_id", [(s, s) for s in affected]
             ),
             cols, keep=lambda r: r[1] in affected,
         )
@@ -346,24 +346,23 @@ def _maintain_driver_side(
             src_rows[d] = min(src_rows[d], nl) if d in src_rows else nl
 
     rows = sorted(src_rows.items())
-    src = spark.createDataFrame(rows, f"{id_col} {dtype}, cluster_id {dtype}")
+    src = spark.createDataFrame(rows, f"doc_id {dtype}, cluster_id {dtype}")
     # rows are in hand: create/merge stage the commit DRIVER-SIDE
     # (round 15) — the labels CREATE previously paid a distinct-count +
     # range-sample + write job for churn-scale rows, and each MERGE a
     # probe + rewrite job; both are now zero-Spark-job commits
     if not exists:
         return lakehouse.create_or_replace(
-            spark, labels_table, src, key=id_col,
+            spark, labels_table, src, key="doc_id",
             partition_by="cluster_id", local_rows=rows,
         )
     return lakehouse.merge_into(
-        spark, labels_table, src, id_col, source_rows=rows
+        spark, labels_table, src, "doc_id", source_rows=rows
     )
 
 
 def maintain_cluster_labels(
-    spark: SparkSession, labels_table: str, new_edges: DataFrame,
-    id_col: str = "doc_id",
+    spark: SparkSession, labels_table: str, new_edges: DataFrame
 ) -> int:
     """Round 8: INCREMENTAL connected-component maintenance — the
     streaming turn `incremental_mart_refresh` took for aggregates,
@@ -395,7 +394,7 @@ def maintain_cluster_labels(
     Returns the labels table version."""
     from ecommerce_dbt_medallion_spark import lakehouse
 
-    v = _maintain_driver_side(spark, labels_table, new_edges, id_col)
+    v = _maintain_driver_side(spark, labels_table, new_edges)
     if v is not None:
         return v
 
@@ -411,7 +410,7 @@ def maintain_cluster_labels(
 
     exists = bool(lakehouse.versions(labels_table))
     nodes = (
-        edges.select(F.col("doc_a").alias(id_col))
+        edges.select(F.col("doc_a").alias("doc_id"))
         .union(edges.select(F.col("doc_b")))
         .distinct()
         .localCheckpoint(eager=True)
@@ -424,25 +423,25 @@ def maintain_cluster_labels(
         # is driver-side O(files × keys))
         n_nodes = nodes.count()
         if n_nodes <= MAINT_LOOKUP_MAX_KEYS:
-            node_ids = [r[id_col] for r in nodes.collect()]
+            node_ids = [r["doc_id"] for r in nodes.collect()]
             stored_nodes = lakehouse.read_keys(spark, labels_table, node_ids)
         else:
             stored_nodes = lakehouse.read(spark, labels_table)
-        node_sup = nodes.join(stored_nodes, id_col, "left").select(
-            F.col(id_col),
-            F.coalesce("cluster_id", F.col(id_col)).alias("sup"),
+        node_sup = nodes.join(stored_nodes, "doc_id", "left").select(
+            F.col("doc_id"),
+            F.coalesce("cluster_id", F.col("doc_id")).alias("sup"),
         )
     else:
-        node_sup = nodes.select(F.col(id_col), F.col(id_col).alias("sup"))
+        node_sup = nodes.select(F.col("doc_id"), F.col("doc_id").alias("sup"))
     node_sup = node_sup.localCheckpoint(eager=True)
 
     sup_edges = (
         edges.join(
-            node_sup.select(F.col(id_col).alias("doc_a"), F.col("sup").alias("sa")),
+            node_sup.select(F.col("doc_id").alias("doc_a"), F.col("sup").alias("sa")),
             "doc_a",
         )
         .join(
-            node_sup.select(F.col(id_col).alias("doc_b"), F.col("sup").alias("sb")),
+            node_sup.select(F.col("doc_id").alias("doc_b"), F.col("sup").alias("sb")),
             "doc_b",
         )
         .where(F.col("sa") != F.col("sb"))
@@ -476,7 +475,7 @@ def maintain_cluster_labels(
     )
 
     new_endpoint_labels = node_sup.join(mini, "sup").select(
-        F.col(id_col), F.col("new_label").alias("cluster_id")
+        F.col("doc_id"), F.col("new_label").alias("cluster_id")
     )
     if exists:
         # stored rows of MERGED components need relabeling: the affected
@@ -494,28 +493,28 @@ def maintain_cluster_labels(
             # components) times on the driver
             snap = lakehouse._snapshot(labels_table)
             admitted = lakehouse._may_hold(
-                snap.files, id_col, "cluster_id",
+                snap.files, "doc_id", "cluster_id",
                 [(r["sup"], r["sup"]) for r in aff_rows],
             )
             stored_affected = lakehouse._read_files(spark, snap, admitted)
             amap = spark.createDataFrame(
                 [(r["sup"], r["new_label"]) for r in aff_rows],
-                f"cluster_id {dict(node_sup.dtypes)[id_col]}, "
-                f"new_label {dict(node_sup.dtypes)[id_col]}",
+                f"cluster_id {dict(node_sup.dtypes)['doc_id']}, "
+                f"new_label {dict(node_sup.dtypes)['doc_id']}",
             )
             relabeled = stored_affected.join(F.broadcast(amap), "cluster_id").select(
-                F.col(id_col), F.col("new_label").alias("cluster_id")
+                F.col("doc_id"), F.col("new_label").alias("cluster_id")
             )
             src = new_endpoint_labels.union(relabeled)
         else:
             src = new_endpoint_labels
     else:
         src = new_endpoint_labels
-    src = src.groupBy(id_col).agg(F.min("cluster_id").alias("cluster_id"))
+    src = src.groupBy("doc_id").agg(F.min("cluster_id").alias("cluster_id"))
     if not exists:
         # first creation declares cluster_id range-clustering, so later
         # relabel reads can file-skip on cluster_id stats
         return lakehouse.create_or_replace(
-            spark, labels_table, src, key=id_col, partition_by="cluster_id"
+            spark, labels_table, src, key="doc_id", partition_by="cluster_id"
         )
-    return lakehouse.merge_into(spark, labels_table, src, id_col)
+    return lakehouse.merge_into(spark, labels_table, src, "doc_id")

@@ -269,16 +269,14 @@ RESERVOIR_K = 200
 RSV_MAX_WEIGHT = 8  # integer weights 1..8 (quality-score octile + 1)
 
 
-def weighted_reservoir(
-    df: DataFrame, id_col: str, weight_col: str, k: int, salt: str = RSV_SALT
-) -> DataFrame:
+def weighted_reservoir(df: DataFrame, id_col: str, weight_col: str, k: int) -> DataFrame:
     """The engine-exact A-ES core: keep the ``k`` rows with the largest
     priority, where priority = max over i in 1..weight of
-    md5(id, salt, i) — distributed as u^(1/w) for integer weights (the
+    md5(id, RSV_SALT, i) — distributed as u^(1/w) for integer weights (the
     max-of-w-uniforms identity), with no engine-divergent float pow.
     ``weight_col`` must be a positive integer column. Appends
     ``priority`` (16-hex string) and ``sample_rank``; selection is a
-    deterministic function of (id, weight, salt) alone, so shards,
+    deterministic function of (id, weight) alone, so shards,
     re-runs, and engines agree row-for-row."""
     from ecommerce_dbt_medallion_spark.ops.topk import top_k_per_group
 
@@ -288,7 +286,7 @@ def weighted_reservoir(
             lambda i: F.substring(
                 F.md5(
                     F.concat(
-                        F.col(id_col).cast("string"), F.lit(salt), i.cast("string")
+                        F.col(id_col).cast("string"), F.lit(RSV_SALT), i.cast("string")
                     )
                 ),
                 1,

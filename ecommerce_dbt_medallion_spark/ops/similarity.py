@@ -645,28 +645,21 @@ KNN_LSH_PLANES = 8  # 256 buckets/table: candidate fan-in stays bounded
 KNN_LSH_TABLES = 8
 
 
-def knn_graph(
-    spark: SparkSession,
-    sf_dir: str,
-    lsh_planes: int = KNN_LSH_PLANES,
-    lsh_tables: int = KNN_LSH_TABLES,
-) -> DataFrame:
+def knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     """#19c: k-nearest-neighbor graph build — the index structure behind
     semantic dedup clustering and retrieval-augmented sampling.
 
     Candidates come from an md5-literal hyperplane-LSH family of its OWN
     (symmetric: both directions of every bucket pair): 8 tables × 8-bit
-    codes. ``lsh_planes`` is the scale dial — expected bucket occupancy
-    is N/2^planes, so candidate pairs grow ~linearly in N at fixed
-    occupancy (the dedup family's 3-bit codes are tuned for pair recall
-    at cos ≥ 0.4 and go quadratic here). The round-6 sf1 probe
-    (SURVEY §6): at 20k vectors the default 8 bits holds (2.1× time for
-    10× data, occupancy 8→80); each further decade of corpus should add
+    codes. ``KNN_LSH_PLANES`` is the scale dial — expected bucket
+    occupancy is N/2^planes, so candidate pairs grow ~linearly in N at
+    fixed occupancy (the dedup family's 3-bit codes are tuned for pair
+    recall at cos ≥ 0.4 and go quadratic here). The round-6 sf1 probe
+    (SURVEY §6): at 20k vectors 8 bits holds (2.1× time for 10× data,
+    occupancy 8→80); each further decade of corpus should add
     ~log2(10)≈3 planes to keep occupancy flat. The DuckDB oracle pins
-    the DEFAULT family; callers overriding the dial keep correctness
-    (exact rerank is parameter-independent) but leave the hash gate.
-    Cosine is computed BEFORE the distinct so the dedup shuffle moves 3
-    narrow columns, never vectors. Exact ordered-fold cosine rerank,
+    the same family. Cosine is computed BEFORE the distinct so the
+    dedup shuffle moves 3 narrow columns, never vectors. Exact ordered-fold cosine rerank,
     top-KNN_K per vector by (cosine desc, neighbor_id); per-vector
     window partition = vec_id, fan-in bounded by bucket occupancy ×
     tables. The oracle reproduces buckets → candidates → rerank exactly,
@@ -681,8 +674,8 @@ def knn_graph(
         F.posexplode(
             F.array(
                 *[
-                    _hp_bucket_col("knn", t, lsh_planes)
-                    for t in range(lsh_tables)
+                    _hp_bucket_col("knn", t, KNN_LSH_PLANES)
+                    for t in range(KNN_LSH_TABLES)
                 ]
             )
         ).alias("table_id", "bucket"),

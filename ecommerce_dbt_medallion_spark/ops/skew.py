@@ -51,18 +51,17 @@ def salted_join(
     probe: DataFrame,
     build: DataFrame,
     key: str,
-    how: str = "inner",
     salt: int = DEFAULT_SALT,
     probe_salt_col: Column | None = None,
 ) -> DataFrame:
     """Equi-join ``probe ⋈ build`` on ``key`` with salt-scattering.
 
-    Result is row-identical to ``probe.join(build, key, how)`` for
-    inner/left joins (build side must be unique-ish per key or the usual
-    join multiplicity applies, exactly as in the plain join).
+    Result is row-identical to the inner ``probe.join(build, key)``
+    (build side must be unique-ish per key or the usual join
+    multiplicity applies, exactly as in the plain join).
     """
     salted_probe = salt_probe(probe, salt, probe_salt_col)
     salted_build = build.withColumn(
         "__salt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1)))
     )
-    return salted_probe.join(salted_build, [key, "__salt"], how).drop("__salt")
+    return salted_probe.join(salted_build, [key, "__salt"]).drop("__salt")

@@ -370,10 +370,10 @@ def _failed_rows_df(spark: SparkSession, sf_dir: str, chk: Check,
     )
 
 
-def dq_failed_rows(spark: SparkSession, sf_dir: str,
-                   limit_per_test: int = STORE_FAILURES_LIMIT) -> DataFrame:
+def dq_failed_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """dbt ``store_failures`` parity: the offending values behind every
-    failure count in :func:`dq_generic_tests`, capped per test.
+    failure count in :func:`dq_generic_tests`, capped at
+    STORE_FAILURES_LIMIT per test.
 
     Scale shape: each check aggregates only its FAILING rows (tiny after
     the seeded dirt rate); the cap is a per-test window over those small
@@ -394,7 +394,7 @@ def dq_failed_rows(spark: SparkSession, sf_dir: str,
     )
     return (
         out.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= limit_per_test)
+        .where(F.col("rk") <= STORE_FAILURES_LIMIT)
         .drop("rk")
     )
 
@@ -446,7 +446,7 @@ def _failed_rows_sql(chk: Check) -> str:
     )
 
 
-def oracle_dq_failed_rows(limit_per_test: int = STORE_FAILURES_LIMIT) -> str:
+def oracle_dq_failed_rows() -> str:
     union = "\nunion all\n".join(_failed_rows_sql(c) for c in CHECKS)
     final = f"""
 select model_name, column_name, test_name, offending_value, n_rows
@@ -456,7 +456,7 @@ from (
       order by n_rows desc, coalesce(offending_value, '')) as rk
   from ({union})
 )
-where rk <= {limit_per_test}
+where rk <= {STORE_FAILURES_LIMIT}
 """
     return omed.assemble_many(_deps_for_checks(), final)
 

@@ -30,10 +30,9 @@ _SOURCES = {
 }
 
 
-def source_freshness(
-    spark: SparkSession, sf_dir: str, as_of: str = BATCH_TS
-) -> DataFrame:
-    """One row per source: max loaded/event ts, age hours, status.
+def source_freshness(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """One row per source: max loaded/event ts, age hours at BATCH_TS,
+    status.
 
     Round 6: driver-gated as ``dq_source_freshness`` — age_hours is the
     UNROUNDED integer-seconds/3600 double (one IEEE division, engine-
@@ -49,7 +48,7 @@ def source_freshness(
             F.max(col).cast("timestamp").alias("max_loaded_at")
         )
         age_h = (
-            F.unix_timestamp(F.lit(as_of).cast("timestamp"))
+            F.unix_timestamp(F.lit(BATCH_TS).cast("timestamp"))
             - F.unix_timestamp(F.col("max_loaded_at"))
         ) / 3600.0
         row = df.select(
@@ -65,7 +64,7 @@ def source_freshness(
     return out
 
 
-def oracle_source_freshness(as_of: str = BATCH_TS) -> str:
+def oracle_source_freshness() -> str:
     """DuckDB twin of :func:`source_freshness` (epoch seconds via
     ``epoch_us // 1_000_000`` — all source timestamps are whole
     seconds, so floor-seconds agree with Spark's unix_timestamp)."""
@@ -86,13 +85,13 @@ def oracle_source_freshness(as_of: str = BATCH_TS) -> str:
 {rows}
 )
 select source_name, max_loaded_at,
-    (epoch_us(cast(TIMESTAMP '{as_of}' as timestamp)) // 1000000
+    (epoch_us(cast(TIMESTAMP '{BATCH_TS}' as timestamp)) // 1000000
      - epoch_us(max_loaded_at) // 1000000) / 3600.0 as age_hours,
     case
-        when (epoch_us(cast(TIMESTAMP '{as_of}' as timestamp)) // 1000000
+        when (epoch_us(cast(TIMESTAMP '{BATCH_TS}' as timestamp)) // 1000000
               - epoch_us(max_loaded_at) // 1000000) / 3600.0 > {ERROR_AFTER_HOURS}
             then 'error'
-        when (epoch_us(cast(TIMESTAMP '{as_of}' as timestamp)) // 1000000
+        when (epoch_us(cast(TIMESTAMP '{BATCH_TS}' as timestamp)) // 1000000
               - epoch_us(max_loaded_at) // 1000000) / 3600.0 > {WARN_AFTER_HOURS}
             then 'warn'
         else 'pass'

@@ -271,9 +271,13 @@ def snapshot(
     return spark.read.parquet(snapshot_path)
 
 
-def materialize_bucketed_facts(
-    spark: SparkSession, sf_dir: str, n_buckets: int = 32
-) -> tuple[str, str]:
+# applicationId -> the sf_dir whose facts silver_orders_b/silver_payments_b
+# hold in that application's catalog (a stopped session's in-memory
+# catalog forgets the tables; a new one has a new id)
+_BUCKETED_HOLDS: dict[str, str] = {}
+
+
+def materialize_bucketed_facts(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     """Bucketed materialization of the two join-heavy facts.
 
     Writing silver_orders and silver_payments bucketed (and sorted) by
@@ -288,15 +292,23 @@ def materialize_bucketed_facts(
     Spark trusts the sortBy metadata and the downstream SortMergeJoin
     skips both the Exchange AND the per-partition Sort.
 
-    Returns the two table names (Spark-SQL managed tables).
+    Both tables are rewritten only when they do not already hold
+    ``sf_dir``'s facts in this application. Returns the two table names
+    (Spark-SQL managed tables).
     """
     import shutil
     from urllib.parse import urlparse
 
+    tables = ("silver_orders_b", "silver_payments_b")
+    app = spark.sparkContext.applicationId
+    if _BUCKETED_HOLDS.get(app) == sf_dir:
+        return tables
+    n_buckets = 32
     so = ms.silver_orders(spark, sf_dir)
     sp = ms.silver_payments_df(mb.bronze_payments(spark, sf_dir), so)
     warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")).path
-    for name, df in (("silver_orders_b", so), ("silver_payments_b", sp)):
+    _BUCKETED_HOLDS.pop(app, None)  # a failed rewrite leaves them unknown
+    for name, df in zip(tables, (so, sp)):
         spark.sql(f"drop table if exists {name}")
         # the in-memory catalog forgets tables across sessions but their
         # files persist — clear the managed location too
@@ -308,7 +320,8 @@ def materialize_bucketed_facts(
             .sortBy("order_id")
             .saveAsTable(name)
         )
-    return "silver_orders_b", "silver_payments_b"
+    _BUCKETED_HOLDS[app] = sf_dir
+    return tables
 
 
 def incremental_mart_refresh(
@@ -318,7 +331,6 @@ def incremental_mart_refresh(
     group_key: str,
     agg_fn,
     from_version: int,
-    max_deleted_groups: int = 100_000,
 ) -> int:
     """Incremental view maintenance: bring an AGGREGATE mart up to date
     with its fact table by recomputing ONLY the groups whose fact rows
@@ -335,13 +347,14 @@ def incremental_mart_refresh(
     correctness by construction: refresh(subset) ≡ full(subset)).
     Groups whose LAST fact row was deleted disappear from the mart via
     ``delete_where`` (their keys are collected — churn-scale by
-    definition, guarded by ``max_deleted_groups``).
+    definition, refused beyond 100,000).
 
     Returns the fact-table version this refresh caught up to (pass it
     back as ``from_version`` next time).
     """
     from ecommerce_dbt_medallion_spark import lakehouse
 
+    max_deleted_groups = 100_000
     # CDF diffs live FILE sets, and a DELETE DEFERRED commit is
     # metadata-only — tombstoned keys' groups would look clean and the
     # refresh would silently leave them stale. Same guard append/merge

@@ -23,8 +23,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 NANOS_CONF = "spark.sql.legacy.parquet.nanosAsLong"
 
 
-def normalize_event_ts(df: DataFrame, col: str = "ts") -> DataFrame:
-    """Normalize an event-time column to a true TIMESTAMP, whatever the
+def normalize_event_ts(df: DataFrame) -> DataFrame:
+    """Normalize the event-time column ``ts`` to a true TIMESTAMP, whatever the
     parquet encoding of the day is.
 
     The driver's testdata has shipped two encodings so far:
@@ -51,15 +51,15 @@ def normalize_event_ts(df: DataFrame, col: str = "ts") -> DataFrame:
     encoding should be handled HERE (and will be caught by the dtype
     pinning test in tests/test_sources.py).
     """
-    dtype = dict(df.dtypes).get(col)
+    dtype = dict(df.dtypes).get("ts")
     if dtype == "bigint":
-        df = df.withColumn(col, F.timestamp_micros(F.expr(f"{col} div 1000")))
+        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     elif dtype == "timestamp_ntz":
         df = df.withColumn(
-            col,
+            "ts",
             F.expr(
-                f"make_timestamp(year({col}), month({col}), day({col}), "
-                f"hour({col}), minute({col}), extract(SECOND FROM {col}), 'UTC')"
+                "make_timestamp(year(ts), month(ts), day(ts), "
+                "hour(ts), minute(ts), extract(SECOND FROM ts), 'UTC')"
             ),
         )
     return df
@@ -106,17 +106,16 @@ def parquet_source_stats(path: str) -> list:
     return [n, b, m]
 
 
-def event_utc_date(col: str = "ts"):
-    """The UTC calendar day of an event instant as pure integer math —
+def event_utc_date():
+    """The UTC calendar day of event time ``ts`` as pure integer math —
     SESSION-TZ-INDEPENDENT (to_date/cast-to-date render an instant in
     the session timezone, so a day derived with them in one session
     would disagree with one computed in another; this
     expression is identical everywhere, the same discipline as
-    normalize_event_ts). The event marts' day bounds and daily grouping
-    both use it, so they select the same rows in any session."""
+    normalize_event_ts). The event marts' daily grouping uses it, so it
+    labels the same rows in any session."""
     return F.expr(
-        f"date_from_unix_date(cast(floor(unix_micros({col}) / "
-        f"{86_400_000_000}) as int))"
+        f"date_from_unix_date(cast(floor(unix_micros(ts) / {86_400_000_000}) as int))"
     )
 
 

@@ -157,8 +157,6 @@ def stream_ann_index_ingest(
     coarse_table: str,
     pq_table: str,
     codes_table: str,
-    schema: str = "vec_id long, embedding array<double>",
-    max_files_per_trigger: int = 1,
 ) -> int:
     """Drain raw-embedding micro-batch files from ``source_dir`` into
     the stored code table. Per batch: quantize → encode against the
@@ -182,7 +180,7 @@ def stream_ann_index_ingest(
         lakehouse.merge_into(spark, codes_table, bcodes, key="vec_id")
 
     return drain_batches(
-        spark, source_dir, schema, codes_table, _batch, max_files_per_trigger
+        spark, source_dir, "vec_id long, embedding array<double>", codes_table, _batch
     )
 
 

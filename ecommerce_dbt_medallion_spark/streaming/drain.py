@@ -143,16 +143,15 @@ def drain_batches(
     schema,
     table: str,
     batch_fn: Callable[[DataFrame, int], None],
-    max_files_per_trigger: int = 1,
 ) -> int:
     """Drain the parquet files in ``source_dir`` through
-    ``batch_fn(batch_df, batch_id)``, ``max_files_per_trigger`` files
-    per micro-batch, checkpointing beside ``table``. Empty micro-batches
+    ``batch_fn(batch_df, batch_id)``, one file per micro-batch,
+    checkpointing beside ``table``. Empty micro-batches
     never reach ``batch_fn``. Returns ``table``'s final version (-1 if
     it has none)."""
     stream = (
         spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", 1)
         .parquet(source_dir)
     )
 

@@ -74,21 +74,19 @@ def _broadcast_threshold_bytes(spark: SparkSession) -> int:
     return max(n, 0)
 
 
-def stream_enrich_purchases(
-    spark: SparkSession, sf_dir: str, broadcast_dim: bool | None = None
-) -> DataFrame:
+def stream_enrich_purchases(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hourly purchase revenue per customer nation, computed on a stream
     enriched against the static customer/nation dims.
 
     SIZE CONTRACT (round-10, VERDICT r9 #7): customer SCALES with the
     data (the largest dimension), so the broadcast hint is size-GATED,
-    never pinned — ``broadcast_dim=None`` (the default) broadcasts only
-    while the dim's source bytes × a 4× parquet-expansion factor fit
-    under spark.sql.autoBroadcastJoinThreshold; past the bound the
+    never pinned — the dim is broadcast only while its source bytes ×
+    a 4× parquet-expansion factor fit under
+    spark.sql.autoBroadcastJoinThreshold; past the bound the
     stream-static join runs WITHOUT the hint and Spark shuffles both
     sides per micro-batch (SortMergeJoin) — more per-batch work, but
-    bounded memory at any dim scale. Callers can force either path;
-    both are value-identical (pinned by test)."""
+    bounded memory at any dim scale. Both paths are value-identical
+    (pinned by test)."""
     stream = load_event_stream(spark, sf_dir)
 
     dim = (
@@ -99,13 +97,10 @@ def stream_enrich_purchases(
         )
         .select(F.col("c_custkey").alias("user_id"), F.col("n_name").alias("nation"))
     )
-    if broadcast_dim is None:
-        thresh = _broadcast_threshold_bytes(spark)
-        broadcast_dim = thresh > 0 and (
-            _dim_source_bytes(sf_dir, "customer", "nation") * _PARQUET_EXPANSION
-            <= thresh
-        )
-    if broadcast_dim:
+    thresh = _broadcast_threshold_bytes(spark)
+    if thresh > 0 and (
+        _dim_source_bytes(sf_dir, "customer", "nation") * _PARQUET_EXPANSION <= thresh
+    ):
         dim = F.broadcast(dim)
 
     enriched = (

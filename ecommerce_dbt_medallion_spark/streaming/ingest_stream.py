@@ -35,12 +35,7 @@ def stream_ingest_dedup(
     sig_table: str,
     verdict_table: str,
     schema,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_files_per_trigger: int = 1,
     labels_table: str | None = None,
-    compact_every: int | None = None,
-    compact_target_rows: int = 1_000_000,
     phase_log: list | None = None,
 ) -> tuple[int, int]:
     """Streaming corpus curation end-to-end: each micro-batch of raw
@@ -60,7 +55,7 @@ def stream_ingest_dedup(
          novel per doc; shuffle ∝ batch x band occupancy, never
          corpus x batch.
       3. Verdicts (+ batch_id) MERGE into ``verdict_table`` keyed on
-         ``id_col``.
+         ``doc_id``.
       4. Novel docs' signatures (one representative per fingerprint —
          within-batch exact dupes collapse to the min id) APPEND to
          ``sig_table``: an add-only commit, no rewrite, so corpus
@@ -88,7 +83,7 @@ def stream_ingest_dedup(
     ``phase_log`` (optional, VERDICT r11 #5): a caller-owned list that
     receives one ``{"batch", "phase", "sec"}`` row per pipeline stage
     per micro-batch — signature build vs verdict+MERGE vs label
-    maintenance vs novel APPEND vs compaction — so the bench artifact
+    maintenance vs novel APPEND — so the bench artifact
     can MEASURE that maintenance cost is churn-proportional instead of
     arguing it from the code. Phase boundaries sit at materialization
     points (eager checkpoints / commits), so the wall-clock split is
@@ -115,9 +110,7 @@ def stream_ingest_dedup(
 
     def _batch(batch_df: DataFrame, batch_id: int) -> None:
         t = _time.perf_counter()
-        bsig = doc_signatures(batch_df, id_col, text_col).localCheckpoint(
-            eager=True
-        )
+        bsig = doc_signatures(batch_df).localCheckpoint(eager=True)
         t = _mark(batch_id, "signature_build", t)
         corpus_all = (
             lakehouse.read(spark, sig_table)
@@ -126,18 +119,18 @@ def stream_ingest_dedup(
         )
         # replay safety: never compare a batch against its own ids
         corpus = (
-            corpus_all.join(bsig.select(id_col), id_col, "left_anti")
+            corpus_all.join(bsig.select("doc_id"), "doc_id", "left_anti")
             if corpus_all is not None
             else None
         )
         verd = (
-            signature_verdicts(bsig, corpus, id_col)
+            signature_verdicts(bsig, corpus)
             .withColumn("batch_id", F.lit(batch_id).cast("long"))
             .localCheckpoint(eager=True)
         )
         # merge_into/append fall back to CREATE themselves on a
         # version-less table — no exists-branching here
-        lakehouse.merge_into(spark, verdict_table, verd, id_col)
+        lakehouse.merge_into(spark, verdict_table, verd, "doc_id")
         t = _mark(batch_id, "verdict_merge", t)
         if labels_table is not None:
             # round 8: incremental CLUSTER maintenance — this batch's
@@ -149,10 +142,10 @@ def stream_ingest_dedup(
             )
 
             edges = verd.where(F.col("match_id").isNotNull()).select(
-                F.col(id_col).alias("doc_a"),
+                F.col("doc_id").alias("doc_a"),
                 F.col("match_id").alias("doc_b"),
             )
-            maintain_cluster_labels(spark, labels_table, edges, id_col)
+            maintain_cluster_labels(spark, labels_table, edges)
             t = _mark(batch_id, "label_maintain", t)
             if phase_log is not None:
                 # churn next to wall clock (VERDICT r12 #2): sec alone
@@ -166,46 +159,27 @@ def stream_ingest_dedup(
                 phase_log[-1]["n_edges"] = edges.count()
                 t = _time.perf_counter()
         novel = bsig.join(
-            verd.where(F.col("verdict") == "novel").select(id_col),
-            id_col,
+            verd.where(F.col("verdict") == "novel").select("doc_id"),
+            "doc_id",
             "semi",
         )
-        w = Window.partitionBy("fingerprint").orderBy(id_col)
+        w = Window.partitionBy("fingerprint").orderBy("doc_id")
         novel = novel.withColumn("rn", F.row_number().over(w)).where(
             F.col("rn") == 1
         ).drop("rn")
         if corpus_all is not None:
             # replay safety: an id already in the corpus never re-appends
             novel = novel.join(
-                corpus_all.select(id_col), id_col, "left_anti"
+                corpus_all.select("doc_id"), "doc_id", "left_anti"
             )
         # one materialization: isEmpty() + the append below would
         # otherwise run the joins + window twice per batch
         novel = novel.localCheckpoint(eager=True)
         if not novel.isEmpty():
-            lakehouse.append(spark, sig_table, novel, key=id_col)
-        t = _mark(batch_id, "novel_append", t)
-        # the small-files problem IS the operational cost of streaming
-        # ingestion: every batch adds O(batch) files to both state
-        # tables and scan latency degrades with file count, not data
-        # size. Periodic OPTIMIZE bin-packs them back (data-identical
-        # rewrite, so checkpoint replay of a batch is unaffected);
-        # log checkpoints bound the matching metadata-replay cost.
-        # (labels_table is deliberately NOT compacted here: it is
-        # partition-declared on cluster_id, so OPTIMIZE would re-emit
-        # ~one file per cluster value — its layout is maintained by the
-        # churn-scale MERGEs in maintain_cluster_labels instead.)
-        if compact_every and (batch_id + 1) % compact_every == 0:
-            for tbl in (sig_table, verdict_table):
-                if lakehouse.versions(tbl):
-                    lakehouse.optimize(
-                        spark, tbl, target_rows=compact_target_rows
-                    )
-            _mark(batch_id, "compact", t)
+            lakehouse.append(spark, sig_table, novel, key="doc_id")
+        _mark(batch_id, "novel_append", t)
 
-    v_verdict = drain_batches(
-        spark, source_dir, schema, verdict_table, _batch, max_files_per_trigger
-    )
+    v_verdict = drain_batches(spark, source_dir, schema, verdict_table, _batch)
     v_sig = lakehouse.versions(sig_table)
     return (v_sig[-1] if v_sig else -1), v_verdict
 

@@ -50,7 +50,6 @@ def stream_quantile_sketch_ingest(
     source_dir: str,
     state_table: str,
     schema,
-    max_files_per_trigger: int = 1,
 ) -> int:
     """Drain ``source_dir`` (rows of (grp string, cents bigint)) into a
     batch-tagged sketch-state lakehouse table; returns the final state
@@ -69,9 +68,7 @@ def stream_quantile_sketch_ingest(
         ).withColumn("batch_id", F.lit(batch_id).cast("long"))
         commit_batch_state(spark, state_table, bdf, batch_id)
 
-    return drain_batches(
-        spark, source_dir, schema, state_table, _batch, max_files_per_trigger
-    )
+    return drain_batches(spark, source_dir, schema, state_table, _batch)
 
 
 def stream_state_quantiles(spark: SparkSession, state_table: str) -> DataFrame:
@@ -128,7 +125,6 @@ def stream_hll_ingest(
     source_dir: str,
     state_table: str,
     schema,
-    max_files_per_trigger: int = 1,
 ) -> int:
     """Drain ``source_dir`` (rows of (event_type string, user_id
     bigint)) into a batch-tagged HLL register-state lakehouse table;
@@ -153,9 +149,7 @@ def stream_hll_ingest(
         ).withColumn("batch_id", F.lit(batch_id).cast("long"))
         commit_batch_state(spark, state_table, bdf, batch_id)
 
-    return drain_batches(
-        spark, source_dir, schema, state_table, _batch, max_files_per_trigger
-    )
+    return drain_batches(spark, source_dir, schema, state_table, _batch)
 
 
 def stream_state_hll_estimates(spark: SparkSession, state_table: str) -> DataFrame:
@@ -216,7 +210,6 @@ def stream_cms_ingest(
     cms_table: str,
     cand_table: str,
     schema,
-    max_files_per_trigger: int = 1,
 ) -> None:
     """Drain ``source_dir`` (rows of (user_id bigint)) into TWO
     lakehouse state tables: an additive count-min-sketch cell table
@@ -278,9 +271,7 @@ def stream_cms_ingest(
                 local_rows=new_rows,
             )
 
-    drain_batches(
-        spark, source_dir, schema, cms_table, _batch, max_files_per_trigger
-    )
+    drain_batches(spark, source_dir, schema, cms_table, _batch)
 
 
 def stream_state_heavy_hitters(
@@ -393,8 +384,6 @@ def stream_gram_ingest(
     spark: SparkSession,
     source_dir: str,
     state_table: str,
-    max_files_per_trigger: int = 1,
-    schema=None,
 ) -> int:
     """Drain raw-embedding micro-batches into a batch-tagged partial-
     Gram state table (2080 integer cells per batch after the in-batch
@@ -402,27 +391,24 @@ def stream_gram_ingest(
     exact bigints, so any chop of the corpus into micro-batches sums to
     the same state; same replay guard (``commit_batch_state``).
 
-    ``schema`` defaults to the staged files' OWN parquet schema (one
+    The stream schema is the staged files' OWN parquet schema (one
     footer read, metadata-scale) — the source contract permits
     array<float> OR array<double> embeddings, and a hardcoded float
     schema would break the vectorized reader on a double-encoded
     dataset (double→float is not an allowed parquet upcast). When the
     source directory has no parquet footers YET (the start-the-stream-
-    before-files-arrive pattern), inference is impossible, so the
-    documented default ``vec_id bigint, embedding array<float>``
-    applies — a later double-encoded producer must pass ``schema``
-    explicitly in that pattern."""
+    before-files-arrive pattern), inference is impossible, so
+    ``vec_id bigint, embedding array<float>`` applies."""
     from pyspark.errors import AnalysisException
 
     from ecommerce_dbt_medallion_spark.ops.cluster import _quantize_embeddings
     from ecommerce_dbt_medallion_spark.ops.quantize import gram_partial_sums
 
-    if schema is None:
-        try:
-            schema = spark.read.parquet(source_dir).schema
-        except AnalysisException:
-            # Empty dir: no footers to infer from (r12 ADVICE).
-            schema = "vec_id bigint, embedding array<float>"
+    try:
+        schema = spark.read.parquet(source_dir).schema
+    except AnalysisException:
+        # Empty dir: no footers to infer from (r12 ADVICE).
+        schema = "vec_id bigint, embedding array<float>"
 
     def _batch(batch_df: DataFrame, batch_id: int) -> None:
         bstate = gram_partial_sums(
@@ -430,9 +416,7 @@ def stream_gram_ingest(
         ).withColumn("batch_id", F.lit(batch_id).cast("long"))
         commit_batch_state(spark, state_table, bstate, batch_id)
 
-    return drain_batches(
-        spark, source_dir, schema, state_table, _batch, max_files_per_trigger
-    )
+    return drain_batches(spark, source_dir, schema, state_table, _batch)
 
 
 def stream_gram_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -1369,9 +1369,10 @@ def test_stream_enrich_shuffled_dim_matches_broadcast(spark, duck):
     """Round-10 (VERDICT r9 #7): the stream-static enrich dim is
     size-GATED, not pinned — customer scales with the data, so past the
     broadcast threshold the join must run WITHOUT the hint (per-batch
-    shuffle). Both paths must be value-identical to each other and to
-    the batch oracle, and the auto gate must pick the broadcast path at
-    smoke scale (the dim is tiny there)."""
+    shuffle). Both paths, selected through the threshold the gate reads,
+    must be value-identical to each other and to the batch oracle, and
+    the session's own threshold must pick the broadcast path at smoke
+    scale (the dim is tiny there)."""
     from ecommerce_dbt_medallion_spark.streaming.enrich_stream import (
         ORACLE_STREAM_ENRICH_PURCHASES,
         _broadcast_threshold_bytes,
@@ -1381,16 +1382,21 @@ def test_stream_enrich_shuffled_dim_matches_broadcast(spark, duck):
 
     register_views(duck, SF_SMOKE)
     odf = duck.sql(ORACLE_STREAM_ENRICH_PURCHASES).df()
-    for forced in (True, False):
-        spdf = stream_enrich_purchases(spark, SF_SMOKE, broadcast_dim=forced).toPandas()
-        assert_frames_match(
-            spdf, odf, f"stream_enrich_purchases(broadcast_dim={forced})"
-        )
     # the auto gate: smoke dims are far under the threshold → broadcast
     assert (
         _dim_source_bytes(SF_SMOKE, "customer", "nation") * 4
         <= _broadcast_threshold_bytes(spark)
     )
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try:
+        for thresh in ("1GB", "-1"):  # broadcast side, shuffled side
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresh)
+            spdf = stream_enrich_purchases(spark, SF_SMOKE).toPandas()
+            assert_frames_match(
+                spdf, odf, f"stream_enrich_purchases(autoBroadcastJoinThreshold={thresh})"
+            )
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
 def test_hard_negative_mining_invariants(spark, duck):

@@ -547,30 +547,19 @@ def test_part_supplier_diversity_anti_join_and_pair_collapse(spark):
     assert "CartesianProduct" not in plan
 
 
-def test_event_marts_date_bound_is_session_tz_independent(spark):
-    """The date-bounded event marts bound on the UTC day
-    (event_utc_date), so a [since, until) run returns exactly the
-    unbounded run's rows for those days, and the same rows in a non-UTC
-    session (a reader-TZ to_date would disagree at day boundaries)."""
+def test_event_daily_stats_is_session_tz_independent(spark):
+    """event_daily_stats groups on the UTC day (event_utc_date), so a
+    non-UTC session returns exactly the UTC session's rows (a reader-TZ
+    to_date would move events across day boundaries)."""
     from ecommerce_dbt_medallion_spark.models import events as ev
 
-    since, until = "2024-01-05", "2024-01-08"
-    bounded = sorted(
-        map(tuple, ev.event_daily_stats(spark, SF_SMOKE, since=since, until=until).collect())
-    )
-    assert bounded
-    assert bounded == sorted(
-        tuple(r)
-        for r in ev.event_daily_stats(spark, SF_SMOKE).collect()
-        if since <= str(r["event_date"]) < until
-    )
+    utc = sorted(map(tuple, ev.event_daily_stats(spark, SF_SMOKE).collect()))
+    assert utc
     tz = spark.conf.get("spark.sql.session.timeZone")
     try:
         spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
-        got = sorted(
-            map(tuple, ev.event_daily_stats(spark, SF_SMOKE, since=since, until=until).collect())
-        )
-        assert got == bounded, "bounded rows depend on the session timezone"
+        got = sorted(map(tuple, ev.event_daily_stats(spark, SF_SMOKE).collect()))
+        assert got == utc, "daily rows depend on the session timezone"
     finally:
         spark.conf.set("spark.sql.session.timeZone", tz)
 

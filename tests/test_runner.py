@@ -198,7 +198,6 @@ def test_bucketed_join_has_no_shuffle(spark):
 def test_gold_customer_summary_bucketed_parity_and_plan(spark):
     """The bucketed mart must equal the parquet-path mart exactly, and its
     payments⋈orders join must be shuffle-free (buckets co-partition it)."""
-    gold._BUCKETED_READY.discard(SF_SMOKE)  # force a fresh materialization
     bucketed = gold.gold_customer_summary_bucketed(spark, SF_SMOKE)
     direct = gold.gold_customer_summary(spark, SF_SMOKE)
     assert_frames_match(
@@ -216,6 +215,33 @@ def test_gold_customer_summary_bucketed_parity_and_plan(spark):
         assert "Exchange" not in executed, executed[:1200]
     finally:
         spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+
+
+def test_bucketed_mart_follows_its_own_dir(spark, tmp_path):
+    """Both source dirs share the two bucketed catalog tables, so a
+    call for A after one for B must rebuild them: A → B → A each equal
+    the parquet-path mart of their own dir."""
+    import shutil
+
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    other = tmp_path / "subset"
+    other.mkdir()
+    for name in os.listdir(SF_SMOKE):
+        if name != "orders.parquet":
+            shutil.copyfile(os.path.join(SF_SMOKE, name), other / name)
+    orders = pq.read_table(os.path.join(SF_SMOKE, "orders.parquet"))
+    pq.write_table(
+        orders.filter(pc.equal(pc.bit_wise_and(orders["o_orderkey"], 1), 0)),
+        other / "orders.parquet",
+    )
+    for sf_dir in (SF_SMOKE, str(other), SF_SMOKE):
+        assert_frames_match(
+            gold.gold_customer_summary_bucketed(spark, sf_dir).toPandas(),
+            gold.gold_customer_summary(spark, sf_dir).toPandas(),
+            f"gold_customer_summary_bucketed({sf_dir})",
+        )
 
 
 def test_incremental_mart_refresh_matches_full_rebuild(spark, tmp_path):

@@ -54,7 +54,7 @@ def test_salted_join_matches_plain_join(spark):
         "customer_key", "customer_id", "email"
     )
     plain = orders.join(customers, "customer_key", "inner")
-    salted = salted_join(orders, customers, "customer_key", "inner")
+    salted = salted_join(orders, customers, "customer_key")
     assert salted.count() == plain.count()
     assert (
         salted.agg(F.sum("order_amount").cast("string")).first()[0]
