@@ -274,7 +274,9 @@ def main() -> None:
                           # at construction (its twin minhash_calibration
                           # predates the construction-timed discipline
                           # and keeps its historical write-only basis)
-                          "simhash_calibration"}
+                          "simhash_calibration",
+                          # eagerly checkpoints its Python-UDF feature pass
+                          "multimodal_dedup"}
 
     timings: dict[str, float] = {}
     errors: dict[str, str] = {}

@@ -318,14 +318,17 @@ def multimodal_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     grp (16-hex payload prefix / bucket signature), n_docs (exact group
     size / null), dist (null / L1 over signature bytes).
     """
-    # lazy checkpoint (round-11 review): feats is consumed THREE times
-    # (exact agg + both sides of the near self-join) — without it each
-    # consumer re-runs the corpus scan, the blob synthesis, and the
-    # Arrow/Python round-trip; lazy keeps the materialization inside
-    # the first action (the write-only bench timer stays honest)
+    # eager checkpoint: feats is consumed THREE times (exact agg + both
+    # sides of the near self-join) — without it each consumer re-runs
+    # the corpus scan, the blob synthesis, and the Arrow/Python
+    # round-trip. Eager, because a lazy one is computed by two stages
+    # of the one consuming query at once: each runs the Python UDF, and
+    # the late one reports SQL-metric accumulators the driver dropped
+    # when the first finished ("Failed to update accumulator" traces).
+    # The UDF now runs at construction, which bench.py times.
     feats = multimodal_docs(spark, sf_dir).mapInPandas(
         _dedup_feat_batches, DEDUP_FEAT_SCHEMA
-    ).localCheckpoint(eager=False)
+    ).localCheckpoint(eager=True)
     exact = (
         feats.groupBy("blob_hex")
         .agg(

@@ -118,14 +118,14 @@ def test_local_staging_create_matches_distributed(spark, tmp_path, monkeypatch):
         cs = a.get("col_stats", {}).get("cluster")
         assert cs is None or cs[0] == cs[1]
     # exact global stats and the IDENTICAL bloom union as the
-    # distributed writer (Python twin pinned vs the Spark expression)
+    # distributed writer (Python mask pinned vs the Spark expression)
     assert min(a["min_key"] for a in l_adds) == min(a["min_key"] for a in d_adds)
     assert max(a["max_key"] for a in l_adds) == max(a["max_key"] for a in d_adds)
     l_mask = d_mask = 0
     for a in l_adds:
-        l_mask |= int(a["bloom"], 16)
+        l_mask |= int(a["bloom_md5"], 16)
     for a in d_adds:
-        d_mask |= int(a["bloom"], 16)
+        d_mask |= int(a["bloom_md5"], 16)
     assert l_mask == d_mask
     assert sum(a["rows"] for a in l_adds) == sum(a["rows"] for a in d_adds) == 201
 
@@ -147,7 +147,7 @@ def _zorder_then_append_nan(spark, path, rows, schema):
     his = [hi for _, hi in ds]
     bloom = 0
     for a in add:
-        bloom |= int(a.get("bloom", "0"), 16)
+        bloom |= int(a.get("bloom_md5", "0"), 16)
     keyed = [a for a in add if "min_key" in a]
     return (
         planned,
@@ -315,32 +315,50 @@ def test_merge_small_source_writes_one_file(spark, table):
     assert lh.read(spark, table).count() == 110
 
 
-def test_xxh64_python_twin_matches_spark(spark):
-    """The driver-side bloom path rests on a pure-Python XXH64 being
-    bit-exact vs Spark's xxhash64(col, lit(i)) chain — a mismatch would
-    be bloom false NEGATIVES (missed merge matches). Pin across random
-    unicode strings (short/long, multibyte), int-casts, empty, null."""
+def test_bloom_md5_spark_positions_match_python_mask(spark):
+    """The bloom hashes each key's string form with md5 on both engines:
+    Spark's ``_bloom_positions`` (the distributed writer), folded, must
+    equal ``_bloom_mask_py([k])`` (the driver writer and every probe) —
+    a mismatch is a bloom false NEGATIVE, a skipped file holding the
+    key. Random unicode strings (multibyte, astral, quotes, backslashes,
+    empty), ints and longs including the 32- and 64-bit bounds, each
+    cast to string by Spark; NULL sets no bit on either side."""
     import random
 
-    rnd = random.Random(20260817)
-    vals: list = ["", "a", "ü", "中文字符串" * 10, "x" * 100, None]
-    for _ in range(150):
-        n = rnd.randint(0, 60)
-        vals.append(
-            "".join(
-                chr(rnd.choice([rnd.randint(32, 126), rnd.randint(0x80, 0x2FFF)]))
-                for _ in range(n)
-            )
+    rnd = random.Random(20261019)
+
+    def char():
+        return rnd.choice([
+            rnd.choice("'\"\\`%_"),
+            chr(rnd.randint(32, 126)),
+            chr(rnd.randint(0x80, 0xD7FF)),
+            chr(rnd.randint(0x10000, 0x1FFFF)),
+        ])
+
+    strs = ["", "'", '"', "\\", "\\'", "a\\\\b", "ü", "中文字符串" * 10, "😀", "x" * 100, None]
+    strs += ["".join(char() for _ in range(rnd.randint(0, 70))) for _ in range(300)]
+    ints = [-(2**31), 2**31 - 1, 0, -1, None]
+    ints += [rnd.randint(-(2**31), 2**31 - 1) for _ in range(200)]
+    longs = [-(2**63), 2**63 - 1, -(2**63) + 1, 2**63 - 2, None]
+    longs += [rnd.randint(-(2**63), 2**63 - 1) for _ in range(200)]
+    for typ, vals in (("string", strs), ("int", ints), ("long", longs)):
+        df = spark.createDataFrame(list(enumerate(vals)), f"i int, k {typ}")
+        rows = (
+            df.select("i", "k", lh._bloom_positions(F.col("k").cast("string")).alias("ps"))
+            .orderBy("i")
+            .collect()
         )
-    for _ in range(50):
-        vals.append(str(rnd.randint(-(2**62), 2**62)))
-    df = spark.createDataFrame([(v,) for v in vals], "k string")
-    rows = df.select("k", lh._bloom_positions(F.col("k")).alias("ps")).collect()
-    for r in rows:
-        mask_spark = 0
-        for p in r["ps"]:
-            mask_spark |= 1 << int(p)
-        assert mask_spark == lh._bloom_mask_py([r["k"]]), repr(r["k"])
+        assert [r["k"] for r in rows] == vals, typ
+        for r in rows:
+            if r["k"] is None:
+                assert r["ps"] == [None] * lh.BLOOM_K
+                assert lh._bloom_mask_py([None]) == 0
+                continue
+            assert all(0 <= p < lh.BLOOM_BITS for p in r["ps"]), (typ, repr(r["k"]))
+            mask_spark = 0
+            for p in r["ps"]:
+                mask_spark |= 1 << p
+            assert mask_spark == lh._bloom_mask_py([r["k"]]), (typ, repr(r["k"]))
 
 
 def test_stage_blooms_driver_path_matches_spark_job(spark, tmp_path, monkeypatch):
@@ -353,14 +371,41 @@ def test_stage_blooms_driver_path_matches_spark_job(spark, tmp_path, monkeypatch
         .coalesce(1)
     )
     lh.create_or_replace(spark, path, df, key="k")
-    driver_bloom = {a["file"]: a["bloom"] for a in lh.live_files(path)}
+    driver_bloom = {a["file"]: a["bloom_md5"] for a in lh.live_files(path)}
     # force the Spark-job path by zeroing the driver dial
     monkeypatch.setattr(lh, "STAGE_DRIVER_MAX_ROWS", 0)
     path2 = str(tmp_path / "ab2")
     lh.create_or_replace(spark, path2, df, key="k")
-    job_bloom = {a["file"]: a["bloom"] for a in lh.live_files(path2)}
+    job_bloom = {a["file"]: a["bloom_md5"] for a in lh.live_files(path2)}
     assert len(driver_bloom) == len(job_bloom) == 1
     assert list(driver_bloom.values()) == list(job_bloom.values())
+
+
+def test_old_format_bloom_field_is_ignored(spark, tmp_path):
+    """An add-action logged before the md5 bloom carries an xxhash64
+    ``bloom``, which no md5 probe mask can be tested against: readers
+    must ignore it and keep the file. Here the old field rejects every
+    key, yet the point read still finds the row and MERGE still
+    updates it in place (no duplicate from a skipped file)."""
+    import json
+    import os
+
+    path = str(tmp_path / "old_bloom")
+    df = spark.range(10).select(F.col("id"), F.lit(0).cast("long").alias("val")).coalesce(1)
+    lh.create_or_replace(spark, path, df, key="id")
+    entry_path = os.path.join(lh._log_path(path), "v0.json")
+    entry = lh._read_entry(path, 0)
+    for a in entry["add"]:
+        a.pop("bloom_md5", None)
+        a["bloom"] = "0" * (lh.BLOOM_BITS // 4)  # an empty filter: rejects every key
+    with open(entry_path, "w") as fh:
+        json.dump(entry, fh)
+    assert all("bloom" in a and "bloom_md5" not in a for a in lh.live_files(path))
+
+    assert [r["val"] for r in lh.read_keys(spark, path, [7]).where("id = 7").collect()] == [0]
+    lh.merge_into(spark, path, spark.createDataFrame([(7, 70)], "id long, val long"), "id")
+    got = sorted((r["id"], r["val"]) for r in lh.read(spark, path).collect())
+    assert got == [(i, 70 if i == 7 else 0) for i in range(10)]
 
 
 def test_merge_driver_discovery_matches_distributed(spark, tmp_path, monkeypatch):
@@ -852,7 +897,7 @@ def test_bloom_point_lookup_skips_hash_partitioned_files(spark, tmp_path):
     )
     lh.create_or_replace(spark, path, df, key="id")
     live = lh.live_files(path)
-    assert len(live) == 8 and all("bloom" in a for a in live)
+    assert len(live) == 8 and all("bloom_md5" in a for a in live)
 
     # soundness: for sampled present keys, the true holder is a candidate
     holder = {}
@@ -1812,7 +1857,7 @@ def test_bloom_probe_rendering_matches_writer(spark, tmp_path):
     path = str(tmp_path / "dblkey")
     df = spark.sql("select cast(pow(10, 20) as double) as k, 1 as val")
     lh.create_or_replace(spark, path, df, key="k")
-    assert all("bloom" in a for a in lh.live_files(path))
+    assert all("bloom_md5" in a for a in lh.live_files(path))
     hits = lh._files_maybe_containing(spark, lh._snapshot(path), [1e20])
     assert hits, "bloom false-negative for a present double key"
     # bool key: str(True)='True' but Spark renders 'true'
