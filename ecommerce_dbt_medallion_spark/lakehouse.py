@@ -107,18 +107,13 @@ def _empty_state() -> dict:
         "live": {},          # file name -> add action (insertion-ordered)
         "staged": {},        # staged version -> add actions (unresolved WAP)
         "tombstones": [],    # pending merge-on-read key tombstones
-        "constraints": {},   # name -> boolean SQL expr
         "schema_json": None,
         "key": None,
         "partition_by": None,
         "zorder_by": [],
-        # column mapping (RENAME/DROP COLUMN without data rewrite):
-        # logical name -> physical parquet column name (identity
-        # entries omitted), and physical names of DROPPED columns that
-        # still exist inside immutable data files (reserved so a new
-        # logical column can never collide with old file data)
+        # column mapping (RENAME COLUMN without data rewrite): logical
+        # name -> physical parquet column name (identity entries omitted)
         "mapping": {},
-        "retired": [],
     }
 
 
@@ -131,8 +126,6 @@ def _fold_entry(state: dict, e: dict) -> dict:
         state["key"] = e["key"]
     if e.get("schema_json"):
         state["schema_json"] = e["schema_json"]
-    if "constraints" in e:
-        state["constraints"] = dict(e["constraints"])
     if e.get("operation") in ("CREATE", "CREATE OR REPLACE") or str(
         e.get("operation", "")
     ).startswith("CLONE "):
@@ -142,7 +135,6 @@ def _fold_entry(state: dict, e: dict) -> dict:
         # a table redefinition resets the column mapping unless the
         # entry carries one (CLONE carries the source's)
         state["mapping"] = dict(e.get("column_mapping") or {})
-        state["retired"] = list(e.get("retired_physical") or [])
         # a redefinition also resets PENDING TOMBSTONES (round-10
         # review): only a tombstones_cleared commit reset them before,
         # so a crash between a deferred delete and its materialization
@@ -152,16 +144,12 @@ def _fold_entry(state: dict, e: dict) -> dict:
         state["tombstones"] = []
     if e.get("zorder_by"):
         state["zorder_by"] = list(e["zorder_by"])
-    # RENAME/DROP COLUMN entries snapshot the full mapping (same
-    # snapshot semantics as constraints)
+    # RENAME COLUMN and RESTORE entries snapshot the full mapping: the
+    # entry's mapping replaces the folded one, never merges into it
     if "column_mapping" in e and not str(e.get("operation", "")).startswith(
         ("CREATE", "CLONE ")
     ):
         state["mapping"] = dict(e["column_mapping"])
-    if "retired_physical" in e and not str(e.get("operation", "")).startswith(
-        ("CREATE", "CLONE ")
-    ):
-        state["retired"] = list(e["retired_physical"])
     # RESTORE re-declares the ENTIRE table state of its target,
     # including the physical layout spec — partition_by otherwise only
     # folds on CREATE/CLONE, so restoring across a REPLACE would keep
@@ -249,13 +237,11 @@ class _Snapshot(NamedTuple):
     live: dict
     staged: dict
     tombstones: list
-    constraints: dict
     schema_json: str | None
     key: str | None  # latest declared key (a scan-back over the log)
     partition_by: str | None  # declared by the most recent CREATE
     zorder_by: list  # columns of the most recent OPTIMIZE ZORDER
     mapping: dict
-    retired: list
 
     @property
     def files(self) -> list[dict]:
@@ -353,7 +339,7 @@ class CommitConflict(Exception):
 class ConcurrentWriteConflict(CommitConflict):
     """Typed ABORT after conflict classification: the concurrent commit
     invalidated this transaction's snapshot (an overlapping rewrite, a
-    schema/constraint/tombstone change), so rebasing onto the new HEAD
+    schema/mapping/tombstone change), so rebasing onto the new HEAD
     would be unsound — Delta's ConcurrentDeleteRead / MetadataChanged
     class. The caller must re-run the whole operation against current
     table state. Contrast with plain :class:`CommitConflict`, which
@@ -363,10 +349,10 @@ class ConcurrentWriteConflict(CommitConflict):
 
 # Log operations an ADD-ONLY transaction can safely rebase across: they
 # add or rewrite files this transaction never read, and leave table-level
-# state (schema, key, partitioning, constraints, tombstones) unchanged.
-# Anything else — CREATE OR REPLACE, RESTORE, DELETE DEFERRED,
-# ADD/DROP CONSTRAINT — redefines state the append's validation depended
-# on, so the append must abort and re-validate.
+# state (schema, key, partitioning, column mapping, tombstones)
+# unchanged. Anything else — CREATE OR REPLACE, RESTORE, DELETE
+# DEFERRED, RENAME COLUMN — redefines state the append's validation
+# depended on, so the append must abort and re-validate.
 _APPEND_REBASE_SAFE_OPS = {
     "APPEND",
     "APPEND STAGED",
@@ -388,11 +374,6 @@ def _append_rebase_conflict(e: dict, expected_schema: str | None) -> str | None:
         return f"concurrent {op} (v{e.get('version')}) redefines table state"
     if e.get("tombstones"):
         return f"concurrent {op} (v{e.get('version')}) introduced key tombstones"
-    if "constraints" in e:
-        return (
-            f"concurrent {op} (v{e.get('version')}) changed CHECK constraints; "
-            "this append's rows were not validated against them"
-        )
     if (
         expected_schema is not None
         and e.get("schema_json") is not None
@@ -640,12 +621,12 @@ MERGE_COALESCE_MAX_ROWS = 2_000_000
 # lookups, touched-file discovery, the driver-side keyed rewrite, state
 # reads): the largest logged file it reads with pyarrow — C-speed
 # column decode + set probes, cheap per row.
-BLOOM_DRIVER_MAX_ROWS = 250_000
+READ_LOCAL_MAX_FILE_ROWS = 250_000
 
 # _read_local: the most files one driver-side read takes, each under
-# BLOOM_DRIVER_MAX_ROWS rows; above either bound the caller's
+# READ_LOCAL_MAX_FILE_ROWS rows; above either bound the caller's
 # distributed read decides (for _discover_touched, the semi-join).
-MERGE_DRIVER_DISCOVERY_MAX_FILES = 64
+READ_LOCAL_MAX_FILES = 64
 
 
 def _sql_literal(v) -> str:
@@ -770,8 +751,9 @@ def _publish_staged(
     return their add-actions — the ONE producer of per-file stats, shared
     by both writers: ``rows``, ``min_key``/``max_key`` and each stats
     column's ``col_stats`` from the parquet footers (:func:`_footer_min_max`,
-    stored via :func:`_json_stat`), plus the key bloom ``bloom_md5``.
-    ``schema`` is the staged files' Spark schema.
+    stored via :func:`_json_stat`), plus the key bloom ``bloom_md5``
+    (none for a float or double key). ``schema`` is the staged files'
+    Spark schema.
 
     The stats columns are ``stats_cols`` plus the table's DECLARED
     partition column (most recent CREATE) and the most recent OPTIMIZE's
@@ -796,7 +778,10 @@ def _publish_staged(
     paths = [os.path.join(staging, f) for f in staged]
     mds = [pq.ParquetFile(p).metadata for p in paths]
     blooms: dict[str, int] = {}
-    if key in names:
+    # a float key gets no bloom: -0.0 and 0.0 are one key to SQL's =,
+    # but their string casts hash apart, so a probe of one would skip a
+    # file that holds the other
+    if key in names and schema[key].dataType.typeName() not in ("float", "double"):
         if (
             schema[key].dataType.typeName() in _DRIVER_KEY_TYPES
             and sum(md.num_rows for md in mds) <= STAGE_DRIVER_MAX_ROWS
@@ -1143,26 +1128,6 @@ def _abs(table: str, name: str) -> str:
 # ------------------------------------------------------------ operations
 
 
-def current_schema(table: str, version: int | None = None):
-    """The table's StructType as of ``version`` (default latest), read
-    from the LOG, not from parquet footers — the Delta design: at 100 TB
-    schema-on-read from footers is a full file-listing + footer sweep,
-    and worse, footer union can't tell you WHICH schema a time-travel
-    version had. Returns None for tables created before schema tracking
-    (readers then fall back to footer inference)."""
-    return _snapshot(table, version).schema
-
-
-def current_mapping(table: str) -> dict[str, str]:
-    """Column mapping (logical name → physical parquet name) — empty for
-    tables that never renamed a column. The mapping is what lets
-    RENAME/DROP COLUMN be metadata-only commits: immutable data files
-    keep their creation-time (physical) column names forever; readers
-    alias physical→logical and writers alias logical→physical at the
-    two funnel boundaries."""
-    return _snapshot(table).mapping
-
-
 def _map_to_physical(df: DataFrame, mapping: dict[str, str]) -> DataFrame:
     """Alias a logical-named DataFrame to physical parquet names (the
     write boundary). Identity when the mapping is empty."""
@@ -1189,8 +1154,7 @@ def _physical_schema(logical, mapping: dict[str, str]):
 
 def _map_to_logical(df: DataFrame, logical, mapping: dict[str, str]) -> DataFrame:
     """Alias a physical-named scan back to the logical schema (the read
-    boundary); also PROJECTS to the logical columns, which is what
-    makes a dropped column disappear without touching its files."""
+    boundary); also PROJECTS to the logical columns."""
     if logical is None or not mapping:
         return df
     return df.select(
@@ -1204,41 +1168,6 @@ def _map_to_logical(df: DataFrame, logical, mapping: dict[str, str]) -> DataFram
 class SchemaMismatch(Exception):
     """Append schema differs from the table schema and merge_schema is
     off, or the evolution is non-additive (drop / type change)."""
-
-
-class ConstraintViolation(Exception):
-    """Incoming rows violate a declared CHECK constraint."""
-
-
-def current_constraints(table: str) -> dict[str, str]:
-    """The table's CHECK constraints (name → boolean SQL expr) — carried
-    in log entries like the schema; the latest entry declaring
-    ``constraints`` wins."""
-    return _snapshot(table).constraints
-
-
-def _enforce_constraints(df: DataFrame, constraints: dict[str, str], ctx: str) -> None:
-    """Reject the write if ANY incoming row fails a declared check —
-    Delta's write-time enforcement: the guarantee that makes downstream
-    readers trust the invariant WITHOUT re-validating 100 TB on every
-    scan. One conditional aggregate over the batch computes every
-    constraint's violation count in a single pass; the error carries
-    per-constraint counts (churn-scale job, no sample collection of
-    unbounded size)."""
-    if not constraints:
-        return
-    counts = df.agg(
-        *[
-            F.sum(F.when(~F.expr(expr), 1).otherwise(0)).alias(name)
-            for name, expr in constraints.items()
-        ]
-    ).collect()[0]
-    bad = {n: int(counts[n] or 0) for n in constraints if (counts[n] or 0) > 0}
-    if bad:
-        raise ConstraintViolation(
-            f"{ctx}: rows violate CHECK constraints "
-            + ", ".join(f"{n} ({constraints[n]!r}): {c} rows" for n, c in bad.items())
-        )
 
 
 # Merge-on-read deletes: tombstones are a metadata-only commit; reads
@@ -1313,7 +1242,7 @@ def materialize_tombstones(spark: SparkSession, table: str) -> int:
         return snap.version
     # The snapshot's key is the fold's scan-back over the whole log,
     # never a last-entry peek with an "id" guess: a metadata-only commit
-    # (constraint, PUBLISH) landing after the DELETE DEFERRED would
+    # (RENAME COLUMN, PUBLISH) landing after the DELETE DEFERRED would
     # otherwise make this destructive rewrite delete by the wrong
     # column. Tombstones pending implies delete_keys_deferred found a
     # key, so it cannot miss.
@@ -1328,27 +1257,12 @@ def materialize_tombstones(spark: SparkSession, table: str) -> int:
     )
 
 
-def add_constraint(spark: SparkSession, table: str, name: str, expr: str) -> int:
-    """ALTER TABLE ADD CONSTRAINT name CHECK (expr): existing data is
-    validated FIRST (Delta semantics — a constraint you can add to dirty
-    data is a lie), then a metadata-only commit records the new
-    constraint set. A commit landing between the validation and this
-    commit aborts it: the rows it added were never validated."""
-    snap = _snapshot(table)
-    if name in snap.constraints:
-        raise ValueError(f"constraint {name!r} already exists")
-    _enforce_constraints(_read_live(spark, snap), {name: expr}, "existing data")
-    return _commit_op(snap, "ADD CONSTRAINT", constraints={**snap.constraints, name: expr})
-
-
 def _protected_columns(snap: _Snapshot) -> dict[str, str]:
     """Columns the engine itself addresses BY NAME inside the log
-    (footer stats keys, partition index, zorder spec, CHECK exprs, CDC
-    tombstone flag) → reason. Renaming one would desynchronize logged
-    metadata from file contents, so rename/drop reject them — Delta
-    takes the same posture for partition/bloom columns."""
-    import re as _re
-
+    (footer stats keys, partition index, zorder spec, CDC tombstone
+    flag) → reason. Renaming one would desynchronize logged metadata
+    from file contents, so rename_column rejects them — Delta takes the
+    same posture for partition/bloom columns."""
     out: dict[str, str] = {}
     if snap.key is not None:
         out[snap.key] = "table key (footer stats + blooms are logged under it)"
@@ -1356,32 +1270,6 @@ def _protected_columns(snap: _Snapshot) -> dict[str, str]:
         out[snap.partition_by] = "partition column (the logged partition index)"
     for z in snap.zorder_by:
         out.setdefault(z, "zorder column (logged clustering spec)")
-    # Tokenizing a CHECK expr with a bare-identifier regex would also
-    # capture SQL keywords and the CONTENTS of string literals (e.g.
-    # "seg = 'north'" must not protect a column named north), spuriously
-    # blocking rename/drop of unrelated columns (round-8 review). Strip
-    # quoted literals first, then keep only tokens that name an actual
-    # logical column of the table.
-    sch = snap.schema
-    logical = (
-        {f.name for f in sch.fields} if sch is not None else None
-    )
-    for name, expr in snap.constraints.items():
-        # both literal syntaxes: single-quoted (ANSI) AND double-quoted
-        # (Spark SQL's default when double-quoted identifiers are off —
-        # round-9 review: 'seg = "north"' must not protect a column
-        # named north any more than the single-quoted spelling does).
-        # Literals consume doubled-quote ('') AND backslash escapes
-        # (round-10: in "note = 'don\\'t' OR amount > 0" the \' must
-        # not close the literal, or the boundary shifts and real column
-        # tokens after it get stripped as literal text).
-        bare = _re.sub(
-            r"'(?:[^'\\]|\\.|'')*'|\"(?:[^\"\\]|\\.|\"\")*\"", " ", expr
-        )
-        for tok in set(_re.findall(r"[A-Za-z_][A-Za-z0-9_]*", bare)):
-            if logical is not None and tok not in logical:
-                continue
-            out.setdefault(tok, f"referenced by CHECK constraint {name!r}")
     out.setdefault(
         "__cdc_deleted", "CDC tombstone flag (apply_changes contract)"
     )
@@ -1389,21 +1277,21 @@ def _protected_columns(snap: _Snapshot) -> dict[str, str]:
 
 
 def _check_new_logical_name(snap: _Snapshot, new: str, own_physical: str | None = None) -> None:
-    """A new logical name may not collide with a live logical column,
-    any column's PHYSICAL name, or a retired physical name — data files
-    are immutable, so a physical collision would silently splice old
-    file data into the new column. ``own_physical`` exempts the renamed
+    """A new logical name may not collide with a live logical column or
+    any column's PHYSICAL name — data files are immutable, so a
+    physical collision would silently splice old file data into the new
+    column. ``own_physical`` exempts the renamed
     column's own physical slot (renaming BACK to it just collapses the
     mapping)."""
     logical = set(snap.schema.fieldNames()) if snap.schema_json else set()
-    physical = {snap.mapping.get(n, n) for n in logical} | set(snap.retired)
+    physical = {snap.mapping.get(n, n) for n in logical}
     physical.discard(own_physical)
     if new in logical:
         raise ValueError(f"column {new!r} already exists")
     if new in physical:
         raise ValueError(
             f"name {new!r} collides with a physical column name still "
-            "present in immutable data files (renamed-away or dropped); "
+            "present in immutable data files (renamed-away); "
             "choose another name"
         )
 
@@ -1415,8 +1303,8 @@ def rename_column(table: str, old: str, new: str) -> int:
     while every immutable data file keeps its creation-time column
     name. Readers alias physical→logical; writers alias back. Time
     travel to a pre-rename version sees the old name (the fold is
-    versioned). Engine-addressed columns (key / partition / zorder /
-    constraint-referenced / CDC flag) are rejected with the reason."""
+    versioned). Engine-addressed columns (key / partition / zorder / CDC
+    flag) are rejected with the reason."""
     snap = _snapshot(table)
     if not snap.schema_json:
         raise ValueError(
@@ -1443,54 +1331,7 @@ def rename_column(table: str, old: str, new: str) -> int:
         f"RENAME COLUMN ({old} -> {new})",
         schema_json=json.dumps(sch),
         column_mapping=mapping,
-        retired_physical=list(snap.retired),
     )
-
-
-def drop_column(table: str, col: str) -> int:
-    """ALTER TABLE DROP COLUMN — metadata-only (no data rewrite): the
-    logical schema loses the field, readers project it away, and its
-    PHYSICAL name is retired forever (immutable files still contain the
-    bytes, so re-adding the name would resurrect stale data — the
-    collision guard makes that impossible). Protected columns reject as
-    in rename_column."""
-    snap = _snapshot(table)
-    if not snap.schema_json:
-        raise ValueError(
-            f"table {table} predates schema tracking; drop needs a "
-            "logged schema"
-        )
-    sch = json.loads(snap.schema_json)
-    names = [f["name"] for f in sch["fields"]]
-    if col not in names:
-        raise ValueError(f"no such column: {col!r} (have {names})")
-    if len(names) == 1:
-        raise ValueError("cannot drop the only column")
-    prot = _protected_columns(snap)
-    if col in prot:
-        raise ValueError(f"cannot drop {col!r}: {prot[col]}")
-    mapping = dict(snap.mapping)
-    physical = mapping.pop(col, col)
-    retired = list(snap.retired)
-    if physical not in retired:
-        retired.append(physical)
-    sch["fields"] = [f for f in sch["fields"] if f["name"] != col]
-    return _commit_op(
-        snap,
-        f"DROP COLUMN ({col})",
-        schema_json=json.dumps(sch),
-        column_mapping=mapping,
-        retired_physical=retired,
-    )
-
-
-def drop_constraint(table: str, name: str) -> int:
-    """ALTER TABLE DROP CONSTRAINT — metadata-only commit."""
-    snap = _snapshot(table)
-    if name not in snap.constraints:
-        raise ValueError(f"no such constraint: {name!r}")
-    cons = {n: e for n, e in snap.constraints.items() if n != name}
-    return _commit_op(snap, "DROP CONSTRAINT", constraints=cons)
 
 
 # Safe implicit widenings for appends (source type → acceptable wider
@@ -1547,12 +1388,12 @@ def _evolve_schema(snap: _Snapshot, df: DataFrame, merge_schema: bool):
         # column-mapping collision guard: an evolved column may not
         # reuse a physical name still present in immutable data files
         # (old bytes would resurrect into the new column)
-        reserved = set(snap.mapping.values()) | set(snap.retired)
+        reserved = set(snap.mapping.values())
         hit = [n for n in added if n in reserved]
         if hit:
             raise SchemaMismatch(
                 f"new column(s) {hit} collide with physical names of "
-                "renamed-away or dropped columns; choose other names"
+                "renamed-away columns; choose other names"
             )
     if not merge_schema and (added or dropped):
         raise SchemaMismatch(
@@ -1643,9 +1484,6 @@ def create_or_replace(
         remove=list(snap.live),
         key=key,
         partition_by=partition_by,
-        # REPLACE resets table metadata (Delta semantics): declared
-        # constraints do not survive a full re-creation
-        constraints={},
         schema_json=df.schema.json(),
     )
 
@@ -1683,7 +1521,6 @@ def append(
     )
     df, schema = _evolve_schema(snap, df, merge_schema)
     snap.require_no_tombstones("APPEND")
-    _enforce_constraints(df, snap.constraints, "APPEND")
     if use_local:
         adds = _stage_rows_local(
             snap,
@@ -1781,14 +1618,11 @@ def append_staged(
     spark: SparkSession, table: str, df: DataFrame, key: str | None = None
 ) -> int:
     """Stage an append: files written + committed with ``staged`` set;
-    readers skip it until publish(). Declared CHECK constraints still
-    enforce at stage time (they are table invariants, not audit
-    opinions); schema must match exactly (no evolution through the
-    staging path)."""
+    readers skip it until publish(). The schema must match exactly (no
+    evolution through the staging path)."""
     snap = _snapshot(table)
     snap.require_no_tombstones("APPEND STAGED")
     df, _schema = _evolve_schema(snap, df, merge_schema=False)
-    _enforce_constraints(df, snap.constraints, "APPEND STAGED")
     adds = _stage_files(df, snap, key)
     # staged adds are invisible until PUBLISH, so the same add-only
     # rebase applies
@@ -1943,8 +1777,7 @@ def _read_files(
     reader = spark.read
     if schema is not None:
         # files carry PHYSICAL names; the scan schema must match them,
-        # then the projection aliases back to the logical schema (and
-        # drops retired columns)
+        # then the projection aliases back to the logical schema
         reader = reader.schema(_physical_schema(schema, snap.mapping))
     df = reader.parquet(*[_abs(snap.table, a["file"]) for a in files])
     df = _map_to_logical(df, schema, snap.mapping)
@@ -1970,7 +1803,7 @@ def _read_local(
     ones through ``snap.mapping``, and a column a file lacks reads NULL
     (a pre-evolution file; or a column the log schema lacks, which an
     evolving MERGE is adding — the collision guard keeps it off every
-    retired physical name). Returns None, and the caller takes its
+    renamed-away physical name). Returns None, and the caller takes its
     distributed read, whenever the driver may not read the files:
 
     - tombstones are pending (their anti-filter is the distributed
@@ -1979,15 +1812,15 @@ def _read_local(
     - a requested column's type has no value-exact pyarrow twin
       (:func:`_pa_type`, the pyarrow writer's rule: a timestamp decodes
       UTC-aware where Spark collects it session-local);
-    - more than MERGE_DRIVER_DISCOVERY_MAX_FILES files, or one whose
-      logged row count is above BLOOM_DRIVER_MAX_ROWS or missing (a
+    - more than READ_LOCAL_MAX_FILES files, or one whose
+      logged row count is above READ_LOCAL_MAX_FILE_ROWS or missing (a
       legacy entry: unknown size must mean the distributed read);
     - a pyarrow read fails."""
     if (
         snap.tombstones
         or snap.schema is None
-        or len(files) > MERGE_DRIVER_DISCOVERY_MAX_FILES
-        or not all("rows" in a and a["rows"] <= BLOOM_DRIVER_MAX_ROWS for a in files)
+        or len(files) > READ_LOCAL_MAX_FILES
+        or not all("rows" in a and a["rows"] <= READ_LOCAL_MAX_FILE_ROWS for a in files)
     ):
         return None
     types = {f.name: f.dataType for f in snap.schema.fields}
@@ -2281,7 +2114,6 @@ def merge_into(
         len(source_rows) if source_rows is not None else 0,
     )
     source, evolved_schema = _evolve_schema(snap, source, merge_schema)
-    _enforce_constraints(source, snap.constraints, "MERGE")
 
     d = _discover_touched(spark, snap, source, key, source_rows, full_rows)
     return _keyed_rewrite(
@@ -2371,11 +2203,6 @@ def apply_changes(
         )
     latest = _latest_changes(source, key, seq_cols, op_col).localCheckpoint(
         eager=False
-    )
-    _enforce_constraints(
-        latest.where(F.col(op_col) != F.lit(delete_value)).drop(op_col),
-        snap.constraints,
-        "APPLY CHANGES",
     )
     d = _discover_touched(spark, snap, latest, key)
 
@@ -2516,13 +2343,10 @@ def verify_table(spark: SparkSession, table: str) -> dict:
         sch = snap.schema
     except Exception as exc:  # noqa: BLE001 — auditing, not crashing
         report["errors"].append(f"schema unreadable: {exc}")
-    # footers carry PHYSICAL names; dropped columns' retired physical
-    # names remain legitimately inside old immutable files
+    # footers carry PHYSICAL names
     sch_cols = None
     if sch is not None:
-        sch_cols = {snap.mapping.get(f.name, f.name) for f in sch.fields} | set(
-            snap.retired
-        )
+        sch_cols = {snap.mapping.get(f.name, f.name) for f in sch.fields}
 
     # live files: existence + footer row count + stats sanity + columns
     for a in snap.files:
@@ -2569,7 +2393,7 @@ def verify_table(spark: SparkSession, table: str) -> dict:
                 break
             scratch = _fold_entry(scratch, _read_entry(table, v))
         # Compare the FULL folded state, field by field — a checkpoint
-        # whose mapping/retired/key/constraints/partition/zorder/staged
+        # whose mapping/key/partition/zorder/staged
         # diverged from the replay would alias columns (or admit
         # colliding names, or mis-partition writes) on checkpoint-seeded
         # reads while passing a live/schema/tombstones-only check
@@ -2640,12 +2464,11 @@ def restore(table: str, to_version: int) -> int:
         )
     # Re-declare the ENTIRE table state of to_version, not just its
     # file set (round-7 review): schema (a post-target REPLACE would
-    # otherwise make read() null-fill every restored column), CHECK
-    # constraints, tombstone state (pending deletes from the bad era
-    # must not keep anti-filtering restored rows — the restored era's
-    # own pending tombstones are re-declared), the column mapping and
-    # retired physical names (restoring across a RENAME/DROP would
-    # otherwise leave the stale mapping in the fold: the schema-merge
+    # otherwise make read() null-fill every restored column), tombstone
+    # state (pending deletes from the bad era must not keep
+    # anti-filtering restored rows — the restored era's own pending
+    # tombstones are re-declared), the column mapping (restoring across
+    # a RENAME would otherwise leave the stale mapping in the fold: the schema-merge
     # guard then admits a new column whose name aliases old file data,
     # and every later write crashes on the phantom collision — round-8
     # review repro), and the physical layout spec (partition/zorder).
@@ -2655,11 +2478,9 @@ def restore(table: str, to_version: int) -> int:
         add=[a for f, a in target.items() if f not in head],
         remove=[f for f in head if f not in target],
         key=target_snap.key,
-        constraints=target_snap.constraints,
         tombstones_cleared=True,
         tombstones=target_snap.tombstones,
         column_mapping=target_snap.mapping,
-        retired_physical=target_snap.retired,
         partition_by=target_snap.partition_by,
         zorder_by=target_snap.zorder_by,
         **({"schema_json": target_snap.schema_json} if target_snap.schema_json else {}),
@@ -2678,7 +2499,7 @@ def clone_table(source: str, dest: str) -> int:
     source is never touched); writes to the source after the clone are
     invisible to the clone (its v0 pinned the file list). The clone
     carries the source's full table contract at the clone point —
-    schema, key, CHECK constraints, declared partitioning, Z-order
+    schema, key, declared partitioning, Z-order
     clustering, and PENDING merge-on-read tombstones (omitting those
     would resurrect logically deleted rows, e.g. an acknowledged
     erasure).
@@ -2708,15 +2529,12 @@ def clone_table(source: str, dest: str) -> int:
         # inherits the column mapping or its reads would null out every
         # renamed column
         fields["column_mapping"] = snap.mapping
-    if snap.retired:
-        fields["retired_physical"] = snap.retired
     try:
         return _commit_op(
             dest_snap,
             f"CLONE {os.path.abspath(source)} AS OF {snap.version}",
             add=adds,
             key=snap.key,
-            constraints=snap.constraints,
             tombstones=snap.tombstones,
             partition_by=snap.partition_by,
             **fields,

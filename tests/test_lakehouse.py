@@ -415,7 +415,7 @@ def test_merge_driver_discovery_matches_distributed(spark, tmp_path, monkeypatch
     ONLY the files that truly contain its keys, and a disjoint-key
     source stays a pure append on either path."""
     for dial, tag in ((64, "driver"), (0, "distributed")):
-        monkeypatch.setattr(lh, "MERGE_DRIVER_DISCOVERY_MAX_FILES", dial)
+        monkeypatch.setattr(lh, "READ_LOCAL_MAX_FILES", dial)
         path = str(tmp_path / f"t-{tag}")
         base = (
             spark.range(100)
@@ -1073,39 +1073,6 @@ def test_append_subset_columns_under_merge_schema(spark, table):
     assert set(got.columns) == {"id", "val"}
     rows = {r["id"]: r["val"] for r in got.collect()}
     assert rows[300] is None and rows[1] == 10
-
-
-def test_check_constraints_enforced_on_append_and_merge(spark, table):
-    lh.add_constraint(spark, table, "val_nonneg", "val >= 0")
-    good = spark.range(500, 505).select(F.col("id"), (F.col("id") * 2).alias("val"))
-    lh.append(spark, table, good, key="id")
-    bad = spark.range(600, 605).select(F.col("id"), F.lit(-5).alias("val"))
-    with pytest.raises(lh.ConstraintViolation, match="val_nonneg"):
-        lh.append(spark, table, bad, key="id")
-    with pytest.raises(lh.ConstraintViolation, match="5 rows"):
-        lh.merge_into(spark, table, bad, "id")
-    # nothing committed by the failed writes
-    assert lh.read(spark, table).where(F.col("val") < 0).count() == 0
-
-
-def test_add_constraint_validates_existing_data(spark, table):
-    with pytest.raises(lh.ConstraintViolation, match="existing data"):
-        lh.add_constraint(spark, table, "impossible", "val > 100000")
-    # failed ADD leaves the constraint set untouched
-    assert "impossible" not in lh.current_constraints(table)
-
-
-def test_drop_constraint_reopens_writes_and_replace_resets(spark, table):
-    lh.add_constraint(spark, table, "val_nonneg", "val >= 0")
-    lh.drop_constraint(table, "val_nonneg")
-    bad = spark.range(700, 702).select(F.col("id"), F.lit(-1).alias("val"))
-    lh.append(spark, table, bad, key="id")  # allowed again
-    # REPLACE resets metadata: constraints do not survive re-creation
-    lh.add_constraint(spark, table, "id_pos", "id >= 0")
-    lh.create_or_replace(
-        spark, table, spark.range(3).select(F.col("id"), F.lit(1).alias("val")), key="id"
-    )
-    assert lh.current_constraints(table) == {}
 
 
 def test_deferred_delete_is_metadata_only_then_materializes(spark, table):
@@ -1857,7 +1824,8 @@ def test_bloom_probe_rendering_matches_writer(spark, tmp_path):
     path = str(tmp_path / "dblkey")
     df = spark.sql("select cast(pow(10, 20) as double) as k, 1 as val")
     lh.create_or_replace(spark, path, df, key="k")
-    assert all("bloom_md5" in a for a in lh.live_files(path))
+    # a double key logs no bloom (see the -0.0 test below): kept always
+    assert not any("bloom_md5" in a for a in lh.live_files(path))
     hits = lh._files_maybe_containing(spark, lh._snapshot(path), [1e20])
     assert hits, "bloom false-negative for a present double key"
     # bool key: str(True)='True' but Spark renders 'true'
@@ -1871,6 +1839,20 @@ def test_bloom_probe_rendering_matches_writer(spark, tmp_path):
     lh.delete_keys_deferred(spark, path, [1e20])
     lh.materialize_tombstones(spark, path)
     assert not lh.live_files(path), "tombstoned row silently retained"
+
+
+def test_negative_zero_double_key_is_found_by_read_keys_and_merge(spark, tmp_path):
+    """-0.0 and 0.0 are one key to SQL's =, but their string casts hash
+    to different bloom bits. A file holding -0.0 must not be skipped by
+    a 0.0 point lookup, and a MERGE of 0.0 must update that row instead
+    of adding a second one."""
+    path = str(tmp_path / "negzero")
+    lh.create_or_replace(
+        spark, path, spark.createDataFrame([(-0.0, 1)], "k double, v long"), key="k"
+    )
+    assert [r["v"] for r in lh.read_keys(spark, path, [0.0]).collect()] == [1]
+    lh.merge_into(spark, path, spark.createDataFrame([(0.0, 2)], "k double, v long"), "k")
+    assert [r["v"] for r in lh.read(spark, path).collect()] == [2]
 
 
 def test_key_range_reads_prune_by_key_stats(spark, tmp_path, monkeypatch):
@@ -1982,7 +1964,7 @@ def test_concurrent_disjoint_appends_both_land(spark, table, monkeypatch):
 @pytest.mark.parametrize("compaction", ["OPTIMIZE", "OPTIMIZE INCREMENTAL"])
 def test_concurrent_append_rebases_past_compaction(spark, table, monkeypatch, compaction):
     """A compaction rewrites files the append never read and changes no
-    schema, constraint or tombstone: an append that loses the race to
+    schema, mapping or tombstone: an append that loses the race to
     either OPTIMIZE flavour rebases past it instead of aborting."""
     # one file spanning the fixture's four key ranges: clustering depth 2
     lh.append(spark, table, spark.createDataFrame([(0, 1), (99, 1)], "id long, val long"), key="id")
@@ -2062,25 +2044,6 @@ def test_concurrent_append_during_merge_aborts_typed(spark, tmp_path, monkeypatc
     assert got == [(k, f"v{k}") for k in range(5)] + [(5, "merged")]
 
 
-def test_concurrent_violating_append_aborts_add_constraint(spark, table, monkeypatch):
-    """A violating append that lands between add_constraint's validation
-    and its commit was never validated: committing the constraint would
-    leave a violating row under it. add_constraint must abort typed, and
-    re-running it against the new HEAD rejects the constraint."""
-    bad = spark.createDataFrame([(500, -5)], "id long, val long")
-    _interleave(
-        monkeypatch,
-        lambda: lh.append(spark, table, bad, key="id"),
-        hook="_enforce_constraints",
-    )
-    with pytest.raises(lh.ConcurrentWriteConflict):
-        lh.add_constraint(spark, table, "val_nonneg", "val >= 0")
-    assert lh.current_constraints(table) == {}
-    assert lh.read(spark, table).where("val = -5").count() == 1
-    with pytest.raises(lh.ConstraintViolation):
-        lh.add_constraint(spark, table, "val_nonneg", "val >= 0")
-
-
 def test_each_operation_folds_the_log_once(spark, tmp_path, monkeypatch):
     """Every operation folds the log into ONE snapshot at its start and
     reads every view from it. Commits here stay below the checkpoint
@@ -2147,7 +2110,22 @@ def test_concurrent_append_aborts_on_schema_evolution(spark, table, monkeypatch)
     )
     with pytest.raises(lh.ConcurrentWriteConflict, match="schema"):
         lh.append(spark, table, mine, key="id")
-    assert "extra" in [f.name for f in lh.current_schema(table).fields]
+    assert "extra" in lh._snapshot(table).schema.fieldNames()
+
+
+def test_concurrent_append_aborts_on_rename_column(spark, table, monkeypatch):
+    """RENAME COLUMN is a metadata-only commit that redefines the column
+    mapping: an append that loses the race to it was validated against
+    the old schema, so it must abort typed rather than rebase, and the
+    rename stays the table's HEAD."""
+    _interleave(monkeypatch, lambda: lh.rename_column(table, "val", "amount"))
+    mine = spark.createDataFrame([(300, 2)], "id long, val long")
+    with pytest.raises(lh.ConcurrentWriteConflict, match="redefines table state"):
+        lh.append(spark, table, mine, key="id")
+    assert lh._read_entry(table, 1)["operation"] == "RENAME COLUMN (val -> amount)"
+    assert lh.versions(table) == [0, 1]
+    got = lh.read(spark, table)
+    assert got.columns == ["id", "amount"] and got.count() == 100
 
 
 # ---------------------------------------------------------------------------
@@ -2450,13 +2428,11 @@ def _snapshot_all_state(table):
         out[v] = (
             sorted(a["file"] for a in snap.files),
             sorted(snap.tombstones),
-            snap.constraints,
             (lambda s: s.json() if s is not None else None)(snap.schema),
             snap.key,
             snap.partition_by,
             snap.zorder_by,
             snap.mapping,
-            snap.retired,
             {k: sorted(a["file"] for a in vs) for k, vs in snap.staged.items()},
         )
     return out
@@ -2465,7 +2441,7 @@ def _snapshot_all_state(table):
 def test_log_checkpoint_equals_full_replay(spark, tmp_path, monkeypatch):
     """Checkpoint-seeded replay must equal full replay for EVERY view at
     EVERY version, across a history mixing appends, merges, deferred
-    deletes + materialization, constraints, WAP, optimize and restore;
+    deletes + materialization, a column rename, WAP, optimize and restore;
     corrupt checkpoints fall back cleanly."""
     import glob
     import os
@@ -2481,11 +2457,11 @@ def test_log_checkpoint_equals_full_replay(spark, tmp_path, monkeypatch):
     lh.merge_into(spark, path, spark.createDataFrame([(5, -1), (200, 2)], "id long, val long"), "id")
     lh.delete_keys_deferred(spark, path, [3, 100])
     lh.materialize_tombstones(spark, path)                    # v4 → ckpt
-    lh.add_constraint(spark, path, "val_ok", "val >= -1")
-    sv = lh.append_staged(spark, path, spark.createDataFrame([(300, 3)], "id long, val long"), key="id")
+    lh.rename_column(path, "val", "amt")
+    sv = lh.append_staged(spark, path, spark.createDataFrame([(300, 3)], "id long, amt long"), key="id")
     lh.publish(path, sv)
     lh.optimize(spark, path, key="id", target_rows=1000)      # v8 → ckpt
-    lh.restore(path, 2)
+    lh.restore(path, 2)                                       # mapping back to {}
     lh.append(spark, path, spark.createDataFrame([(400, 4)], "id long, val long"), key="id")
 
     ckpts = glob.glob(os.path.join(path, "_txn_log", "ckpt-v*.json"))
@@ -3100,10 +3076,8 @@ def test_merge_schema_evolution(spark, tmp_path):
         3: ("c", "extra3"),
         100: ("z", None),    # untouched file, null-filled on read
     }
-    assert "note" in [f.name for f in lh.current_schema(t).fields]
-    assert "note" not in [
-        f.name for f in lh.current_schema(t, v_pre).fields
-    ]
+    assert "note" in lh._snapshot(t).schema.fieldNames()
+    assert "note" not in lh._snapshot(t, v_pre).schema.fieldNames()
     assert "note" not in lh.read(spark, t, v_pre).columns
 
 
@@ -3428,9 +3402,9 @@ def test_rename_column_metadata_only_and_time_travel(spark, tmp_path):
 
 
 def test_rename_column_rejects_protected_and_collisions(spark, tmp_path):
-    """Key / partition / zorder / constraint-referenced columns reject
-    with the reason; a new name may not collide with a live logical,
-    a mapped physical, or a retired physical name."""
+    """Key / partition / zorder / CDC-flag columns reject with the
+    reason; a new name may not collide with a live logical or a mapped
+    physical name."""
     import pytest as _pytest
 
     t = str(tmp_path / "prot")
@@ -3438,21 +3412,26 @@ def test_rename_column_rejects_protected_and_collisions(spark, tmp_path):
         spark,
         t,
         spark.createDataFrame(
-            [(1, "a", 5.0, 1.0)], "id long, seg string, amount double, fee double"
+            [(1, "a", 5.0, 1.0, False)],
+            "id long, seg string, amount double, fee double, __cdc_deleted boolean",
         ),
         key="id",
         partition_by="seg",
     )
-    lh.add_constraint(spark, t, "fee_pos", "fee >= 0")
-    for col in ("id", "seg", "fee"):
-        with _pytest.raises(ValueError, match="cannot rename"):
+    # a second file, so the OPTIMIZE that logs the zorder spec has work
+    lh.append(spark, t, lh.read(spark, t).withColumn("id", F.lit(2).cast("long")))
+    lh.optimize(spark, t, key="id", zorder_by=["fee"])
+    reasons = {"id": "table key", "seg": "partition column", "fee": "zorder column",
+               "__cdc_deleted": "CDC tombstone flag"}
+    for col, why in reasons.items():
+        with _pytest.raises(ValueError, match=f"cannot rename {col!r}: {why}"):
             lh.rename_column(t, col, f"{col}2")
-    with _pytest.raises(ValueError, match="cannot drop"):
-        lh.drop_column(t, "id")
+    with _pytest.raises(ValueError, match="already exists"):
+        lh.rename_column(t, "amount", "fee")
     lh.rename_column(t, "amount", "total")
     # renaming BACK to the physical name is fine (mapping collapses)
     lh.rename_column(t, "total", "amount")
-    assert lh.current_mapping(t) == {}
+    assert lh._snapshot(t).mapping == {}
     # a fresh rename, then a new logical column reusing the physical
     # name must be rejected at append
     lh.rename_column(t, "amount", "total")
@@ -3461,39 +3440,12 @@ def test_rename_column_rejects_protected_and_collisions(spark, tmp_path):
             spark,
             t,
             spark.createDataFrame(
-                [(9, "z", 1.0, 1.0, 7.0)],
-                "id long, seg string, total double, fee double, amount double",
+                [(9, "z", 1.0, 1.0, False, 7.0)],
+                "id long, seg string, total double, fee double, "
+                "__cdc_deleted boolean, amount double",
             ),
             merge_schema=True,
         )
-
-
-def test_drop_column_projects_away_and_retires_physical(spark, tmp_path):
-    """DROP COLUMN is metadata-only: reads project the column away,
-    files keep the bytes, and the physical name is retired forever
-    (re-adding it is rejected — old file data must not resurrect)."""
-    import pytest as _pytest
-
-    t = str(tmp_path / "drop")
-    lh.create_or_replace(
-        spark,
-        t,
-        spark.createDataFrame([(1, "x", 1.5)], "id long, tag string, v double"),
-        key="id",
-    )
-    before = sorted(a["file"] for a in lh.live_files(t))
-    lh.drop_column(t, "tag")
-    assert sorted(a["file"] for a in lh.live_files(t)) == before
-    assert lh.read(spark, t).columns == ["id", "v"]
-    with _pytest.raises(lh.SchemaMismatch, match="physical names"):
-        lh.append(
-            spark,
-            t,
-            spark.createDataFrame([(2, 2.5, "y")], "id long, v double, tag string"),
-            merge_schema=True,
-        )
-    # time travel pre-drop still serves the column
-    assert lh.read(spark, t, version=0).columns == ["id", "tag", "v"]
 
 
 def test_rename_survives_checkpoint_clone_optimize_and_wap(spark, tmp_path):
@@ -3537,7 +3489,7 @@ def test_rename_survives_checkpoint_clone_optimize_and_wap(spark, tmp_path):
 
 def test_restore_redeclares_column_mapping_and_layout(spark, tmp_path):
     """Round-8 review repro: restore() must re-declare the target's
-    column mapping and retired physical names. Before the fix, restoring
+    column mapping. Before the fix, restoring
     across a RENAME left the stale mapping in the fold — a merge_schema
     append of a column reusing the renamed-to name was then admitted
     into a state where two logical columns aliased one physical column,
@@ -3551,7 +3503,7 @@ def test_restore_redeclares_column_mapping_and_layout(spark, tmp_path):
     )
     lh.rename_column(t, "a", "b")  # v1: mapping {b: a}
     lh.restore(t, 0)  # v2: back to [id, a] — mapping must reset to {}
-    assert lh.current_mapping(t) == {}
+    assert lh._snapshot(t).mapping == {}
     assert lh.read(spark, t).columns == ["id", "a"]
     # the renamed-to name is now genuinely free: no physical file column
     # is named 'b', so additive evolution may claim it cleanly
@@ -3584,7 +3536,7 @@ def test_restore_redeclares_column_mapping_and_layout(spark, tmp_path):
     lh.rename_column(t2, "a", "b")
     lh.restore(t2, 0)
     lh.restore(t2, 1)  # back to the renamed state
-    assert lh.current_mapping(t2) == {"b": "a"}
+    assert lh._snapshot(t2).mapping == {"b": "a"}
     assert lh.read(spark, t2).columns == ["id", "b"]
 
 
@@ -3617,35 +3569,6 @@ def test_verify_table_checks_full_checkpoint_state(spark, tmp_path):
         "diverges from log replay" in e and "mapping" in e
         for e in rep["errors"]
     ), rep["errors"]
-
-
-def test_protected_columns_skip_literals_and_keywords(spark, tmp_path):
-    """A CHECK constraint's string literals and SQL keywords are not
-    column references: "seg = 'north'" must not protect a column that
-    happens to be named north (round-8 review), while the genuinely
-    referenced column stays protected."""
-    t = str(tmp_path / "prot_lit")
-    lh.create_or_replace(
-        spark,
-        t,
-        spark.createDataFrame(
-            [(1, "north", 5.0, 1.0)],
-            "id long, seg string, north double, amount double",
-        ),
-        key="id",
-    )
-    lh.add_constraint(spark, t, "seg_region", "seg = 'north' OR amount > 0")
-    # 'north' appears only inside a string literal; 'or' is a keyword —
-    # the column named north renames freely. Also pin the OTHER literal
-    # syntax: Spark SQL's double-quoted strings must strip too.
-    lh.add_constraint(spark, t, "seg_region2", 'seg = "north" OR amount > 0')
-    lh.rename_column(t, "north", "compass")
-    assert lh.read(spark, t).columns == ["id", "seg", "compass", "amount"]
-    # the genuinely referenced columns still reject with the reason
-    with pytest.raises(ValueError, match="CHECK constraint"):
-        lh.rename_column(t, "seg", "segment")
-    with pytest.raises(ValueError, match="CHECK constraint"):
-        lh.drop_column(t, "amount")
 
 
 def test_stream_cms_heavy_hitters_replay_and_batch_equality(spark, tmp_path):
@@ -3788,35 +3711,6 @@ def test_restore_refolds_key_on_keyless_target(spark, tmp_path):
         lh.delete_keys_deferred(spark, t, [1])
     # and the restored data is the v0 snapshot
     assert {r["id"] for r in lh.read(spark, t).collect()} == {1, 2}
-
-
-def test_protected_columns_backslash_escaped_literals(spark, tmp_path):
-    """Round-9 review: the literal stripper handled doubled quotes ('')
-    but not Spark SQL's default backslash escapes — in
-    "note = 'don\\'t' OR amount > 0" the \\' shifted the literal
-    boundary, real column tokens after it were stripped as literal
-    text, and a constraint-referenced column lost rename/drop
-    protection. The literal must consume backslash escapes; columns
-    named only INSIDE the literal stay free."""
-    t = str(tmp_path / "prot_esc")
-    lh.create_or_replace(
-        spark,
-        t,
-        spark.createDataFrame(
-            [(1, "x", 5.0, 2.0)],
-            "id long, note string, amount double, t double",
-        ),
-        key="id",
-    )
-    lh.add_constraint(
-        spark, t, "esc_chk", r"note = 'don\'t hit t' OR amount > 0"
-    )
-    # 'amount' sits AFTER the escaped literal: protection must survive
-    with pytest.raises(ValueError, match="CHECK constraint"):
-        lh.drop_column(t, "amount")
-    # 't' appears only inside the literal text — renames freely
-    lh.rename_column(t, "t", "tee")
-    assert "tee" in lh.read(spark, t).columns
 
 
 def test_create_or_replace_clears_pending_tombstones(spark, tmp_path):

@@ -40,12 +40,6 @@ PKG = "ecommerce_dbt_medallion_spark"
 # (module, function, parameter) -> why it stays although no product call
 # passes it.
 KEEP = {
-    ("lakehouse", "add_constraint"): "constraint API, race-tested lakehouse behaviour",
-    ("lakehouse", "drop_constraint"): "constraint API, race-tested lakehouse behaviour",
-    ("lakehouse", "current_constraints"): "constraint API, race-tested lakehouse behaviour",
-    ("lakehouse", "drop_column"): "column-mapping API, race-tested lakehouse behaviour",
-    ("lakehouse", "current_schema"): "column-mapping API, race-tested lakehouse behaviour",
-    ("lakehouse", "current_mapping"): "column-mapping API, race-tested lakehouse behaviour",
     ("lakehouse", "vacuum"): "a lakehouse operation the fuzz and deletion-vector work exercise",
     ("lakehouse", "history"): "the commit log's reader; operation and race tests assert through it",
     ("ops.bpe", "_batched_conflict"): "reference fold the product's Python BPE twin is checked against",
