@@ -21,6 +21,10 @@ Stores", VLDB 2020):
   source keys), pruned first by the log's min/max key stats. Untouched
   files carry over by reference — at 100 TB this is the whole point of
   the format: an incremental batch rewrites a few files, not the table.
+- A deferred delete rewrites no file: it re-adds each file holding a
+  deleted key with the key in the file's DELETION VECTOR (``dv``, key
+  values on the add-action). Every reader drops DV'd rows, so every
+  rewrite drops them too.
 
 Commit protocol (Delta's optimistic concurrency): every operation folds
 the log ONCE at its start into a :class:`_Snapshot` at version N
@@ -106,7 +110,6 @@ def _empty_state() -> dict:
     return {
         "live": {},          # file name -> add action (insertion-ordered)
         "staged": {},        # staged version -> add actions (unresolved WAP)
-        "tombstones": [],    # pending merge-on-read key tombstones
         "schema_json": None,
         "key": None,
         "partition_by": None,
@@ -135,13 +138,6 @@ def _fold_entry(state: dict, e: dict) -> dict:
         # a table redefinition resets the column mapping unless the
         # entry carries one (CLONE carries the source's)
         state["mapping"] = dict(e.get("column_mapping") or {})
-        # a redefinition also resets PENDING TOMBSTONES (round-10
-        # review): only a tombstones_cleared commit reset them before,
-        # so a crash between a deferred delete and its materialization
-        # left stale tombstones MOR-filtering the REPLACED table's
-        # fresh rows forever. CLONE still carries the source's pending
-        # set — the extend below re-adds the entry's own tombstones.
-        state["tombstones"] = []
     if e.get("zorder_by"):
         state["zorder_by"] = list(e["zorder_by"])
     # RENAME COLUMN and RESTORE entries snapshot the full mapping: the
@@ -165,9 +161,6 @@ def _fold_entry(state: dict, e: dict) -> dict:
         # the same stale-state-across-RESTORE class as partition_by.
         if "key" in e:
             state["key"] = e["key"]
-    if e.get("tombstones_cleared"):
-        state["tombstones"] = []
-    state["tombstones"].extend(e.get("tombstones", []))
     # file actions: write-audit-publish defers staged adds until a
     # PUBLISH names them; readers never see unpublished data
     if e.get("staged"):
@@ -236,7 +229,6 @@ class _Snapshot(NamedTuple):
     version: int
     live: dict
     staged: dict
-    tombstones: list
     schema_json: str | None
     key: str | None  # latest declared key (a scan-back over the log)
     partition_by: str | None  # declared by the most recent CREATE
@@ -257,17 +249,6 @@ class _Snapshot(NamedTuple):
         if self.key is None:
             raise ValueError(f"table {self.table} has no declared key")
         return self.key
-
-    def require_no_tombstones(self, op: str) -> None:
-        """Writers of new rows refuse while deferred deletes are pending:
-        a key tombstone cannot tell a pre-delete row from a re-inserted
-        one."""
-        if self.tombstones:
-            raise ValueError(
-                "table has pending deferred deletes; run materialize_tombstones "
-                f"before {op} (a key tombstone cannot distinguish a pre-delete "
-                "row from a re-inserted one)"
-            )
 
 
 def _snapshot(table: str, version: int | None = None) -> _Snapshot:
@@ -339,7 +320,7 @@ class CommitConflict(Exception):
 class ConcurrentWriteConflict(CommitConflict):
     """Typed ABORT after conflict classification: the concurrent commit
     invalidated this transaction's snapshot (an overlapping rewrite, a
-    schema/mapping/tombstone change), so rebasing onto the new HEAD
+    schema/mapping change), so rebasing onto the new HEAD
     would be unsound — Delta's ConcurrentDeleteRead / MetadataChanged
     class. The caller must re-run the whole operation against current
     table state. Contrast with plain :class:`CommitConflict`, which
@@ -348,11 +329,11 @@ class ConcurrentWriteConflict(CommitConflict):
 
 
 # Log operations an ADD-ONLY transaction can safely rebase across: they
-# add or rewrite files this transaction never read, and leave table-level
-# state (schema, key, partitioning, column mapping, tombstones)
-# unchanged. Anything else — CREATE OR REPLACE, RESTORE, DELETE
-# DEFERRED, RENAME COLUMN — redefines state the append's validation
-# depended on, so the append must abort and re-validate.
+# add or rewrite files this transaction never read (a DELETE DEFERRED
+# re-adds files with a longer DV), and leave table-level state (schema,
+# key, partitioning, column mapping) unchanged. Anything else — CREATE
+# OR REPLACE, RESTORE, RENAME COLUMN — redefines state the append's
+# validation depended on, so the append must abort and re-validate.
 _APPEND_REBASE_SAFE_OPS = {
     "APPEND",
     "APPEND STAGED",
@@ -360,6 +341,7 @@ _APPEND_REBASE_SAFE_OPS = {
     "OPTIMIZE",
     "OPTIMIZE INCREMENTAL",
     "DELETE",
+    "DELETE DEFERRED",
     "MATERIALIZE TOMBSTONES",
     "PUBLISH",
     "DISCARD",
@@ -372,8 +354,6 @@ def _append_rebase_conflict(e: dict, expected_schema: str | None) -> str | None:
     op = str(e.get("operation", "?"))
     if op not in _APPEND_REBASE_SAFE_OPS:
         return f"concurrent {op} (v{e.get('version')}) redefines table state"
-    if e.get("tombstones"):
-        return f"concurrent {op} (v{e.get('version')}) introduced key tombstones"
     if (
         expected_schema is not None
         and e.get("schema_json") is not None
@@ -655,7 +635,7 @@ def _sql_literal(v) -> str:
 def _sql_in(col: str, values) -> str:
     """``col IN (...)`` over ``values`` as ONE SQL string: Column.isin
     pays a py4j round trip per value (4 vCPUs: ~0.4 ms, 5 s at 14k keys;
-    4.3-5.0 s to build a read() filtering 10k tombstones, 0.5 s as one
+    4.3-5.0 s to build a read() filtering 10k deleted keys, 0.5 s as one
     string). None values are dropped — SQL IN never matches a NULL, and
     _sql_literal(None) would render the string 'None' — and no values
     left renders FALSE. Callers that must keep NULL keys at a NOT say so
@@ -1064,6 +1044,27 @@ def _may_hold(files: list[dict], key: str | None, col: str, probes) -> list[dict
     return out
 
 
+def _key_type(snap: _Snapshot):
+    """The declared key's Spark type; None for a keyless table or one
+    that predates schema tracking."""
+    sch = snap.schema
+    if snap.key is None or sch is None:
+        return None
+    return next((f.dataType for f in sch.fields if f.name == snap.key), None)
+
+
+def _driver_typed(ktype, values) -> bool:
+    """Whether every one of ``values`` already carries the Python type of
+    ``ktype``, a _DRIVER_KEY_TYPES key: str(v) is then the string Spark
+    renders and Python equality is SQL's, so the driver may probe,
+    match and log them as they are."""
+    if ktype is None or ktype.typeName() not in _DRIVER_KEY_TYPES:
+        return False
+    if ktype.typeName() == "string":
+        return all(isinstance(v, str) for v in values)
+    return all(isinstance(v, int) and not isinstance(v, bool) for v in values)
+
+
 def _files_maybe_containing(spark: SparkSession, snap: _Snapshot, values: list) -> list[dict]:
     """Point-lookup file skipping: the live files whose key stats AND
     bloom admit at least one of ``values`` (:func:`_may_hold`). Sound
@@ -1077,32 +1078,20 @@ def _files_maybe_containing(spark: SparkSession, snap: _Snapshot, values: list) 
     contain the probed keys (round-8 ADVICE).
 
     Probes travel as ``str(v)`` and round-trip str → key type → string
-    IN SPARK, so a type-coercible value (an int tombstone against a
+    IN SPARK, so a type-coercible value (an int deleted key against a
     double key — JSON has no float/int distinction) coerces instead of
     failing strict createDataFrame verification, and its key-typed
     value is what the key stats are compared with; a value that does
     not cast at all becomes a NULL probe, whose None bounds and empty
     mask admit every live file (conservative)."""
     key = snap.key
-    ktype = None
-    sch = snap.schema  # None on pre-tracking logs
-    if key is not None and sch is not None:
-        ktype = next((f.dataType for f in sch.fields if f.name == key), None)
+    ktype = _key_type(snap)
     # Driver-side probe (round 14): for _DRIVER_KEY_TYPES keys whose
     # probe values already carry the key's Python type, str(v) is the
     # writer's string, so the masks cost zero Spark jobs (the bool/float
     # renderings the round-8 ADVICE flagged cannot arise). Any type
     # mismatch falls through to the Spark-rendered probe below.
-    want_str = ktype is not None and ktype.typeName() == "string"
-    if (
-        ktype is not None
-        and ktype.typeName() in _DRIVER_KEY_TYPES
-        and all(
-            isinstance(v, str) if want_str
-            else isinstance(v, int) and not isinstance(v, bool)
-            for v in values
-        )
-    ):
+    if _driver_typed(ktype, values):
         probes = [(v, v, _bloom_mask_py([v])) for v in values]
     else:
         probe_src = spark.createDataFrame([(str(v),) for v in values], "k string")
@@ -1170,91 +1159,113 @@ class SchemaMismatch(Exception):
     off, or the evolution is non-additive (drop / type change)."""
 
 
-# Merge-on-read deletes: tombstones are a metadata-only commit; reads
-# anti-filter them until a materialization rewrites the touched files.
+# Merge-on-read deletes: a DELETE DEFERRED commit writes no data file,
+# only deletion vectors (``dv`` on a live file's add-action: the key
+# values whose rows in that file are deleted). Readers drop DV'd rows
+# until a rewrite of the file leaves them out. TOMBSTONE_MAX bounds the
+# pending DV keys of a table.
 TOMBSTONE_MAX = 100_000
 
 
 def pending_tombstones(table: str) -> list:
-    """Key tombstones not yet materialized: replay accumulates DELETE
-    DEFERRED commits and clears on any commit flagged
-    ``tombstones_cleared`` (the materialization)."""
-    return _snapshot(table).tombstones
+    """The keys of deferred deletes not yet materialized: the union of
+    the live files' deletion vectors."""
+    return list(dict.fromkeys(k for a in _snapshot(table).files for k in a.get("dv", ())))
 
 
 def delete_keys_deferred(spark: SparkSession, table: str, keys: list) -> int:
-    """DELETE as MERGE-ON-READ: an O(1) metadata commit recording key
-    TOMBSTONES instead of rewriting data files — the Delta deletion-
-    vector idea at key granularity. Reads anti-filter tombstoned keys;
-    ``materialize_tombstones`` (or OPTIMIZE) pays the rewrite later,
-    off the latency path. This is the 100 TB erasure-request shape:
-    acknowledge the delete in milliseconds, batch the rewrites.
+    """DELETE as MERGE-ON-READ (Delta's deletion vectors at key
+    granularity): each live file holding one of ``keys`` is re-added,
+    unchanged on disk, with the key values IT stores (``"1"`` for a long
+    key deletes the stored 1) appended to its deletion vector. Reads
+    drop DV'd rows; ``materialize_tombstones`` (or any rewrite of the
+    file) pays the rewrite later — the 100 TB erasure-request shape.
+    Keys are unique per table, so a DV is exact: a key re-inserted later
+    lands in a new file without one, and writers go on meanwhile.
 
-    The table stays SINGLE-WRITER simple: appends and merges refuse
-    while tombstones are pending (a key-level tombstone cannot tell a
-    pre-delete row from a legitimately re-inserted one), so
-    materialize first. Tombstone volume is capped at TOMBSTONE_MAX —
-    beyond that the rewrite is cheaper than the read-side filter.
-    """
+    Holders are found by :func:`_discover_touched`'s two tiers: zero
+    Spark jobs for ``_DRIVER_KEY_TYPES`` keys :func:`_read_local` admits,
+    else one collect of (file, key) pairs. No holder, no commit.
+    Pending DV keys are capped at TOMBSTONE_MAX — beyond that the
+    rewrite is cheaper than the read-side filter. Returns the table
+    version (new or unchanged)."""
     import numpy as np
 
     # numpy scalars (keys taken from a pandas frame) pass the probe
-    # below through str(), but the log is JSON: commit plain values
-    keys = [k.item() if isinstance(k, np.generic) else k for k in keys]
+    # below through str(), but the log is JSON: plain values. A NULL key
+    # deletes nothing (SQL IN never matches NULL).
+    keys = [k.item() if isinstance(k, np.generic) else k for k in keys if k is not None]
     snap = _snapshot(table)
     key = snap.key
     if key is None:
         raise ValueError("deferred deletes require a table key")
-    if len(snap.tombstones) + len(keys) > TOMBSTONE_MAX:
+    if sum(len(a.get("dv", ())) for a in snap.files) + len(keys) > TOMBSTONE_MAX:
         raise ValueError(
-            f"tombstone count would exceed {TOMBSTONE_MAX}; materialize first"
+            f"pending deferred-delete keys would exceed {TOMBSTONE_MAX}; materialize first"
         )
-    # Reject keys the key column cannot represent BEFORE they enter the
-    # log: a tombstone like 'banana' on a bigint key can never match a
-    # row, and under ANSI mode the read-side anti-filter `key IN (...)`
-    # would THROW on it — one junk tombstone wedging every reader of
-    # the table. try_cast (not cast): ANSI cast raises instead of
-    # yielding the NULL this check looks for.
-    sch = snap.schema
-    ktype = None
-    if sch is not None:
-        ktype = next((f.dataType for f in sch.fields if f.name == key), None)
-    if ktype is not None and keys:
+    # Reject keys the key column cannot represent: under ANSI mode the
+    # discovery's `key IN (...)` would THROW on a key like 'banana' on a
+    # bigint key. try_cast (not cast): ANSI cast raises instead of
+    # yielding the NULL this check looks for. Values of the key's own
+    # Python type need no check.
+    ktype = _key_type(snap)
+    driver = _driver_typed(ktype, keys)
+    if ktype is not None and keys and not driver:
         probe = spark.createDataFrame([(str(k),) for k in keys], "k string")
-        bad = probe.where(
-            F.col("k").try_cast(ktype).isNull() & F.col("k").isNotNull()
-        ).collect()
+        bad = probe.where(F.col("k").try_cast(ktype).isNull()).collect()
         if bad:
             raise ValueError(
-                f"tombstone key(s) not castable to {key}'s type "
+                f"deleted key(s) not castable to {key}'s type "
                 f"{ktype.simpleString()}: {[r['k'] for r in bad][:5]}"
             )
-    return _commit_op(snap, "DELETE DEFERRED", key=key, tombstones=list(keys))
+    cands = _files_maybe_containing(spark, snap, keys) if keys else []
+    hits = None
+    if driver:
+        want = set(keys)
+        hits = _read_local(snap, cands, [key], keep=lambda r: r[0] in want)
+    if hits is not None:
+        pairs = [(a["file"], r[0]) for a, h in zip(cands, hits) for r in h]
+    elif cands:
+        # basename match (see _discover_touched: clone actions are
+        # absolute paths)
+        by_name = {os.path.basename(a["file"]): a["file"] for a in cands}
+        pairs = [
+            (by_name[os.path.basename(f)], _json_stat(k))
+            for f, k in _read_files(spark, snap, cands)
+            .where(_sql_in(key, keys))
+            .select(F.input_file_name(), key)
+            .distinct()
+            .collect()
+        ]
+    else:
+        pairs = []
+    found: dict[str, list] = {}
+    for f, k in pairs:
+        found.setdefault(f, []).append(k)
+    if not found:
+        return snap.version
+    return _commit_op(
+        snap,
+        "DELETE DEFERRED",
+        add=[
+            {**snap.live[f], "dv": snap.live[f].get("dv", []) + list(dict.fromkeys(vs))}
+            for f, vs in found.items()
+        ],
+        remove=list(found),
+        key=key,
+        stats={"files_touched": len(found)},
+    )
 
 
 def materialize_tombstones(spark: SparkSession, table: str) -> int:
-    """Apply pending tombstones to the data files (rewrite only files
-    containing tombstoned keys — delete_where's file discovery) and
-    clear the tombstone list in the same commit."""
+    """Rewrite the files that carry a deletion vector without their DV'd
+    rows, in one commit: exactly the files the log names, with no
+    discovery scan (:func:`_rewrite_without`'s tail of DELETE)."""
     snap = _snapshot(table)
-    pend = snap.tombstones
-    if not pend:
+    dvd = [a for a in snap.files if a.get("dv")]
+    if not dvd:
         return snap.version
-    # The snapshot's key is the fold's scan-back over the whole log,
-    # never a last-entry peek with an "id" guess: a metadata-only commit
-    # (RENAME COLUMN, PUBLISH) landing after the DELETE DEFERRED would
-    # otherwise make this destructive rewrite delete by the wrong
-    # column. Tombstones pending implies delete_keys_deferred found a
-    # key, so it cannot miss.
-    return _delete_where(
-        spark,
-        snap,
-        _sql_in(snap.require_key(), pend),
-        clear_tombstones=True,
-        # bounds the discovery scan via blooms + key stats: O(candidate
-        # files), not O(table) — the erasure-request batch shape
-        candidate_keys=list(pend),
-    )
+    return _rewrite_without(spark, snap, dvd, None, "MATERIALIZE TOMBSTONES")
 
 
 def _protected_columns(snap: _Snapshot) -> dict[str, str]:
@@ -1520,7 +1531,6 @@ def append(
         snap, df.schema, key, partition_by, len(local_rows)
     )
     df, schema = _evolve_schema(snap, df, merge_schema)
-    snap.require_no_tombstones("APPEND")
     if use_local:
         adds = _stage_rows_local(
             snap,
@@ -1600,10 +1610,10 @@ def table_row_count(table: str) -> int:
     """COUNT(*) from METADATA: the log's per-file row counts summed over
     the live set — O(files-in-log) with zero data IO, the Delta
     numRecords trick. At 100 TB this is the difference between an
-    instant answer and a full scan. NOTE: pending merge-on-read
-    tombstones are not reflected (they hide rows at scan time);
-    callers needing exactness under pending tombstones should
-    materialize first — the returned count is the PHYSICAL row count."""
+    instant answer and a full scan. NOTE: rows hidden by deletion
+    vectors are not subtracted (they are dropped at scan time); callers
+    needing exactness under pending deferred deletes should materialize
+    first — the returned count is the PHYSICAL row count."""
     return sum(a["rows"] for a in _snapshot(table).live.values())
 
 
@@ -1621,7 +1631,6 @@ def append_staged(
     readers skip it until publish(). The schema must match exactly (no
     evolution through the staging path)."""
     snap = _snapshot(table)
-    snap.require_no_tombstones("APPEND STAGED")
     df, _schema = _evolve_schema(snap, df, merge_schema=False)
     adds = _stage_files(df, snap, key)
     # staged adds are invisible until PUBLISH, so the same add-only
@@ -1630,15 +1639,14 @@ def append_staged(
 
 
 def read_staged(spark: SparkSession, table: str, staged_version: int) -> DataFrame:
-    """The staged commit's OWN rows (what an audit validates), raw: the
-    pending-tombstone filter is a read-time view of live data."""
+    """The staged commit's OWN rows (what an audit validates)."""
     snap = _snapshot(table)
     adds = snap.staged.get(staged_version)
     if adds is None:
         raise ValueError(f"version {staged_version} is not an unresolved staged commit")
     if not adds:
         raise ValueError(f"staged commit {staged_version} has no files")
-    return _read_files(spark, snap, adds, with_tombstones=False)
+    return _read_files(spark, snap, adds)
 
 
 def _resolve_staged(table: str, staged_version: int, op: str, field: str) -> int:
@@ -1724,8 +1732,8 @@ def read_pruned_multi(spark: SparkSession, table: str, bounds: dict) -> DataFram
 
     The pruned read honors the SAME read contract as ``read()`` —
     log-derived schema (null-filling pre-evolution files, never an
-    arbitrary footer) and the pending-tombstone anti-filter (a skipped
-    rewrite must not resurrect logically deleted rows) — pruning only
+    arbitrary footer) and the files' deletion vectors (a pruned scan
+    must not resurrect deferred-deleted rows) — pruning only
     ever cuts the FILE list, never changes the visible rows/columns."""
     snap = _snapshot(table)
     files = _pruned_files(snap, bounds)
@@ -1756,23 +1764,19 @@ def _pruned_files(snap: _Snapshot, bounds: dict) -> list[dict]:
     return files
 
 
-def _read_files(
-    spark: SparkSession,
-    snap: _Snapshot,
-    files: list[dict],
-    with_tombstones: bool = True,
-) -> DataFrame:
+def _read_files(spark: SparkSession, snap: _Snapshot, files: list[dict]) -> DataFrame:
     """Read a file SUBSET under the full read() contract: the snapshot's
     log schema (so schema-evolved columns null-fill instead of
     silently vanishing when the subset happens to contain only
     pre-evolution files — or, worse, when a REWRITE path takes one
     file's footer as the schema and permanently drops the evolved
-    column from the files it writes) and, by default, the merge-on-read
-    tombstone anti-filter (so a pruned scan cannot resurrect
-    deferred-deleted rows). Rewrite paths pass
-    ``with_tombstones=False``: a physical rewrite must see the raw file
-    contents — ``materialize_tombstones`` in particular relies on the
-    tagged scan FINDING the tombstoned rows it is about to drop."""
+    column from the files it writes) and the files' deletion vectors.
+    A row whose key is in its own file's DV is dropped, so no read — a
+    pruned scan, a point lookup, the kept rows of any rewrite —
+    resurrects a deferred-deleted row. The DV filter is ONE predicate:
+    a CASE on the scanned file's name whose branches are
+    :func:`_sql_in` lists, keeping NULL-key rows; a file set without
+    DVs is read with no filter at all."""
     schema = snap.schema
     reader = spark.read
     if schema is not None:
@@ -1780,14 +1784,18 @@ def _read_files(
         # then the projection aliases back to the logical schema
         reader = reader.schema(_physical_schema(schema, snap.mapping))
     df = reader.parquet(*[_abs(snap.table, a["file"]) for a in files])
-    df = _map_to_logical(df, schema, snap.mapping)
-    if with_tombstones and snap.tombstones:
-        # merge-on-read: un-materialized deletes filter at scan time.
-        # NULL-key rows pass: NOT(NULL IN (...)) is NULL under
-        # three-valued logic and where() would silently drop them
+    dvd = [a for a in files if a.get("dv")]
+    if dvd:
+        # on the scan itself, which alone exposes _metadata; the key is
+        # rename-protected, so its physical name is its logical one.
+        # NOT(NULL IN (...)) is NULL, hence the coalesce for NULL keys.
         k = snap.require_key()
-        df = df.where(f"`{k}` IS NULL OR NOT ({_sql_in(k, snap.tombstones)})")
-    return df
+        cases = " ".join(
+            f"WHEN {_sql_literal(os.path.basename(a['file']))} THEN {_sql_in(k, a['dv'])}"
+            for a in dvd
+        )
+        df = df.where(f"NOT coalesce(CASE _metadata.file_name {cases} END, false)")
+    return _map_to_logical(df, schema, snap.mapping)
 
 
 def _read_local(
@@ -1803,11 +1811,12 @@ def _read_local(
     ones through ``snap.mapping``, and a column a file lacks reads NULL
     (a pre-evolution file; or a column the log schema lacks, which an
     evolving MERGE is adding — the collision guard keeps it off every
-    renamed-away physical name). Returns None, and the caller takes its
-    distributed read, whenever the driver may not read the files:
+    renamed-away physical name), and a file's DV'd rows are dropped.
+    Returns None, and the caller takes its distributed read, whenever
+    the driver may not read the files:
 
-    - tombstones are pending (their anti-filter is the distributed
-      read's);
+    - a file has a DV and the key is not a _DRIVER_KEY_TYPES key (set
+      membership misses NaN, which Spark's IN matches);
     - the table predates schema tracking (no log schema to read by);
     - a requested column's type has no value-exact pyarrow twin
       (:func:`_pa_type`, the pyarrow writer's rule: a timestamp decodes
@@ -1817,8 +1826,7 @@ def _read_local(
       legacy entry: unknown size must mean the distributed read);
     - a pyarrow read fails."""
     if (
-        snap.tombstones
-        or snap.schema is None
+        snap.schema is None
         or len(files) > READ_LOCAL_MAX_FILES
         or not all("rows" in a and a["rows"] <= READ_LOCAL_MAX_FILE_ROWS for a in files)
     ):
@@ -1830,7 +1838,15 @@ def _read_local(
                 _pa_type(types[c])
     except KeyError:
         return None
-    phys = [snap.mapping.get(c, c) for c in columns]
+    cols = list(columns)
+    if any(a.get("dv") for a in files):
+        ktype = _key_type(snap)
+        if ktype is None or ktype.typeName() not in _DRIVER_KEY_TYPES:
+            return None
+        if snap.key not in cols:
+            cols.append(snap.key)  # read to apply the DVs, then cut
+    ki = cols.index(snap.key) if snap.key in cols else None
+    phys = [snap.mapping.get(c, c) for c in cols]
     out = []
     for a in files:
         try:
@@ -1841,6 +1857,9 @@ def _read_local(
             return None
         n = t.num_rows
         rows = zip(*[t.column(p).to_pylist() if p in present else [None] * n for p in phys])
+        if a.get("dv"):
+            dv = set(a["dv"])
+            rows = (r[: len(columns)] for r in rows if r[ki] not in dv)
         out.append([r for r in rows if keep(r)] if keep else list(rows))
     return out
 
@@ -1960,7 +1979,7 @@ def _discover_touched(
         src_keys = source.select(F.col(key).alias("__mk")).distinct()
         hit = {
             os.path.basename(r["__f"])
-            for r in _read_files(spark, snap, candidates, with_tombstones=False)
+            for r in _read_files(spark, snap, candidates)
             .select(F.col(key), F.input_file_name().alias("__f"))
             .join(F.broadcast(src_keys), F.col(key) == F.col("__mk"), "left_semi")
             .select("__f")
@@ -2054,7 +2073,7 @@ def _keyed_rewrite(
         if touched:
             # log-schema read: a footer read of a pre-evolution touched
             # file would rewrite it without the evolved columns
-            kept = _read_files(spark, snap, touched, with_tombstones=False)
+            kept = _read_files(spark, snap, touched)
             if d.keys is None:
                 kept = kept.join(source.select(key).distinct(), key, "left_anti")
             elif d.keys:  # (no keys: only NULL-keyed winners, all rows kept)
@@ -2104,7 +2123,6 @@ def merge_into(
     snap = _head_or_new(table)
     if snap.version < 0:
         return create_or_replace(spark, table, source, key, local_rows=source_rows)
-    snap.require_no_tombstones("MERGE")
     # plan from the caller's schema before evolution casts it: only a
     # source the driver writer could stage needs its full rows probed;
     # any other probes a key projection
@@ -2191,7 +2209,6 @@ def apply_changes(
             CDC_DELETED_COL, F.col(op_col) == F.lit(delete_value)
         ).drop(op_col)
         return create_or_replace(spark, table, first, key)
-    snap.require_no_tombstones("APPLY CHANGES")
     sch = snap.schema
     if sch is not None and CDC_DELETED_COL not in sch.fieldNames():
         # a pre-existing non-CDC table has no tombstone column: winning
@@ -2211,7 +2228,7 @@ def apply_changes(
     is_delete = F.col(op_col) == F.lit(delete_value)
     winners, newly_deleted = latest, F.lit(False)
     if d.touched:
-        stored = _read_files(spark, snap, d.touched, with_tombstones=False).select(
+        stored = _read_files(spark, snap, d.touched).select(
             F.col(key).alias("__t_key"),
             F.struct(*seq_cols).alias("__t_seq"),
             F.col(CDC_DELETED_COL).alias("__t_del"),
@@ -2396,7 +2413,7 @@ def verify_table(spark: SparkSession, table: str) -> dict:
         # whose mapping/key/partition/zorder/staged
         # diverged from the replay would alias columns (or admit
         # colliding names, or mis-partition writes) on checkpoint-seeded
-        # reads while passing a live/schema/tombstones-only check
+        # reads while passing a live/schema-only check
         # (round-8 review).
         diverged = [
             fld
@@ -2446,10 +2463,12 @@ def restore(table: str, to_version: int) -> int:
     time-travelable and a second restore can undo the first).
 
     Pure metadata: the live set of ``to_version`` is re-declared by
-    REFERENCE — files live at both HEAD and the target stay untouched,
-    files dropped since the target are re-added, files added since are
-    removed. No data file is read, written, or moved, which is what
-    makes restore O(log) instead of O(table) at any scale.
+    REFERENCE, add-action by add-action — a file whose action is the
+    same at HEAD and the target stays untouched, any other HEAD file is
+    removed and any other target action re-added (so a deletion vector
+    added since the target goes). No data file is read, written, or
+    moved, which is what makes restore O(log) instead of O(table) at
+    any scale.
     """
     snap = _snapshot(table)
     target_snap = _snapshot(table, to_version)
@@ -2464,22 +2483,18 @@ def restore(table: str, to_version: int) -> int:
         )
     # Re-declare the ENTIRE table state of to_version, not just its
     # file set (round-7 review): schema (a post-target REPLACE would
-    # otherwise make read() null-fill every restored column), tombstone
-    # state (pending deletes from the bad era must not keep
-    # anti-filtering restored rows — the restored era's own pending
-    # tombstones are re-declared), the column mapping (restoring across
-    # a RENAME would otherwise leave the stale mapping in the fold: the schema-merge
-    # guard then admits a new column whose name aliases old file data,
-    # and every later write crashes on the phantom collision — round-8
-    # review repro), and the physical layout spec (partition/zorder).
+    # otherwise make read() null-fill every restored column), the
+    # column mapping (restoring across a RENAME would otherwise leave
+    # the stale mapping in the fold: the schema-merge guard then admits
+    # a new column whose name aliases old file data, and every later
+    # write crashes on the phantom collision — round-8 review repro),
+    # and the physical layout spec (partition/zorder).
     return _commit_op(
         snap,
         f"RESTORE AS OF {to_version}",
-        add=[a for f, a in target.items() if f not in head],
-        remove=[f for f in head if f not in target],
+        add=[a for f, a in target.items() if head.get(f) != a],
+        remove=[f for f, a in head.items() if target.get(f) != a],
         key=target_snap.key,
-        tombstones_cleared=True,
-        tombstones=target_snap.tombstones,
         column_mapping=target_snap.mapping,
         partition_by=target_snap.partition_by,
         zorder_by=target_snap.zorder_by,
@@ -2499,10 +2514,10 @@ def clone_table(source: str, dest: str) -> int:
     source is never touched); writes to the source after the clone are
     invisible to the clone (its v0 pinned the file list). The clone
     carries the source's full table contract at the clone point —
-    schema, key, declared partitioning, Z-order
-    clustering, and PENDING merge-on-read tombstones (omitting those
-    would resurrect logically deleted rows, e.g. an acknowledged
-    erasure).
+    schema, key, declared partitioning and Z-order clustering — and
+    each file's add-action is copied whole, deletion vector included
+    (dropping it would resurrect deferred-deleted rows, e.g. an
+    acknowledged erasure).
 
     CAVEAT (same as Delta shallow clones): VACUUMing the SOURCE past
     files a clone still references breaks the clone's reads — vacuum
@@ -2535,7 +2550,6 @@ def clone_table(source: str, dest: str) -> int:
             f"CLONE {os.path.abspath(source)} AS OF {snap.version}",
             add=adds,
             key=snap.key,
-            tombstones=snap.tombstones,
             partition_by=snap.partition_by,
             **fields,
         )
@@ -2647,26 +2661,23 @@ def optimize(
     import math
 
     snap = _snapshot(table)
-    # compaction is the natural rewrite point for merge-on-read debt:
-    # pending deferred-delete tombstones materialize first, so the
-    # compacted files are clean and readers drop the scan-time filter
-    if snap.tombstones:
-        materialize_tombstones(spark, table)
-        snap = _snapshot(table)
     # scan-back default: an optimize that omits the key must not strip
     # min/max key stats + blooms from every compacted file
     # (pruning-decay, round-7 review)
     key = key or snap.key
     threshold = small_file_rows if small_file_rows is not None else target_rows // 2
-    small = [a for a in snap.files if a["rows"] < threshold]
-    if len(small) <= 1:
+    # compaction is the natural rewrite point for merge-on-read debt: a
+    # file with a deletion vector is always rewritten, without its DV'd
+    # rows
+    small = [a for a in snap.files if a["rows"] < threshold or a.get("dv")]
+    if len(small) <= 1 and not any(a.get("dv") for a in small):
         return snap.version
 
     # log-schema read, NOT a footer read: compacting a schema-evolved
     # table from one file's footer would write the compacted files
     # without the evolved columns — silent, permanent data loss (the
     # round-7 review catch; regression-pinned in tests/test_lakehouse)
-    df = _read_files(spark, snap, small, with_tombstones=False)
+    df = _read_files(spark, snap, small)
     total = sum(a["rows"] for a in small)
     nfiles = max(1, math.ceil(total / target_rows))
     part_col = snap.partition_by
@@ -2829,9 +2840,6 @@ def optimize_incremental(
     import math
 
     snap = _snapshot(table)
-    if snap.tombstones:
-        materialize_tombstones(spark, table)
-        snap = _snapshot(table)
     key = snap.key
     rep = _clustering_depth(snap, key)
     bad = [c for c in rep["clusters"] if c["depth"] > max_depth]
@@ -2842,7 +2850,7 @@ def optimize_incremental(
     removed: list[str] = []
     for c in bad:
         members = [by_name[f] for f in c["files"]]
-        df = _read_files(spark, snap, members, with_tombstones=False)
+        df = _read_files(spark, snap, members)
         nfiles = max(1, math.ceil(c["rows"] / target_rows))
         if key is not None:
             df = df.repartitionByRange(nfiles, F.col(key)).sortWithinPartitions(
@@ -2878,72 +2886,63 @@ def delete_where(spark: SparkSession, table: str, predicate: str) -> int:
     nothing survives). At 100 TB a targeted delete rewrites the handful
     of files holding the keys, never the table.
     """
-    return _delete_where(spark, _snapshot(table), predicate)
-
-
-def _delete_where(
-    spark: SparkSession,
-    snap: _Snapshot,
-    predicate: str,
-    clear_tombstones: bool = False,
-    candidate_keys: list | None = None,
-) -> int:
-    """:func:`delete_where` on a snapshot. ``materialize_tombstones``
-    sets ``clear_tombstones`` so the rewrite and the tombstone-list
-    clear land in ONE atomic commit, and passes the tombstoned keys as
-    ``candidate_keys``: key-list deletes bound the discovery scan with
-    the log's blooms + key stats — O(candidate files), not O(table);
-    sound because a bloom never rejects a present key. Arbitrary
-    predicates still scan all live files."""
-    live = snap.files
-    scan = _files_maybe_containing(spark, snap, candidate_keys) if candidate_keys else live
-    # log-schema reads (footer schema would drop evolved columns from
-    # the rewritten files); raw tombstone view — materialization must
-    # SEE the rows it deletes
-    if scan:
-        tagged = _read_files(spark, snap, scan, with_tombstones=False).withColumn(
-            "__f", F.input_file_name()
-        )
-        hit_files = {
+    snap = _snapshot(table)
+    hit = set()
+    if snap.live:
+        # log-schema read (a footer schema would drop evolved columns
+        # from the rewritten files)
+        tagged = _read_files(spark, snap, snap.files).withColumn("__f", F.input_file_name())
+        hit = {
             os.path.basename(r["__f"])
             for r in tagged.where(predicate).select("__f").distinct().collect()
         }
-    else:
-        hit_files = set()
-    # basename match (see merge_into: clone actions are absolute paths)
-    touched = [a for a in live if os.path.basename(a["file"]) in hit_files]
+    # basename match (see _discover_touched: clone actions are absolute paths)
+    touched = [a for a in snap.files if os.path.basename(a["file"]) in hit]
+    return _rewrite_without(spark, snap, touched, predicate, "DELETE")
+
+
+def _rewrite_without(
+    spark: SparkSession,
+    snap: _Snapshot,
+    touched: list[dict],
+    predicate: str | None,
+    operation: str,
+) -> int:
+    """The rewrite tail of DELETE and MATERIALIZE TOMBSTONES: each of
+    ``touched`` is replaced by its rows that survive its deletion
+    vector and ``predicate`` (None: the DV alone), or dropped when none
+    survive; every other live file carries over by reference.
+    ``stats.rows_deleted`` counts the physical rows the rewrite drops."""
     # the snapshot's scan-back key, not the last entry's: a metadata-only
     # commit before this delete must not strip min/max key stats +
     # blooms from the rewritten files (they feed MERGE file pruning
     # forever after)
     key = snap.key
-
     adds: list[dict] = []
     n_deleted = 0
     if touched:
-        tdf = _read_files(spark, snap, touched, with_tombstones=False)
-        # DELETE drops the rows whose predicate is TRUE: a NULL-key row
-        # under `k IN (...)` is NULL there, and `not (...)` alone would
-        # drop it too
-        kept = tdf.where(f"NOT coalesce(({predicate}), false)")
+        kept = _read_files(spark, snap, touched)
+        if predicate is not None:
+            # DELETE drops the rows whose predicate is TRUE: a NULL-key
+            # row under `k IN (...)` is NULL there, and `not (...)`
+            # alone would drop it too
+            kept = kept.where(f"NOT coalesce(({predicate}), false)")
         n_kept = kept.count()
         n_deleted = sum(a["rows"] for a in touched) - n_kept
         if n_kept:
             adds = _stage_files(kept, snap, key)
-
     return _commit_op(
         snap,
-        "MATERIALIZE TOMBSTONES" if clear_tombstones else "DELETE",
+        operation,
         add=adds,
         remove=[a["file"] for a in touched],
         key=key,
         predicate=predicate,
         stats={
             "files_touched": len(touched),
-            "files_untouched": len(live) - len(touched),
+            "files_untouched": len(snap.live) - len(touched),
             "rows_deleted": n_deleted,
         },
-        **({"tombstones_cleared": True} if clear_tombstones else {}),
     )
 
 
@@ -2960,42 +2959,39 @@ def table_changes(
     update_postimage (Delta CDF semantics; updates carry the post-image
     row, deletes the pre-image).
 
-    Only files that ENTERED or LEFT the live set between the versions
-    are read — rows in carried-over files cannot have changed, and
-    rows merely moved by OPTIMIZE/MERGE carry-over cancel out via a
-    full-outer join on key with a whole-row hash equality check. At
-    100 TB the CDF cost scales with the churn, not the table.
+    Only files whose add-action differs between the versions are read,
+    each side through :func:`_read_files` under its own version's
+    snapshot (log schema, deletion vectors) — rows in carried-over files
+    cannot have changed, a deferred delete's re-added file yields its
+    DV'd keys as deletes, and rows merely moved by OPTIMIZE/MERGE
+    carry-over cancel out via a full-outer join on key with a whole-row
+    hash equality check. At 100 TB the CDF cost scales with the churn,
+    not the table.
     """
     old_snap, new_snap = _snapshot(table, from_version), _snapshot(table, to_version)
     key = key or new_snap.key
     if key is None:
         raise ValueError("table_changes requires a key column")
-    old_only = sorted(set(old_snap.live) - set(new_snap.live))
-    new_only = sorted(set(new_snap.live) - set(old_snap.live))
-
     schema = _read_live(spark, old_snap).schema
     cols = [f.name for f in schema.fields]
 
-    def _side(files: list[str], snap: _Snapshot) -> DataFrame:
-        if not files:
-            return spark.createDataFrame([], schema)
+    def _side(snap: _Snapshot, other: _Snapshot) -> DataFrame:
         # each side reads under ITS version's log schema (footer
         # inference breaks on schema-evolved tables: a pre-evolution
         # file lacks the evolved column and the select below would
         # raise; the log schema null-fills it — round-7 review)
-        s = snap.schema or schema
-        df = spark.read.schema(_physical_schema(s, snap.mapping)).parquet(
-            *[_abs(table, f) for f in files]
-        )
-        return _map_to_logical(df, s, snap.mapping)
+        files = [a for f, a in snap.live.items() if other.live.get(f) != a]
+        if not files:
+            return spark.createDataFrame([], schema)
+        return _read_files(spark, snap, files)
 
     rowhash = F.md5(F.to_json(F.struct(*[F.col(c) for c in sorted(cols)])))
-    old = _side(old_only, old_snap).select(
+    old = _side(old_snap, new_snap).select(
         F.col(key).alias("__k"),
         rowhash.alias("__oh"),
         *[F.col(c).alias(f"__o_{c}") for c in cols],
     )
-    new = _side(new_only, new_snap).select(
+    new = _side(new_snap, old_snap).select(
         F.col(key).alias("__k"),
         rowhash.alias("__nh"),
         *[F.col(c).alias(f"__n_{c}") for c in cols],

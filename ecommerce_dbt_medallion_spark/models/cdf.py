@@ -758,27 +758,29 @@ def lakehouse_deferred_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     wrong number.
 
     Construction: v0 CREATE (orders with order_id % 4 != 0, keyed);
-    ``delete_keys_deferred`` tombstones the ``DEFER_DEL_BATCH`` smallest
-    order_ids with order_id % 10 == 1 (an O(1) metadata commit — the
-    live file set must be byte-identical across it); then THREE tagged
-    reads are unioned, so every contract is inside one value hash:
+    ``delete_keys_deferred`` deletes the ``DEFER_DEL_BATCH`` smallest
+    order_ids with order_id % 10 == 1 (a metadata commit: the files
+    holding them are re-added with the keys in their deletion vectors,
+    so the live file names must be the same across it); then THREE
+    tagged reads are unioned, so every contract is inside one value
+    hash:
 
-    - ``v0_travel``: time travel to v0 WHILE tombstones are pending —
-      the full base; pending tombstones must not rewrite history.
-    - ``mor``: the HEAD read through the pending-tombstone anti-filter
-      — base minus the tombstoned keys, with zero files rewritten
-      (a resurrected key here is the GDPR bug).
+    - ``v0_travel``: time travel to v0 WHILE the deletes are pending —
+      the full base; a deletion vector must not rewrite history.
+    - ``mor``: the HEAD read, which drops each file's DV'd rows — base
+      minus the deleted keys, with zero files rewritten (a resurrected
+      key here is the GDPR bug).
     - ``final``: the HEAD read after ``materialize_tombstones`` paid
-      the rewrite — the SAME rows (rewrite ≡ filter), tombstone list
-      drained.
+      the rewrite — the SAME rows (rewrite ≡ filter), no deletion
+      vector left.
 
-    The oracle states all three states in plain SQL; any tombstone
-    leak, history rewrite, or rewrite/filter divergence hash-mismatches.
+    The oracle states all three states in plain SQL; any leaked delete,
+    history rewrite, or rewrite/filter divergence hash-mismatches.
 
-    Scale shape: the deferred commit is O(keys) metadata; the
-    materialization rewrites only files whose key range ∩ bloom admits
-    a tombstoned key (lakehouse.delete_where's candidate discovery) —
-    churn-proportional, never O(table).
+    Scale shape: the deferred commit finds the files holding the keys
+    by their key range ∩ bloom and a read of only those files' key
+    column; the materialization rewrites exactly the files the log
+    names — churn-proportional, never O(table).
     """
     (table,) = gate_scratch(sf_dir, "defer_del_gate")
 
@@ -805,7 +807,7 @@ def lakehouse_deferred_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     if files_before != files_after:
         raise AssertionError("deferred delete touched data files")
     if sorted(lakehouse.pending_tombstones(table)) != sorted(victims):
-        raise AssertionError("tombstone list diverged from the request")
+        raise AssertionError("deletion vectors diverged from the request")
 
     def _tagged(df: DataFrame, state: str) -> DataFrame:
         return df.select(
@@ -820,7 +822,7 @@ def lakehouse_deferred_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     lakehouse.materialize_tombstones(spark, table)
     if lakehouse.pending_tombstones(table):
-        raise AssertionError("materialization left tombstones pending")
+        raise AssertionError("materialization left deletion vectors live")
     final = _tagged(lakehouse.read(spark, table), "final")
     return v0_travel.unionByName(mor).unionByName(final)
 

@@ -355,15 +355,7 @@ def incremental_mart_refresh(
     from ecommerce_dbt_medallion_spark import lakehouse
 
     max_deleted_groups = 100_000
-    # CDF diffs live FILE sets, and a DELETE DEFERRED commit is
-    # metadata-only — tombstoned keys' groups would look clean and the
-    # refresh would silently leave them stale. Same guard append/merge
-    # already apply: materialize first, then refresh. One snapshot
-    # serves the refusal and the version caught up to, so a delete
-    # committed after the check cannot fall inside the refreshed range.
-    snap = lakehouse._snapshot(fact_table)
-    snap.require_no_tombstones("INCREMENTAL MART REFRESH")
-    to_version = snap.version
+    to_version = lakehouse.versions(fact_table)[-1]
     if to_version == from_version:
         return to_version
     # include_preimage: an update that REASSIGNS a row's group must

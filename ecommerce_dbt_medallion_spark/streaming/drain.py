@@ -43,15 +43,8 @@ def _ckpt_dir(table: str) -> str:
     directory entangles engine-internal replay state with versioned
     storage — a byte-copy snapshot export or directory-walk consumer
     picks it up, and resetting the table destroys replay state (or vice
-    versa) (round-8 ADVICE).
-
-    A pre-round-8 checkpoint living INSIDE the table migrates once:
-    orphaning it would silently replay the whole source."""
-    new = table.rstrip("/\\") + "_ckpt"
-    legacy = os.path.join(table, "_streaming_ckpt")
-    if os.path.isdir(legacy) and not os.path.exists(new):
-        os.rename(legacy, new)
-    return new
+    versa) (round-8 ADVICE)."""
+    return table.rstrip("/\\") + "_ckpt"
 
 
 def gate_path(sf_dir: str, name: str) -> str:

@@ -1095,16 +1095,30 @@ def test_deferred_delete_is_metadata_only_then_materializes(spark, table):
     assert lh.read(spark, table).count() == 97
 
 
-def test_deferred_delete_blocks_writes_until_materialized(spark, table):
-    lh.delete_keys_deferred(spark, table, [1])
-    new = spark.range(900, 903).select(F.col("id"), F.lit(0).alias("val"))
-    with pytest.raises(ValueError, match="pending deferred deletes"):
+@pytest.mark.parametrize("writer", ["append", "merge"])
+def test_writes_go_on_while_deferred_deletes_pend(spark, table, writer):
+    """A deletion vector names rows of its own file, so a deleted key
+    re-inserted while the delete is pending is visible exactly once,
+    and the other deleted keys stay hidden, before and after the
+    materialization."""
+    lh.delete_keys_deferred(spark, table, [1, 2, 3])
+    new = spark.createDataFrame([(2, -2), (900, -9)], "id long, val long")
+    if writer == "append":
         lh.append(spark, table, new, key="id")
-    with pytest.raises(ValueError, match="pending deferred deletes"):
+    else:
         lh.merge_into(spark, table, new, "id")
+    assert sorted(lh.pending_tombstones(table)) == [1, 2, 3]
+
+    def rows():
+        got = lh.read(spark, table).where(F.col("id").isin([1, 2, 3, 4, 900])).collect()
+        return sorted((r["id"], r["val"]) for r in got)
+
+    want = [(2, -2), (4, 40), (900, -9)]
+    assert rows() == want
+    assert lh.read(spark, table).count() == 99  # 100 - 3 + 2
     lh.materialize_tombstones(spark, table)
-    lh.append(spark, table, new, key="id")  # allowed again
-    assert lh.read(spark, table).count() == 102  # 100 - 1 + 3
+    assert lh.pending_tombstones(table) == []
+    assert rows() == want
 
 
 def test_deferred_delete_accumulates_and_caps(spark, table):
@@ -1229,8 +1243,9 @@ def test_optimize_materializes_pending_tombstones(spark, table):
     got = lh.read(spark, table)
     assert got.count() == 98
     assert got.where(F.col("id").isin([10, 11])).count() == 0
-    ops = [h["operation"] for h in lh.history(table)]
-    assert "MATERIALIZE TOMBSTONES" in ops
+    # the compaction itself drops the DV'd rows: no separate commit
+    assert [h["operation"] for h in lh.history(table)][-2:] == ["DELETE DEFERRED", "OPTIMIZE"]
+    assert lh.table_row_count(table) == 98
 
 
 def test_stream_ingest_dedup_multi_batch(spark, tmp_path):
@@ -1599,6 +1614,35 @@ def test_restore_redeclares_schema_and_tombstones(spark, tmp_path):
         "leaked tombstones)"
     )
     assert lh.pending_tombstones(path) == []
+
+
+def test_restore_to_before_deferred_delete_drops_the_dv(spark, table):
+    """A deferred delete keeps the live file names, so restoring to the
+    version just before it must compare add-actions, not names: the
+    re-added files lose their deletion vectors and the rows return."""
+    files = {a["file"] for a in lh.live_files(table)}
+    v = lh.delete_keys_deferred(spark, table, [3, 70])
+    assert {a["file"] for a in lh.live_files(table)} == files
+    lh.restore(table, v - 1)
+    assert lh.pending_tombstones(table) == []
+    assert {a["file"] for a in lh.live_files(table)} == files
+    assert lh.read(spark, table).count() == 100
+    # and restoring forward brings the delete back
+    lh.restore(table, v)
+    assert sorted(lh.pending_tombstones(table)) == [3, 70]
+    assert lh.read(spark, table).count() == 98
+
+
+def test_table_changes_reports_deferred_delete(spark, table):
+    """A DELETE DEFERRED re-adds its files with deletion vectors: the
+    change feed across it reports each deleted key as a delete, with
+    its pre-image, and nothing else."""
+    v = lh.delete_keys_deferred(spark, table, [3, 70, 500])
+    got = sorted(
+        tuple(r)
+        for r in lh.table_changes(spark, table, v - 1, v, include_preimage=True).collect()
+    )
+    assert got == [(3, 30, "delete"), (70, 700, "delete")]
 
 
 def test_merge_empty_source_is_noop_not_crash(spark, table):
@@ -2087,15 +2131,16 @@ def test_each_operation_folds_the_log_once(spark, tmp_path, monkeypatch):
     assert max(lh.versions(path)) < lh.CHECKPOINT_INTERVAL
 
 
-def test_concurrent_append_aborts_on_state_change(spark, table, monkeypatch):
-    """An append racing a DELETE DEFERRED must NOT rebase: appends are
-    forbidden under pending tombstones (a tombstone can't distinguish a
-    pre-delete row from a re-inserted one), and this one validated
-    against a snapshot without them."""
+def test_concurrent_append_rebases_across_deferred_delete(spark, table, monkeypatch):
+    """An append racing a DELETE DEFERRED rebases: the delete only
+    re-adds files the append never read with a longer deletion vector,
+    so the append lands and key 3 stays hidden."""
     mine = spark.createDataFrame([(300, 2)], "id long, val long")
     _interleave(monkeypatch, lambda: lh.delete_keys_deferred(spark, table, [3]))
-    with pytest.raises(lh.ConcurrentWriteConflict, match="DELETE DEFERRED"):
-        lh.append(spark, table, mine, key="id")
+    v = lh.append(spark, table, mine, key="id")
+    assert lh._read_entry(table, v - 1)["operation"] == "DELETE DEFERRED"
+    ids = {r["id"] for r in lh.read(spark, table).collect()}
+    assert 300 in ids and 3 not in ids and len(ids) == 100
 
 
 def test_concurrent_append_aborts_on_schema_evolution(spark, table, monkeypatch):
@@ -2394,26 +2439,6 @@ def test_numpy_tombstone_key_commits_and_hides_row(spark, tmp_path):
     assert {r["id"] for r in lh.read(spark, path).collect()} == {0, 1, 2, 4}
 
 
-def test_ckpt_dir_migrates_legacy_checkpoint(tmp_path):
-    """A pre-round-8 checkpoint inside the table dir migrates to the
-    sibling location once (orphaning it would replay the whole source
-    and duplicate appended rows)."""
-    import os
-
-    from ecommerce_dbt_medallion_spark.streaming.drain import _ckpt_dir
-
-    table = str(tmp_path / "t")
-    legacy = os.path.join(table, "_streaming_ckpt")
-    os.makedirs(legacy)
-    open(os.path.join(legacy, "metadata"), "w").write("x")
-    new = _ckpt_dir(table)
-    assert new == table + "_ckpt"
-    assert os.path.exists(os.path.join(new, "metadata"))
-    assert not os.path.exists(legacy)
-    # idempotent: second call leaves the migrated dir alone
-    assert _ckpt_dir(table) == new
-
-
 # ---------------------------------------------------------------------------
 # log checkpoints (round 8)
 # ---------------------------------------------------------------------------
@@ -2426,8 +2451,7 @@ def _snapshot_all_state(table):
     for v in lh.versions(table):
         snap = lh._snapshot(table, v)
         out[v] = (
-            sorted(a["file"] for a in snap.files),
-            sorted(snap.tombstones),
+            sorted((a["file"], a.get("dv")) for a in snap.files),
             (lambda s: s.json() if s is not None else None)(snap.schema),
             snap.key,
             snap.partition_by,

@@ -3,7 +3,7 @@
 ``lakehouse._read_local`` is the only package code that reads a live
 table's parquet files with pyarrow. It applies the read() contract
 (column mapping, NULL for columns a pre-evolution file lacks, the
-pending-tombstone refusal) and the driver-read bounds; a hand-rolled
+files' deletion vectors) and the driver-read bounds; a hand-rolled
 reader elsewhere would skip part of that contract without anyone
 noticing. This static scan fails on any pyarrow file read outside the
 functions named in ``ALLOWED``. No Spark session is needed.

@@ -325,6 +325,7 @@ def test_pareto_frontier_permutation_free_and_minimal(spark, vals):
             st.tuples(st.just("delete"), st.integers(0, 4)),
             st.tuples(st.just("defer_delete"), st.integers(0, 4)),
             st.tuples(st.just("optimize"), st.just(0)),
+            st.tuples(st.just("materialize"), st.just(0)),
             st.tuples(st.just("race_append"), st.integers(0, 4)),
             st.tuples(st.just("rename"), st.integers(0, 4)),
             st.tuples(st.just("restore"), st.integers(0, 9)),
@@ -336,10 +337,11 @@ def test_pareto_frontier_permutation_free_and_minimal(spark, vals):
 @settings(max_examples=6, deadline=None)
 def test_lakehouse_op_sequences_match_dict_model(spark, tmp_path_factory, ops):
     """Model-based fuzz of the transaction log: an arbitrary sequence of
-    append / merge / delete_where / deferred-delete / optimize must
-    leave the table equal to a plain dict model keyed by id — including
-    merge-on-read reads before materialization — and every historical
-    version must stay readable. ``race_append`` is a SECOND WRITER
+    append / merge / delete_where / deferred-delete / materialize /
+    optimize must leave the table equal to a plain dict model keyed by
+    id — including merge-on-read reads while deletion vectors are
+    pending and writes that re-insert a deferred-deleted key — and
+    every historical version must stay readable. ``race_append`` is a SECOND WRITER
     (round 8): two disjoint add-only appends race in the same commit
     window; both must land via the classified rebase. ``rename`` and
     ``restore`` (round 9) fuzz the column-mapping × time-travel
@@ -384,8 +386,6 @@ def _run_lakehouse_fuzz(spark, lh, path, model, base, ops):
     for op, seed in ops:
         rows = block(seed)
         if op == "append":
-            if lh.pending_tombstones(path):
-                lh.materialize_tombstones(spark, path)
             # append semantics in the model: blind add (duplicates by key
             # would corrupt the model) — use merge semantics for overlap
             fresh = [(k, v) for k, v in rows if k not in model]
@@ -397,8 +397,6 @@ def _run_lakehouse_fuzz(spark, lh, path, model, base, ops):
             )
             model.update(dict(fresh))
         elif op == "merge":
-            if lh.pending_tombstones(path):
-                lh.materialize_tombstones(spark, path)
             lh.merge_into(
                 spark, path,
                 spark.createDataFrame(rows, f"id long, {cur_col} long"), "id",
@@ -416,9 +414,9 @@ def _run_lakehouse_fuzz(spark, lh, path, model, base, ops):
             for k in keys:
                 model.pop(k, None)
         elif op == "optimize":
-            if lh.pending_tombstones(path):
-                lh.materialize_tombstones(spark, path)
             lh.optimize(spark, path, key="id", target_rows=50)
+        elif op == "materialize":
+            lh.materialize_tombstones(spark, path)
         elif op == "rename":
             new = f"val_r{seed}"
             try:
@@ -435,8 +433,6 @@ def _run_lakehouse_fuzz(spark, lh, path, model, base, ops):
             model.update(m)
             cur_col = c
         elif op == "race_append":
-            if lh.pending_tombstones(path):
-                lh.materialize_tombstones(spark, path)
             # writer B's keys are offset so the two appends are disjoint
             # from each other; both must be fresh vs the model
             fresh_a = [(k, v) for k, v in rows if k not in model]

@@ -384,10 +384,10 @@ def test_incremental_refresh_deletes_gone_string_and_date_groups(spark, tmp_path
     assert got == {"2024-01-01": 30}, got
 
 
-def test_incremental_refresh_refuses_pending_deferred_deletes(spark, tmp_path):
-    """CDF diffs live file sets and a DELETE DEFERRED commit adds or
-    removes none: the refresh must refuse instead of leaving the
-    tombstoned rows' groups stale, and must not touch the mart."""
+def test_incremental_refresh_drops_group_emptied_by_deferred_delete(spark, tmp_path):
+    """A DELETE DEFERRED re-adds its files with deletion vectors, so the
+    change feed reports the deleted fact and the refresh drops the
+    group it emptied, with no materialization first."""
     from ecommerce_dbt_medallion_spark import lakehouse
     from ecommerce_dbt_medallion_spark.runner import incremental_mart_refresh
 
@@ -404,12 +404,14 @@ def test_incremental_refresh_refuses_pending_deferred_deletes(spark, tmp_path):
     lakehouse.create_or_replace(
         spark, mart, agg_fn(lakehouse.read(spark, fact)), key="customer_id"
     )
-    lakehouse.delete_keys_deferred(spark, fact, [2])
-    with pytest.raises(ValueError, match="pending deferred deletes"):
-        incremental_mart_refresh(
-            spark, fact, mart, "customer_id", agg_fn, from_version=v0
-        )
-    assert lakehouse.versions(mart) == [0]
+    v1 = lakehouse.delete_keys_deferred(spark, fact, [2])
+    got = incremental_mart_refresh(
+        spark, fact, mart, "customer_id", agg_fn, from_version=v0
+    )
+    assert got == v1
+    assert lakehouse.pending_tombstones(fact) == [2]
+    rows = {r["customer_id"]: r["total"] for r in lakehouse.read(spark, mart).collect()}
+    assert rows == {100: 10}
 
 
 def test_snapshot_rejects_duplicate_keys_and_null_vs_value_change(spark, tmp_path):
